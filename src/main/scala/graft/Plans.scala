@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump main: writes `.explain("formatted")` for the named queries to
   * files — the optimization-round evidence artifacts (plans/r15/). Reuses the
   * bench's session shape so the plans are the ones the bench actually runs.
@@ -14,15 +12,7 @@ object Plans {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,

@@ -147,15 +147,7 @@ object ScaleRehearsal {
     val mode = args.headOption.getOrElse("both")
     val only = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("32")
     if (mode == "gen" || mode == "both") gen(spark, Copies, OutDir)
     if (mode == "run" || mode == "both") run(spark, only)
     if (mode == "sf10gen" || mode == "sf10") gen(spark, 100, Sf10Dir)

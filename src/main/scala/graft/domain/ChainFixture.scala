@@ -473,7 +473,7 @@ object ChainFixture {
         // selector's rows in few single-row-group files, so the
         // expression-heavy filtered decodes drop to a fraction of the
         // core-count parallelism, which costs more than the whole-file
-        // stat-skips save (solo pairs in OPTIMIZATION_r16.md; a 4×-wider
+        // stat-skips save (solo pairs in `a3dbf91`; a 4×-wider
         // range write was also measured and also lost — split packing
         // re-merges adjacent hot files into one task). The natural scan
         // partitioning spreads every selector across all files.

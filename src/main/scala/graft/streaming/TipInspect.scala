@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.{QueryDef, QueryModule}
 import graft.domain.{Accounting, ChainFixture, InspectorOps}
+import graft.domain.InspectorOps.{ComposerInputs, Cut}
 import graft.domain.Accounting.{sqlGateFlag, sqlGateProfit}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,16 +18,18 @@ import org.apache.spark.sql.streaming.OutputMode
   * entries here verify the COMPOSED pipeline: a genuine Structured Streaming
   * query (parquet-drop file source, checkpointed foreachBatch sink, three
   * block-range micro-batches) whose per-batch body is the SAME batch
-  * dataflow — [[ChainFixture.actionsOf]] classify, [[Accounting.headersOf]]
-  * pricing/PnL, then
+  * dataflow — [[ComposerInputs.ofSlice]] classifies, prices and inspects
+  * the slice through the batch functions, then
   *   - `r2_tip_inspect`: the Q1 sandwich / Q2 atomic-arb / Q7 liquidation
   *     inspector cores, unioned bundle emission;
   *   - `r2_tip_composer`: the FULL composer path the reference's tip
-  *     executor runs per block (`processors/mev.rs:34-58`) — all seven
-  *     candidate surfaces (sandwich, JIT, liquidation, arb, CEX-DEX,
-  *     JitSandwich, JIT-CEX-DEX), the J12 metadata join (per-batch
-  *     broadcast of the searcher-label and price dimensions), the J10
-  *     two-layer composer dedup, and the A4 MevBlock rollup —
+  *     executor runs per block (`processors/mev.rs:34-58`) — ONE composer,
+  *     [[InspectorOps.composerOf]], the same function and oracle CTEs
+  *     `j10_bundle_dedup` runs over the whole range: all seven candidate
+  *     surfaces, the J12 metadata join and the two-layer dedup. The two
+  *     differ only in the dedup edge key (range: tx; tip: anchor block|tx)
+  *     and their output arms (here: surviving bundles, per-type counts and
+  *     the A4 MevBlock rollup) —
   * each hash-matching its batch formulation in DuckDB.
   *
   * Cross-block windows at the tip: Q1's bracket and Q2's trigger search
@@ -64,28 +67,22 @@ object TipInspect extends QueryModule {
     * other fold entries' stream partitions — per-block work at a real tip). */
   private val ShufflePartitions = "8"
 
-  /** The composed per-slice inspection: classify the trace slice, build
-    * headers, run Q1+Q2+Q7, and emit one normalized bundle row per
-    * detection anchored at block ≥ `minOwnBlock` (rows below the bar belong
-    * to the PREVIOUS batch, which already emitted them with its own full
-    * window). Shared verbatim by the streamed foreachBatch body and the
+  /** The composed per-slice inspection: run Q1+Q2+Q7 over the slice's
+    * [[ComposerInputs]] and emit one normalized bundle row per detection
+    * anchored at block ≥ `minOwnBlock` (rows below the bar belong to the
+    * PREVIOUS batch, which already emitted them with its own full window).
+    * Shared verbatim by the streamed foreachBatch body and the
     * batch-parity check in StreamingSpec — tip mode IS the batch pipeline
     * on a different source. */
-  private[graft] def inspectBundles(s: SparkSession, tracesDf: DataFrame,
-      minOwnBlock: Long, preActs: Option[DataFrame] = None,
-      preHdr: Option[DataFrame] = None, preSand: Option[DataFrame] = None,
-      preArbs: Option[DataFrame] = None): DataFrame = {
+  private[graft] def inspectBundles(in: ComposerInputs,
+      minOwnBlock: Long): DataFrame = {
     val nullStr = lit(null).cast("string")
-    val acts = preActs.getOrElse(ChainFixture.actionsOf(s, tracesDf))
-    val hdr = preHdr.getOrElse(Accounting.headersOf(s, tracesDf, acts))
-      .select("tx_hash", "block_number", "eoa", "revenue_usd", "gas_usd",
-        "profit_usd")
-    val sw = InspectorOps.swapsOf(acts)
+    val hdr = in.hdr.select("tx_hash", "block_number", "eoa", "revenue_usd",
+      "gas_usd", "profit_usd")
 
     // Q1: verified sandwiches (victim ratio + price sanity + shrink), PnL
     // from the front AND back txs' headers, attributed to the back block
-    val sand = preSand
-      .getOrElse(InspectorOps.sandwichesOf(InspectorOps.swTxFromSwaps(sw)))
+    val sand = in.sand
       .filter(col("back_block") >= minOwnBlock)
       .join(hdr.select(col("tx_hash").as("front_tx"),
         col("profit_usd").as("front_profit")), "front_tx")
@@ -104,11 +101,10 @@ object TipInspect extends QueryModule {
 
     // Q2: atomic arbs with the validity heuristic and the 2-block trigger
     // search (n2: 0 = no trigger, 1 = same block, 2 = previous block)
-    val a = preArbs.getOrElse(InspectorOps.arbsOf(sw))
-    val arb = a.join(hdr, "tx_hash")
-      .join(broadcast(ChainFixture.searchers(s)),
+    val arb = in.arbs.join(hdr, "tx_hash")
+      .join(broadcast(ChainFixture.searchers(in.acts.sparkSession)),
         col("eoa") === col("s_eoa"), "left")
-      .join(InspectorOps.triggerPicks(a, sw), Seq("tx_hash"), "left")
+      .join(InspectorOps.triggerPicks(in.arbs, in.sw), Seq("tx_hash"), "left")
       .filter(col("block_number") >= minOwnBlock)
       .select(lit("atomic_arb").as("btype"), col("block_number"),
         col("tx_hash").as("tx1"), nullStr.as("tx2"), nullStr.as("pool"),
@@ -121,7 +117,7 @@ object TipInspect extends QueryModule {
           col("gas_usd") > 50.0, 1).otherwise(0).as("flag"))
 
     // Q7: per-tx liquidation bundles through the priced-profit gate
-    val liq = InspectorOps.liquidationBundlesOf(acts, hdr)
+    val liq = InspectorOps.liquidationBundlesOf(in.acts, hdr)
       .filter(col("block_number") >= minOwnBlock)
       .select(lit("liquidation").as("btype"), col("block_number"),
         col("tx_hash").as("tx1"), nullStr.as("tx2"), nullStr.as("pool"),
@@ -135,20 +131,17 @@ object TipInspect extends QueryModule {
 
   /** The reference tip executor's FULL per-block composition
     * (`processors/mev.rs:34-58` runs `run_block_inspection` over the whole
-    * inspector set, then the composer): all seven J10 candidate surfaces
-    * built from the slice, the J12 metadata join (searcher labels +
-    * per-block builder identity, broadcast per micro-batch — the
-    * `shared/metadata_loader.rs:41-98` analog), the two-layer composer
-    * dedup, and the A4 MevBlock rollup. The dedup scope is PER ANCHOR
-    * BLOCK, exactly the reference's: the tip composer dedups the bundles
-    * of the block being processed against each other (composer/mod.rs:
-    * 190-232 runs inside one `run_block_inspection`), never against a
-    * prior block's already-emitted bundles — which is also what makes a
+    * inspector set, then the composer): [[InspectorOps.composerOf]] — the
+    * SAME seven candidate surfaces, J12 metadata join and two-layer dedup
+    * `j10_bundle_dedup` runs — with the per-block edge key
+    * [[InspectorOps.BlockEdgeKey]], then the A4 MevBlock rollup. The
+    * range and tip composers differ in that key alone: the tip dedups the
+    * bundles of one anchor block against each other, never against a prior
+    * block's already-emitted bundles, which is also what makes a
     * micro-batch's composition equal the batch formulation restricted to
-    * its own blocks. Spark-side the scope is carried by prefixing every
-    * (bundle, tx) edge key with the bundle's anchor block, so the
-    * tx-equi-keyed [[InspectorOps.matrixCrossKills]] machinery is reused
-    * verbatim.
+    * its own blocks. A bundle whose txs straddle blocks (a sandwich with its
+    * front in the previous block) can therefore spare an arb on its front
+    * tx that the range composer kills.
     *
     * Output rows (one frame, three kinds, all anchored at
     * block ≥ `minOwnBlock`):
@@ -158,127 +151,12 @@ object TipInspect extends QueryModule {
     *   kind='mev_block'  — the A4 rollup: builder, tx count, exact-decimal
     *                       gas/profit sums (q9_mev_block's header shape)
     */
-  private[graft] def composedMevOf(s: SparkSession, tracesDf: DataFrame,
-      minOwnBlock: Long, preActs: Option[DataFrame] = None,
-      preHdr: Option[DataFrame] = None, preSwTx: Option[DataFrame] = None,
-      preSand: Option[DataFrame] = None,
-      preArbs: Option[DataFrame] = None): DataFrame = {
+  private[graft] def composedMevOf(in: ComposerInputs, minOwnBlock: Long,
+      cut: Cut): DataFrame = {
     val nullStr = lit(null).cast("string")
     val nullD = lit(null).cast("double")
     val nullL = lit(null).cast("long")
-    val acts = preActs.getOrElse(ChainFixture.actionsOf(s, tracesDf))
-    val hdr = preHdr.getOrElse(Accounting.headersOf(s, tracesDf, acts))
-    val hdrK = hdr.select(col("tx_hash").as("h_tx"),
-      col("profit_usd"), col("eoa").as("h_eoa"),
-      col("block_number").as("h_block"))
-    val sw = InspectorOps.swapsOf(acts)
-    val swTx = preSwTx.getOrElse(InspectorOps.swTxFromSwaps(sw))
-
-    // the seven candidate surfaces — the j10_bundle_dedup formulations,
-    // each keeping its ANCHOR block (`blk`)
-    val sand = preSand.getOrElse(InspectorOps.sandwichesOf(swTx)).select(
-      col("back_block").as("blk"),
-      concat(col("front_tx"), lit("|"), col("back_tx"), lit("|"), col("pool"))
-        .as("bid"),
-      lit("sandwich").as("mev_type"),
-      (col("back_out") - col("sum_in")).as("profit"),
-      array(col("front_tx"), col("back_tx")).as("txs"),
-      nullStr.as("arb_type"), lit(false).as("labeled")).distinct()
-    // three consumers (jit, jit_sandwich, jit_cexdex) — eager-cut like the
-    // bundle/edge frames below so the mint↔burn pairing runs once per batch
-    val jitp = InspectorOps.jitPairsOf(acts).localCheckpoint()
-    val jit = jitp.select(
-      col("block_number").as("blk"),
-      concat(col("tx_hash"), lit("|"), col("burn_tx"), lit("|"), col("pool"))
-        .as("bid"),
-      lit("jit").as("mev_type"), lit(0.0).as("profit"),
-      array(col("tx_hash"), col("burn_tx")).as("txs"),
-      nullStr.as("arb_type"), lit(false).as("labeled")).distinct()
-    val liq = acts.filter(col("action_type") === "liquidation")
-      .select("tx_hash").distinct()
-      .join(hdrK, col("tx_hash") === col("h_tx"))
-      .select(col("h_block").as("blk"), col("tx_hash").as("bid"),
-        lit("liquidation").as("mev_type"), lit(0.0).as("profit"),
-        array(col("tx_hash")).as("txs"),
-        nullStr.as("arb_type"), lit(false).as("labeled"))
-    val arb = preArbs.getOrElse(InspectorOps.arbsOf(sw))
-      .join(hdrK, col("tx_hash") === col("h_tx"))
-      .select(col("h_block").as("blk"), col("tx_hash").as("bid"),
-        lit("arb").as("mev_type"), col("profit_usd").as("profit"),
-        array(col("tx_hash")).as("txs"), col("arb_type"),
-        lit(false).as("labeled"))
-    // CEX-DEX candidates through the J12 metadata join: lone-swap txs
-    // priced by the header, searcher-labeled via the broadcast dimension;
-    // eager-cut — two consumers (cexdex, jit_cexdex)
-    val cexdexBase = sw.groupBy("tx_hash")
-      .agg(count(lit(1)).as("n_sw")).filter(col("n_sw") === 1)
-      .join(hdrK, col("tx_hash") === col("h_tx"))
-      .join(broadcast(ChainFixture.searchers(s)),
-        col("h_eoa") === col("s_eoa"), "left")
-      .localCheckpoint()
-    val cexdex = cexdexBase.select(col("h_block").as("blk"),
-      col("tx_hash").as("bid"), lit("cexdex").as("mev_type"),
-      col("profit_usd").as("profit"), array(col("tx_hash")).as("txs"),
-      nullStr.as("arb_type"), col("s_eoa").isNotNull.as("labeled"))
-    val jsw = InspectorOps.bracketsOf(swTx)
-      .select(col("back_block"), col("eoa"), col("front_tx"), col("back_tx"),
-        (col("back_out") - col("sum_in")).as("b_profit"))
-      .join(jitp.select(col("block_number").as("j_block"),
-        col("eoa").as("j_eoa"), col("tx_hash").as("mint_tx"), col("burn_tx")),
-        col("back_block") === col("j_block") && col("eoa") === col("j_eoa"))
-      .select(col("back_block").as("blk"),
-        concat(col("front_tx"), lit("|"), col("back_tx"), lit("|"),
-          col("mint_tx"), lit("|"), col("burn_tx")).as("bid"),
-        lit("jit_sandwich").as("mev_type"), col("b_profit").as("profit"),
-        array(col("front_tx"), col("back_tx"), col("mint_tx"), col("burn_tx"))
-          .as("txs"),
-        nullStr.as("arb_type"), lit(false).as("labeled"))
-      .distinct()
-    val jcx = jitp.select(col("block_number").as("x_block"),
-        col("eoa").as("x_eoa"), col("tx_hash").as("mint_tx"), col("burn_tx"))
-      .join(cexdexBase.select(col("tx_hash").as("cx_tx"),
-        col("h_block"), col("h_eoa"), col("profit_usd")),
-        col("x_block") === col("h_block") && col("x_eoa") === col("h_eoa"))
-      .select(col("x_block").as("blk"),
-        concat(col("mint_tx"), lit("|"), col("burn_tx"), lit("|"), col("cx_tx"))
-          .as("bid"),
-        lit("jit_cexdex").as("mev_type"), col("profit_usd").as("profit"),
-        array(col("mint_tx"), col("burn_tx"), col("cx_tx")).as("txs"),
-        nullStr.as("arb_type"), lit(false).as("labeled"))
-      .distinct()
-
-    // eager cuts: the bundle table feeds three output arms and the edge
-    // frame six dedup branches — same discipline as j10's materialized
-    // pipeline intermediates, micro-batch-sized here
-    val bundles = sand.unionByName(jit).unionByName(liq).unionByName(arb)
-      .unionByName(cexdex).unionByName(jsw).unionByName(jcx)
-      .withColumn("bid", concat_ws("|", col("mev_type"), col("bid")))
-      .withColumn("n_txs", size(array_distinct(col("txs"))))
-      .localCheckpoint()
-    // scope every (bundle, tx) edge by the bundle's anchor block — the
-    // per-block composer scope — then reuse the tx-keyed kill machinery
-    val edges = bundles.select(col("bid"), col("mev_type"), col("blk"),
-        col("n_txs"), col("profit"), col("arb_type"), col("labeled"),
-        explode(array_distinct(col("txs"))).as("tx0"))
-      .withColumn("tx", concat_ws("|", col("blk"), col("tx0")))
-      .localCheckpoint()
-    val xrem = InspectorOps.matrixCrossKills(edges)
-    val surv = edges.join(xrem, Seq("bid"), "left_anti")
-    val other = surv.select(col("tx").as("o_tx"), col("mev_type").as("o_type"),
-      col("bid").as("o_bid"), col("n_txs").as("o_n"),
-      col("profit").as("o_profit"))
-    val wrem = surv
-      .join(other, col("tx") === col("o_tx") &&
-        col("mev_type") === col("o_type") && col("bid") =!= col("o_bid") &&
-        (col("o_n") > col("n_txs") ||
-          (col("o_n") === col("n_txs") &&
-            (col("o_profit") < col("profit") ||
-              (col("o_profit") === col("profit") && col("o_bid") < col("bid"))))),
-        "left_semi")
-      .select("bid").distinct()
-    val flagged = bundles
-      .join(xrem.withColumn("xr", lit(1)), Seq("bid"), "left")
-      .join(wrem.withColumn("wr", lit(1)), Seq("bid"), "left")
+    val flagged = InspectorOps.composerOf(in, InspectorOps.BlockEdgeKey, cut)
       .filter(col("blk") >= minOwnBlock)
 
     val bundleArm = flagged.filter(col("xr").isNull && col("wr").isNull)
@@ -294,7 +172,7 @@ object TipInspect extends QueryModule {
         col("n_final").as("n1"), col("n_raw").as("n2"))
     // A4: the MevBlock header row — builder identity is the deterministic
     // per-block metadata dimension, computed inline like txGasOf's base fee
-    val blockArm = hdr.filter(col("block_number") >= minOwnBlock)
+    val blockArm = in.hdr.filter(col("block_number") >= minOwnBlock)
       .groupBy("block_number")
       .agg(count(lit(1)).as("n_txs"), dsum(col("gas_usd")).as("sum_gas"),
         dsum(col("profit_usd")).as("sum_profit"))
@@ -399,12 +277,11 @@ object TipInspect extends QueryModule {
     * `Processor`) and PERSISTS its results; consumers query the stored
     * tables, they never re-run the pipeline. Both tip entries here have
     * that shape: two output surfaces of the SAME streamed run — per
-    * micro-batch the slice is classified and priced ONCE
-    * (localCheckpointed — two emitters consume it, so the eager cut pays
-    * for itself, unlike the single-consumer case the r14 negative result
-    * measured), then the Q1+Q2+Q7 bundle union and the full-composer
-    * output are each written batch-id-overwrite to their own directory.
-    * Memoized per sf dir like the batch pipeline intermediates.
+    * micro-batch the slice's [[ComposerInputs]] are built ONCE under
+    * [[batchCut]], then the Q1+Q2+Q7 bundle union and the full-composer
+    * output are each written batch-id-overwrite to their own directory,
+    * and every RDD the batch pinned is released. Memoized per sf dir like
+    * the batch pipeline intermediates.
     *
     * Bench semantics (r16, fixing the r15 accounting flaw): Bench resets
     * this memo after its untimed warm pass, so the FIRST timed tip entry
@@ -415,6 +292,29 @@ object TipInspect extends QueryModule {
     * real stream. */
   private val tipRuns =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+
+  /** The per-micro-batch cuts: every input and composer intermediate with
+    * several consumers (two emitters, the three bundle arms, the six dedup
+    * branches) is localCheckpointed, so each runs once per batch — before
+    * the input cuts the sandwich shrink pipeline and the per-tx arb fold
+    * each ran once per emitter (`009a401`). The kill sets are read once
+    * each and stay lazy. */
+  private val batchCut: Cut = {
+    case ("xrem" | "surv", df) => df
+    case (_, df) => df.localCheckpoint()
+  }
+
+  /** Runs `body`, then unpersists every RDD that became persistent while it
+    * ran — the micro-batch's localCheckpoints, including the one inside
+    * [[InspectorOps.sandwichesOf]] — so a batch pins nothing past its
+    * writes. */
+  private def releasingPinned(s: SparkSession)(body: => Unit): Unit = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id)) rdd.unpersist(blocking = false)
+    }
+  }
 
   /** Rehearsal hook: drop the per-JVM memo so the next invocation drives
     * a FRESH checkpointed stream — the scale rehearsal times the
@@ -427,26 +327,13 @@ object TipInspect extends QueryModule {
       StreamOracle.deleteOnExit(tmp)
       val (outI, outC) = (s"$tmp/out_inspect", s"$tmp/out_composer")
       runTipStream(s, dir, "r2tip") { (ss, full, mn, batchId) =>
-        val slice = full.localCheckpoint()
-        val acts = ChainFixture.actionsOf(ss, slice).localCheckpoint()
-        val hdr = Accounting.headersOf(ss, slice, acts).localCheckpoint()
-        // the inspector intermediates BOTH output surfaces consume are
-        // computed once per micro-batch, like classify/price above — the
-        // reference runs each inspector once per block and the composer
-        // reads its results (tip.rs:34 `inspectors: &[&dyn Inspector]`);
-        // before this cut the sandwich shrink pipeline (windowed explode +
-        // self-join + victim stats) and the per-tx arb fold each ran TWICE
-        // per batch, once per emitter (r16 A/B in OPTIMIZATION_r16.md)
-        val sw = InspectorOps.swapsOf(acts)
-        val swTx = InspectorOps.swTxFromSwaps(sw).localCheckpoint()
-        val sand = InspectorOps.sandwichesOf(swTx).localCheckpoint()
-        val arbs = InspectorOps.arbsOf(sw).localCheckpoint()
-        inspectBundles(ss, slice, mn, Some(acts), Some(hdr), Some(sand),
-            Some(arbs))
-          .write.mode("overwrite").parquet(s"$outI/batch=$batchId")
-        composedMevOf(ss, slice, mn, Some(acts), Some(hdr), Some(swTx),
-            Some(sand), Some(arbs))
-          .write.mode("overwrite").parquet(s"$outC/batch=$batchId")
+        releasingPinned(ss) {
+          val in = ComposerInputs.ofSlice(ss, full, batchCut)
+          inspectBundles(in, mn)
+            .write.mode("overwrite").parquet(s"$outI/batch=$batchId")
+          composedMevOf(in, mn, batchCut)
+            .write.mode("overwrite").parquet(s"$outC/batch=$batchId")
+        }
       }
       (outI, outC)
     })
@@ -508,111 +395,23 @@ object TipInspect extends QueryModule {
 
   /** The full-composer tip entry: streamed classify → price → ALL seven
     * candidate surfaces → J10 dedup → A4 rollup, per micro-batch, hash-
-    * matched against the batch composer formulation over all blocks. */
+    * matched against the batch composer formulation over all blocks with
+    * the per-block edge key. */
   private val r2TipComposer = QueryDef(
     "r2_tip_composer",
     (s, dir) => s.read.parquet(sharedTipRun(s, dir)._2).drop("batch")
       .orderBy("kind", "block_number", "mev_type", "key"),
-    withCtes(s"""${InspectorOps.composerOracleCtes},
-      tcsrch AS ${ChainFixture.searchersCteBody},
-      tccexd AS (
-        SELECT s.tx_hash, h.profit_usd, h.block_number, h.eoa,
-          (se.s_eoa IS NOT NULL) AS labeled
-        FROM (SELECT tx_hash FROM swaps GROUP BY 1 HAVING COUNT(*) = 1) s
-        JOIN header h ON s.tx_hash = h.tx_hash
-        LEFT JOIN tcsrch se ON h.eoa = se.s_eoa),
-      tcb AS MATERIALIZED (
-        SELECT mev_type || '|' || bid AS bid, mev_type, blk, profit, txs,
-          arb_type, labeled, len(list_distinct(txs)) AS n_txs FROM (
-          SELECT DISTINCT front_tx || '|' || back_tx || '|' || pool AS bid,
-            'sandwich' AS mev_type, back_block AS blk,
-            back_out - sum_in AS profit, [front_tx, back_tx] AS txs,
-            CAST(NULL AS VARCHAR) AS arb_type, FALSE AS labeled FROM sand
-          UNION ALL
-          SELECT DISTINCT tx_hash || '|' || burn_tx || '|' || pool,
-            'jit', block_number, 0.0e0, [tx_hash, burn_tx], NULL, FALSE
-          FROM jitp
-          UNION ALL
-          SELECT l.tx_hash, 'liquidation', h.block_number, 0.0e0,
-            [l.tx_hash], NULL, FALSE
-          FROM (SELECT DISTINCT tx_hash FROM actions
-                WHERE action_type = 'liquidation') l
-          JOIN header h ON l.tx_hash = h.tx_hash
-          UNION ALL
-          SELECT a.tx_hash, 'arb', h.block_number, h.profit_usd,
-            [a.tx_hash], a.arb_type, FALSE
-          FROM arb a JOIN header h ON a.tx_hash = h.tx_hash
-          UNION ALL
-          SELECT tx_hash, 'cexdex', block_number, profit_usd, [tx_hash],
-            NULL, labeled
-          FROM tccexd
-          UNION ALL
-          SELECT DISTINCT b.front_tx || '|' || b.back_tx || '|'
-              || j.tx_hash || '|' || j.burn_tx,
-            'jit_sandwich', b.back_block, b.back_out - b.sum_in,
-            [b.front_tx, b.back_tx, j.tx_hash, j.burn_tx], NULL, FALSE
-          FROM brkt b JOIN jitp j
-            ON b.back_block = j.block_number AND b.eoa = j.eoa
-          UNION ALL
-          SELECT DISTINCT j.tx_hash || '|' || j.burn_tx || '|' || c.tx_hash,
-            'jit_cexdex', j.block_number, c.profit_usd,
-            [j.tx_hash, j.burn_tx, c.tx_hash], NULL, FALSE
-          FROM jitp j JOIN tccexd c
-            ON j.block_number = c.block_number AND j.eoa = c.eoa)),
-      tce AS MATERIALIZED (
-        SELECT bid, mev_type, blk, n_txs, profit, arb_type, labeled,
-          CAST(blk AS VARCHAR) || '|' || utx AS tx
-        FROM (SELECT bid, mev_type, blk, n_txs, profit, arb_type, labeled,
-                UNNEST(list_distinct(txs)) AS utx
-              FROM tcb)),
-      tcmx AS (SELECT * FROM (VALUES ${InspectorOps.ComposerMatrix
-        .filterNot(p => p == ("arb", "cexdex") || p == ("cexdex", "arb"))
-        .map { case (d, x) => s"('$d','$x')" }.mkString(", ")})
-        t(dom_type, sub_type)),
-      tcur AS (
-        SELECT DISTINCT e.bid
-        FROM tce e JOIN tcmx ON e.mev_type = tcmx.sub_type
-        JOIN tce d ON d.tx = e.tx AND d.mev_type = tcmx.dom_type),
-      tce1 AS (
-        SELECT DISTINCT c.bid
-        FROM tce c JOIN tce a
-          ON c.mev_type = 'cexdex' AND a.mev_type = 'arb' AND a.tx = c.tx
-         AND a.arb_type <> 'triangle' AND a.profit > c.profit
-         AND NOT c.labeled),
-      tce2 AS (
-        SELECT DISTINCT a.bid
-        FROM tce a JOIN (
-            SELECT c.* FROM tce c LEFT JOIN tce1 k ON c.bid = k.bid
-            WHERE c.mev_type = 'cexdex' AND k.bid IS NULL) cs
-          ON a.mev_type = 'arb' AND a.tx = cs.tx),
-      tcx AS MATERIALIZED (
-        SELECT bid FROM tcur UNION SELECT bid FROM tce1
-        UNION SELECT bid FROM tce2),
-      tcs AS MATERIALIZED (
-        SELECT e.* FROM tce e LEFT JOIN tcx x ON e.bid = x.bid
-        WHERE x.bid IS NULL),
-      tcw AS (
-        SELECT DISTINCT e.bid FROM tcs e
-        JOIN tcs o ON e.tx = o.tx AND e.mev_type = o.mev_type
-          AND e.bid <> o.bid
-          AND (o.n_txs > e.n_txs OR (o.n_txs = e.n_txs
-            AND (o.profit < e.profit
-              OR (o.profit = e.profit AND o.bid < e.bid))))),
-      tcfin AS MATERIALIZED (
-        SELECT b.*, (x.bid IS NOT NULL) AS xk, (w.bid IS NOT NULL) AS wk
-        FROM tcb b
-        LEFT JOIN tcx x ON b.bid = x.bid
-        LEFT JOIN tcw w ON b.bid = w.bid)
+    withCtes(s"""${InspectorOps.composerCtes("CAST(blk AS VARCHAR) || '|' || utx")}
       SELECT 'bundle' AS kind, blk AS block_number, mev_type, bid AS key,
         CAST(profit AS DOUBLE) AS d1, CAST(NULL AS DOUBLE) AS d2,
         CAST(n_txs AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2
-      FROM tcfin WHERE NOT xk AND NOT wk
+      FROM flagged WHERE NOT xk AND NOT wk
       UNION ALL
       SELECT 'type_count', blk, mev_type, CAST(NULL AS VARCHAR),
         CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
         CAST(SUM(CASE WHEN NOT xk AND NOT wk THEN 1 ELSE 0 END) AS BIGINT),
         CAST(COUNT(*) AS BIGINT)
-      FROM tcfin GROUP BY 2, 3
+      FROM flagged GROUP BY 2, 3
       UNION ALL
       SELECT 'mev_block', h.block_number, CAST(NULL AS VARCHAR),
         b.beneficiary,

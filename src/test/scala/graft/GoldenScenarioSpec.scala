@@ -1,7 +1,7 @@
 package graft
 
 import graft.domain.InspectorOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** FIXTURES.md §C golden scenarios: hand-planted patterns with
@@ -307,6 +307,33 @@ class GoldenScenarioSpec extends SparkTestBase {
       ("C3", "cexdex", "t3", 1, 1.0, null, true))
     val killed = InspectorOps.matrixCrossKills(e).as[String].collect().toSet
     assert(killed == Set("C1", "A2", "A3"), killed)
+  }
+
+  test("composer edge key: a block-straddling sandwich kills its front-block arb under the range key only") {
+    // sandwich S: front f in block 9, back b in block 10, so its anchor
+    // blk is 10; the arb on f is anchored in block 9. Under the range key
+    // (tx) S and the arb share f and sandwich ⇒ arb kills the arb; under
+    // the tip's per-block key the edges are 10|f and 9|f, so it survives
+    val in = InspectorOps.ComposerInputs(
+      acts = Seq(("swap", "f")).toDF("action_type", "tx_hash"),
+      hdr = Seq(("f", 5.0, "atk", 9L), ("b", 3.0, "atk", 10L))
+        .toDF("tx_hash", "profit_usd", "eoa", "block_number"),
+      sw = Seq("f", "f").toDF("tx_hash"),
+      swTx = swTxOf(),
+      brackets = Seq.empty[(Long, String, String, String, Double, Double)]
+        .toDF("back_block", "eoa", "front_tx", "back_tx", "back_out", "sum_in"),
+      sand = Seq((10L, "f", "b", "P", 120.0, 100.0))
+        .toDF("back_block", "front_tx", "back_tx", "pool", "back_out", "sum_in"),
+      arbs = Seq(("f", "cross_pair")).toDF("tx_hash", "arb_type"),
+      jitp = Seq.empty[(Long, String, String, String, String)]
+        .toDF("block_number", "eoa", "tx_hash", "burn_tx", "pool"))
+    def survivors(key: Column): Set[(String, Long)] =
+      InspectorOps.composerOf(in, key, InspectorOps.NoCut)
+        .filter(col("xr").isNull && col("wr").isNull)
+        .select("mev_type", "blk").as[(String, Long)].collect().toSet
+    assert(survivors(InspectorOps.RangeEdgeKey) == Set(("sandwich", 10L)))
+    assert(survivors(InspectorOps.BlockEdgeKey) ==
+      Set(("sandwich", 10L), ("arb", 9L)))
   }
 
   test("v3_tick_boundary: one-ulp prices straddle tick 25 exactly") {

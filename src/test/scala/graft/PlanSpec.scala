@@ -1,5 +1,7 @@
 package graft
 
+import graft.domain.InspectorOps
+
 /** Physical-plan assertions for the scale-critical queries: the properties
   * VERDICT r1 flagged must hold in `explain` output, not just in intent. */
 class PlanSpec extends SparkTestBase {
@@ -486,6 +488,12 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  /** The foreachBatch body's inputs over the whole trace table, uncut, so
+    * the plans below are the full classify → sandwich → composer lineage
+    * from the trace slice, not a store scan. */
+  private def sliceInputs = InspectorOps.ComposerInputs.ofSlice(spark,
+    graft.domain.ChainFixture.tracesTable(spark, SfDir), InspectorOps.NoCut)
+
   test("r2 tip inspection emits through a checkpointed stream, batch cores intact") {
     // the composed per-batch body must keep the batch path's shapes: no
     // nested-loop victim match and no cartesian anywhere in the bundle
@@ -496,8 +504,7 @@ class PlanSpec extends SparkTestBase {
     // the streamed result was written per micro-batch: reading it back
     // is a plain scan, so the heavy assertion rides the shared core —
     // inspectBundles IS the foreachBatch body
-    val core = graft.streaming.TipInspect
-      .inspectBundles(spark, graft.domain.ChainFixture.tracesTable(spark, SfDir), 0L)
+    val core = graft.streaming.TipInspect.inspectBundles(sliceInputs, 0L)
       .queryExecution.executedPlan.toString
     assert(!core.contains("BroadcastNestedLoopJoin"), core)
     assert(!core.contains("CartesianProduct"), core)
@@ -508,7 +515,7 @@ class PlanSpec extends SparkTestBase {
     // inspect core: every candidate build, both dedup layers, and the
     // MevBlock rollup stay equi-keyed
     val core = graft.streaming.TipInspect
-      .composedMevOf(spark, graft.domain.ChainFixture.tracesTable(spark, SfDir), 0L)
+      .composedMevOf(sliceInputs, 0L, InspectorOps.NoCut)
       .queryExecution.executedPlan.toString
     assert(!core.contains("BroadcastNestedLoopJoin"), core)
     assert(!core.contains("CartesianProduct"), core)

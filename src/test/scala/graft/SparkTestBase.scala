@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM-wide session; scalatest
   * suites reuse it via getOrCreate). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("4").getOrCreate()
 
   val SfDir = "/root/testdata/sf0.001"
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.domain.InspectorOps
 import graft.streaming.TipStream
 import graft.streaming.TipStream.{PoolQuote, PoolUpdate}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -289,6 +290,22 @@ class StreamingSpec extends SparkTestBase {
       s"expected exactly the in-window cross-batch and same-batch pairs: $pairs")
   }
 
+  /** The whole trace table as ONE uncut slice — the batch side of the
+    * tip-parity checks runs the stream's own per-batch code path. */
+  private def sliceInputs = InspectorOps.ComposerInputs.ofSlice(spark,
+    graft.domain.ChainFixture.tracesTable(spark, SfDir), InspectorOps.NoCut)
+
+  test("R2 tip stream releases every RDD its micro-batches pin") {
+    // each micro-batch localCheckpoints its inputs and composer
+    // intermediates; a fresh run must unpersist all of them after its
+    // writes, or the pinned blocks weigh on every later query in the JVM
+    graft.streaming.TipInspect.resetTipRuns()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(SparkEntry.queries("r2_tip_composer")(spark, SfDir).count() > 0)
+    val left = spark.sparkContext.getPersistentRDDs.keys.filterNot(before).toSet
+    assert(left.isEmpty, s"tip stream left ${left.size} persistent RDDs: $left")
+  }
+
   test("R2 tip-mode inspection equals the batch composer on the same blocks") {
     // the end-to-end equivalence claim, asserted Spark-vs-Spark: the
     // streamed three-drop classify→price→inspect run (checkpointed file
@@ -296,8 +313,7 @@ class StreamingSpec extends SparkTestBase {
     // the batch pipeline computes over all blocks at once. The DuckDB
     // oracle checks the same equality engine-vs-engine in CORRECTNESS.
     val streamed = SparkEntry.queries("r2_tip_inspect")(spark, SfDir)
-    val batch = graft.streaming.TipInspect
-      .inspectBundles(spark, graft.domain.ChainFixture.tracesTable(spark, SfDir), 0L)
+    val batch = graft.streaming.TipInspect.inspectBundles(sliceInputs, 0L)
       .orderBy("btype", "block_number", "tx1", "tx2", "pool")
     val (sRows, bRows) = (streamed.collect().toSeq, batch.collect().toSeq)
     assert(sRows.nonEmpty, "streamed tip inspection must emit bundles")
@@ -314,7 +330,7 @@ class StreamingSpec extends SparkTestBase {
     // carried by the tail table). DuckDB re-checks this in CORRECTNESS.
     val streamed = SparkEntry.queries("r2_tip_composer")(spark, SfDir)
     val batch = graft.streaming.TipInspect
-      .composedMevOf(spark, graft.domain.ChainFixture.tracesTable(spark, SfDir), 0L)
+      .composedMevOf(sliceInputs, 0L, InspectorOps.NoCut)
       .orderBy("kind", "block_number", "mev_type", "key")
     val (sRows, bRows) = (streamed.collect().toSeq, batch.collect().toSeq)
     assert(sRows.count(_.getString(0) == "bundle") > 0,
