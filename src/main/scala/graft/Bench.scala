@@ -10,17 +10,16 @@ import org.apache.spark.sql.DataFrame
   *     plans and under-measure);
   *   - one untimed warm-up pass runs first (JVM/codegen/FS-cache warm-up —
   *     r1's p17 "6.3s" was really first-query warm-up);
-  *   - the cache manager is cleared between passes and queries so persist()
-  *     calls inside queries can't leak work across timings.
+  *   - each query runs and is consumed in its own [[Pins.scope]], so what
+  *     it persists or checkpoints can't leak work across timings.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.forMain()
 
-    def consume(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def clearCaches(): Unit = spark.sharedState.cacheManager.clearCache()
+    def consume(df: => DataFrame): Unit =
+      Pins.scope(df.write.mode("overwrite").format("noop").save())
 
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local profiling of a
     // single query's wall-clock without the full 140-query suite.
@@ -37,11 +36,9 @@ object Bench {
         System.err.println(s"[bench] WARNING unknown SPARK_GRAFT_ONLY names: ${unknown.mkString(",")}")
     }
 
-    // warm-up (untimed); clear caches per query so persist()s inside one
-    // query can't occupy storage memory while the next one warms
+    // warm-up (untimed)
     selected.foreach { case (_, fn) =>
       try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
-      clearCaches()
     }
 
     // The tip entries memoize ONE shared checkpointed stream per (JVM, sf
@@ -61,7 +58,6 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
       val dt = (System.nanoTime() - t0) / 1e9
-      clearCaches()
       (name, dt, ok)
     }
     val results = timed.collect { case (n, dt, true) => n -> dt }.toMap
@@ -71,7 +67,7 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // Compact summary printed LAST: the driver keeps only a ~2000-char
     // stdout TAIL, which the ~10 KB full line above has overflowed four
@@ -80,6 +76,8 @@ object Bench {
     // per-query map stays on the full line above and in
     // BENCH_full_latest.json (no more per-round BENCH_full_r{N} minting —
     // the driver's own reruns collided with committed artifacts).
+    // It is the only line whose metric is "total"; the full line above is
+    // "total_full".
     println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"sf":"$sfDir"}""")
     try {
       val repo = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))

@@ -5,7 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One oracle-checkable operator query (SURVEY.md §2 inventory row).
   *
   * @param name   stable key; shows up in CORRECTNESS_r{N}.json
-  * @param fn     the Spark implementation over a testdata sf dir
+  * @param fn     the Spark implementation over a testdata sf dir; it
+  *               returns a lazy frame and pins what it caches through
+  *               [[Pins]], whose scaladoc holds the lifecycle rule (the
+  *               runner's scope around `fn` + consume releases the pins)
   * @param oracle equivalent DuckDB SQL over the same tables; None → the
   *               driver records a weaker rows-only check (used for ops that
   *               ANSI SQL cannot express, e.g. iterative graph search)
@@ -17,20 +20,4 @@ final case class QueryDef(
 
 trait QueryModule {
   def defs: Seq[QueryDef]
-}
-
-object QueryDef {
-  /** Persist `base` for the duration of building a SMALL rollup over it,
-    * eagerly materialize the rollup (localCheckpoint), then release the
-    * base's cached blocks deterministically. This is the persist-lifecycle
-    * contract for builders whose cached input feeds several branches: the
-    * scan runs once, the returned frame reads the (tiny) checkpointed
-    * result, and nothing waits on the ContextCleaner. The result must be
-    * dimension-sized (a grouped rollup, never a fact table) — its blocks
-    * are the only thing left resident. */
-  def withPersisted(base: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
-    val cached = base.persist()
-    try build(cached).localCheckpoint(eager = true)
-    finally { cached.unpersist(blocking = false); () }
-  }
 }

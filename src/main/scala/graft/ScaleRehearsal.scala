@@ -110,7 +110,7 @@ object ScaleRehearsal {
     // previously rested on the 10× rehearsal alone
     "q1_bigmac", "r8_stream_join", "r8_outer_join", "q9_mev_count",
     // round 12: the per-pool streaming folds — file-drop-driven since
-    // r11 (StreamOracle.driveFold), so the probe measures the OPERATOR's
+    // r11 (StreamOracle.driveDrops), so the probe measures the OPERATOR's
     // keyed state at 100×, not a driver-collected harness
     "r5_stream_fold", "r5_tick_fold",
     // round 13: the ZeroX batch-fill — the round's one new surface with
@@ -170,13 +170,8 @@ object ScaleRehearsal {
     * the residual seconds go. The staged total exceeds the plain total
     * by the extra materializations; per-stage prints are the signal. */
   def runBigmacProfile(spark: SparkSession): Unit = {
-    def consume(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
     def timed(label: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      consume(SparkEntry.queries("q1_bigmac")(spark, SrcDir))
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = timeQuery(spark, "q1_bigmac", SrcDir)
       println(f"[bigmacprof] $label%-14s $dt%6.2f s"); dt
     }
     timed("warm")
@@ -204,13 +199,13 @@ object ScaleRehearsal {
     import graft.queries.DedupOps
     // checkpoint the edge frame so both branches time CLUSTERING, not a
     // recompute of the shared shingle/LSH lineage
-    val edges = DedupOps.d5EdgeFrame(spark, OutDir).localCheckpoint(true)
+    val edges = Pins.checkpoint(DedupOps.d5EdgeFrame(spark, OutDir))
     val nEdges = edges.count()
     def pass(gate: String): (Double, Seq[(Long, Long)]) = {
       spark.conf.set("spark.graft.dedup.edgeGate", gate)
       try {
         val t0 = System.nanoTime()
-        val rows = DedupOps.clusterEdgesProbe(spark, edges).collect()
+        val rows = Pins.scope(DedupOps.clusterEdgesProbe(spark, edges).collect())
           .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
         ((System.nanoTime() - t0) / 1e9, rows)
       } finally spark.conf.unset("spark.graft.dedup.edgeGate")
@@ -245,14 +240,13 @@ object ScaleRehearsal {
     import graft.queries.DedupOps
     // component c occupies ids [c*64, c*64+15]: node 0 is the hub, members
     // 1-3 attach to the hub, members 4+ attach to (k % 3) + 1 — depth 2
-    val edges = spark.range(nClusters.toLong).select(col("id").as("c"))
+    val edges = Pins.checkpoint(spark.range(nClusters.toLong).select(col("id").as("c"))
       .select(col("c"),
         explode(sequence(lit(1), (col("c") % 13 + 2).cast("int"))).as("k"))
       .select(
         (col("c") * 64 + when(col("k") <= 3, 0)
           .otherwise(pmod(col("k"), lit(3)) + 1)).as("doc_a"),
-        (col("c") * 64 + col("k")).as("doc_b"))
-      .localCheckpoint(true)
+        (col("c") * 64 + col("k")).as("doc_b")))
     val nEdges = edges.count()
     def pass(gate: String): (Double, Long) = {
       spark.conf.set("spark.graft.dedup.edgeGate", gate)
@@ -260,9 +254,9 @@ object ScaleRehearsal {
         val t0 = System.nanoTime()
         // the probe consumes the cluster table and keeps only a checksum —
         // collecting 300k cluster rows per pass would time the collect
-        val chk = DedupOps.clusterEdgesProbe(spark, edges)
+        val chk = Pins.scope(DedupOps.clusterEdgesProbe(spark, edges)
           .agg(sum(col("cluster_rep")), sum(col("n_members")), count(lit(1)))
-          .head()
+          .head())
         ((System.nanoTime() - t0) / 1e9,
           chk.getLong(0) * 31 + chk.getLong(1) * 7 + chk.getLong(2))
       } finally spark.conf.unset("spark.graft.dedup.edgeGate")
@@ -331,29 +325,30 @@ object ScaleRehearsal {
       .drop("copy_k"))
   }
 
+  /** Wall-clock seconds of one query, run and consumed in its own
+    * [[Pins.scope]]. The tip entries memoize their shared stream per JVM,
+    * so the memo is reset first: a rehearsal times the STREAM, not the
+    * stored-table read-back. */
+  private def timeQuery(spark: SparkSession, name: String, dir: String): Double = {
+    graft.streaming.TipInspect.resetTipRuns()
+    val t0 = System.nanoTime()
+    Pins.scope(SparkEntry.queries(name)(spark, dir)
+      .write.mode("overwrite").format("noop").save())
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def run(spark: SparkSession, only: Option[Set[String]]): Unit = {
     val names = Heavy.filter(n => only.forall(_.contains(n)))
-    def consume(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def time(name: String, dir: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      // the tip entries memoize their shared stream per JVM — the
-      // rehearsal must time the STREAM, not the stored-table read-back
-      graft.streaming.TipInspect.resetTipRuns()
-      val t0 = System.nanoTime()
-      consume(SparkEntry.queries(name)(spark, dir))
-      (System.nanoTime() - t0) / 1e9
-    }
     // untimed warm-up at each scale: JVM/codegen + the one-time fixture
     // materialization for the dir (actions/traces parquet store)
     names.foreach { n =>
-      try { time(n, SrcDir); time(n, OutDir) }
+      try { timeQuery(spark, n, SrcDir); timeQuery(spark, n, OutDir) }
       catch { case e: Throwable =>
         println(s"[sf1-warm] $n FAILED: ${e.getMessage}") }
     }
     val rows = names.flatMap { n =>
       try {
-        val a = time(n, SrcDir); val b = time(n, OutDir)
+        val a = timeQuery(spark, n, SrcDir); val b = timeQuery(spark, n, OutDir)
         println(f"[sf1] $n%-28s sf0.1 $a%7.2fs  sf1 $b%7.2fs  ratio ${b / a}%5.2f")
         Some((n, a, b))
       } catch { case e: Throwable =>
@@ -387,20 +382,9 @@ object ScaleRehearsal {
       .filter(col("user_id") === -42L).count()
     val tot = ev.count()
     println(f"[skew] hot-user rows $hot of $tot (${100.0 * hot / tot}%.1f%%)")
-    def consume(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def time(name: String, dir: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      // the tip entries memoize their shared stream per JVM — the
-      // rehearsal must time the STREAM, not the stored-table read-back
-      graft.streaming.TipInspect.resetTipRuns()
-      val t0 = System.nanoTime()
-      consume(SparkEntry.queries(name)(spark, dir))
-      (System.nanoTime() - t0) / 1e9
-    }
-    SkewProbe.foreach { n => time(n, OutDir); time(n, SkewDir) } // warm
+    SkewProbe.foreach { n => timeQuery(spark, n, OutDir); timeQuery(spark, n, SkewDir) } // warm
     val rows = SkewProbe.map { n =>
-      val a = time(n, OutDir); val b = time(n, SkewDir)
+      val a = timeQuery(spark, n, OutDir); val b = timeQuery(spark, n, SkewDir)
       println(f"[skew] $n%-22s uniform $a%6.2fs  skewed $b%6.2fs  ratio ${b / a}%5.2f")
       (n, a, b)
     }
@@ -456,10 +440,9 @@ object ScaleRehearsal {
     val prof = Seq.empty[(String, Double)].toDF("tx_hash", "profit_usd")
     def pass(hot: Boolean): (Double, Long) = {
       val (sw, roots, tf) = arm(hot)
-      spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      val n = graft.domain.BigMacOps
-        .bigmacBundlesOf(sw, roots, prof, Some(tf)).count()
+      val n = Pins.scope(graft.domain.BigMacOps
+        .bigmacBundlesOf(sw, roots, prof, Some(tf)).count())
       ((System.nanoTime() - t0) / 1e9, n)
     }
     pass(hot = false) // warm: JVM + codegen
@@ -504,9 +487,8 @@ object ScaleRehearsal {
     }
     def pass(hot: Boolean): (Double, Long) = {
       val (mb, v) = arm(hot)
-      spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      val n = graft.domain.InspectorOps.jitBracketsOf(mb, v).count()
+      val n = Pins.scope(graft.domain.InspectorOps.jitBracketsOf(mb, v).count())
       ((System.nanoTime() - t0) / 1e9, n)
     }
     pass(hot = false) // warm: JVM + codegen
@@ -531,8 +513,6 @@ object ScaleRehearsal {
     spark.conf.set("spark.graft.bigmac.diskCheckpoint", "true")
     val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val names = Sf10Probe.filter(n => only.forall(_.contains(n)))
-    def consume(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
     def time(name: String, dir: String): Double = {
       // 100× data through 32 reducers concentrates 8× more hash-agg state
       // per task than any real deployment would see — a 1000-executor
@@ -544,12 +524,8 @@ object ScaleRehearsal {
       // every other row's absolute timing stays comparable across rounds.
       spark.conf.set("spark.sql.shuffle.partitions",
         if (name == "q1_bigmac") "256" else basePartitions)
-      spark.sharedState.cacheManager.clearCache()
-      graft.streaming.TipInspect.resetTipRuns()
-      val t0 = System.nanoTime()
-      try consume(SparkEntry.queries(name)(spark, dir))
+      try timeQuery(spark, name, dir)
       finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
-      (System.nanoTime() - t0) / 1e9
     }
     names.foreach { n =>
       try { time(n, SrcDir); time(n, Sf10Dir) }

@@ -12,15 +12,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        // the scope releases what the query pinned — across the suite in
+        // one JVM it would otherwise accumulate in storage memory
+        try Pins.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           errors(name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(400)}"
         }
-        // release persist()ed frames between queries — across a 138-query
-        // suite in one JVM they otherwise accumulate in storage memory
-        spark.sharedState.cacheManager.clearCache()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -122,7 +122,7 @@ object BigMacOps extends QueryModule {
         s.sparkContext.setCheckpointDir(d.toString)
       }
       df.checkpoint()
-    } else df.localCheckpoint()
+    } else Pins.checkpoint(df)
     if (s.conf.get("spark.graft.bigmac.timing", "false") == "true")
       System.err.println(f"[bigmac pin] ${(System.nanoTime() - t0) / 1e9}%.2f s  cols=${df.columns.take(6).mkString(",")}")
     out
@@ -139,7 +139,7 @@ object BigMacOps extends QueryModule {
     if (s.conf.get("spark.graft.bigmac.stageProfile", "false") != "true") df
     else {
       val t0 = System.nanoTime()
-      val out = df.localCheckpoint()
+      val out = Pins.checkpoint(df)
       System.err.println(
         f"[bigmac stage] $name%-38s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
       out

@@ -199,7 +199,7 @@ object CensusOps extends graft.QueryModule {
       // the burn slice feeds THREE families (remove/one_coin/imbalance)
       // - persist it so the scan runs once, not per family; withPersisted
       // checkpoints the (tiny) rollup and releases the slice's blocks
-      graft.QueryDef.withPersisted(slice(SelBurn)) { burnBase =>
+      graft.Pins.withPersisted(slice(SelBurn)) { burnBase =>
       def base(sel: String) =
         if (sel == SelBurn) burnBase else slice(sel)
 
@@ -434,7 +434,7 @@ object CensusOps extends graft.QueryModule {
   private def miscSpark(s: SparkSession, dir: String): DataFrame = {
     // one slice feeds all EIGHT families - persist so the scan runs once;
     // withPersisted checkpoints the rollup and releases the slice's blocks
-    graft.QueryDef.withPersisted(tracesTable(s, dir)
+    graft.Pins.withPersisted(tracesTable(s, dir)
       .filter(col("selector") === SelV2Swap)
       .withColumn("q6l", col("q6").cast("long"))
       .withColumn("p2l", col("p2").cast("long"))

@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1249,9 +1249,9 @@ object CexOps extends QueryModule {
   private val j3Intermediary = QueryDef(
     "j3_intermediary",
     (s, dir) => {
-      val vwap = cexTrades(s, dir)
+      val vwap = Pins.persist(cexTrades(s, dir)
         .groupBy("pair_a", "pair_b")
-        .agg((dsum(col("px") * col("amt")) / dsum(col("amt"))).as("vwap")).persist()
+        .agg((dsum(col("px") * col("amt")) / dsum(col("amt"))).as("vwap")))
       val hop2 = vwap.select(col("pair_a").as("a"), col("pair_b").as("b"), col("vwap").as("px1"))
         .join(vwap.select(col("pair_a").as("b2"), col("pair_b").as("c"), col("vwap").as("px2")),
           col("b") === col("b2"))

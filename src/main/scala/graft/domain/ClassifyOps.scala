@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -367,9 +367,9 @@ object ClassifyOps extends QueryModule {
             .otherwise(0L)).as("n_swaps"),
           sum(when(col("action_type") === "transfer" &&
             col("amount_in").isNotNull, 1L).otherwise(0L)).as("n_transfers"))
-      val frames = roots.join(chagg, Seq("tx_hash", "span"))
+      val frames = Pins.persist(roots.join(chagg, Seq("tx_hash", "span"))
         .filter(col("n_swaps") >= 1)
-        .select("block_number", "tx_hash", "span").persist()
+        .select("block_number", "tx_hash", "span"))
       val tr = ch.filter(col("action_type") === "transfer" &&
           col("amount_in").isNotNull)
         .drop("block_number")

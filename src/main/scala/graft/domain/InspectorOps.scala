@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -225,9 +225,8 @@ object InspectorOps extends QueryModule {
           (px(col("tok_in")) / px(col("tok_out"))) - 1) <= MaxPriceDiff &&
         abs((col("back_out") / col("back_in")) /
           (px(col("back_tok_in")) / px(col("back_tok_out"))) - 1) <= MaxPriceDiff)
-    val verd = victimStats(cand, swW)
-      .withColumn("ok", verified && col("dir") =!= col("back_dir"))
-      .localCheckpoint()
+    val verd = Pins.checkpoint(victimStats(cand, swW)
+      .withColumn("ok", verified && col("dir") =!= col("back_dir")))
     val emit = verd.groupBy("wnd", "eoa", "pool")
       .agg(collect_list(struct(col("i"), col("j"), col("m"), col("ok"))).as("rs"))
       .select(col("wnd").as("e_wnd"), col("eoa").as("e_eoa"),
@@ -1225,7 +1224,7 @@ object InspectorOps extends QueryModule {
   private val j7PoolOverlap = QueryDef(
     "j7_pool_overlap",
     (s, dir) => {
-      val pt = swTx(s, dir).select("block_number", "eoa", "tx_idx", "pool").distinct().persist()
+      val pt = Pins.persist(swTx(s, dir).select("block_number", "eoa", "tx_idx", "pool").distinct())
       val fl = pt.groupBy("block_number", "eoa")
         .agg(min(col("tx_idx")).as("ft"), max(col("tx_idx")).as("lt"),
           countDistinct(col("tx_idx")).as("nt"))
@@ -1312,8 +1311,8 @@ object InspectorOps extends QueryModule {
         .withColumn("mev_type", lit("liquidation"))
       val arb = arbs(s, dir).select(col("tx_hash"))
         .withColumn("mev_type", lit("arb"))
-      val all = sand.unionByName(jit).unionByName(liq).unionByName(arb)
-        .distinct().persist()
+      val all = Pins.persist(sand.unionByName(jit).unionByName(liq).unionByName(arb)
+        .distinct())
       val types = Seq("sandwich", "jit", "liquidation", "arb")
       val pairs = ComposerMatrix
         .filter { case (d, x) => types.contains(d) && types.contains(x) }
@@ -1649,8 +1648,8 @@ object InspectorOps extends QueryModule {
       val cut: Cut = {
         case ("bundles", df) =>
           ChainFixture.materialize(s, s"bundles_v2_${ChainFixture.dirKey(dir)}", df)
-        case ("edges", df) => val p = df.persist(); p.count(); p
-        case ("xrem" | "surv", df) => df.persist()
+        case ("edges", df) => val p = Pins.persist(df); p.count(); p
+        case ("xrem" | "surv", df) => Pins.persist(df)
         case (_, df) => df
       }
       composerOf(ComposerInputs.ofStores(s, dir), RangeEdgeKey, cut)
@@ -1740,7 +1739,7 @@ object InspectorOps extends QueryModule {
   private val q9MevBlock = QueryDef(
     "q9_mev_block",
     (s, dir) => {
-      val bh = bundleHeaders(s, dir).persist()
+      val bh = Pins.persist(bundleHeaders(s, dir))
       val hdr = bh
         .groupBy("block_number")
         .agg(count(lit(1)).as("n_txs"), dsum(col("gas_usd")).as("sum_gas"),

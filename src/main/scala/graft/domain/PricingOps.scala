@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -46,7 +46,7 @@ object PricingOps extends QueryModule {
     "g2_paths_enum",
     (s, dir) => {
       val (srcTok, dstTok) = (PathSrc, PathDst)
-      val e = edges(s, dir).select("src", "dst").distinct().persist()
+      val e = Pins.persist(edges(s, dir).select("src", "dst").distinct())
       var frontier = e.filter(col("src") === srcTok)
         .select(array(col("src"), col("dst")).as("path"), col("dst").as("head"))
       var done = frontier.filter(col("head") === dstTok).select("path")
@@ -221,7 +221,7 @@ object PricingOps extends QueryModule {
   private val g3SubgraphPrice = QueryDef(
     "g3_subgraph_price",
     (s, dir) => {
-      val e = edges(s, dir).persist()
+      val e = Pins.persist(edges(s, dir))
       val e1 = e.select(col("src"), col("dst").as("mid"), col("px").as("px1"))
       val two = e1.join(e.select(col("src").as("m2"), col("dst"), col("px").as("px2")),
           col("mid") === col("m2"))
@@ -427,12 +427,12 @@ object PricingOps extends QueryModule {
   private val g5RegistryCache = QueryDef(
     "g5_registry_cache",
     (s, dir) => {
-      val perEpoch = ChainFixture.actionsTable(s, dir)
+      val perEpoch = Pins.persist(ChainFixture.actionsTable(s, dir)
         .filter(col("action_type") === "swap" &&
           col("amount_in").isNotNull && col("amount_out").isNotNull)
         .select(expr("block_number div 100").as("epoch"),
           col("token_in_id").as("src"), col("token_out_id").as("dst"))
-        .distinct().persist()
+        .distinct())
       val prev = perEpoch.select((col("epoch") + 1).as("p_epoch"),
         col("src").as("p_src"), col("dst").as("p_dst"))
       perEpoch

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,7 +77,7 @@ object DedupOps extends QueryModule {
     * Catalyst would otherwise recompute the whole shingle→minhash lineage
     * per side (SURVEY §4's one-pass-split caveat). */
   private[queries] def lshCandidates(sh: DataFrame): DataFrame = {
-    val bands = bandHashes(minhashSig(sh)).persist()
+    val bands = Pins.persist(bandHashes(minhashSig(sh)))
     val a = bands.select(col("band"), col("bh"), col("doc_id").as("doc_a"))
     val b = bands.select(col("band").as("band_b"), col("bh").as("bh_b"), col("doc_id").as("doc_b"))
     a.join(b, col("band") === col("band_b") && col("bh") === col("bh_b") &&
@@ -193,10 +193,10 @@ object DedupOps extends QueryModule {
   /** The label-propagation loop of [[distributedClusters]], exposed at
     * per-node grain: (doc_id, lbl) for every node of the edge set. */
   private[graft] def distributedLabels(cand: DataFrame): DataFrame = {
-    val sym = cand.unionByName(
-      cand.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))).persist()
-    var labels = sym.groupBy("doc_a")
-      .agg(least(min(col("doc_b")), col("doc_a")).as("lbl")).persist()
+    val sym = Pins.persist(cand.unionByName(
+      cand.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    var labels = Pins.persist(sym.groupBy("doc_a")
+      .agg(least(min(col("doc_b")), col("doc_a")).as("lbl")))
     labels.count()
     var converged = false
     var iters = 0
@@ -205,18 +205,16 @@ object DedupOps extends QueryModule {
         .join(labels.select(col("doc_a").as("m"), col("lbl").as("nb_lbl")),
           col("doc_b") === col("m"))
         .groupBy("doc_a").agg(min(col("nb_lbl")).as("prop_lbl"))
-      val next = labels.join(nbMin, Seq("doc_a"), "left")
+      val next = Pins.persist(labels.join(nbMin, Seq("doc_a"), "left")
         .select(col("doc_a"),
           least(col("lbl"), coalesce(col("prop_lbl"), col("lbl"))).as("lbl"),
-          (col("prop_lbl") < col("lbl")).as("changed"))
-        .persist()
+          (col("prop_lbl") < col("lbl")).as("changed")))
       val nChanged = next.filter(col("changed")).count()
       labels.unpersist(false)
       labels = next.drop("changed")
       converged = nChanged == 0
       iters += 1
     }
-    sym.unpersist(false)
     labels.select(col("doc_a").as("doc_id"), col("lbl"))
   }
 
@@ -255,7 +253,7 @@ object DedupOps extends QueryModule {
     lshCandidates(shingles(s, dir))
 
   private[queries] def clusterEdges(s: SparkSession, edgeDf: DataFrame): DataFrame = {
-    val cand = edgeDf.persist()
+    val cand = Pins.persist(edgeDf)
     val nEdges = cand.count()
     if (nEdges <= edgeGate(s)) {
       import s.implicits._
@@ -281,7 +279,7 @@ object DedupOps extends QueryModule {
     * [[clusterEdges]], but keeping the member grain so a downstream policy
     * can choose WHICH doc survives each cluster. */
   private[graft] def clusterLabels(s: SparkSession, edgeDf: DataFrame): DataFrame = {
-    val cand = edgeDf.persist()
+    val cand = Pins.persist(edgeDf)
     val nEdges = cand.count()
     if (nEdges <= edgeGate(s)) {
       import s.implicits._
@@ -330,12 +328,12 @@ object DedupOps extends QueryModule {
           0D, (acc, x) -> acc + x)""").as(s"p$h")
       }
       val bits = (0 until 8).map(h => when(col(s"p$h") > 0, "1").otherwise("0"))
-      val sigs = Tables.embeddings(s, dir)
+      val sigs = Pins.persist(Tables.embeddings(s, dir)
         .select(col("vec_id") +: col("embedding") +: planes: _*)
         .select(col("vec_id"), col("embedding"), concat(bits: _*).as("sig"),
           sqrt(expr("""aggregate(transform(embedding,
             a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)), 0D, (acc, x) -> acc + x)"""))
-            .as("nrm")).persist()
+            .as("nrm")))
       val a = sigs.select(col("sig"), col("vec_id").as("vec_a"),
         col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
       val b = sigs.select(col("sig").as("sig_b"), col("vec_id").as("vec_b"),
@@ -411,7 +409,7 @@ object DedupOps extends QueryModule {
   private val d12CdcChunks = QueryDef(
     "d12_cdc_chunks",
     (s, dir) => {
-      val ch = Tables.documents(s, dir)
+      val ch = Pins.persist(Tables.documents(s, dir)
         .withColumn("n", length(col("text")))
         // one-pass native boundary kernel (codegen'd Catalyst expression;
         // bit-equal to the oracle's per-position md5 predicate — see
@@ -423,23 +421,20 @@ object DedupOps extends QueryModule {
             org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
               .orderBy("st")), col("n") + 1) - col("st"))
         .withColumn("ch", md5(expr("substring(text, st, clen)")))
-        .select("doc_id", "source", "clen", "ch")
-        .persist()
-      try {
-        val shared = ch.groupBy("ch")
-          .agg(countDistinct(col("doc_id")).as("nd"))
-          .filter(col("nd") > 1)
-          .select(col("ch"), lit(1L).as("is_shared"))
-        ch.join(broadcast(shared), Seq("ch"), "left")
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_chunks"),
-            countDistinct(col("ch")).as("n_unique"),
-            sum(col("clen")).as("sum_chunk_chars"),
-            sum(coalesce(col("is_shared"), lit(0L))).as("n_shared_chunks"))
-          .withColumn("avg_chunk_len", graft.ops.ExactAgg.snap(
-            col("sum_chunk_chars").cast("double") / col("n_chunks")))
-          .orderBy("source")
-      } finally { ch.unpersist(false); () }
+        .select("doc_id", "source", "clen", "ch"))
+      val shared = ch.groupBy("ch")
+        .agg(countDistinct(col("doc_id")).as("nd"))
+        .filter(col("nd") > 1)
+        .select(col("ch"), lit(1L).as("is_shared"))
+      ch.join(broadcast(shared), Seq("ch"), "left")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_chunks"),
+          countDistinct(col("ch")).as("n_unique"),
+          sum(col("clen")).as("sum_chunk_chars"),
+          sum(coalesce(col("is_shared"), lit(0L))).as("n_shared_chunks"))
+        .withColumn("avg_chunk_len", graft.ops.ExactAgg.snap(
+          col("sum_chunk_chars").cast("double") / col("n_chunks")))
+        .orderBy("source")
     },
     Some(s"""WITH d AS (SELECT doc_id, source, text, len(text) AS n
         FROM documents),
@@ -479,11 +474,10 @@ object DedupOps extends QueryModule {
     graft.domain.ChainFixture.materializeWith(s,
       s"${graft.domain.ChainFixture.matRoot(s)}_dedupver_" +
         graft.domain.ChainFixture.dirKey(dir)) { p =>
-      val sh = shingles(s, dir).persist()
-      try jaccardScored(sh).filter(col("jaccard") >= 0.5)
+      val sh = Pins.persist(shingles(s, dir))
+      jaccardScored(sh).filter(col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "n_inter", "jaccard")
         .write.parquet(p)
-      finally { sh.unpersist(false); () }
     }
 
   private val d4JaccardVerify = QueryDef(
@@ -516,7 +510,7 @@ object DedupOps extends QueryModule {
   private val d7DedupPipeline = QueryDef(
     "d7_dedup_pipeline",
     (s, dir) => {
-      val sh = shingles(s, dir).persist()
+      val sh = Pins.persist(shingles(s, dir))
       val verified = jaccardScored(sh)
         .filter(col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")

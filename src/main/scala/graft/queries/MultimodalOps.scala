@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Multimodal feature ops beyond sniff+decode ([[TextOps]]): resize, video
@@ -61,7 +61,7 @@ object MultimodalOps extends QueryModule {
     "mm_phash_dedup",
     (s, dir) => {
       import s.implicits._
-      val hashes = Tables.documents(s, dir)
+      val hashes = Pins.persist(Tables.documents(s, dir)
         .select(col("doc_id")).as[Long]
         .mapPartitions { iter =>
           javax.imageio.ImageIO.setUseCache(false)
@@ -117,13 +117,12 @@ object MultimodalOps extends QueryModule {
             }
             PhashRow(id, sb.toString)
           }
-        }
+        })
         // the banded self-join consumes the hash table on BOTH sides:
         // without the persist each side re-runs the full encode→decode
         // codec kernel over every image (the guide-§8 rule — fingerprints
         // are the cheap proxy, compute them once). 64-char hash per doc →
-        // tiny cache; harness clears it between queries.
-        .persist()
+        // tiny cache.
       val bands = hashes.select(col("doc_id"), col("phash"),
           explode(expr("transform(sequence(0, 3), b -> " +
             "struct(b AS band, substring(phash, b * 16 + 1, 16) AS bval))"))

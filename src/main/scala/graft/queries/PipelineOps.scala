@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,14 +58,13 @@ object PipelineOps extends QueryModule {
       // the old shape re-ran it per branch (the oracle's own `g` CTE shape).
       // n_grams = per-doc row count of the distinct-gram table — identical
       // to size(array_distinct(grams)); cast back to INT to keep the schema.
-      // Bare persist (not withPersisted): the returned plan must stay
-      // inspectable for the PlanSpec broadcast assertion; the harness
-      // clears the cache between queries.
-      val gt = Tables.documents(s, dir)
+      // A persist, not withPersisted: the returned plan must stay
+      // inspectable for the PlanSpec broadcast assertion; the runner's
+      // scope releases it.
+      val gt = Pins.persist(Tables.documents(s, dir)
         .withColumn("ws", split(col("text"), " "))
         .select(col("doc_id"),
-          explode(array_distinct(expr(gramsExpr(4)))).as("gram"))
-        .persist()
+          explode(array_distinct(expr(gramsExpr(4)))).as("gram")))
       val ev = gt.filter(pmod(col("doc_id"), lit(41)) === 0)
         .select("gram").distinct()
       val tr = gt.filter(pmod(col("doc_id"), lit(41)) =!= 0)
@@ -121,7 +120,7 @@ object PipelineOps extends QueryModule {
       // full materialization costs more than the re-scan it saves. This
       // shape pays two explode passes (df rollup + the join's probe side)
       // but caches only the capped table the self-join actually reuses.
-      val g = grams.join(rare, "gram").persist()
+      val g = Pins.persist(grams.join(rare, "gram"))
       val a = g.select(col("gram"), col("doc_id").as("doc_a"))
       val b = g.select(col("gram").as("gram_b"), col("doc_id").as("doc_b"))
       a.join(b, col("gram") === col("gram_b") && col("doc_a") < col("doc_b"))
@@ -187,9 +186,8 @@ object PipelineOps extends QueryModule {
       val evg2 = evg.join(capped, "gram")
       // two consumers (the stride-gram explode and the span-extension
       // join) otherwise re-split every training text
-      val tr = docs.filter(pmod(col("doc_id"), lit(7)) =!= 0)
-        .select(col("doc_id"), col("ws"))
-        .persist()
+      val tr = Pins.persist(docs.filter(pmod(col("doc_id"), lit(7)) =!= 0)
+        .select(col("doc_id"), col("ws")))
       val trg = tr.select(col("doc_id"), col("ws"),
           explode(expr("filter(transform(sequence(1, size(ws) - 7), " +
             "i -> IF((i - 1) % 3 = 0, i, NULL)), x -> x IS NOT NULL)"))

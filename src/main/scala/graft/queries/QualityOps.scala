@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ops.ExactAgg
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -263,47 +263,44 @@ object QualityOps extends QueryModule {
     * an overlapping self-pair like "a a a" merges once). */
   private def trainBpe(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String, Long, Long)] =
-    bpeCache.computeIfAbsent(dir, _ => {
-      val vocab = Tables.documents(s, dir)
+    bpeCache.computeIfAbsent(dir, _ => Pins.scope {
+      val vocab = Pins.persist(Tables.documents(s, dir)
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .withColumn("s", concat(lit(" "),
           expr("""array_join(transform(sequence(1, length(word)),
                   i -> substring(word, i, 1)), '  ')"""),
           lit(" ")))
-        .select("freq", "s")
-        .persist()
-      try {
-        var cur = vocab
-        val merges = Seq.newBuilder[(String, String, Long, Long)]
-        for (_ <- 0 until BpeRounds) {
-          val top = cur
-            .select(col("freq"), split(trim(col("s")), "  ").as("sy"))
-            .filter(size(col("sy")) >= 2)
-            .select(col("freq"), expr(
-              """explode(transform(sequence(1, size(sy)-1),
-                 i -> struct(element_at(sy,i) AS a, element_at(sy,i+1) AS b)))""").as("p"))
-            .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-            .agg(sum("freq").as("pf"))
-            .orderBy(col("pf").desc, col("a").asc, col("b").asc)
-            .limit(1).head()
-          val (a, b, pf) = (top.getString(0), top.getString(1), top.getLong(2))
-          // corpus words are pure [a-z] (fixture invariant), so the merge
-          // pair embeds into the expression text without escaping
-          cur = cur.withColumn("s",
-            expr(s"replace(s, ' $a  $b ', ' $a$b ')"))
-          // Recount symbols AFTER the replace (one vocab-sized aggregate),
-          // mirroring the oracle's tot$i recount: pf counts OVERLAPPING
-          // adjacent pairs while replace merges left-to-right
-          // non-overlapping, so `totalSyms -= pf` over-decrements on a
-          // self-overlapping run ('x x x' merges once, pf counts twice).
-          val totalSyms = cur
-            .select(sum(col("freq") * size(split(trim(col("s")), "  "))))
-            .head().getLong(0)
-          merges += ((a, b, pf, totalSyms))
-        }
-        merges.result()
-      } finally { vocab.unpersist(false); () }
+        .select("freq", "s"))
+      var cur = vocab
+      val merges = Seq.newBuilder[(String, String, Long, Long)]
+      for (_ <- 0 until BpeRounds) {
+        val top = cur
+          .select(col("freq"), split(trim(col("s")), "  ").as("sy"))
+          .filter(size(col("sy")) >= 2)
+          .select(col("freq"), expr(
+            """explode(transform(sequence(1, size(sy)-1),
+               i -> struct(element_at(sy,i) AS a, element_at(sy,i+1) AS b)))""").as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum("freq").as("pf"))
+          .orderBy(col("pf").desc, col("a").asc, col("b").asc)
+          .limit(1).head()
+        val (a, b, pf) = (top.getString(0), top.getString(1), top.getLong(2))
+        // corpus words are pure [a-z] (fixture invariant), so the merge
+        // pair embeds into the expression text without escaping
+        cur = cur.withColumn("s",
+          expr(s"replace(s, ' $a  $b ', ' $a$b ')"))
+        // Recount symbols AFTER the replace (one vocab-sized aggregate),
+        // mirroring the oracle's tot$i recount: pf counts OVERLAPPING
+        // adjacent pairs while replace merges left-to-right
+        // non-overlapping, so `totalSyms -= pf` over-decrements on a
+        // self-overlapping run ('x x x' merges once, pf counts twice).
+        val totalSyms = cur
+          .select(sum(col("freq") * size(split(trim(col("s")), "  "))))
+          .head().getLong(0)
+        merges += ((a, b, pf, totalSyms))
+      }
+      merges.result()
     })
 
   /** T: BPE tokenizer training — the learned merge table itself (step,
@@ -728,33 +725,30 @@ object QualityOps extends QueryModule {
       val (m1, s1) = ms(st.getDouble(1), st.getDouble(2))
       val (m2, s2) = ms(st.getDouble(3), st.getDouble(4))
       val (m3, s3) = ms(st.getDouble(5), st.getDouble(6))
-      val bz = base.select(
+      val bz = Pins.persist(base.select(
         ((col("f1") - m1) / s1).as("x1"),
         ((col("f2") - m2) / s2).as("x2"),
-        ((col("f3") - m3) / s3).as("x3"), col("y"))
-        .persist()
-      try {
-        val w = Array(0.0, 0.0, 0.0, 0.0)
-        val rows = (0 until LrRounds).map { step =>
-          val z = col("x1") * w(0) + col("x2") * w(1) + col("x3") * w(2) + lit(w(3))
-          val p = lit(1.0e0) / (lit(1.0e0) + exp(-z))
-          val r = bz.agg(
-            ExactAgg.dsumR(log(lit(1.0e0) +
-              exp(-((lit(2.0e0) * col("y") - lit(1.0e0)) * z)))).as("lsum"),
-            sum(when((z > 0.0e0) === (col("y") === 1.0e0), 1L).otherwise(0L)).as("ncorr"),
-            ExactAgg.dsumR((p - col("y")) * col("x1")).as("g1"),
-            ExactAgg.dsumR((p - col("y")) * col("x2")).as("g2"),
-            ExactAgg.dsumR((p - col("y")) * col("x3")).as("g3"),
-            ExactAgg.dsumR(p - col("y")).as("g4"))
-            .head()
-          val out = (step, w(0), w(1), w(2), w(3),
-            snapD(r.getDouble(0) / n), r.getLong(1), n)
-          for (j <- 0 until 4) w(j) = snapD(w(j) - r.getDouble(2 + j) / n)
-          out
-        }
-        rows.toDF("step", "w1", "w2", "w3", "w4", "avg_loss", "n_correct", "n_docs")
-          .orderBy("step")
-      } finally { bz.unpersist(false); () }
+        ((col("f3") - m3) / s3).as("x3"), col("y")))
+      val w = Array(0.0, 0.0, 0.0, 0.0)
+      val rows = (0 until LrRounds).map { step =>
+        val z = col("x1") * w(0) + col("x2") * w(1) + col("x3") * w(2) + lit(w(3))
+        val p = lit(1.0e0) / (lit(1.0e0) + exp(-z))
+        val r = bz.agg(
+          ExactAgg.dsumR(log(lit(1.0e0) +
+            exp(-((lit(2.0e0) * col("y") - lit(1.0e0)) * z)))).as("lsum"),
+          sum(when((z > 0.0e0) === (col("y") === 1.0e0), 1L).otherwise(0L)).as("ncorr"),
+          ExactAgg.dsumR((p - col("y")) * col("x1")).as("g1"),
+          ExactAgg.dsumR((p - col("y")) * col("x2")).as("g2"),
+          ExactAgg.dsumR((p - col("y")) * col("x3")).as("g3"),
+          ExactAgg.dsumR(p - col("y")).as("g4"))
+          .head()
+        val out = (step, w(0), w(1), w(2), w(3),
+          snapD(r.getDouble(0) / n), r.getLong(1), n)
+        for (j <- 0 until 4) w(j) = snapD(w(j) - r.getDouble(2 + j) / n)
+        out
+      }
+      rows.toDF("step", "w1", "w2", "w3", "w4", "avg_loss", "n_correct", "n_docs")
+        .orderBy("step")
     },
     Some {
       import ExactAgg.{sqlSnap, sqlSum, sqlSumR}

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import graft.domain.ChainFixture
 import graft.ops.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -91,32 +91,29 @@ object SimilarityOps extends QueryModule {
     * scans (no lazy-plan chaining, the g4 rundown lesson), and the element
     * rollup shuffles only (cell, pos) partials after map-side combine. */
   private def trainCodebook(s: SparkSession, dir: String): Array[Array[Double]] =
-    codebooks.computeIfAbsent(dir, _ => {
-      val emb = Tables.embeddings(s, dir)
+    codebooks.computeIfAbsent(dir, _ => Pins.scope {
+      val emb = Pins.persist(Tables.embeddings(s, dir)
         .filter(col("vec_id") >= NumQueries)
         .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-        .persist()
-      try {
-        val nCorpus = emb.count()
-        var cents: Array[Array[Double]] = emb
-          .filter(col("vec_id") < NumQueries + numCellsFor(nCorpus))
-          .orderBy("vec_id").collect()
-          .map(_.getSeq[Double](1).toArray)
-        for (_ <- 0 until KmIters) {
-          val sums = assignCells(s, emb, cents)
-            .select(col("cell"), posexplode(col("emb")).as(Seq("pos", "x")))
-            .groupBy("cell", "pos")
-            .agg(graft.ops.ExactAgg.dsum(col("x")).as("sx"), count(lit(1)).as("n"))
-            .withColumn("m", graft.ops.ExactAgg.snap(col("sx") / col("n")))
-            .select("cell", "pos", "m")
-            .collect()
-          val next = cents.map(_.clone())
-          sums.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-          cents = next
-        }
-        cents
-      } finally { emb.unpersist(false); () }
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb")))
+      val nCorpus = emb.count()
+      var cents: Array[Array[Double]] = emb
+        .filter(col("vec_id") < NumQueries + numCellsFor(nCorpus))
+        .orderBy("vec_id").collect()
+        .map(_.getSeq[Double](1).toArray)
+      for (_ <- 0 until KmIters) {
+        val sums = assignCells(s, emb, cents)
+          .select(col("cell"), posexplode(col("emb")).as(Seq("pos", "x")))
+          .groupBy("cell", "pos")
+          .agg(graft.ops.ExactAgg.dsum(col("x")).as("sx"), count(lit(1)).as("n"))
+          .withColumn("m", graft.ops.ExactAgg.snap(col("sx") / col("n")))
+          .select("cell", "pos", "m")
+          .collect()
+        val next = cents.map(_.clone())
+        sums.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+        cents = next
+      }
+      cents
     })
 
   private def centsDf(s: SparkSession, cents: Array[Array[Double]]): DataFrame = {
@@ -476,35 +473,33 @@ object SimilarityOps extends QueryModule {
     * exact-decimal snapped means, empty codes carry. The collected state
     * per round is PqM·PqK·PqSubDim = 512 doubles. */
   private def trainPqCodebook(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCodebooks.computeIfAbsent(dir, _ => {
+    pqCodebooks.computeIfAbsent(dir, _ => Pins.scope {
       val emb = Tables.embeddings(s, dir)
         .filter(col("vec_id") >= NumQueries)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      val sub = subFrame(emb).persist()
-      try {
-        val seeds = emb.filter(col("vec_id") < NumQueries + PqK)
-          .orderBy("vec_id").collect()
-          .map(_.getSeq[Double](1).toArray)
-        var cb = Array.tabulate(PqM, PqK) { (m, c) =>
-          seeds(c).slice(m * PqSubDim, (m + 1) * PqSubDim)
-        }
-        for (_ <- 0 until PqIters) {
-          val sums = pqAssign(s, sub, cb)
-            .select(col("m"), col("c"), posexplode(col("sub")).as(Seq("p", "x")))
-            .groupBy("m", "c", "p")
-            .agg(graft.ops.ExactAgg.dsum(col("x")).as("sx"), count(lit(1)).as("n"))
-            .withColumn("cx", graft.ops.ExactAgg.snap(col("sx") / col("n")))
-            .select(col("m").cast("int"), col("c").cast("int"),
-              col("p").cast("int"), col("cx"))
-            .collect()
-          val next = cb.map(_.map(_.clone()))
-          sums.foreach(r => next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-            r.getDouble(3))
-          cb = next
-        }
-        cb
-      } finally { sub.unpersist(false); () }
+      val sub = Pins.persist(subFrame(emb))
+      val seeds = emb.filter(col("vec_id") < NumQueries + PqK)
+        .orderBy("vec_id").collect()
+        .map(_.getSeq[Double](1).toArray)
+      var cb = Array.tabulate(PqM, PqK) { (m, c) =>
+        seeds(c).slice(m * PqSubDim, (m + 1) * PqSubDim)
+      }
+      for (_ <- 0 until PqIters) {
+        val sums = pqAssign(s, sub, cb)
+          .select(col("m"), col("c"), posexplode(col("sub")).as(Seq("p", "x")))
+          .groupBy("m", "c", "p")
+          .agg(graft.ops.ExactAgg.dsum(col("x")).as("sx"), count(lit(1)).as("n"))
+          .withColumn("cx", graft.ops.ExactAgg.snap(col("sx") / col("n")))
+          .select(col("m").cast("int"), col("c").cast("int"),
+            col("p").cast("int"), col("cx"))
+          .collect()
+        val next = cb.map(_.map(_.clone()))
+        sums.foreach(r => next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+          r.getDouble(3))
+        cb = next
+      }
+      cb
     })
 
   /** S5: product-quantization ANN with asymmetric distance (ADC) — the
@@ -736,51 +731,46 @@ object SimilarityOps extends QueryModule {
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
         .withColumn("nrm", sqrt(dblSum("transform(emb, x -> x * x)")))
-      val asg = assignCells(s, emb, cb).persist()
-      var pairs0: Option[org.apache.spark.sql.DataFrame] = None
-      try {
-        // block bounding: the IVF cell law (cells ∝ √N) would let
-        // within-cell pair work grow ~N^1.5; salting each cell into S
-        // sub-blocks of ≤ BlockCap expected members caps total pair work
-        // at ~N·BlockCap/2 — linear — at the cost of missing cross-block
-        // pairs, the same approximation SemDeDup makes by over-clustering.
-        // S = 1 (no-op) until a cell would exceed the cap; the oracle
-        // derives the identical S from its own counts.
-        val nCorpus = asg.count()
-        val sSub = math.max(1L,
-          math.ceil(nCorpus.toDouble / (cb.length * BlockCap)).toLong)
-        val a = asg.select(col("cell"), pmod(col("vec_id"), lit(sSub)).as("sub"),
-          col("vec_id").as("va"), col("emb").as("ea"), col("nrm").as("na"))
-        val b = asg.select(col("cell").as("cell_b"),
-          pmod(col("vec_id"), lit(sSub)).as("sub_b"),
-          col("vec_id").as("vb"), col("emb").as("eb"), col("nrm").as("nb"))
-        val pairs = a.join(b,
-            col("cell") === col("cell_b") && col("sub") === col("sub_b") &&
-              col("va") < col("vb"))
-          .withColumn("cos", graft.ops.ExactAgg.snap(
-            dotCol("ea", "eb") / (col("na") * col("nb"))))
-          .select("cell", "va", "vb", "cos")
-          .persist()
-        pairs0 = Some(pairs)
-        val dups = pairs.filter(col("cos") >= 0.40e0)
-        val labels = DedupOps.clusterLabels(s,
-            dups.select(col("va").as("doc_a"), col("vb").as("doc_b")))
-          .withColumnRenamed("doc_id", "vec_id")
-        val groups = labels.join(asg.select("vec_id", "cell"), Seq("vec_id"))
-          .groupBy("cell", "lbl")
-          .agg(count(lit(1)).as("n_members"))
-        val perCell = groups.groupBy("cell")
-          .agg(count(lit(1)).as("n_groups"),
-            sum(col("n_members") - 1).as("n_removed"))
-        pairs.groupBy("cell")
-          .agg(count(lit(1)).as("n_pairs_checked"),
-            sum((col("cos") >= 0.40e0).cast("long")).as("n_dup_pairs"))
-          .join(perCell, Seq("cell"), "left")
-          .select(col("cell"), col("n_pairs_checked"), col("n_dup_pairs"),
-            coalesce(col("n_groups"), lit(0L)).as("n_groups"),
-            coalesce(col("n_removed"), lit(0L)).as("n_removed"))
-          .orderBy("cell")
-      } finally { asg.unpersist(false); pairs0.foreach(_.unpersist(false)); () }
+      val asg = Pins.persist(assignCells(s, emb, cb))
+      // block bounding: the IVF cell law (cells ∝ √N) would let
+      // within-cell pair work grow ~N^1.5; salting each cell into S
+      // sub-blocks of ≤ BlockCap expected members caps total pair work
+      // at ~N·BlockCap/2 — linear — at the cost of missing cross-block
+      // pairs, the same approximation SemDeDup makes by over-clustering.
+      // S = 1 (no-op) until a cell would exceed the cap; the oracle
+      // derives the identical S from its own counts.
+      val nCorpus = asg.count()
+      val sSub = math.max(1L,
+        math.ceil(nCorpus.toDouble / (cb.length * BlockCap)).toLong)
+      val a = asg.select(col("cell"), pmod(col("vec_id"), lit(sSub)).as("sub"),
+        col("vec_id").as("va"), col("emb").as("ea"), col("nrm").as("na"))
+      val b = asg.select(col("cell").as("cell_b"),
+        pmod(col("vec_id"), lit(sSub)).as("sub_b"),
+        col("vec_id").as("vb"), col("emb").as("eb"), col("nrm").as("nb"))
+      val pairs = Pins.persist(a.join(b,
+          col("cell") === col("cell_b") && col("sub") === col("sub_b") &&
+            col("va") < col("vb"))
+        .withColumn("cos", graft.ops.ExactAgg.snap(
+          dotCol("ea", "eb") / (col("na") * col("nb"))))
+        .select("cell", "va", "vb", "cos"))
+      val dups = pairs.filter(col("cos") >= 0.40e0)
+      val labels = DedupOps.clusterLabels(s,
+          dups.select(col("va").as("doc_a"), col("vb").as("doc_b")))
+        .withColumnRenamed("doc_id", "vec_id")
+      val groups = labels.join(asg.select("vec_id", "cell"), Seq("vec_id"))
+        .groupBy("cell", "lbl")
+        .agg(count(lit(1)).as("n_members"))
+      val perCell = groups.groupBy("cell")
+        .agg(count(lit(1)).as("n_groups"),
+          sum(col("n_members") - 1).as("n_removed"))
+      pairs.groupBy("cell")
+        .agg(count(lit(1)).as("n_pairs_checked"),
+          sum((col("cos") >= 0.40e0).cast("long")).as("n_dup_pairs"))
+        .join(perCell, Seq("cell"), "left")
+        .select(col("cell"), col("n_pairs_checked"), col("n_dup_pairs"),
+          coalesce(col("n_groups"), lit(0L)).as("n_groups"),
+          coalesce(col("n_removed"), lit(0L)).as("n_removed"))
+        .orderBy("cell")
     },
     Some {
       s"""WITH RECURSIVE el AS (

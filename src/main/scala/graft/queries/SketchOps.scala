@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ops.ExactAgg
-import graft.{QueryDef, QueryModule, Tables}
+import graft.{Pins, QueryDef, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -401,8 +401,7 @@ object SketchOps extends QueryModule {
       // reused AND cheap to hold relative to recompute).
       val sh = shingleHashes(s, dir)
         .withColumn("is_eval", pmod(col("doc_id"), lit(41)) === 0)
-      val evalSet = sh.filter(col("is_eval")).select(col("sh")).distinct()
-        .persist()
+      val evalSet = Pins.persist(sh.filter(col("is_eval")).select(col("sh")).distinct())
       val evalSh = withPos(evalSet)
       val filt = evalSh.select(col("p1").as("p"))
         .union(evalSh.select(col("p2").as("p")))

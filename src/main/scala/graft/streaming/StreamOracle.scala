@@ -1,10 +1,10 @@
 package graft.streaming
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.domain.ChainFixture
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 /** Batch-equivalence oracle for the streaming trio (SURVEY §2.9 R2/R5 +
   * §2.1 S5): the tip pipeline's stateful per-pool fold is deterministic and
@@ -41,13 +41,12 @@ object StreamOracle extends QueryModule {
     * accumulate unbounded Thread objects across a 147-query suite. */
   private val exitDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val exitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      exitDirs.forEach(d => rm(new java.io.File(d)))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      exitDirs.forEach(d => rm(new java.io.File(d)))))
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete(): Unit
+  }
   private[streaming] def deleteOnExit(dir: String): Unit = { exitHook; exitDirs.add(dir): Unit }
 
   private def withCtes(sql: String) = Some(s"WITH ${ChainFixture.sqlCtes} $sql")
@@ -72,10 +71,9 @@ object StreamOracle extends QueryModule {
     * computed from a one-row agg (no fact-sized driver action). */
   private def withBlockTerciles(in: DataFrame): DataFrame = {
     // persist across the two consumers (the max-block action here, the
-    // drop writes in driveFold): the update derivation is an actions-store
-    // scan + aggregate that otherwise runs twice; the harness clears the
-    // cache between queries
-    val p = in.persist()
+    // drop writes in driveDrops): the update derivation is an actions-store
+    // scan + aggregate that otherwise runs twice
+    val p = Pins.persist(in)
     val mbRow = p.agg(max(col("block"))).head()
     val mb = if (mbRow.isNullAt(0)) 0L else mbRow.getLong(0)
     val (cut1, cut2) = (mb / 3, 2 * mb / 3)
@@ -84,41 +82,85 @@ object StreamOracle extends QueryModule {
         .when(col("block") <= cut2, 1L).otherwise(2L))
   }
 
-  /** Drive a ONE-sided parquet-drop FILE stream (the `s5_write_behind`
-    * pattern, shared by the r4/r5 fold entries): the input frame carries a
-    * `batch` column; each batch lands as a single-file parquet append under
-    * the src dir while the query runs, so every drop is one micro-batch and
-    * the state carry across drops is what the entry verifies. `transform`
-    * builds the streaming plan on a CLONED session pinned to the
-    * stream-local shuffle-partition count; the output parquet is read back
-    * on the MAIN session. No driver-side collect anywhere. */
-  private def driveFold(s: SparkSession, in: DataFrame, nBatches: Long,
-      tag: String)(
-      transform: (SparkSession, DataFrame) => DataFrame): DataFrame = {
+  /** The one file-drop stream loop every streamed entry runs on. Each input
+    * frame carries a `batch` column; drop `i` lands as ONE parquet file per
+    * frame under that frame's source dir — a single file appears atomically
+    * to the source's listing, so every drop is exactly one whole
+    * micro-batch whatever the trigger timing (a multi-file drop can be
+    * discovered mid-move and split across two batches). Drop 0 is written
+    * before the query starts, drops 1 until `nBatches` while it runs, each
+    * followed by `processAllAvailable`, so the state carry across drops is
+    * what the entry verifies. `start` builds the sink on a CLONED session
+    * pinned to `partitions` shuffle partitions, from one streaming frame per
+    * input, the output dir and a scratch dir. When the stream stops, the
+    * drops, the checkpoint and the scratch dir are deleted and the input
+    * pins released; the returned output dir, which lazy read-backs need,
+    * waits for [[deleteOnExit]]. Nothing fact-sized is collected. */
+  private[streaming] def driveDrops(s: SparkSession, ins: Seq[DataFrame],
+      nBatches: Long, partitions: Int, tag: String)(
+      start: (SparkSession, Seq[DataFrame], String, String) => DataStreamWriter[Row])
+      : String = {
     val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
     deleteOnExit(tmp)
-    val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
-    val data = in.persist()
-    try {
-      data.filter(col("batch") === 0L).drop("batch")
-        .coalesce(1).write.parquet(src)
+    val (out, scratch, ckpt) = (s"$tmp/out", s"$tmp/scratch", s"$tmp/ckpt")
+    val srcs = ins.indices.map(k => s"$tmp/src$k")
+    Pins.scope {
+      // pinned for the drop writes: each of them otherwise re-derives its
+      // input from the source scan
+      val data = ins.map(Pins.persist(_))
+      def drop(i: Long): Unit = data.zip(srcs).foreach { case (d, src) =>
+        d.filter(col("batch") === i).drop("batch")
+          .coalesce(1).write.mode("append").parquet(src)
+      }
+      drop(0)
       val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-      val stream = s2.readStream.schema(in.drop("batch").schema).parquet(src)
-      val q = transform(s2, stream)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+      s2.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      val streams = ins.zip(srcs).map { case (d, src) =>
+        s2.readStream.schema(d.drop("batch").schema).parquet(src)
+      }
+      val q = start(s2, streams, out, scratch).outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckpt).start()
       try {
         q.processAllAvailable()
-        (1L until nBatches).foreach { i =>
-          data.filter(col("batch") === i).drop("batch")
-            .coalesce(1).write.mode("append").parquet(src)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally { data.unpersist(false); () }
-    s.read.parquet(out)
+        (1L until nBatches).foreach { i => drop(i); q.processAllAvailable() }
+      } finally {
+        q.stop()
+        (srcs :+ ckpt :+ scratch).foreach(d => rm(new java.io.File(d)))
+      }
+    }
+    out
+  }
+
+  /** Stream-local shuffle-partition count: a stream-stream join commits
+    * TWO state stores per shuffle partition per micro-batch; at the suite
+    * default of 32 that is 192 store commits for three batches — far more
+    * than this state volume needs (21.6 s → 5.5 s at sf0.1). Partition
+    * count should track state VOLUME: tiny here, many partitions across
+    * executors at cluster scale. The stream runs on a CLONED session
+    * pinned to this value, so the suite-global setting is never touched
+    * (not even transiently) and concurrently-planned batch queries are
+    * unaffected. */
+  private val StreamShufflePartitions = 4
+
+  /** [[driveDrops]] with one input and a parquet sink: `transform` builds
+    * the streaming plan, whose output is read back on the MAIN session. */
+  private def driveFold(s: SparkSession, in: DataFrame, nBatches: Long,
+      tag: String)(transform: (SparkSession, DataFrame) => DataFrame): DataFrame =
+    s.read.parquet(driveDrops(s, Seq(in), nBatches, StreamShufflePartitions, tag) {
+      (s2, streams, out, _) =>
+        transform(s2, streams.head).writeStream.format("parquet").option("path", out)
+    })
+
+  /** The read-back shape shared by the two pool-fold entries. */
+  private def foldRows(quotes: DataFrame): DataFrame = {
+    def tick(c: org.apache.spark.sql.Column) =
+      graft.functions.TickMath.tick_at_rate(c)
+    quotes
+      .select(col("pool"), col("block"), col("prePx").as("pre_px"),
+        col("postPx").as("post_px"), col("nUpdates").as("n_updates"),
+        (col("prePx").isNotNull &&
+          tick(col("prePx")) =!= tick(col("postPx"))).as("crossed"))
+      .orderBy("pool", "n_updates")
   }
 
   private val r5StreamFold = QueryDef(
@@ -126,20 +168,11 @@ object StreamOracle extends QueryModule {
     (s, dir) => {
       // three single-file drops in block order — the fold's state must
       // carry across the micro-batch boundaries
-      val batched = withBlockTerciles(updates(s, dir))
-      def tick(c: org.apache.spark.sql.Column) =
-        graft.functions.TickMath.tick_at_rate(c)
-      driveFold(s, batched, 3, "r5f") { (s2, stream) =>
-        import s2.implicits._
-        TipStream.poolQuotes(stream.as[TipStream.PoolUpdate]).toDF()
-      }
-        .select(col("pool"), col("block"), col("prePx"), col("postPx"),
-          col("nUpdates").as("n_updates"),
-          (col("prePx").isNotNull &&
-            tick(col("prePx")) =!= tick(col("postPx"))).as("crossed"))
-        .withColumnRenamed("prePx", "pre_px")
-        .withColumnRenamed("postPx", "post_px")
-        .orderBy("pool", "n_updates")
+      foldRows(driveFold(s, withBlockTerciles(updates(s, dir)), 3, "r5f") {
+        (s2, stream) =>
+          import s2.implicits._
+          TipStream.poolQuotes(stream.as[TipStream.PoolUpdate]).toDF()
+      })
     },
     withCtesRec(foldOracleSql))
 
@@ -184,7 +217,7 @@ object StreamOracle extends QueryModule {
   private val c3StreamDiscovery = QueryDef(
     "c3_stream_discovery",
     (s, dir) => {
-      val upd = updates(s, dir).persist() // max-block action + the union feed
+      val upd = Pins.persist(updates(s, dir)) // max-block action + the union feed
       val mbRow = upd.agg(max(col("block"))).head()
       val mb = if (mbRow.isNullAt(0)) 0L else mbRow.getLong(0)
       val dep = ChainFixture.pools(s)
@@ -254,50 +287,13 @@ object StreamOracle extends QueryModule {
   private val s5WriteBehind = QueryDef(
     "s5_write_behind",
     (s, dir) => {
-      val upd = updates(s, dir).persist()
-      val mbRow = upd.agg(max(col("block"))).head()
-      val maxBlock = if (mbRow.isNullAt(0)) 0L else mbRow.getLong(0)
-      val cut1 = maxBlock / 3
-      val cut2 = 2 * maxBlock / 3
-      // cleaned up at JVM exit, not here: the returned DataFrame reads the
-      // write-behind output lazily, so the files must outlive this builder
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s5").toString
-      deleteOnExit(tmp)
-      val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
-      // each drop is ONE file: the follower triggers continuously, and a
-      // multi-file drop can be discovered mid-move — half the files land in
-      // one micro-batch, half in the next, and because part files are hash
-      // slices the per-pool block order breaks. A single file appears
-      // atomically to the source's listing, so every drop is exactly one
-      // whole unit regardless of trigger timing.
-      upd.filter(col("block") <= cut1).coalesce(1).write.parquet(src)
-      // stream-local shuffle-partition pinning, same as driveFold /
-      // driveTwoSided: this was the ONE streamed entry still running its
-      // stateful fold on the main session's 32 shuffle partitions — 32
-      // state-store commits per micro-batch for state this small
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-      val q = TipStream.runTipRolled(s2, src, out, ckpt)
-      try {
-        q.processAllAvailable()
-        upd.filter(col("block") > cut1 && col("block") <= cut2)
-          .coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        upd.filter(col("block") > cut2)
-          .coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-      } finally q.stop()
-      upd.unpersist(false)
-      def tick(c: org.apache.spark.sql.Column) =
-        graft.functions.TickMath.tick_at_rate(c)
-      s.read.parquet(out)
-        .select(col("pool"), col("block"), col("prePx"), col("postPx"),
-          col("nUpdates").as("n_updates"),
-          (col("prePx").isNotNull &&
-            tick(col("prePx")) =!= tick(col("postPx"))).as("crossed"))
-        .withColumnRenamed("prePx", "pre_px")
-        .withColumnRenamed("postPx", "post_px")
-        .orderBy("pool", "n_updates")
+      val out = driveDrops(s, Seq(withBlockTerciles(updates(s, dir))), 3,
+          StreamShufflePartitions, "s5") { (s2, streams, out, _) =>
+        import s2.implicits._
+        TipStream.writeBehind(
+          TipStream.poolQuotes(streams.head.as[TipStream.PoolUpdate]), out)
+      }
+      foldRows(s.read.parquet(out))
     },
     withCtesRec(foldOracleSql))
 
@@ -512,7 +508,7 @@ object StreamOracle extends QueryModule {
   private val r4LateData = QueryDef(
     "r4_late_data",
     (s, dir) => {
-      val upd = updates(s, dir).persist() // max-block action + the unit rollup
+      val upd = Pins.persist(updates(s, dir)) // max-block action + the unit rollup
       val mbRow = upd.agg(max(col("block"))).head()
       val maxBlock = if (mbRow.isNullAt(0)) 0L else mbRow.getLong(0)
       val cut1 = maxBlock / 3
@@ -638,72 +634,25 @@ object StreamOracle extends QueryModule {
     (imps, convs, mx)
   }
 
-  /** Stream-local shuffle-partition count: a stream-stream join commits
-    * TWO state stores per shuffle partition per micro-batch; at the suite
-    * default of 32 that is 192 store commits for three batches — far more
-    * than this state volume needs (21.6 s → 5.5 s at sf0.1). Partition
-    * count should track state VOLUME: tiny here, many partitions across
-    * executors at cluster scale. The stream runs on a CLONED session
-    * pinned to this value, so the suite-global setting is never touched
-    * (not even transiently) and concurrently-planned batch queries are
-    * unaffected. */
-  private val StreamShufflePartitions = "4"
-
-  /** Drive a two-sided parquet-drop FILE stream (the `s5_write_behind`
-    * pattern): per-batch single-file appends land under src dirs while
-    * the query runs — source discovery, checkpointing, and the parquet
-    * sink all sit on the measured path, with no driver-side collect. The
-    * joined output is read back on the MAIN session. */
-  private def driveTwoSided(s: SparkSession, aDf: DataFrame, bDf: DataFrame,
-      nBatches: Long, joinExpr: String, joinType: String,
-      sentinel: Option[(DataFrame, DataFrame)], tag: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    deleteOnExit(tmp)
-    val (srcA, srcB, out, ckpt) = (s"$tmp/a", s"$tmp/b", s"$tmp/out", s"$tmp/ckpt")
-    // persist both sides for the drop-write phase (driveFold already does):
-    // each of the 2×nBatches single-file writes otherwise re-derives its
-    // side from the source scan
-    val (aP, bP) = (aDf.persist(), bDf.persist())
-    aP.filter(col("batch") === 0).drop("batch").coalesce(1).write.parquet(srcA)
-    bP.filter(col("batch") === 0).drop("batch").coalesce(1).write.parquet(srcB)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    val a = s2.readStream.schema(aDf.drop("batch").schema).parquet(srcA)
-      .withWatermark("a_ts", "48 hours")
-    val b = s2.readStream.schema(bDf.drop("batch").schema).parquet(srcB)
-      .withWatermark("b_ts", "48 hours")
-    val q = a.join(b, expr(joinExpr), joinType)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-      (1L until nBatches).foreach { i =>
-        aP.filter(col("batch") === i).drop("batch").coalesce(1)
-          .write.mode("append").parquet(srcA)
-        bP.filter(col("batch") === i).drop("batch").coalesce(1)
-          .write.mode("append").parquet(srcB)
-        q.processAllAvailable()
-      }
-      sentinel.foreach { case (sa, sb) =>
-        sa.coalesce(1).write.mode("append").parquet(srcA)
-        sb.coalesce(1).write.mode("append").parquet(srcB)
-        q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      aP.unpersist(false); bP.unpersist(false); ()
-    }
-    s.read.parquet(out)
-  }
+  /** The two attribution sides streamed through [[driveDrops]] into the
+    * watermarked 6-hour interval join of type `joinType`; the joined
+    * output is read back on the MAIN session. */
+  private def attribJoin(s: SparkSession, imps: DataFrame, convs: DataFrame,
+      nBatches: Long, joinType: String, tag: String): DataFrame =
+    s.read.parquet(driveDrops(s, Seq(imps, convs), nBatches,
+        StreamShufflePartitions, tag) { (_, streams, out, _) =>
+      streams(0).withWatermark("a_ts", "48 hours")
+        .join(streams(1).withWatermark("b_ts", "48 hours"), expr(
+          """a_user = b_user AND b_ts >= a_ts
+             AND b_ts <= a_ts + INTERVAL 6 HOURS"""), joinType)
+        .writeStream.format("parquet").option("path", out)
+    })
 
   private val r8StreamJoin = QueryDef(
     "r8_stream_join",
     (s, dir) => {
       val (imps, convs, _) = attribFrames(s, dir)
-      driveTwoSided(s, imps, convs, 3,
-        """a_user = b_user AND b_ts >= a_ts
-           AND b_ts <= a_ts + INTERVAL 6 HOURS""", "inner", None, "r8j")
+      attribJoin(s, imps, convs, 3, "inner", "r8j")
         .withColumn("day", expr("unix_micros(b_ts) div 86400000000"))
         .groupBy("a_type", "day")
         .agg(count(lit(1)).as("n_pairs"),
@@ -741,18 +690,19 @@ object StreamOracle extends QueryModule {
     "r8_outer_join",
     (s, dir) => {
       val (imps, convs, mx) = attribFrames(s, dir)
-      // sentinel flush: 100 days past the data, watermark sails past
-      // every real window; the pair cannot join (imp 7 h after conv)
+      // sentinel flush, the last of four drops: 100 days past the data,
+      // the watermark sails past every real window; the pair cannot join
+      // (imp 7 h after conv)
       val far = mx + 100L * 86400000000L
       val sentA = s.range(1).select(lit(-1L).as("a_user"),
         lit("view").as("a_type"),
-        expr(s"timestamp_micros(${far + 7L * 3600000000L}L)").as("a_ts"))
+        expr(s"timestamp_micros(${far + 7L * 3600000000L}L)").as("a_ts"),
+        lit(3L).as("batch"))
       val sentB = s.range(1).select(lit(-1L).as("b_user"),
-        lit(0.0).as("b_value"), expr(s"timestamp_micros(${far}L)").as("b_ts"))
-      driveTwoSided(s, imps, convs, 3,
-        """a_user = b_user AND b_ts >= a_ts
-           AND b_ts <= a_ts + INTERVAL 6 HOURS""", "left_outer",
-        Some((sentA, sentB)), "r8o")
+        lit(0.0).as("b_value"), expr(s"timestamp_micros(${far}L)").as("b_ts"),
+        lit(3L).as("batch"))
+      attribJoin(s, imps.unionByName(sentA), convs.unionByName(sentB), 4,
+        "left_outer", "r8o")
         .filter(col("a_user") >= 0L)
         .groupBy("a_type")
         .agg(count(lit(1)).as("n_rows"),
@@ -795,7 +745,7 @@ object StreamOracle extends QueryModule {
   private val d8StreamDedup = QueryDef(
     "d8_stream_dedup",
     (s, dir) => {
-      val pre = graft.Tables.documents(s, dir)
+      val pre = Pins.persist(graft.Tables.documents(s, dir)
         // head fingerprint, not the full text: this corpus has zero exact
         // full-text duplicates (d1 reports 0 clusters), so keying on the
         // 100-char head is what makes cross-batch suppression actually
@@ -805,40 +755,17 @@ object StreamOracle extends QueryModule {
         .groupBy("h", "b").agg(min(col("doc_id")).as("rep"))
         .withColumn("ts", timestamp_micros(
           lit(1700000000000000L) + col("b") * 3600L * 1000000L))
-        .persist()
-      try {
-        // file-source drive (s5_write_behind pattern): batches land as
-        // single-file parquet drops — no driver-side collect, and source
-        // discovery + checkpointing sit on the measured path
-        val tmp = java.nio.file.Files.createTempDirectory("graft_d8").toString
-        deleteOnExit(tmp)
-        val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
-        pre.filter(col("b") === 0).coalesce(1).write.parquet(src)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-        val q = s2.readStream.schema(pre.schema).parquet(src)
-          .withWatermark("ts", "1 day")
-          .dropDuplicatesWithinWatermark("h")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          q.processAllAvailable()
-          (1L to 2L).foreach { b =>
-            pre.filter(col("b") === b).coalesce(1)
-              .write.mode("append").parquet(src)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val nb = pre.groupBy("h").agg(count(lit(1)).as("n_batches"))
-        s.read.parquet(out)
-          .join(nb, "h")
-          .groupBy(col("b").as("batch"))
-          .agg(count(lit(1)).as("n_kept"),
-            sum(col("rep")).as("sum_doc_id"),
-            sum(col("n_batches") - 1).as("n_dup_batches_dropped"))
-          .orderBy("batch")
-      } finally { pre.unpersist(false); () }
+        .withColumn("batch", col("b")))
+      val nb = pre.groupBy("h").agg(count(lit(1)).as("n_batches"))
+      driveFold(s, pre, 3, "d8") { (_, stream) =>
+        stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark("h")
+      }
+        .join(nb, "h")
+        .groupBy(col("b").as("batch"))
+        .agg(count(lit(1)).as("n_kept"),
+          sum(col("rep")).as("sum_doc_id"),
+          sum(col("n_batches") - 1).as("n_dup_batches_dropped"))
+        .orderBy("batch")
     },
     Some("""WITH pre AS (
         SELECT md5(substr(text, 1, 100)) AS h, doc_id % 3 AS b,
@@ -873,7 +800,7 @@ object StreamOracle extends QueryModule {
   private val d17StreamLineDedup = QueryDef(
     "d17_stream_line_dedup",
     (s, dir) => {
-      val pre = graft.Tables.documents(s, dir)
+      val pre = Pins.persist(graft.Tables.documents(s, dir)
         .withColumn("ws", split(col("text"), " "))
         .select(col("doc_id"), (col("doc_id") % 3).as("b"),
           posexplode(expr(
@@ -885,38 +812,18 @@ object StreamOracle extends QueryModule {
         .agg(min(col("doc_id")).as("rep"), min(col("line")).as("line"))
         .withColumn("ts", timestamp_micros(
           lit(1700000000000000L) + col("b") * 3600L * 1000000L))
-        .persist()
-      try {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_d17").toString
-        deleteOnExit(tmp)
-        val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
-        pre.filter(col("b") === 0).coalesce(1).write.parquet(src)
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-        val q = s2.readStream.schema(pre.schema).parquet(src)
-          .withWatermark("ts", "1 day")
-          .dropDuplicatesWithinWatermark("lh")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          q.processAllAvailable()
-          (1L to 2L).foreach { b =>
-            pre.filter(col("b") === b).coalesce(1)
-              .write.mode("append").parquet(src)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val nb = pre.groupBy("lh").agg(count(lit(1)).as("n_batches"))
-        s.read.parquet(out)
-          .join(nb, "lh")
-          .groupBy(col("b").as("batch"))
-          .agg(count(lit(1)).as("n_kept"),
-            sum(col("rep")).as("sum_doc_id"),
-            sum(length(col("line")).cast("long")).as("sum_chars_kept"),
-            sum(col("n_batches") - 1).as("n_dup_batches_dropped"))
-          .orderBy("batch")
-      } finally { pre.unpersist(false); () }
+        .withColumn("batch", col("b")))
+      val nb = pre.groupBy("lh").agg(count(lit(1)).as("n_batches"))
+      driveFold(s, pre, 3, "d17") { (_, stream) =>
+        stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark("lh")
+      }
+        .join(nb, "lh")
+        .groupBy(col("b").as("batch"))
+        .agg(count(lit(1)).as("n_kept"),
+          sum(col("rep")).as("sum_doc_id"),
+          sum(length(col("line")).cast("long")).as("sum_chars_kept"),
+          sum(col("n_batches") - 1).as("n_dup_batches_dropped"))
+        .orderBy("batch")
     },
     Some("""WITH w AS (
         SELECT doc_id, doc_id % 3 AS b, string_split(text, ' ') AS ws
@@ -967,28 +874,26 @@ object StreamOracle extends QueryModule {
     * Falls back to the plain tercile when no pair lands in the third.
     * The streamed RESULT is batching-invariant; only the exercised state
     * path depends on the cuts. Both aggs are dimension-sized. */
-  private[graft] def w9Cuts(ev: DataFrame): (Long, Long) = {
+  private[graft] def w9Cuts(ev: DataFrame): (Long, Long) = Pins.scope {
     import org.apache.spark.sql.expressions.Window
     val mm = ev.agg(min(col("us")), max(col("us"))).head()
     val (mn, mx) = (mm.getLong(0), mm.getLong(1))
     val (t1, t2) = (mn + (mx - mn) / 3, mn + 2 * (mx - mn) / 3)
     val w = Window.partitionBy("user_id")
       .orderBy(col("us").asc, col("event_id").asc)
-    val pairs = ev.withColumn("nxt", lead(col("us"), 1).over(w))
+    val pairs = Pins.persist(ev.withColumn("nxt", lead(col("us"), 1).over(w))
       .filter(col("nxt").isNotNull &&
         col("nxt") - col("us") < 1800000000L && col("nxt") < mx)
-      .select(col("us")).persist()
+      .select(col("us")))
     def cutAtOrAfter(t: Long, below: Long): Option[Long] =
       pairs.filter(col("us") >= t && col("us") < below)
         .agg(min(col("us"))).head() match {
           case r if r.isNullAt(0) => None
           case r => Some(r.getLong(0))
         }
-    try {
-      val c1 = cutAtOrAfter(t1, t2).getOrElse(t1)
-      val c2 = cutAtOrAfter(math.max(t2, c1 + 1), mx).getOrElse(t2)
-      (c1, math.max(c2, c1 + 1))
-    } finally { pairs.unpersist(false); () }
+    val c1 = cutAtOrAfter(t1, t2).getOrElse(t1)
+    val c2 = cutAtOrAfter(math.max(t2, c1 + 1), mx).getOrElse(t2)
+    (c1, math.max(c2, c1 + 1))
   }
 
   private val w9StreamSession = QueryDef(
@@ -996,7 +901,7 @@ object StreamOracle extends QueryModule {
     (s, dir) => {
       // four consumers (max agg, the two cut searches, the batched drops)
       // otherwise re-derive the event slice from the source per pass
-      val ev = w9Events(s, dir).persist()
+      val ev = Pins.persist(w9Events(s, dir))
       val mx = ev.agg(max(col("us"))).head().getLong(0)
       val (cut1, cut2) = w9Cuts(ev)
       // time-ordered drops: the watermark only ever advances, so no
@@ -1007,8 +912,7 @@ object StreamOracle extends QueryModule {
       val sentinel = s.range(1).select(lit(-1L).as("user_id"),
         lit(-1L).as("event_id"),
         lit(mx + 10L * 86400L * 1000000L).as("us"), lit(3L).as("batch"))
-      val folded = driveFold(s, batched.unionByName(sentinel), 4, "w9s") {
-        (s2, stream) =>
+      driveFold(s, batched.unionByName(sentinel), 4, "w9s") { (_, stream) =>
         stream
           .withColumn("tsx", timestamp_micros(col("us")))
           .withWatermark("tsx", "1 minute")
@@ -1017,8 +921,6 @@ object StreamOracle extends QueryModule {
           .agg(count(lit(1)).as("sn"))
           .select(col("user_id"), col("sn"))
       }
-      ev.unpersist(false)
-      folded
         .filter(col("user_id") >= 0)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_sessions"), max(col("sn")).as("max_session_n"))

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import graft.{QueryDef, QueryModule}
+import graft.{Pins, QueryDef, QueryModule}
 import graft.domain.{Accounting, ChainFixture, InspectorOps}
 import graft.domain.InspectorOps.{ComposerInputs, Cut}
 import graft.domain.Accounting.{sqlGateFlag, sqlGateProfit}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** R2 tip-mode END-TO-END equivalence (SURVEY §3 second entry point): the
   * reference's `TipInspector` runs the WHOLE classify → price → inspect
@@ -65,7 +64,7 @@ object TipInspect extends QueryModule {
 
   /** Per-batch micro-batch shuffle width (the stream-local analog of the
     * other fold entries' stream partitions — per-block work at a real tip). */
-  private val ShufflePartitions = "8"
+  private val ShufflePartitions = 8
 
   /** The composed per-slice inspection: run Q1+Q2+Q7 over the slice's
     * [[ComposerInputs]] and emit one normalized bundle row per detection
@@ -186,91 +185,6 @@ object TipInspect extends QueryModule {
     bundleArm.unionByName(typeArm).unionByName(blockArm)
   }
 
-  /** The shared three-drop streaming harness: writes tercile 0 as the
-    * initial source, starts a checkpointed file-source stream whose
-    * foreachBatch body (a) fails loudly on a missing predecessor tail,
-    * (b) carries the predecessor tail forward across an empty micro-batch,
-    * (c) unions the tail and calls `emit` with (session, full slice,
-    * own-block bar, batch id) — the emitter owns its batch-id-overwrite
-    * writes — and (d) overwrites the tail by batch id, then drops
-    * terciles 1 and 2.
-    *
-    * Tercile cuts derive from (min, max) so a fixture whose block numbers
-    * don't start near 0 still splits into three real drops, and the
-    * non-empty-drops assertion shares ONE per-block rollup pass with the
-    * cut derivation (blocks are dimension-sized) instead of scanning the
-    * persisted source twice. */
-  private def runTipStream(s: SparkSession, dir: String, tag: String)(
-      emit: (SparkSession, DataFrame, Long, Long) => Unit): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    StreamOracle.deleteOnExit(tmp)
-    val (src, tail, ckpt) = (s"$tmp/src", s"$tmp/tail", s"$tmp/ckpt")
-    val data = ChainFixture.tracesTable(s, dir).persist()
-    try {
-      val perBlock = data.groupBy("block_number").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      require(perBlock.nonEmpty, "tip stream: source has no blocks")
-      val (mn0, mx0) = (perBlock.keys.min, perBlock.keys.max)
-      val (cut1, cut2) = (mn0 + (mx0 - mn0) / 3, mn0 + 2 * (mx0 - mn0) / 3)
-      def terOf(b: Long) = if (b <= cut1) 0L else if (b <= cut2) 1L else 2L
-      val counts = perBlock.groupMapReduce { case (b, _) => terOf(b) } {
-        case (_, c) => c }(_ + _)
-      require((0L to 2L).forall(counts.getOrElse(_, 0L) > 0),
-        s"tip stream: tercile drops must all be non-empty, got $counts")
-      val batched = data.withColumn("batch",
-        when(col("block_number") <= cut1, 0L)
-          .when(col("block_number") <= cut2, 1L).otherwise(2L))
-      batched.filter(col("batch") === 0L).drop("batch")
-        .coalesce(1).write.parquet(src)
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", ShufflePartitions)
-      val stream = s2.readStream
-        .schema(data.schema).parquet(src)
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          val ss = b.sparkSession
-          val bp = b.persist()
-          try {
-            val prev = new java.io.File(s"$tail/batch=${batchId - 1}")
-            if (batchId > 0 && !prev.exists())
-              sys.error(s"tip stream: predecessor tail missing for batch " +
-                s"$batchId — refusing to inspect with a truncated window")
-            val mm = bp.agg(min(col("block_number")),
-              max(col("block_number"))).head()
-            if (mm.isNullAt(0)) {
-              // empty micro-batch: the window buffer must survive the gap
-              if (batchId > 0)
-                ss.read.parquet(prev.toString)
-                  .write.mode("overwrite").parquet(s"$tail/batch=$batchId")
-            } else {
-              val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-              // union the predecessor's tail so this batch's leading-edge
-              // 2-block windows are complete (multi_block_window buffer)
-              val full =
-                if (batchId > 0)
-                  ss.read.parquet(prev.toString).unionByName(bp)
-                else bp
-              emit(ss, full, mn, batchId)
-              // the tail for the NEXT batch: this batch's last block
-              full.filter(col("block_number") === mx)
-                .write.mode("overwrite").parquet(s"$tail/batch=$batchId")
-            }
-          } finally { bp.unpersist(false); () }
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        (1L to 2L).foreach { i =>
-          batched.filter(col("batch") === i).drop("batch")
-            .coalesce(1).write.mode("append").parquet(src)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally { data.unpersist(false); () }
-  }
-
   /** ONE tip stream per (JVM, sf dir): the reference runs a SINGLE
     * long-lived `TipInspector` carrying the whole inspector set and the
     * composer (tip.rs:34 — `inspectors: &[&dyn Inspector]`, one
@@ -279,9 +193,9 @@ object TipInspect extends QueryModule {
     * that shape: two output surfaces of the SAME streamed run — per
     * micro-batch the slice's [[ComposerInputs]] are built ONCE under
     * [[batchCut]], then the Q1+Q2+Q7 bundle union and the full-composer
-    * output are each written batch-id-overwrite to their own directory,
-    * and every RDD the batch pinned is released. Memoized per sf dir like
-    * the batch pipeline intermediates.
+    * output are each written batch-id-overwrite under their own directory
+    * (`inspect`, `composer`) of the returned output dir. Memoized per sf
+    * dir like the batch pipeline intermediates.
     *
     * Bench semantics (r16, fixing the r15 accounting flaw): Bench resets
     * this memo after its untimed warm pass, so the FIRST timed tip entry
@@ -290,8 +204,7 @@ object TipInspect extends QueryModule {
     * the timed region exactly once (pipeline accounting, like the other
     * materialized intermediates). The CORRECTNESS gate always drives the
     * real stream. */
-  private val tipRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val tipRuns = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The per-micro-batch cuts: every input and composer intermediate with
     * several consumers (two emitters, the three bundle arms, the six dedup
@@ -301,19 +214,7 @@ object TipInspect extends QueryModule {
     * each and stay lazy. */
   private val batchCut: Cut = {
     case ("xrem" | "surv", df) => df
-    case (_, df) => df.localCheckpoint()
-  }
-
-  /** Runs `body`, then unpersists every RDD that became persistent while it
-    * ran — the micro-batch's localCheckpoints, including the one inside
-    * [[InspectorOps.sandwichesOf]] — so a batch pins nothing past its
-    * writes. */
-  private def releasingPinned(s: SparkSession)(body: => Unit): Unit = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    try body
-    finally s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before(id)) rdd.unpersist(blocking = false)
-    }
+    case (_, df) => Pins.checkpoint(df)
   }
 
   /** Rehearsal hook: drop the per-JVM memo so the next invocation drives
@@ -321,26 +222,79 @@ object TipInspect extends QueryModule {
     * operator, not the stored-table read-back (a tip row therefore times
     * the whole shared run: both output surfaces). */
   private[graft] def resetTipRuns(): Unit = tipRuns.clear()
-  private def sharedTipRun(s: SparkSession, dir: String): (String, String) =
+
+  /** The shared run's stream: the traces table in three block-tercile
+    * drops through [[StreamOracle.driveDrops]], each micro-batch handled by
+    * [[tipBatch]]. Tercile cuts derive from (min, max) so a fixture whose
+    * block numbers don't start near 0 still splits into three real drops,
+    * and the non-empty-drops assertion shares ONE per-block rollup pass
+    * with the cut derivation (blocks are dimension-sized). */
+  private def sharedTipRun(s: SparkSession, dir: String): String =
     tipRuns.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_r2out").toString
-      StreamOracle.deleteOnExit(tmp)
-      val (outI, outC) = (s"$tmp/out_inspect", s"$tmp/out_composer")
-      runTipStream(s, dir, "r2tip") { (ss, full, mn, batchId) =>
-        releasingPinned(ss) {
-          val in = ComposerInputs.ofSlice(ss, full, batchCut)
-          inspectBundles(in, mn)
-            .write.mode("overwrite").parquet(s"$outI/batch=$batchId")
-          composedMevOf(in, mn, batchCut)
-            .write.mode("overwrite").parquet(s"$outC/batch=$batchId")
+      val traces = ChainFixture.tracesTable(s, dir)
+      val perBlock = traces.groupBy("block_number").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      require(perBlock.nonEmpty, "tip stream: source has no blocks")
+      val (mn0, mx0) = (perBlock.keys.min, perBlock.keys.max)
+      val (cut1, cut2) = (mn0 + (mx0 - mn0) / 3, mn0 + 2 * (mx0 - mn0) / 3)
+      def terOf(b: Long) = if (b <= cut1) 0L else if (b <= cut2) 1L else 2L
+      val counts = perBlock.groupMapReduce { case (b, _) => terOf(b) } {
+        case (_, c) => c }(_ + _)
+      require((0L to 2L).forall(counts.getOrElse(_, 0L) > 0),
+        s"tip stream: tercile drops must all be non-empty, got $counts")
+      val batched = traces.withColumn("batch",
+        when(col("block_number") <= cut1, 0L)
+          .when(col("block_number") <= cut2, 1L).otherwise(2L))
+      StreamOracle.driveDrops(s, Seq(batched), 3, ShufflePartitions, "r2tip") {
+        (_, streams, out, tail) => streams.head.writeStream.foreachBatch {
+          (b: DataFrame, batchId: Long) => tipBatch(b, batchId, out, tail)
         }
       }
-      (outI, outC)
     })
+
+  /** One micro-batch of the shared run, in one [[Pins.scope]] so the batch
+    * pins nothing past its writes:
+    *   (a) fails loudly on a missing predecessor tail,
+    *   (b) carries the predecessor tail forward across an empty
+    *       micro-batch,
+    *   (c) unions the tail, builds the slice's inputs ONCE and writes both
+    *       output surfaces under `out` with own-block bar = the batch's
+    *       min block, and
+    *   (d) overwrites the tail (this batch's last block) by batch id. */
+  private def tipBatch(b: DataFrame, batchId: Long, out: String,
+      tail: String): Unit = Pins.scope {
+    val ss = b.sparkSession
+    val bp = Pins.persist(b)
+    val prev = new java.io.File(s"$tail/batch=${batchId - 1}")
+    if (batchId > 0 && !prev.exists())
+      sys.error(s"tip stream: predecessor tail missing for batch " +
+        s"$batchId — refusing to inspect with a truncated window")
+    val mm = bp.agg(min(col("block_number")), max(col("block_number"))).head()
+    if (mm.isNullAt(0)) {
+      // empty micro-batch: the window buffer must survive the gap
+      if (batchId > 0)
+        ss.read.parquet(prev.toString)
+          .write.mode("overwrite").parquet(s"$tail/batch=$batchId")
+    } else {
+      val (mn, mx) = (mm.getLong(0), mm.getLong(1))
+      // union the predecessor's tail so this batch's leading-edge 2-block
+      // windows are complete (multi_block_window buffer)
+      val full =
+        if (batchId > 0) ss.read.parquet(prev.toString).unionByName(bp) else bp
+      val in = ComposerInputs.ofSlice(ss, full, batchCut)
+      inspectBundles(in, mn)
+        .write.mode("overwrite").parquet(s"$out/inspect/batch=$batchId")
+      composedMevOf(in, mn, batchCut)
+        .write.mode("overwrite").parquet(s"$out/composer/batch=$batchId")
+      // the tail for the NEXT batch: this batch's last block
+      full.filter(col("block_number") === mx)
+        .write.mode("overwrite").parquet(s"$tail/batch=$batchId")
+    }
+  }
 
   private val r2TipInspect = QueryDef(
     "r2_tip_inspect",
-    (s, dir) => s.read.parquet(sharedTipRun(s, dir)._1).drop("batch")
+    (s, dir) => s.read.parquet(s"${sharedTipRun(s, dir)}/inspect").drop("batch")
       .orderBy("btype", "block_number", "tx1", "tx2", "pool"),
     withCtes(s"""${InspectorOps.sandwichOracleCtes},
       ${InspectorOps.arbOracleCtes},
@@ -399,7 +353,7 @@ object TipInspect extends QueryModule {
     * the per-block edge key. */
   private val r2TipComposer = QueryDef(
     "r2_tip_composer",
-    (s, dir) => s.read.parquet(sharedTipRun(s, dir)._2).drop("batch")
+    (s, dir) => s.read.parquet(s"${sharedTipRun(s, dir)}/composer").drop("batch")
       .orderBy("kind", "block_number", "mev_type", "key"),
     withCtes(s"""${InspectorOps.composerCtes("CAST(blk AS VARCHAR) || '|' || utx")}
       SELECT 'bundle' AS kind, blk AS block_number, mev_type, bid AS key,

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Streaming / incremental mode (SURVEY §2.9 R2/R3/R5/S5): the reference's
   * tip-following executor (bin/src/executors/tip.rs) re-expressed as
@@ -348,45 +349,31 @@ object TipStream {
   def crossedBoundary(q: PoolQuote): Boolean =
     q.prePx.exists(p => tickOf(p) != tickOf(q.postPx))
 
-  /** R2+S5: follow a parquet directory as the chain tip, maintain pool
-    * state, and write each micro-batch through foreachBatch (the ordered
-    * write-behind sink). Returns the running query. */
   /** The checkpointed write-behind sink: one parquet directory per
     * micro-batch. foreachBatch is AT-LEAST-once (a crash between the write
     * and the checkpoint commit replays the batch on restart), so the write
     * OVERWRITES its batch directory — replaying batch N replaces its own
     * output instead of appending a duplicate copy, which is what makes the
-    * sink effectively exactly-once per batch id. */
-  private def writeBehind(quotes: Dataset[PoolQuote], outDir: String,
-      checkpoint: String): StreamingQuery =
+    * sink effectively exactly-once per batch id. The caller sets the
+    * checkpoint and starts it. */
+  private[streaming] def writeBehind(quotes: Dataset[PoolQuote],
+      outDir: String): DataStreamWriter[Row] =
     quotes.toDF()
       .writeStream
       .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
-      .start()
 
+  /** R2+S5: follow a parquet directory as the chain tip, maintain pool
+    * state, and write each micro-batch through the checkpointed
+    * [[writeBehind]] sink. Returns the running query. */
   def runTip(spark: SparkSession, srcDir: String, outDir: String,
       checkpoint: String): StreamingQuery = {
     val schema = "pool STRING, block_number BIGINT, tx_idx BIGINT, " +
       "amount_in DOUBLE, amount_out DOUBLE"
     val stream = spark.readStream.schema(schema).parquet(srcDir)
-    writeBehind(poolQuotes(toPoolUpdates(stream)), outDir, checkpoint)
-  }
-
-  /** [[runTip]] over a source already pre-rolled to the total-order
-    * (pool, block, tx) update grain — the form whose emission sequence is
-    * engine-independent and therefore ORACLE-HASHABLE end-to-end (the raw
-    * trace-grain source has no total order within a tx). Same file
-    * follower, same checkpointed write-behind sink. */
-  def runTipRolled(spark: SparkSession, srcDir: String, outDir: String,
-      checkpoint: String): StreamingQuery = {
-    import spark.implicits._
-    val schema = "pool STRING, block BIGINT, txIdx BIGINT, " +
-      "px DOUBLE, vol DOUBLE"
-    val stream = spark.readStream.schema(schema).parquet(srcDir)
-    writeBehind(poolQuotes(stream.as[PoolUpdate]), outDir, checkpoint)
+    writeBehind(poolQuotes(toPoolUpdates(stream)), outDir)
+      .option("checkpointLocation", checkpoint).start()
   }
 }

@@ -9,6 +9,13 @@ class PlanSpec extends SparkTestBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, SfDir).queryExecution.executedPlan.toString
 
+  test("d12 reads its chunk table through the cache it pins") {
+    // the chunk table feeds the shared-chunk rollup and the per-source
+    // rollup; released before the lazy result runs, it is derived twice
+    val p = Pins.scope(plan("d12_cdc_chunks"))
+    assert(p.contains("InMemoryTableScan"), p)
+  }
+
   test("q6 filter is pushed down to the parquet scan") {
     val p = plan("q6_filtered_sum")
     assert(p.contains("PushedFilters: ["), p)

@@ -306,6 +306,26 @@ class StreamingSpec extends SparkTestBase {
     assert(left.isEmpty, s"tip stream left ${left.size} persistent RDDs: $left")
   }
 
+  test("a file-drop drive keeps only its output once its stream stops") {
+    // the drops, the checkpoint and the tip's tail are deleted at stop;
+    // only the output the lazy read-back needs waits for JVM exit
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def drives(tag: String) =
+      tmp.listFiles().filter(_.getName.startsWith(s"graft_$tag")).toSet
+    def check(q: String, tag: String): Unit = {
+      val before = drives(tag)
+      Pins.scope(SparkEntry.queries(q)(spark, SfDir)
+        .write.mode("overwrite").format("noop").save())
+      val made = drives(tag) -- before
+      assert(made.size == 1, s"$q: expected one drive dir, got $made")
+      assert(made.head.list().toSet == Set("out"),
+        s"$q: drive dir holds ${made.head.list().mkString(", ")}")
+    }
+    check("r5_stream_fold", "r5f")
+    graft.streaming.TipInspect.resetTipRuns()
+    check("r2_tip_composer", "r2tip")
+  }
+
   test("R2 tip-mode inspection equals the batch composer on the same blocks") {
     // the end-to-end equivalence claim, asserted Spark-vs-Spark: the
     // streamed three-drop classify→price→inspect run (checkpointed file
