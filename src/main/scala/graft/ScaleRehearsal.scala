@@ -28,7 +28,12 @@ import org.apache.spark.sql.functions._
   * This writes ONLY under /tmp (testdata is read-only) and is evidence
   * tooling, not a registered query — oracles still run on driver data.
   *
-  * Usage: runMain graft.ScaleRehearsal gen|run|both|sf10gen|sf10run|sf10 [q1,q2,...]
+  * Usage: runMain graft.ScaleRehearsal gen|run|both [q1,q2,...]
+  *
+  * The retired sf10, skew, cluster-branch and Big Mac profile probes keep
+  * their results in SF1_REHEARSAL.json (`sf10_probe`, `skew_probe`,
+  * `skew_domain`, `skew_domain_jit`, `cluster_branch`, `cluster_crossover`)
+  * and their code at commit `09ecbec`.
   */
 object ScaleRehearsal {
   val SrcDir = "/root/testdata/sf0.1"
@@ -91,186 +96,20 @@ object ScaleRehearsal {
     // round 15: the full-composer tip stream and the two new corpus passes
     "r2_tip_composer", "t_decontaminate_span", "mm_phash_dedup")
 
-  /** sf10 probe (VERDICT r9 #8): the heaviest surfaces at 100× sf0.1 —
-    * the 100×-claims check a 10× rehearsal can't make. The probe runs
-    * q1_bigmac with `spark.graft.bigmac.diskCheckpoint=true` (see
-    * [[graft.domain.BigMacOps]] `pin`): the assembly's fact-sized
-    * intermediates checkpoint to local DISK instead of executor storage
-    * memory, so the default 8 GiB/32-thread stand-in completes at 100×
-    * data — the r11 probe needed a 48 GiB heap because four fact-sized
-    * localCheckpoints competed with execution memory. */
-  val Sf10Probe: Seq[String] = Seq(
-    "a5_block_analysis_wide", "j2_dex_asof", "s5_write_behind",
-    "d2_minhash_lsh", "t_decontaminate",
-    // round 10, session 4: the discovery surface — its claimed-set
-    // anti-join forces the sandwich/jit/arb bundle pipeline at 100×
-    "q9_possible_mev",
-    // round 11 (VERDICT r10 #9): the heaviest domain/composer surfaces
-    // and the file-driven stream-stream joins — their 100× story
-    // previously rested on the 10× rehearsal alone
-    "q1_bigmac", "r8_stream_join", "r8_outer_join", "q9_mev_count",
-    // round 12: the per-pool streaming folds — file-drop-driven since
-    // r11 (StreamOracle.driveDrops), so the probe measures the OPERATOR's
-    // keyed state at 100×, not a driver-collected harness
-    "r5_stream_fold", "r5_tick_fold",
-    // round 13: the ZeroX batch-fill — the round's one new surface with
-    // a shuffle (the any-fill-missing window over (tx_hash, trace_idx));
-    // tx-local keying, so the 100× claim is the same bounded-state
-    // argument as the fold rows — measured here instead of argued
-    "c5_zerox_batchfill",
-    // round 13: incremental dedup — THE continuous-ingest pattern; at
-    // 100× both the modeled index side and the new batch scale together,
-    // the worst case for the band join (a real deployment's index join
-    // is new-batch-bounded)
-    "d13_incremental_dedup",
-    // round 14: line-level dedup — the byte-exact surviving-text rebuild
-    // rides one line-hash groupBy + a broadcast dup join; the 100× row
-    // checks the rebuild rollup stays linear
-    "d15_line_dedup",
-    // round 15: the mergeable quantile sketch (cells stay sketch-sized
-    // while the corpus grows 100×) and the PageRank power iteration
-    // (3 edge⋈rank shuffles over a 100×-node graph)
-    "sk5_quantile_sketch", "g7_pagerank")
-  val Sf10Dir = "/tmp/graft_sf10"
-
-  /** Skew probe: the user-partitioned event analytics (funnel, cohorts,
-    * sessionize) re-measured on an sf1-sized events table where ONE user
-    * owns ~30% of all rows — the power-user case the w5/w6 scaladoc argues
-    * is bounded. The stance is argued from per-user state being O(1) and
-    * AQE skew-splitting; this measures it instead: ratio ≈ 1 means the hot
-    * key does not become a straggler at equal row count. */
-  val SkewProbe: Seq[String] = Seq("w5_funnel", "w6_cohort_retention",
-    "w2_sessionize", "w7_ab_test")
-  val SkewDir = "/tmp/graft_skew"
+  private val Usage = "Usage: runMain graft.ScaleRehearsal gen|run|both [q1,q2,...]"
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("both")
+    if (!Set("gen", "run", "both")(mode)) {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val only = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val spark = GraftSession.forMain("32")
-    if (mode == "gen" || mode == "both") gen(spark, Copies, OutDir)
-    if (mode == "run" || mode == "both") run(spark, only)
-    if (mode == "sf10gen" || mode == "sf10") gen(spark, 100, Sf10Dir)
-    if (mode == "sf10run" || mode == "sf10") runSf10(spark, only)
-    if (mode == "skew") {
-      runSkew(spark); runSkewDomain(spark); runSkewDomainJit(spark)
-    }
-    if (mode == "skewdom") { runSkewDomain(spark); runSkewDomainJit(spark) }
-    if (mode == "skewjit") runSkewDomainJit(spark)
-    if (mode == "cluster") runClusterBranch(spark)
-    if (mode == "clusterxl") runClusterCrossover(spark,
-      args.drop(1).headOption.map(_.toInt).getOrElse(300000))
-    if (mode == "bigmacprof") runBigmacProfile(spark)
+    if (mode != "run") gen(spark, Copies, OutDir)
+    if (mode != "gen") run(spark, only)
     spark.stop()
-  }
-
-  /** q1_bigmac pin-level profile (VERDICT r13 #2): one plain timed run at
-    * sf0.1, then a run with `spark.graft.bigmac.stageProfile` where each
-    * major intermediate is eagerly checkpointed and logged — naming where
-    * the residual seconds go. The staged total exceeds the plain total
-    * by the extra materializations; per-stage prints are the signal. */
-  def runBigmacProfile(spark: SparkSession): Unit = {
-    def timed(label: String): Double = {
-      val dt = timeQuery(spark, "q1_bigmac", SrcDir)
-      println(f"[bigmacprof] $label%-14s $dt%6.2f s"); dt
-    }
-    timed("warm")
-    val plain = timed("plain")
-    spark.conf.set("spark.graft.bigmac.stageProfile", "true")
-    spark.conf.set("spark.graft.bigmac.timing", "true")
-    val staged =
-      try timed("staged")
-      finally {
-        spark.conf.unset("spark.graft.bigmac.stageProfile")
-        spark.conf.unset("spark.graft.bigmac.timing")
-      }
-    println(f"""{"metric":"bigmac_profile","plain_s":$plain%.2f,"staged_s":$staged%.2f}""")
-  }
-
-  /** Distributed-clustering branch probe (VERDICT r13 #5): d5/d7 route
-    * through driver union-find at every tested scale (the edge gate), so
-    * the >1M-edge `distributedClusters` branch — the 100-TB path — was
-    * unit-parity-tested but never driven on a real corpus. This forces it:
-    * the SAME sf1 LSH edge frame is clustered through BOTH branches
-    * (`spark.graft.dedup.edgeGate` 0 vs default), outputs are asserted
-    * row-identical (cluster outputs are dimension-sized), and both
-    * wall-clocks are reported. */
-  def runClusterBranch(spark: SparkSession): Unit = {
-    import graft.queries.DedupOps
-    // checkpoint the edge frame so both branches time CLUSTERING, not a
-    // recompute of the shared shingle/LSH lineage
-    val edges = Pins.checkpoint(DedupOps.d5EdgeFrame(spark, OutDir))
-    val nEdges = edges.count()
-    def pass(gate: String): (Double, Seq[(Long, Long)]) = {
-      spark.conf.set("spark.graft.dedup.edgeGate", gate)
-      try {
-        val t0 = System.nanoTime()
-        val rows = Pins.scope(DedupOps.clusterEdgesProbe(spark, edges).collect())
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-        ((System.nanoTime() - t0) / 1e9, rows)
-      } finally spark.conf.unset("spark.graft.dedup.edgeGate")
-    }
-    pass("0"); pass((Long.MaxValue / 2).toString) // warm both branches
-    val (tDist, distRows) = pass("0")
-    val (tDriver, driverRows) = pass((Long.MaxValue / 2).toString)
-    val parity = distRows == driverRows
-    assert(parity, s"cluster branch parity FAILED: " +
-      s"${distRows.size} distributed vs ${driverRows.size} driver rows")
-    println(f"[cluster] edges $nEdges  driver $tDriver%.2fs  " +
-      f"distributed $tDist%.2fs  clusters ${driverRows.size}  parity $parity")
-    println(s"""{"metric":"cluster_branch","edges":$nEdges,""" +
-      f""""driver_s":$tDriver%.3f,"distributed_s":$tDist%.3f,""" +
-      s""""clusters":${driverRows.size},"parity":$parity}""")
-  }
-
-  /** Past-the-gate crossover probe (VERDICT r14 #3): the sf1 corpus tops
-    * out at ~7.4k LSH edges (the fixture's copy-tagged words keep the
-    * near-dup RATE constant by design, so edges grow linearly with copies
-    * — reaching 1M real edges would need ~1350 copies ≈ 135 GB under
-    * /tmp), so the >1M-edge regime is driven on a SYNTHESIZED edge frame
-    * with realistic component structure instead: `nClusters` components of
-    * 3-15 nodes (two-level trees, diameter ≤ 4 — LSH near-dup groups are
-    * shallow), ~8 edges each ⇒ ≥ 2.4M edges at the default. Both branches
-    * cluster the SAME localCheckpointed frame; outputs asserted
-    * row-identical; wall-clocks reported. This measures the cutover claim
-    * itself: where the driver's collect + single-threaded union-find
-    * stops winning against the per-round join latency that the
-    * distributed min-label propagation amortizes. */
-  def runClusterCrossover(spark: SparkSession, nClusters: Int): Unit = {
-    import graft.queries.DedupOps
-    // component c occupies ids [c*64, c*64+15]: node 0 is the hub, members
-    // 1-3 attach to the hub, members 4+ attach to (k % 3) + 1 — depth 2
-    val edges = Pins.checkpoint(spark.range(nClusters.toLong).select(col("id").as("c"))
-      .select(col("c"),
-        explode(sequence(lit(1), (col("c") % 13 + 2).cast("int"))).as("k"))
-      .select(
-        (col("c") * 64 + when(col("k") <= 3, 0)
-          .otherwise(pmod(col("k"), lit(3)) + 1)).as("doc_a"),
-        (col("c") * 64 + col("k")).as("doc_b")))
-    val nEdges = edges.count()
-    def pass(gate: String): (Double, Long) = {
-      spark.conf.set("spark.graft.dedup.edgeGate", gate)
-      try {
-        val t0 = System.nanoTime()
-        // the probe consumes the cluster table and keeps only a checksum —
-        // collecting 300k cluster rows per pass would time the collect
-        val chk = Pins.scope(DedupOps.clusterEdgesProbe(spark, edges)
-          .agg(sum(col("cluster_rep")), sum(col("n_members")), count(lit(1)))
-          .head())
-        ((System.nanoTime() - t0) / 1e9,
-          chk.getLong(0) * 31 + chk.getLong(1) * 7 + chk.getLong(2))
-      } finally spark.conf.unset("spark.graft.dedup.edgeGate")
-    }
-    pass("0"); pass(Long.MaxValue.toString) // warm both branches
-    val (tDist, distChk) = pass("0")
-    val (tDriver, driverChk) = pass(Long.MaxValue.toString)
-    val parity = distChk == driverChk
-    assert(parity, s"crossover parity FAILED: $distChk vs $driverChk")
-    println(f"[clusterxl] edges $nEdges  driver $tDriver%.2fs  " +
-      f"distributed $tDist%.2fs  parity $parity")
-    println(s"""{"metric":"cluster_crossover","edges":$nEdges,""" +
-      f""""driver_s":$tDriver%.3f,"distributed_s":$tDist%.3f,""" +
-      s""""clusters":$nClusters,"parity":$parity}""")
   }
 
   private def keySpan(s: SparkSession): Long = {
@@ -358,191 +197,5 @@ object ScaleRehearsal {
       f""""$n":{"sf01":$a%.3f,"sf1":$b%.3f,"ratio":${b / a}%.2f}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"sf1_rehearsal","copies":$Copies,"queries":$js}""")
-  }
-
-  /** Skewed events table + probe: same schema and ROW COUNT as the sf1
-    * events table, but ~30% of rows remapped to user_id = -42 (an md5
-    * nibble draw keeps the selection deterministic). Non-event tables are
-    * read from the sf1 dir via symlinks so registered queries run as-is. */
-  def runSkew(spark: SparkSession): Unit = {
-    import java.nio.file.{Files, Paths}
-    new java.io.File(SkewDir).mkdirs()
-    val ev = spark.read.parquet(s"$OutDir/events.parquet")
-    ev.withColumn("user_id",
-        when(substring(md5(col("event_id").cast("string")), 1, 1) <= "4",
-          lit(-42L)).otherwise(col("user_id")))
-      .write.mode("overwrite").parquet(s"$SkewDir/events.parquet")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      val l = Paths.get(s"$SkewDir/$t.parquet")
-      if (!Files.exists(l, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-        Files.createSymbolicLink(l, Paths.get(s"$OutDir/$t.parquet"))
-    }
-    val hot = spark.read.parquet(s"$SkewDir/events.parquet")
-      .filter(col("user_id") === -42L).count()
-    val tot = ev.count()
-    println(f"[skew] hot-user rows $hot of $tot (${100.0 * hot / tot}%.1f%%)")
-    SkewProbe.foreach { n => timeQuery(spark, n, OutDir); timeQuery(spark, n, SkewDir) } // warm
-    val rows = SkewProbe.map { n =>
-      val a = timeQuery(spark, n, OutDir); val b = timeQuery(spark, n, SkewDir)
-      println(f"[skew] $n%-22s uniform $a%6.2fs  skewed $b%6.2fs  ratio ${b / a}%5.2f")
-      (n, a, b)
-    }
-    val js = rows.map { case (n, a, b) =>
-      f""""$n":{"uniform":$a%.3f,"skewed":$b%.3f,"ratio":${b / a}%.2f}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"skew_probe","hot_frac":${1.0 * hot / tot},"queries":$js}""")
-  }
-
-  /** Domain-key skew probe (VERDICT r11 #5): the q1_bigmac assembly on a
-    * synthesized block universe where ONE searcher EOA fronts 5 of every
-    * block's 16 txs — ~31% of ALL swap rows under a single global EOA —
-    * against a control with IDENTICAL per-block chain structure whose
-    * chain EOA is per-block unique (high key cardinality). Every shuffle
-    * in the assembly keys on (block, ktype, k[, seg]), so a globally hot
-    * searcher spreads across blocks; ratio ≈ 1 is that design claim
-    * MEASURED rather than argued. Both arms must produce identical bundle
-    * counts (same per-block structure) — cross-checked in the output. */
-  def runSkewDomain(spark: SparkSession): Unit = {
-    import spark.implicits._
-    val nBlocks = 30000L
-    // 16 txs per block: slots 0,3,6,9,12 are the searcher chain (4 links,
-    // 2 gap victims each); victims share the block's pool (pool-arm
-    // verified) and carry one dead transfer leg (probes + inference live)
-    def arm(hotGlobal: Boolean): (DataFrame, DataFrame, DataFrame) = {
-      val u = spark.range(nBlocks * 16)
-        .select(expr("id div 16").as("block_number"),
-          (col("id") % 16).as("tx_idx"))
-        .withColumn("is_chain",
-          col("tx_idx") % 3 === 0 && col("tx_idx") <= 12)
-        .withColumn("pool",
-          concat(lit("P"), (col("block_number") % 97).cast("string")))
-        .withColumn("eoa", when(col("is_chain"),
-            if (hotGlobal) lit("HOT")
-            else concat(lit("h"), col("block_number").cast("string")))
-          .otherwise(concat(lit("v"), col("block_number").cast("string"),
-            lit("_"), col("tx_idx").cast("string"))))
-        .withColumn("tx_hash",
-          concat(lit("t"), col("block_number").cast("string"),
-            lit("_"), col("tx_idx").cast("string")))
-      val sw = u.select(col("block_number"), col("tx_idx"), col("tx_hash"),
-        col("eoa"), col("pool"), lit(7L).as("tok_in"), lit(8L).as("tok_out"),
-        lit(10.0).as("sum_in"), lit(9.0).as("sum_out"))
-      val roots = u.select(col("block_number"), col("tx_idx"),
-        concat(lit("r"), col("block_number").cast("string"),
-          lit("_"), col("tx_idx").cast("string")).as("root_to"))
-      val tf = u.filter(!col("is_chain"))
-        .select(col("block_number"), col("tx_idx"), col("eoa"),
-          lit(9L).as("token"), col("eoa").as("t_from"),
-          col("pool").as("t_to"))
-      (sw, roots, tf)
-    }
-    val prof = Seq.empty[(String, Double)].toDF("tx_hash", "profit_usd")
-    def pass(hot: Boolean): (Double, Long) = {
-      val (sw, roots, tf) = arm(hot)
-      val t0 = System.nanoTime()
-      val n = Pins.scope(graft.domain.BigMacOps
-        .bigmacBundlesOf(sw, roots, prof, Some(tf)).count())
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-    pass(hot = false) // warm: JVM + codegen
-    val (ua, un) = pass(hot = false)
-    val (ha, hn) = pass(hot = true)
-    println(f"[skewdom] uniform $ua%.2fs ($un bundles)  hot-eoa $ha%.2fs ($hn bundles)  ratio ${ha / ua}%.2f")
-    println(f"""{"metric":"skew_domain","query":"q1_bigmac","hot_frac":${5.0 / 16}%.4f,"blocks":$nBlocks,"uniform_s":$ua%.3f,"hot_s":$ha%.3f,"ratio":${ha / ua}%.2f,"uniform_bundles":$un,"hot_bundles":$hn}""")
-  }
-
-  /** Second domain-key skew probe (VERDICT r12 stretch #8) — the OTHER
-    * key family: q5_jit's bracket keying (block, eoa|contract, POOL). One
-    * POOL address carries EVERY mint/burn/victim row globally (hot arm)
-    * vs a control whose pool is per-block unique, with IDENTICAL
-    * per-block structure (one mint→burn bracket, 14 victim swaps). Every
-    * join/group in [[graft.domain.InspectorOps.jitBracketsOf]] keys on
-    * (block_number, eoa, pool) — block-grained — so the globally hot pool
-    * spreads across blocks; ratio ≈ 1 is the measured claim. Bundle
-    * counts must match across arms (cross-checked in the output line). */
-  def runSkewDomainJit(spark: SparkSession): Unit = {
-    val nBlocks = 240000L
-    def arm(hotGlobal: Boolean): (DataFrame, DataFrame) = {
-      val u = spark.range(nBlocks * 16)
-        .select(expr("id div 16").as("block_number"),
-          (col("id") % 16).as("tx_idx"))
-        .withColumn("pool", if (hotGlobal) lit("HOTPOOL")
-          else concat(lit("p"), col("block_number").cast("string")))
-        .withColumn("is_jit", col("tx_idx") === 0 || col("tx_idx") === 15)
-        .withColumn("eoa", when(col("is_jit"),
-            concat(lit("j"), col("block_number").cast("string")))
-          .otherwise(concat(lit("v"), col("block_number").cast("string"),
-            lit("_"), col("tx_idx").cast("string"))))
-      val mb = u.filter(col("is_jit"))
-        .select(col("block_number"), col("eoa").as("from_address"),
-          col("pool"), col("tx_idx"), col("tx_idx").as("trace_idx"),
-          when(col("tx_idx") === 0, "mint").otherwise("burn")
-            .as("action_type"),
-          lit(7L).as("token_in_id"), lit(8L).as("token_out_id"),
-          lit(10.0).as("amount_in"), lit(9.0).as("amount_out"))
-      val v = u.filter(!col("is_jit"))
-        .select(col("block_number"), col("tx_idx"), col("eoa"), col("pool"))
-      (mb, v)
-    }
-    def pass(hot: Boolean): (Double, Long) = {
-      val (mb, v) = arm(hot)
-      val t0 = System.nanoTime()
-      val n = Pins.scope(graft.domain.InspectorOps.jitBracketsOf(mb, v).count())
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-    pass(hot = false) // warm: JVM + codegen
-    // the bracket pass is seconds-scale, where single-run GC/JIT jitter
-    // showed up as a ±0.2 ratio swing between idle reruns — alternate the
-    // arms and take the per-arm MIN of two timed passes so a one-off
-    // pause in either arm cannot masquerade as (or mask) key skew
-    val (ua1, un) = pass(hot = false)
-    val (ha1, hn) = pass(hot = true)
-    val (ua2, _) = pass(hot = false)
-    val (ha2, _) = pass(hot = true)
-    val (ua, ha) = (math.min(ua1, ua2), math.min(ha1, ha2))
-    println(f"[skewjit] uniform $ua%.2fs ($un brackets)  hot-pool $ha%.2fs ($hn brackets)  ratio ${ha / ua}%.2f")
-    println(f"""{"metric":"skew_domain","query":"q5_jit","hot_key":"pool","hot_frac":1.0,"blocks":$nBlocks,"uniform_s":$ua%.3f,"hot_s":$ha%.3f,"ratio":${ha / ua}%.2f,"uniform_bundles":$un,"hot_bundles":$hn}""")
-  }
-
-  /** The 100× probe: one warm + one timed pass per query at sf10 against
-    * a fresh timed sf0.1 baseline (same JVM, cache cleared between). */
-  def runSf10(spark: SparkSession, only: Option[Set[String]]): Unit = {
-    // disk-backed pins for the Big Mac assembly so the probe fits the
-    // default 8 GiB stand-in heap (see Sf10Probe scaladoc)
-    spark.conf.set("spark.graft.bigmac.diskCheckpoint", "true")
-    val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    val names = Sf10Probe.filter(n => only.forall(_.contains(n)))
-    def time(name: String, dir: String): Double = {
-      // 100× data through 32 reducers concentrates 8× more hash-agg state
-      // per task than any real deployment would see — a 1000-executor
-      // cluster runs thousands of reducers. 256 partitions is the
-      // cluster-model config for the ONE row that needs it (q1_bigmac's
-      // three-arm reach agg pushed the 32-partition build past the 8 GiB
-      // stand-in heap in r12); it applies to BOTH scales of that row so
-      // its ratio methodology is unchanged, and is SCOPED to that row so
-      // every other row's absolute timing stays comparable across rounds.
-      spark.conf.set("spark.sql.shuffle.partitions",
-        if (name == "q1_bigmac") "256" else basePartitions)
-      try timeQuery(spark, name, dir)
-      finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
-    }
-    names.foreach { n =>
-      try { time(n, SrcDir); time(n, Sf10Dir) }
-      catch { case e: Throwable =>
-        println(s"[sf10-warm] $n FAILED: ${e.getMessage}") }
-    }
-    val rows = names.flatMap { n =>
-      try {
-        val a = time(n, SrcDir); val b = time(n, Sf10Dir)
-        println(f"[sf10] $n%-28s sf0.1 $a%7.2fs  sf10 $b%8.2fs  ratio ${b / a}%6.2f")
-        Some((n, a, b))
-      } catch { case e: Throwable =>
-        println(s"[sf10] $n FAILED: ${e.getMessage}"); None }
-    }
-    val js = rows.map { case (n, a, b) =>
-      f""""$n":{"sf01":$a%.3f,"sf10":$b%.3f,"ratio":${b / a}%.2f}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"sf10_probe","copies":100,"queries":$js}""")
   }
 }

@@ -101,51 +101,6 @@ object BigMacOps extends QueryModule {
         'em', concat(acc.em, filter(acc.lvl, r -> r.ok))),
       acc -> concat(acc.em, filter(acc.lvl, r -> r.ok)))"""
 
-  /** Plan-truncating materialization for the assembly's fact-sized
-    * intermediates (txu/links/pos/gapt/sinf/emit each feed 2-4 downstream
-    * joins — without it the window chains re-execute per consumer).
-    * Default: `localCheckpoint` (executor storage memory — right when the
-    * JVM has cluster-scale memory, i.e. production executors and the
-    * default bench). `spark.graft.bigmac.diskCheckpoint=true` switches to
-    * reliable disk checkpoints so a memory-bounded stand-in — the
-    * 8 GiB/32-thread probe JVM impersonating a 1000-executor cluster at
-    * 100× data — completes without pinning four fact-sized frames in
-    * storage memory (the r11 sf10 probe needed a 48 GiB heap for exactly
-    * that reason). */
-  private def pin(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val t0 = System.nanoTime()
-    val out = if (s.conf.get("spark.graft.bigmac.diskCheckpoint", "false") == "true") {
-      if (s.sparkContext.getCheckpointDir.isEmpty) {
-        val d = java.nio.file.Files.createTempDirectory("graft_ckpt")
-        d.toFile.deleteOnExit()
-        s.sparkContext.setCheckpointDir(d.toString)
-      }
-      df.checkpoint()
-    } else Pins.checkpoint(df)
-    if (s.conf.get("spark.graft.bigmac.timing", "false") == "true")
-      System.err.println(f"[bigmac pin] ${(System.nanoTime() - t0) / 1e9}%.2f s  cols=${df.columns.take(6).mkString(",")}")
-    out
-  }
-
-  /** Pin-level stage profiler: identity unless
-    * `spark.graft.bigmac.stageProfile=true`, in which case each wrapped
-    * intermediate is eagerly localCheckpointed and its wall-clock logged —
-    * downstream stages then read materialized inputs, so each print is
-    * that stage's OWN cost. Profiling-only (the flag changes the plan);
-    * driven by `ScaleRehearsal bigmacprof`. */
-  private def stage(name: String)(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get("spark.graft.bigmac.stageProfile", "false") != "true") df
-    else {
-      val t0 = System.nanoTime()
-      val out = Pins.checkpoint(df)
-      System.err.println(
-        f"[bigmac stage] $name%-38s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      out
-    }
-  }
-
   /** Root `to` contract per tx (trace_idx = 1 is the root frame). */
   private[domain] def rootTo(s: SparkSession, dir: String): DataFrame =
     actionsTable(s, dir)
@@ -200,8 +155,8 @@ object BigMacOps extends QueryModule {
     def px(t: Column): Column = tokenPrice(t)
 
     // tx-grain searcher/victim universe with block-local dense rank.
-    // txu / links / pos each feed 4+ downstream joins — pin (eager,
-    // plan-truncating) computes the window chains ONCE instead of
+    // txu / links / pos each feed 4+ downstream joins — Pins.checkpoint
+    // (eager, plan-truncating) computes the window chains ONCE instead of
     // once per consumer (31.6 s → the assembly's real cost at sf0.1).
     val txu = swTxDf
       .groupBy("block_number", "tx_idx", "tx_hash", "eoa")
@@ -212,7 +167,7 @@ object BigMacOps extends QueryModule {
       .join(rootToDf, Seq("block_number", "tx_idx"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("block_number").orderBy("tx_idx")))
-      .transform(pin)
+      .transform(Pins.checkpoint)
     val txpool = swTxDf.select("block_number", "tx_idx", "pool").distinct()
 
     // both keyings, stacked
@@ -236,7 +191,7 @@ object BigMacOps extends QueryModule {
       .filter(col("n_between") > 0)
       .withColumn("li", row_number().over(
         Window.partitionBy(segKeys.map(col): _*).orderBy("rnk")))
-      .transform(pin)
+      .transform(Pins.checkpoint)
     val seg0 = links.groupBy(segKeys.map(col): _*)
       .agg(max(col("li")).as("m"), sum(col("n_between")).as("tot_v"))
 
@@ -250,7 +205,7 @@ object BigMacOps extends QueryModule {
           col("nxt_idx").as("tx_idx"), col("nxt_rnk").as("rnk"),
           col("nxt_hash").as("tx_hash"), col("nxt_pok").as("price_ok"),
           col("nxt_eoa").as("eoa"), col("nxt_root").as("root_to")): _*))
-      .transform(pin)
+      .transform(Pins.checkpoint)
     val mevc = pos.filter(col("pos") === 2)
       .select(segKeys.map(col) :+
         when(col("ktype") === "contract", col("k"))
@@ -281,7 +236,7 @@ object BigMacOps extends QueryModule {
           col("t_idx") > col("tx_idx") && col("t_idx") < col("nxt_idx"))
         .select(segKeys.map(col) ++ Seq(col("li").as("g"), col("veoa"),
           col("vtok"), col("t_from"), col("t_to"), col("vroot")): _*)
-        .transform(pin)
+        .transform(Pins.checkpoint)
     }
 
     // frontrun accounting black list (collect_address_set_for_accounting
@@ -331,7 +286,7 @@ object BigMacOps extends QueryModule {
       inferPools(tf.select(col("block_number"), col("tx_idx"),
           col("token").as("vtok"), col("t_from"), col("t_to")),
         Seq("block_number", "tx_idx"))
-        .transform(pin)
+        .transform(Pins.checkpoint)
     }
 
     // segment caps + mev-contract victim nullification (transfer-only
@@ -451,13 +406,10 @@ object BigMacOps extends QueryModule {
       .groupBy((segKeys.map(col) ++ Seq(col("fam"), col("skey"),
         col("s_flg"), col("s_inf"))): _*)
       .agg(collect_set(col("s_pos")).as("s_poss"))
-      .transform(stage("sAgg: sAll stack + entry classes"))
     // no victim-side distinct either: the grain agg below collapses
     // duplicate probe rows with idempotent max/min, so the pre-shuffle
     // bought nothing but a second exchange of the whole probe stack
-    val vDist = vAll
-      .transform(stage("vDist: vAll stack"))
-    val reach = vDist.join(onChainFam(sAgg),
+    val reach = vAll.join(onChainFam(sAgg),
         col("s_block") === col("block_number") && col("s_ktype") === col("ktype") &&
           col("s_k") === col("k") && col("s_seg") === col("seg") &&
           col("fam") === col("s_fam") && col("s_skey") === col("vkey"), "left")
@@ -471,7 +423,6 @@ object BigMacOps extends QueryModule {
         min(when(!col("s_inf") &&
           (col("fam") === "pool" || col("s_flg") === !col("v_to")),
           array_min(filter(col("s_poss"), _ >= col("g") + 1)))).as("bmin"))
-      .transform(stage("reach: key join + grain agg"))
 
     // all ranges within the 6-drop reachability envelope, verified per gap
     val ranges = segs
@@ -512,7 +463,6 @@ object BigMacOps extends QueryModule {
       val winLegs = windows.join(legsPos, segKeys)
         .filter(col("pos").between(col("g") + 1, col("j") + 1))
       notBlacklisted(inferPools(winLegs, segKeys ++ Seq("g", "j")), "addr")
-        .transform(stage("backGen: window-leg inference"))
         .withColumnsRenamed(Map("block_number" -> "bg_block",
           "ktype" -> "bg_ktype", "k" -> "bg_k", "seg" -> "bg_seg",
           "g" -> "bg_g", "j" -> "bg_j", "addr" -> "bg_addr"))
@@ -553,12 +503,10 @@ object BigMacOps extends QueryModule {
       .agg(collect_list(struct(col("need_both"),
         col("fmax").cast("long").as("fmax"),
         col("bmin").cast("long").as("bmin"), col("bjs"))).as("es"))
-      .transform(stage("perVeoa: bgen fold + entry arrays"))
     val perGap = perVeoa
       .groupBy((segKeys.map(col) :+ col("g")): _*)
       .agg(collect_list(col("es")).as("ves"))
       .join(segs.select((segKeys.map(col) :+ col("m")): _*), segKeys)
-      .transform(stage("perGap: gap nesting + segs join"))
     val fokSql = "(e.fmax IS NOT NULL AND e.fmax >= i)"
     val bokSql = """((e.bmin IS NOT NULL AND e.bmin <= j + 1) OR
       | (e.bjs IS NOT NULL AND array_contains(e.bjs, j)))"""
@@ -596,7 +544,6 @@ object BigMacOps extends QueryModule {
       .agg(bool_and(col("has_sw") === 1 &&
         col("n_was") * MinVictimRatioDen >= col("n_veoas")).as("ok"))
       .join(ranges, rKeys)
-      .transform(stage("verdict: vectorized ranges + rollup"))
 
     // 6-level shrink reachability: failing ranges of ≥2 links spawn their
     // front-drop and back-drop children; emit every verified reached range.
@@ -618,7 +565,7 @@ object BigMacOps extends QueryModule {
       .select(segKeys.map(col) :+ explode(expr(emitExpr)).as("r"): _*)
       .select(segKeys.map(col) ++
         Seq(col("r.i").as("i"), col("r.j").as("j"), col("r.m").as("m")): _*)
-      .transform(pin)
+      .transform(Pins.checkpoint)
 
     // details: position rollup, gap victim totals, profit, dedup signature
     val pr = pos.join(profit.select(col("tx_hash").as("p_hash"),
@@ -961,11 +908,11 @@ object BigMacOps extends QueryModule {
     "q1_bigmac",
     (s, dir) => {
       val hdr = Accounting.bundleHeaders(s, dir).select("tx_hash", "profit_usd")
-      // roots feeds tf + txu + gapt; tf feeds gapt + sinf + backGen — pin
-      // both so the grouped/windowed full-actions scans behind them run
-      // once, not once per consumer (the same plan-truncation rationale as
-      // txu/links/pos inside the assembly)
-      val roots = pin(rootTo(s, dir))
+      // roots feeds tf + txu + gapt; tf feeds gapt + sinf + backGen —
+      // checkpoint both so the grouped/windowed full-actions scans behind
+      // them run once, not once per consumer (the same plan-truncation
+      // rationale as txu/links/pos/gapt/sinf/emit inside the assembly)
+      val roots = Pins.checkpoint(rootTo(s, dir))
       // leg endpoints (NormalizedTransfer {from, to}): the counterparty is
       // the nearest PRECEDING non-transfer frame's contract in trace order
       // (the frame that issued the transfer — a pool calling
@@ -974,7 +921,7 @@ object BigMacOps extends QueryModule {
       val wCp = Window.partitionBy("block_number", "tx_idx")
         .orderBy("trace_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tf = pin(actionsTable(s, dir)
+      val tf = Pins.checkpoint(actionsTable(s, dir)
         .withColumn("cp0", last(when(col("action_type").isNull ||
           col("action_type") =!= "transfer", col("to_address")),
           ignoreNulls = true).over(wCp))

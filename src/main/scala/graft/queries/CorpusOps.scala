@@ -170,9 +170,7 @@ object CorpusOps extends graft.QueryModule {
       // instead of failing the driver (ADVICE r14).
       // The count covers the whole set (bounded by the df > 1 rollup), so
       // it fills the persist the join then reads.
-      val dupGate = s.conf.getOption("spark.graft.dedup.lineDupGate")
-        .map(_.trim.toLong).getOrElse(2000000L)
-      val dupSide = if (dup.count() <= dupGate) broadcast(dup) else dup
+      val dupSide = if (dup.count() <= 2000000L) broadcast(dup) else dup
       lines.join(dupSide, Seq("lh"), "left")
         .groupBy("doc_id", "source")
         .agg(count(lit(1)).as("n_lines"),

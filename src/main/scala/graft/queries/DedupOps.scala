@@ -35,7 +35,7 @@ object DedupOps extends QueryModule {
     * a crash): `sequence(1, 0)` would step backwards in Spark, so the
     * short-doc case is branched out explicitly — matching the oracle CTE's
     * `range(1, len-1)` empty-range behavior. */
-  private[queries] def shingles(s: SparkSession, dir: String): DataFrame =
+  private[graft] def shingles(s: SparkSession, dir: String): DataFrame =
     shinglesOf(Tables.documents(s, dir))
 
   /** Same shingling over any (doc_id, text) frame — unit-testable. */
@@ -76,7 +76,7 @@ object DedupOps extends QueryModule {
     * band table feeds both sides of the self-join, so it is persisted —
     * Catalyst would otherwise recompute the whole shingle→minhash lineage
     * per side (SURVEY §4's one-pass-split caveat). */
-  private[queries] def lshCandidates(sh: DataFrame): DataFrame = {
+  private[graft] def lshCandidates(sh: DataFrame): DataFrame = {
     val bands = Pins.persist(bandHashes(minhashSig(sh)))
     val a = bands.select(col("band"), col("bh"), col("doc_id").as("doc_a"))
     val b = bands.select(col("band").as("band_b"), col("bh").as("bh_b"), col("doc_id").as("doc_b"))
@@ -218,84 +218,55 @@ object DedupOps extends QueryModule {
     labels.select(col("doc_a").as("doc_id"), col("lbl"))
   }
 
-  /** Connected components over the LSH candidate pairs — the clustering
-    * stage that turns near-dup PAIRS into dedup GROUPS (pick one canonical
-    * doc per cluster). Spark side: driver union-find for LSH-bounded edge
-    * sets (the G2 pattern), [[distributedClusters]] min-label propagation
-    * past 1M edges. Oracle: DuckDB recursive CTE computing the same
-    * components. */
-  /** Connected components over an edge frame (doc_a, doc_b) →
-    * (cluster_rep, n_members ≥ 2): driver union-find for LSH-bounded edge
-    * sets (the G2 pattern: dimension-sized iterative work belongs
-    * driver-side, deterministic min-label), [[distributedClusters]]
-    * min-label propagation past 1M edges. Shared by d5 (raw LSH
-    * candidates) and d7 (Jaccard-verified edges). */
   /** Driver-union-find cutover: edge sets at or below this size collect to
     * the driver (dimension-sized iterative work, the G2 pattern); larger
-    * sets run the distributed min-label propagation. Configurable so the
-    * scale rehearsal can force the distributed branch on a real corpus
-    * (`runClusterBranch`) — production would tune it to driver memory. */
-  private[graft] def edgeGate(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.dedup.edgeGate").map { v =>
-      try v.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.dedup.edgeGate must be a long, got '$v'")
-      }
-    }.getOrElse(1000000L)
+    * sets run the distributed min-label propagation. */
+  private val EdgeGate = 1000000L
 
-  /** [[clusterEdges]] exposed for the scale-rehearsal branch-parity probe. */
-  private[graft] def clusterEdgesProbe(s: SparkSession, edgeDf: DataFrame): DataFrame =
-    clusterEdges(s, edgeDf)
-
-  /** d5's LSH-candidate edge frame, exposed for the same probe. */
-  private[graft] def d5EdgeFrame(s: SparkSession, dir: String): DataFrame =
-    lshCandidates(shingles(s, dir))
-
-  private[queries] def clusterEdges(s: SparkSession, edgeDf: DataFrame): DataFrame = {
+  /** Per-node labels (doc_id, lbl = the component's min doc_id) of an edge
+    * frame (doc_a, doc_b), sorted by doc_id: Right from a driver union-find
+    * when the edge set is within [[EdgeGate]], else Left with the persisted
+    * edge frame for the distributed arm. */
+  private def driverLabels(edgeDf: DataFrame): Either[DataFrame, Seq[(Long, Long)]] = {
     val cand = Pins.persist(edgeDf)
-    val nEdges = cand.count()
-    if (nEdges <= edgeGate(s)) {
-      import s.implicits._
-      val edges = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
+    if (cand.count() > EdgeGate) Left(cand)
+    else {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         val p = parent.getOrElseUpdate(x, x)
         if (p == x) x else { val r = find(p); parent(x) = r; r }
       }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
+      cand.collect().foreach { r =>
+        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      parent.keys.toSeq.map(x => (find(x), 1))
-        .groupBy(_._1).map { case (lbl, xs) => (lbl, xs.size.toLong) }
-        .filter(_._2 >= 2).toSeq.sortBy(_._1)
-        .toDF("cluster_rep", "n_members")
-    } else distributedClusters(cand)
+      Right(parent.keys.toSeq.map(x => (x, find(x))).sortBy(_._1))
+    }
+  }
+
+  /** Connected components over an edge frame (doc_a, doc_b) →
+    * (cluster_rep, n_members ≥ 2), ordered by cluster_rep: the driver
+    * labels counted locally, or [[distributedClusters]] past the gate.
+    * Shared by d5 (raw LSH candidates) and d7 (Jaccard-verified edges).
+    * Oracle: DuckDB recursive CTE computing the same components. */
+  private[graft] def clusterEdges(s: SparkSession, edgeDf: DataFrame): DataFrame = {
+    import s.implicits._
+    driverLabels(edgeDf) match {
+      case Right(labels) =>
+        labels.groupBy(_._2).map { case (lbl, xs) => (lbl, xs.size.toLong) }
+          .filter(_._2 >= 2).toSeq.sortBy(_._1)
+          .toDF("cluster_rep", "n_members")
+      case Left(cand) => distributedClusters(cand)
+    }
   }
 
   /** Per-node cluster membership (doc_id, lbl) over an edge frame — the
-    * same driver-union-find / distributed-propagation split as
-    * [[clusterEdges]], but keeping the member grain so a downstream policy
-    * can choose WHICH doc survives each cluster. */
+    * same driver/distributed split as [[clusterEdges]], but keeping the
+    * member grain so a downstream policy (d9, d11) can choose WHICH doc
+    * survives each cluster. */
   private[graft] def clusterLabels(s: SparkSession, edgeDf: DataFrame): DataFrame = {
-    val cand = Pins.persist(edgeDf)
-    val nEdges = cand.count()
-    if (nEdges <= edgeGate(s)) {
-      import s.implicits._
-      val edges = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.toSeq.map(x => (x, find(x))).sortBy(_._1)
-        .toDF("doc_id", "lbl")
-    } else distributedLabels(cand)
+    import s.implicits._
+    driverLabels(edgeDf).fold(distributedLabels, _.toDF("doc_id", "lbl"))
   }
 
   private val d5DedupClusters = QueryDef(

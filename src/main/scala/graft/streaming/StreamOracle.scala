@@ -32,8 +32,6 @@ object StreamOracle extends QueryModule {
       c3StreamDiscovery, d8StreamDedup, r8StreamJoin, r8OuterJoin,
       d17StreamLineDedup, w9StreamSession)
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Register a staging directory for recursive deletion at JVM exit —
     * Verify/Bench run in one JVM per invocation, so each process cleans
     * its own /tmp footprint without racing lazy readers of the data.

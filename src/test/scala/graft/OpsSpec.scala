@@ -128,4 +128,19 @@ class OpsSpec extends SparkTestBase {
     assert(driver == Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L),
       (20L, 20L), (21L, 20L), (22L, 20L), (23L, 20L), (24L, 20L)))
   }
+
+  test("DedupOps driver and distributed clustering agree on the fixture's d5 LSH edges") {
+    import graft.queries.DedupOps
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    Pins.scope {
+      val edges =
+        Pins.persist(DedupOps.lshCandidates(DedupOps.shingles(spark, SfDir)))
+      val clusters = rows(DedupOps.clusterEdges(spark, edges))
+      assert(rows(DedupOps.clusterLabels(spark, edges)) ==
+        rows(DedupOps.distributedLabels(edges)))
+      assert(clusters == rows(DedupOps.distributedClusters(edges)))
+      assert(clusters.nonEmpty, "no multi-member component: the check is vacuous")
+    }
+  }
 }
