@@ -553,9 +553,35 @@ object ChainFixture {
     * inspectors read the store; TxTraces/libmdbx tables, SURVEY §3.1). At
     * cluster scale these are the partitioned intermediate tables between
     * pipeline stages; locally they live under java.io.tmpdir. */
-  private[domain] def materialize(s: SparkSession, key: String, df: => DataFrame): DataFrame =
-    materializeWith(s, s"${matRoot(s)}_$key")(
-      p => df.write.mode("overwrite").parquet(p))
+  private[domain] def materialize(s: SparkSession, key: String, df: => DataFrame): DataFrame = {
+    val root = matRoot(s)
+    materializeWith(s, s"${root}_$key") { p =>
+      // left in place: a JVM running the older build may still read it
+      olderVersions(s.sparkContext.hadoopConfiguration, root, key).foreach { o =>
+        System.err.println(s"[graft] WARNING $o is an older layout of " +
+          s"${root}_$key; nothing reads it any more, delete it by hand")
+      }
+      df.write.mode("overwrite").parquet(p)
+    }
+  }
+
+  private val VersionedKey = "([a-z]+)_v([0-9]+)_(.+)".r
+
+  /** The stores an older build wrote for the same table under `root`, when
+    * `key` carries a layout version (`<name>_v<N>_<rest>`, e.g.
+    * `traces_v2_<dir>`): those of `<name>_<rest>` and `<name>_v<k>_<rest>`,
+    * k < N, that exist. An unversioned key has none. */
+  private[graft] def olderVersions(conf: org.apache.hadoop.conf.Configuration,
+      root: String, key: String): Seq[String] = key match {
+    case VersionedKey(name, n, rest) =>
+      (s"${name}_$rest" +: (1 until n.toInt).map(k => s"${name}_v${k}_$rest"))
+        .map(k => s"${root}_$k")
+        .filter { p =>
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(conf).exists(path)
+        }
+    case _ => Nil
+  }
 
   private[graft] def dirKey(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_")

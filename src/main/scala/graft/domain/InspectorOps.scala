@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.{Pins, QueryDef, QueryModule}
+import graft.{Branch, Fork, Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1392,38 +1392,56 @@ object InspectorOps extends QueryModule {
   /** Where a composer run cuts its lineage: called with each cut point's
     * name and frame, it returns the frame the rest of the run reads. The
     * points are the inputs built from a trace slice (slice, acts, hdr,
-    * swTx, sand, arbs, jitp) and the composer's own (cexdexBase, bundles,
-    * edges, xrem, surv). */
+    * swTx, sand, arbs, jitp) and the composer's own (cexdexBase, surfaces,
+    * bundles, edges, xrem, surv). When a cut runs is the [[Fork]]'s
+    * business: each cut point up to `edges` is one branch, started as soon
+    * as the frames it reads exist. */
   private[graft] type Cut = (String, DataFrame) => DataFrame
   private[graft] val NoCut: Cut = (_, df) => df
 
   /** The intermediates the inspectors and the composer read: classified
     * actions, their accounting headers, the swap slice and its per-(tx,
-    * pool) rollup, brackets, verified sandwiches, arbs and JIT pairs. */
-  private[graft] final case class ComposerInputs(acts: DataFrame,
-      hdr: DataFrame, sw: DataFrame, swTx: DataFrame, brackets: DataFrame,
-      sand: DataFrame, arbs: DataFrame, jitp: DataFrame)
+    * pool) rollup, brackets, verified sandwiches, arbs and JIT pairs —
+    * each the [[Branch]] that builds it, so a reader waits only for the
+    * inputs it reads. */
+  private[graft] final case class ComposerInputs(acts: Branch[DataFrame],
+      hdr: Branch[DataFrame], sw: Branch[DataFrame], swTx: Branch[DataFrame],
+      brackets: Branch[DataFrame], sand: Branch[DataFrame],
+      arbs: Branch[DataFrame], jitp: Branch[DataFrame])
 
   private[graft] object ComposerInputs {
+    /** Inputs that already exist. */
+    def of(acts: DataFrame, hdr: DataFrame, sw: DataFrame, swTx: DataFrame,
+        brackets: DataFrame, sand: DataFrame, arbs: DataFrame,
+        jitp: DataFrame): ComposerInputs = {
+      def b(df: DataFrame) = Fork.inline(df)
+      ComposerInputs(b(acts), b(hdr), b(sw), b(swTx), b(brackets), b(sand),
+        b(arbs), b(jitp))
+    }
+
     /** The per-JVM pipeline stores over a whole sf dir (the range path). */
     def ofStores(s: SparkSession, dir: String): ComposerInputs =
-      ComposerInputs(actionsTable(s, dir), bundleHeaders(s, dir),
-        swaps(s, dir), swTx(s, dir), brackets(s, dir), sandwiches(s, dir),
-        arbs(s, dir), jitPairs(s, dir))
+      of(actionsTable(s, dir), bundleHeaders(s, dir), swaps(s, dir),
+        swTx(s, dir), brackets(s, dir), sandwiches(s, dir), arbs(s, dir),
+        jitPairs(s, dir))
 
     /** A trace slice classified, priced and inspected through the range
       * path's own functions (the tip path). Every stage is block-local or
       * windowed over the slice, so a slice carrying its predecessor's tail
-      * block yields the store rows for its own blocks. */
-    def ofSlice(s: SparkSession, traces: DataFrame, cut: Cut): ComposerInputs = {
-      val slice = cut("slice", traces)
-      val acts = cut("acts", ChainFixture.actionsOf(s, slice))
-      val hdr = cut("hdr", Accounting.headersOf(s, slice, acts))
-      val sw = swapsOf(acts)
-      val swTx = cut("swTx", swTxFromSwaps(sw))
-      ComposerInputs(acts, hdr, sw, swTx, bracketsOf(swTx),
-        cut("sand", sandwichesOf(swTx)), cut("arbs", arbsOf(sw)),
-        cut("jitp", jitPairsOf(acts)))
+      * block yields the store rows for its own blocks. The actions read
+      * `traces` itself, not its cut, so they need not wait for it: on the
+      * tip `traces` is a persisted batch and one tail file. */
+    def ofSlice(s: SparkSession, traces: DataFrame, cut: Cut,
+        fork: Fork = Fork.inline): ComposerInputs = {
+      def at(name: String)(build: => DataFrame) = fork(cut(name, build))
+      val slice = at("slice")(traces)
+      val acts = at("acts")(ChainFixture.actionsOf(s, traces))
+      val hdr = at("hdr")(Accounting.headersOf(s, slice.get, acts.get))
+      val sw = fork(swapsOf(acts.get))
+      val swTx = at("swTx")(swTxFromSwaps(sw.get))
+      ComposerInputs(acts, hdr, sw, swTx, fork(bracketsOf(swTx.get)),
+        at("sand")(sandwichesOf(swTx.get)), at("arbs")(arbsOf(sw.get)),
+        at("jitp")(jitPairsOf(acts.get)))
     }
   }
 
@@ -1464,9 +1482,10 @@ object InspectorOps extends QueryModule {
     * labeled, n_txs) with `xr` / `wr` = 1 when the cross-type / within-type
     * layer removes it. [[composerCtes]] is the oracle twin. */
   private[graft] def composerOf(in: ComposerInputs, edgeTx: Column,
-      cut: Cut): DataFrame = {
+      cut: Cut, fork: Fork = Fork.inline): DataFrame = {
+    def at(name: String)(build: => DataFrame) = fork(cut(name, build))
     val nullStr = lit(null).cast("string")
-    val hdrK = in.hdr.select(col("tx_hash").as("h_tx"), col("profit_usd"),
+    def hdrK = in.hdr.get.select(col("tx_hash").as("h_tx"), col("profit_usd"),
       col("eoa").as("h_eoa"), col("block_number").as("h_block"))
     // one candidate surface: bid = its txs (and pool) joined by '|'
     def surface(df: DataFrame, mevType: String, blk: String, txs: Seq[String],
@@ -1478,48 +1497,53 @@ object InspectorOps extends QueryModule {
         array(txs.map(col): _*).as("txs"), arbType.as("arb_type"),
         labeled.as("labeled"))
     val sandP = col("back_out") - col("sum_in")
-    val sand = surface(in.sand, "sandwich", "back_block",
-      Seq("front_tx", "back_tx"), sandP, Seq("pool")).distinct()
-    val jit = surface(in.jitp, "jit", "block_number", Seq("tx_hash", "burn_tx"),
-      lit(0.0), Seq("pool")).distinct()
-    val liq = surface(in.acts.filter(col("action_type") === "liquidation")
-        .select("tx_hash").distinct()
-        .join(hdrK, col("tx_hash") === col("h_tx")),
-      "liquidation", "h_block", Seq("tx_hash"), lit(0.0))
-    val arb = surface(in.arbs.join(hdrK, col("tx_hash") === col("h_tx")),
-      "arb", "h_block", Seq("tx_hash"), col("profit_usd"),
-      arbType = col("arb_type"))
     // two consumers (cexdex, jit_cexdex)
-    val cexdexBase = cut("cexdexBase", in.sw.groupBy("tx_hash")
+    val cexdexBase = at("cexdexBase")(in.sw.get.groupBy("tx_hash")
       .agg(count(lit(1)).as("n_sw")).filter(col("n_sw") === 1)
       .join(hdrK, col("tx_hash") === col("h_tx"))
-      .join(broadcast(ChainFixture.searchers(in.sw.sparkSession)),
+      .join(broadcast(ChainFixture.searchers(in.sw.get.sparkSession)),
         col("h_eoa") === col("s_eoa"), "left"))
-    val cexdex = surface(cexdexBase, "cexdex", "h_block", Seq("tx_hash"),
-      col("profit_usd"), labeled = col("s_eoa").isNotNull)
-    val jitSides = in.jitp.select(col("block_number").as("j_block"),
-      col("eoa").as("j_eoa"), col("tx_hash").as("mint_tx"), col("burn_tx"))
-    val jsw = surface(in.brackets.join(jitSides,
-        col("back_block") === col("j_block") && col("eoa") === col("j_eoa")),
-      "jit_sandwich", "back_block",
-      Seq("front_tx", "back_tx", "mint_tx", "burn_tx"), sandP).distinct()
-    val jcx = surface(jitSides.join(cexdexBase,
-        col("j_block") === col("h_block") && col("j_eoa") === col("h_eoa")),
-      "jit_cexdex", "j_block", Seq("mint_tx", "burn_tx", "tx_hash"),
-      col("profit_usd")).distinct()
+    // the six surfaces that do not read the sandwiches, cut on their own so
+    // they are built while the sandwiches still are
+    val surfaces = at("surfaces") {
+      val jit = surface(in.jitp.get, "jit", "block_number",
+        Seq("tx_hash", "burn_tx"), lit(0.0), Seq("pool")).distinct()
+      val liq = surface(in.acts.get.filter(col("action_type") === "liquidation")
+          .select("tx_hash").distinct()
+          .join(hdrK, col("tx_hash") === col("h_tx")),
+        "liquidation", "h_block", Seq("tx_hash"), lit(0.0))
+      val arb = surface(in.arbs.get.join(hdrK, col("tx_hash") === col("h_tx")),
+        "arb", "h_block", Seq("tx_hash"), col("profit_usd"),
+        arbType = col("arb_type"))
+      val cexdex = surface(cexdexBase.get, "cexdex", "h_block", Seq("tx_hash"),
+        col("profit_usd"), labeled = col("s_eoa").isNotNull)
+      val jitSides = in.jitp.get.select(col("block_number").as("j_block"),
+        col("eoa").as("j_eoa"), col("tx_hash").as("mint_tx"), col("burn_tx"))
+      val jsw = surface(in.brackets.get.join(jitSides,
+          col("back_block") === col("j_block") && col("eoa") === col("j_eoa")),
+        "jit_sandwich", "back_block",
+        Seq("front_tx", "back_tx", "mint_tx", "burn_tx"), sandP).distinct()
+      val jcx = surface(jitSides.join(cexdexBase.get,
+          col("j_block") === col("h_block") && col("j_eoa") === col("h_eoa")),
+        "jit_cexdex", "j_block", Seq("mint_tx", "burn_tx", "tx_hash"),
+        col("profit_usd")).distinct()
+      jit.unionByName(liq).unionByName(arb).unionByName(cexdex)
+        .unionByName(jsw).unionByName(jcx)
+    }
     // bid is only unique WITHIN a type (liquidation/arb/cexdex all key by
     // bare tx hash) — prefix with the type, or a cross-type kill of one
     // bundle silently removes every same-bid bundle
-    val bundles = cut("bundles", sand.unionByName(jit).unionByName(liq)
-      .unionByName(arb).unionByName(cexdex).unionByName(jsw).unionByName(jcx)
+    val bundles = at("bundles")(surface(in.sand.get, "sandwich", "back_block",
+        Seq("front_tx", "back_tx"), sandP, Seq("pool")).distinct()
+      .unionByName(surfaces.get)
       .withColumn("bid", concat_ws("|", col("mev_type"), col("bid")))
       .withColumn("n_txs", size(array_distinct(col("txs")))))
-    val edges = cut("edges", bundles.select(col("bid"), col("mev_type"),
+    val edges = at("edges")(bundles.get.select(col("bid"), col("mev_type"),
         col("blk"), col("n_txs"), col("profit"), col("arb_type"),
         col("labeled"), explode(array_distinct(col("txs"))).as("tx"))
       .withColumn("tx", edgeTx))
-    val xrem = cut("xrem", matrixCrossKills(edges))
-    val surv = cut("surv", edges.join(xrem, Seq("bid"), "left_anti"))
+    val xrem = cut("xrem", matrixCrossKills(edges.get))
+    val surv = cut("surv", edges.get.join(xrem, Seq("bid"), "left_anti"))
     val other = surv.select(col("tx").as("o_tx"), col("mev_type").as("o_type"),
       col("bid").as("o_bid"), col("n_txs").as("o_n"),
       col("profit").as("o_profit"))
@@ -1532,7 +1556,7 @@ object InspectorOps extends QueryModule {
               (col("o_profit") === col("profit") && col("o_bid") < col("bid"))))),
         "left_semi")
       .select("bid").distinct()
-    bundles
+    bundles.get
       .join(xrem.withColumn("xr", lit(1)), Seq("bid"), "left")
       .join(wrem.withColumn("wr", lit(1)), Seq("bid"), "left")
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Pins, QueryDef, QueryModule}
+import graft.{Fork, Pins, QueryDef, QueryModule}
 import graft.domain.{Accounting, ChainFixture, InspectorOps}
 import graft.domain.InspectorOps.{ComposerInputs, Cut}
 import graft.domain.Accounting.{sqlGateFlag, sqlGateProfit}
@@ -76,12 +76,12 @@ object TipInspect extends QueryModule {
   private[graft] def inspectBundles(in: ComposerInputs,
       minOwnBlock: Long): DataFrame = {
     val nullStr = lit(null).cast("string")
-    val hdr = in.hdr.select("tx_hash", "block_number", "eoa", "revenue_usd",
+    val hdr = in.hdr.get.select("tx_hash", "block_number", "eoa", "revenue_usd",
       "gas_usd", "profit_usd")
 
     // Q1: verified sandwiches (victim ratio + price sanity + shrink), PnL
     // from the front AND back txs' headers, attributed to the back block
-    val sand = in.sand
+    val sand = in.sand.get
       .filter(col("back_block") >= minOwnBlock)
       .join(hdr.select(col("tx_hash").as("front_tx"),
         col("profit_usd").as("front_profit")), "front_tx")
@@ -100,10 +100,11 @@ object TipInspect extends QueryModule {
 
     // Q2: atomic arbs with the validity heuristic and the 2-block trigger
     // search (n2: 0 = no trigger, 1 = same block, 2 = previous block)
-    val arb = in.arbs.join(hdr, "tx_hash")
-      .join(broadcast(ChainFixture.searchers(in.acts.sparkSession)),
+    val arb = in.arbs.get.join(hdr, "tx_hash")
+      .join(broadcast(ChainFixture.searchers(in.acts.get.sparkSession)),
         col("eoa") === col("s_eoa"), "left")
-      .join(InspectorOps.triggerPicks(in.arbs, in.sw), Seq("tx_hash"), "left")
+      .join(InspectorOps.triggerPicks(in.arbs.get, in.sw.get), Seq("tx_hash"),
+        "left")
       .filter(col("block_number") >= minOwnBlock)
       .select(lit("atomic_arb").as("btype"), col("block_number"),
         col("tx_hash").as("tx1"), nullStr.as("tx2"), nullStr.as("pool"),
@@ -116,7 +117,7 @@ object TipInspect extends QueryModule {
           col("gas_usd") > 50.0, 1).otherwise(0).as("flag"))
 
     // Q7: per-tx liquidation bundles through the priced-profit gate
-    val liq = InspectorOps.liquidationBundlesOf(in.acts, hdr)
+    val liq = InspectorOps.liquidationBundlesOf(in.acts.get, hdr)
       .filter(col("block_number") >= minOwnBlock)
       .select(lit("liquidation").as("btype"), col("block_number"),
         col("tx_hash").as("tx1"), nullStr.as("tx2"), nullStr.as("pool"),
@@ -151,11 +152,12 @@ object TipInspect extends QueryModule {
     *                       gas/profit sums (q9_mev_block's header shape)
     */
   private[graft] def composedMevOf(in: ComposerInputs, minOwnBlock: Long,
-      cut: Cut): DataFrame = {
+      cut: Cut, fork: Fork = Fork.inline): DataFrame = {
     val nullStr = lit(null).cast("string")
     val nullD = lit(null).cast("double")
     val nullL = lit(null).cast("long")
-    val flagged = InspectorOps.composerOf(in, InspectorOps.BlockEdgeKey, cut)
+    val flagged =
+      InspectorOps.composerOf(in, InspectorOps.BlockEdgeKey, cut, fork)
       .filter(col("blk") >= minOwnBlock)
 
     val bundleArm = flagged.filter(col("xr").isNull && col("wr").isNull)
@@ -171,7 +173,7 @@ object TipInspect extends QueryModule {
         col("n_final").as("n1"), col("n_raw").as("n2"))
     // A4: the MevBlock header row — builder identity is the deterministic
     // per-block metadata dimension, computed inline like txGasOf's base fee
-    val blockArm = in.hdr.filter(col("block_number") >= minOwnBlock)
+    val blockArm = in.hdr.get.filter(col("block_number") >= minOwnBlock)
       .groupBy("block_number")
       .agg(count(lit(1)).as("n_txs"), dsum(col("gas_usd")).as("sum_gas"),
         dsum(col("profit_usd")).as("sum_profit"))
@@ -211,7 +213,10 @@ object TipInspect extends QueryModule {
     * branches) is localCheckpointed, so each runs once per batch — before
     * the input cuts the sandwich shrink pipeline and the per-tx arb fold
     * each ran once per emitter (`009a401`). The kill sets are read once
-    * each and stay lazy. */
+    * each and stay lazy. Every cut stays eager: lazy persists, fewer cuts
+    * or no cuts all ran slower (ROADMAP direction 2). What [[tipBatch]]
+    * changes is when they run: each cut is one branch of the batch's
+    * [[Pins.fork]], started once the frames it reads exist. */
   private val batchCut: Cut = {
     case ("xrem" | "surv", df) => df
     case (_, df) => Pins.checkpoint(df)
@@ -220,7 +225,9 @@ object TipInspect extends QueryModule {
   /** Rehearsal hook: drop the per-JVM memo so the next invocation drives
     * a FRESH checkpointed stream — the scale rehearsal times the
     * operator, not the stored-table read-back (a tip row therefore times
-    * the whole shared run: both output surfaces). */
+    * the whole shared run: both output surfaces, and per micro-batch the
+    * whole [[tipBatch]] schedule, whose independent cuts and writes run
+    * concurrently). */
   private[graft] def resetTipRuns(): Unit = tipRuns.clear()
 
   /** The shared run's stream: the traces table in three block-tercile
@@ -255,13 +262,23 @@ object TipInspect extends QueryModule {
   /** One micro-batch of the shared run, in one [[Pins.scope]] so the batch
     * pins nothing past its writes:
     *   (a) fails loudly on a missing predecessor tail,
-    *   (b) carries the predecessor tail forward across an empty
-    *       micro-batch,
-    *   (c) unions the tail, builds the slice's inputs ONCE and writes both
-    *       output surfaces under `out` with own-block bar = the batch's
-    *       min block, and
-    *   (d) overwrites the tail (this batch's last block) by batch id. */
-  private def tipBatch(b: DataFrame, batchId: Long, out: String,
+    *   (b) fills the batch's cache and finds its (min, max) block in one
+    *       job, and on an empty micro-batch carries the predecessor tail
+    *       forward under its own batch id,
+    *   (c) otherwise unions the tail, builds the slice's inputs ONCE and
+    *       writes both output surfaces under `out` with own-block bar = the
+    *       batch's min block, and
+    *   (d) overwrites the tail (this batch's last block) by batch id.
+    * (c) and (d) are one DAG of cut points run by a [[Pins.fork]]: each
+    * checkpoint and write starts once the frames it reads exist. The tail
+    * write and the slice and actions cuts start together; then the header,
+    * swap → sandwich, arb and JIT cuts; then the composer's cexdex base
+    * (after the headers) and its six non-sandwich surfaces. The inspect
+    * write runs beside the composer chain (bundles → edges → composer
+    * write), which is what remains on the critical path. The batch's cache
+    * is filled first because every branch reads it: branches that race a
+    * lazy cache each derive it again. */
+  private[graft] def tipBatch(b: DataFrame, batchId: Long, out: String,
       tail: String): Unit = Pins.scope {
     val ss = b.sparkSession
     val bp = Pins.persist(b)
@@ -281,14 +298,16 @@ object TipInspect extends QueryModule {
       // windows are complete (multi_block_window buffer)
       val full =
         if (batchId > 0) ss.read.parquet(prev.toString).unionByName(bp) else bp
-      val in = ComposerInputs.ofSlice(ss, full, batchCut)
-      inspectBundles(in, mn)
-        .write.mode("overwrite").parquet(s"$out/inspect/batch=$batchId")
-      composedMevOf(in, mn, batchCut)
-        .write.mode("overwrite").parquet(s"$out/composer/batch=$batchId")
-      // the tail for the NEXT batch: this batch's last block
-      full.filter(col("block_number") === mx)
-        .write.mode("overwrite").parquet(s"$tail/batch=$batchId")
+      Pins.fork { fork =>
+        // the tail for the NEXT batch: this batch's last block
+        fork(full.filter(col("block_number") === mx)
+          .write.mode("overwrite").parquet(s"$tail/batch=$batchId"))
+        val in = ComposerInputs.ofSlice(ss, full, batchCut, fork)
+        fork(inspectBundles(in, mn)
+          .write.mode("overwrite").parquet(s"$out/inspect/batch=$batchId"))
+        composedMevOf(in, mn, batchCut, fork)
+          .write.mode("overwrite").parquet(s"$out/composer/batch=$batchId")
+      }
     }
   }
 

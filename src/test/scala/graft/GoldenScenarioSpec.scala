@@ -314,7 +314,7 @@ class GoldenScenarioSpec extends SparkTestBase {
     // blk is 10; the arb on f is anchored in block 9. Under the range key
     // (tx) S and the arb share f and sandwich ⇒ arb kills the arb; under
     // the tip's per-block key the edges are 10|f and 9|f, so it survives
-    val in = InspectorOps.ComposerInputs(
+    val in = InspectorOps.ComposerInputs.of(
       acts = Seq(("swap", "f")).toDF("action_type", "tx_hash"),
       hdr = Seq(("f", 5.0, "atk", 9L), ("b", 3.0, "atk", 10L))
         .toDF("tx_hash", "profit_usd", "eoa", "block_number"),

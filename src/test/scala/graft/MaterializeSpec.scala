@@ -59,6 +59,20 @@ class MaterializeSpec extends SparkTestBase {
     assert(leftovers.isEmpty, s"leftover attempts: ${leftovers.toSeq}")
   }
 
+  test("a versioned store finds the older layouts of its table, nothing else") {
+    val root = s"${Files.createTempDirectory("graft_orphans")}/graft_mat_1"
+    Seq("traces_d", "traces_v1_d", "traces_v2_d", "traces_v1_e", "calldata_d",
+      "bundles_v3_d").foreach(k => mkTable(s"${root}_$k", "t"))
+    assert(ChainFixture.olderVersions(conf, root, "traces_v2_d") ==
+      Seq(s"${root}_traces_d", s"${root}_traces_v1_d"))
+    assert(ChainFixture.olderVersions(conf, root, "calldata_v2_d") ==
+      Seq(s"${root}_calldata_d"))
+    assert(ChainFixture.olderVersions(conf, root, "bundles_v2_d").isEmpty,
+      "a newer layout is not an orphan")
+    assert(ChainFixture.olderVersions(conf, root, "sand_d").isEmpty)
+    assert(new java.io.File(s"${root}_traces_d").exists(), "nothing is deleted")
+  }
+
   test("g5 registry survives as a cross-run parquet cache: built once, reread after") {
     import graft.domain.PricingOps
     val q = SparkEntry.queries("g5_cross_run_cache")

@@ -98,4 +98,68 @@ class PinsSpec extends SparkTestBase {
     }
     assert(persistent == before)
   }
+
+  test("what a fork's branches pin belongs to the caller's scope") {
+    val sc = spark.sparkContext
+    val before = persistent
+    sc.setLocalProperty("graft.pins.spec", "caller")
+    try Pins.scope {
+      val (threads, props) = Pins.fork { f =>
+        val cp = f(Pins.checkpoint(frame(51)))
+        val p = f(Pins.persist(frame(52)).count())
+        val dep = f { cp.get.count(); Pins.checkpoint(frame(53)) }
+        val seen = f((Thread.currentThread, sc.getLocalProperty("graft.pins.spec")))
+        dep.get
+        assert(p.get == 52)
+        (Set(seen.get._1), Set(seen.get._2))
+      }
+      assert(!threads.contains(Thread.currentThread), "branches run on workers")
+      assert(props == Set("caller"), "workers inherit the caller's local properties")
+      assert((persistent -- before).size == 3, "two checkpoints and a persist")
+      assert(cached(frame(52)))
+    } finally sc.setLocalProperty("graft.pins.spec", null)
+    assert(!cached(frame(52)))
+    assert(persistent == before)
+  }
+
+  test("a failing branch reaches the caller after its siblings finish") {
+    val before = persistent
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Pins.scope {
+        Pins.fork { f =>
+          f(Pins.checkpoint(frame(61)))
+          val failed = f[Long](throw new IllegalStateException("branch boom"))
+          // a sibling that pins only after the failure: the scope may
+          // release only once it is done
+          f {
+            Thread.sleep(300)
+            Pins.persist(frame(62)).count()
+            siblingDone.set(true)
+          }
+          val dependent = f(failed.get + 1)
+          dependent.get
+        }
+      }
+    }
+    assert(e.getMessage == "branch boom")
+    assert(siblingDone.get, "the failure must wait for the running sibling")
+    assert(!cached(frame(62)))
+    assert(persistent == before)
+  }
+
+  test("a failing branch nobody waits for still fails the fork") {
+    val before = persistent
+    val e = intercept[IllegalStateException] {
+      Pins.scope {
+        Pins.fork { f =>
+          f[Unit](throw new IllegalStateException("unread boom"))
+          f(Pins.persist(frame(71)).count())
+          ()
+        }
+      }
+    }
+    assert(e.getMessage == "unread boom")
+    assert(persistent == before)
+  }
 }

@@ -306,6 +306,45 @@ class StreamingSpec extends SparkTestBase {
     assert(left.isEmpty, s"tip stream left ${left.size} persistent RDDs: $left")
   }
 
+  /** Runs `body` with a micro-batch body's output and tail dirs under a
+    * fresh temp dir, deleted afterwards. */
+  private def withTipDirs(body: (String, String) => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tipbatch").toFile
+    try body(s"$tmp/out", s"$tmp/tail")
+    finally org.apache.commons.io.FileUtils.deleteQuietly(tmp): Unit
+  }
+  private def tipTraces = graft.domain.ChainFixture.tracesTable(spark, SfDir)
+
+  test("R2 tip batch fails loudly when its predecessor's tail is missing") {
+    import org.apache.spark.sql.functions.{col, max}
+    withTipDirs { (out, tail) =>
+      val last = tipTraces.agg(max(col("block_number"))).head().getLong(0)
+      val e = intercept[RuntimeException] {
+        graft.streaming.TipInspect.tipBatch(
+          tipTraces.filter(col("block_number") === last), 1L, out, tail)
+      }
+      assert(e.getMessage.contains("predecessor tail missing for batch 1"),
+        e.getMessage)
+      assert(!new java.io.File(out).exists(), "nothing may be written")
+    }
+  }
+
+  test("R2 tip batch carries its predecessor's tail across an empty batch") {
+    import org.apache.spark.sql.functions.{col, lit, max}
+    withTipDirs { (out, tail) =>
+      val last = tipTraces.agg(max(col("block_number"))).head().getLong(0)
+      tipTraces.filter(col("block_number") === last)
+        .write.parquet(s"$tail/batch=4")
+      graft.streaming.TipInspect.tipBatch(tipTraces.filter(lit(false)), 5L,
+        out, tail)
+      def rows(batch: Long) = spark.read.parquet(s"$tail/batch=$batch")
+        .collect().map(_.toString).sorted.toSeq
+      assert(rows(4).nonEmpty)
+      assert(rows(5) == rows(4), "the tail must move forward under batch 5")
+      assert(!new java.io.File(out).exists(), "an empty batch emits nothing")
+    }
+  }
+
   test("a file-drop drive keeps only its output once its stream stops") {
     // the drops, the checkpoint and the tip's tail are deleted at stop;
     // only the output the lazy read-back needs waits for JVM exit
