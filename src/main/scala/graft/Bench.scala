@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: one JSON line of per-query wall-clock seconds.
   *
@@ -9,7 +11,9 @@ import org.apache.spark.sql.DataFrame
   *     would let Catalyst prune computed columns out of projection-final
   *     plans and under-measure);
   *   - one untimed warm-up pass runs first (JVM/codegen/FS-cache warm-up —
-  *     r1's p17 "6.3s" was really first-query warm-up);
+  *     r1's p17 "6.3s" was really first-query warm-up); it warms codegen
+  *     only because Spark's codegen cache holds the whole suite's classes
+  *     (build.sbt's javaOptions), which `codegen_compiles` checks;
   *   - each query runs and is consumed in its own [[Pins.scope]], so what
   *     it persists or checkpoints can't leak work across timings.
   */
@@ -50,6 +54,13 @@ object Bench {
     // materialized intermediates).
     graft.streaming.TipInspect.resetTipRuns()
 
+    // Spark's own codegen counters, read around the timed pass: a codegen
+    // cache too small for the suite shows as compiles the warm pass did
+    // not absorb.
+    def codegen(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val (compiles0, compileNs0) = codegen()
+
     // A query that throws must never record its (fast) exception path as a
     // timing — keep failures out of `queries`/total and list them apart.
     val timed = selected.map { case (name, fn) =>
@@ -60,6 +71,8 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       (name, dt, ok)
     }
+    val (compiles1, compileNs1) = codegen()
+    val (compiles, codegenS) = (compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9)
     val results = timed.collect { case (n, dt, true) => n -> dt }.toMap
     val failed = timed.collect { case (n, _, false) => n }.toSeq.sorted
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -72,7 +85,7 @@ object Bench {
       .fold("null")("\"" + _ + "\"")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line =
-      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"tip_run":$tipRun,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"tip_run":$tipRun,"codegen_compiles":$compiles,"codegen_s":$codegenS,"sf":"$sfDir"}"""
     println(line)
     // Compact summary printed LAST: the driver keeps only a ~2000-char
     // stdout TAIL, which the ~10 KB full line above has overflowed four
@@ -83,7 +96,7 @@ object Bench {
     // the driver's own reruns collided with committed artifacts).
     // It is the only line whose metric is "total"; the full line above is
     // "total_full".
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"tip_run":$tipRun,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"tip_run":$tipRun,"codegen_compiles":$compiles,"codegen_s":$codegenS,"sf":"$sfDir"}""")
     try {
       val repo = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
       // a filtered profiling run — or a smoke run at any other scale

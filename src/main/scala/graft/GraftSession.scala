@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local session shape the mains and the test suites share:
   * `local[cpus]` with as many shuffle partitions, UTC session time, and
-  * no UI. Each caller adds only its own extras. */
+  * no UI. Each caller adds only its own extras. The JVM-wide codegen
+  * cache size and the single executor class loader are not set here: they
+  * must be in the JVM's conf before any SparkContext or session starts,
+  * so they sit in build.sbt's `javaOptions` (see the comment there). */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()

@@ -306,6 +306,35 @@ class StreamingSpec extends SparkTestBase {
     assert(left.isEmpty, s"tip stream left ${left.size} persistent RDDs: $left")
   }
 
+  test("a second fresh R2 tip stream reuses the classes the first compiled") {
+    // every stream runs on a new session; its tasks must find the classes
+    // an earlier stream generated in the JVM-wide codegen cache, which
+    // needs the cache to hold the working set and every session to share
+    // one executor class loader (build.sbt's javaOptions). The cache is
+    // emptied first so the first stream is cold whatever ran before it in
+    // this JVM; Spark exposes no public way to do that. The session must
+    // exist before: the cache takes its size from the active session's
+    // conf when CodeGenerator first loads, and Spark's default otherwise.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    spark.sparkContext
+    val field = CodeGenerator.getClass.getDeclaredField("cache")
+    field.setAccessible(true)
+    val cache = field.get(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    def compiles(): Long = {
+      graft.streaming.TipInspect.resetTipRuns()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries("r2_tip_composer")(spark, SfDir)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    val second = compiles()
+    assert(first > 0, "a cold stream must compile its classes")
+    assert(second * 4 <= first,
+      s"the second stream compiled $second classes, the first $first")
+  }
+
   /** Runs `body` with a micro-batch body's output and tail dirs under a
     * fresh temp dir, deleted afterwards. */
   private def withTipDirs(body: (String, String) => Unit): Unit = {
