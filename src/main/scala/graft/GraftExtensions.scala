@@ -1,13 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftColumnBridge => B, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions._
+import graft.functions.AbiCalldata._
+import graft.functions.{AbiCalldata, CdcBoundaries}
 
-/** SQL-surface registration of the codegen'd ABI decode expressions.
+/** SQL-surface registration of the ABI decodes: each SQL function plans
+  * the same [[graft.functions.AbiDecode]] (slot, read) pair as its
+  * [[graft.functions.AbiCalldata]] facade function, so a SQL call and a
+  * Column call of one name build the identical expression.
   *
   * The reference's query surface is SQL text over its stored tables
   * (S3: `brontes db` forwards SQL to clickhouse); the Spark-native analog
@@ -34,9 +39,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** Index arguments must be INT literals: the expressions bake offsets
-    * into generated code at plan time (a per-row word index would defeat
-    * the constant-folded offset arithmetic). */
+  /** Index arguments must be INT literals: a slot's indices are constants
+    * of the plan, inlined into the generated kernel call (a per-row word
+    * index would make the layout data-dependent). */
   private def intArg(fn: String, e: Expression): Int = e match {
     case lit: Literal if lit.dataType == IntegerType =>
       lit.value.asInstanceOf[Int]
@@ -55,16 +60,23 @@ object GraftExtensions {
         b(args)
       })
 
+  /** A decode function whose trailing arguments are INT-literal indices,
+    * planned through the same [[AbiCalldata]] facade the Column API uses,
+    * so SQL text and Column code build the identical expression. */
+  private def decode(name: String, arity: Int)(
+      f: (Column, Seq[Int]) => Column) =
+    build(name, arity)(a =>
+      B.expression(f(B.column(a.head), a.tail.map(intArg(name, _)))))
+
   /** The six decode functions plus the CDC boundary kernel, by SQL name. */
   val descriptions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    build("abi_word", 2)(a => AbiWord(a(0), intArg("abi_word", a(1)))),
-    build("abi_selector", 1)(a => AbiSelector(a(0))),
-    build("abi_int_word", 2)(a => AbiIntWord(a(0), intArg("abi_int_word", a(1)))),
-    build("abi_log_word", 2)(a => AbiLogWord(a(0), intArg("abi_log_word", a(1)))),
-    build("abi_array_len", 2)(a => AbiArrayLen(a(0), intArg("abi_array_len", a(1)))),
-    build("abi_array_elem", 3)(a => AbiArrayElem(a(0),
-      intArg("abi_array_elem", a(1)), intArg("abi_array_elem", a(2)))),
+    decode("abi_word", 2)((c, i) => abi_word(c, i(0))),
+    decode("abi_selector", 1)((c, _) => abi_selector(c)),
+    decode("abi_int_word", 2)((c, i) => abi_int_word(c, i(0))),
+    decode("abi_log_word", 2)((c, i) => abi_log_word(c, i(0))),
+    decode("abi_array_len", 2)((c, i) => abi_array_len(c, i(0))),
+    decode("abi_array_elem", 3)((c, i) => abi_array_elem(c, i(0), i(1))),
     build("cdc_boundaries", 1)(a => CdcBoundaries(a(0))))
 
   /** Install the functions on a live session (idempotent — re-registration

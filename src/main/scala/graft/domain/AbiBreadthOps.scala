@@ -240,7 +240,8 @@ object AbiBreadthOps extends QueryModule {
 
   /** C1 (log arm): ERC-20 transfer amounts do NOT appear in calldata (only
     * the recipient does) — the decoder reads the event-log payload words.
-    * Bare-word offsets (no selector) via [[graft.functions.AbiLogWord]]. */
+    * Bare-word offsets (no selector) via
+    * [[graft.functions.AbiCalldata.abi_log_word]]. */
   private val c1LogDecode = QueryDef(
     "c1_log_decode",
     (s, dir) => calldataTable(s, dir)

@@ -2,7 +2,7 @@ package graft.domain
 
 import graft.QueryDef
 import graft.functions.AbiCalldata.{abi_address, abi_array_len, abi_int_word,
-  abi_log_address, abi_log_word, abi_word}
+  abi_log_address, abi_log_word, abi_word, sword, word}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,6 @@ import org.apache.spark.sql.functions._
 object CensusOps extends graft.QueryModule {
 
   import ChainFixture._
-  import RealAbiOps.{sword, word}
 
   def defs: Seq[QueryDef] = Seq(c2CensusCurve, c2CensusMisc)
 

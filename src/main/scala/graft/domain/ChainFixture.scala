@@ -185,12 +185,11 @@ object ChainFixture {
     * what tip mode runs per micro-batch (the streamed classify stage IS
     * the batch classify on a different source). */
   def actionsOf(s: SparkSession, tracesDf: DataFrame): DataFrame = {
-    import graft.functions.AbiCalldata.abi_word
-    def word(c: org.apache.spark.sql.Column) =
-      lpad(lower(hex(c.cast("long"))), 64, "0")
+    import graft.functions.AbiCalldata.{abi_word, word}
     val t = tracesDf
       .withColumn("calldata",
-        unhex(concat(col("selector"), word(col("q6")), word(col("p2")))))
+        unhex(concat(col("selector"), word(col("q6").cast("long")),
+          word(col("p2").cast("long")))))
       .withColumn("q6", abi_word(col("calldata"), 0).cast("double"))
       .withColumn("p2", abi_word(col("calldata"), 1).cast("double"))
       .drop("calldata")
@@ -426,7 +425,7 @@ object ChainFixture {
     // the on-disk layout of this store changes
     materialize(s, s"calldata_v2_${dirKey(dir)}", {
       import org.apache.spark.sql.Column
-      def word(c: Column) = lpad(lower(hex(c)), 64, "0")
+      import graft.functions.AbiCalldata.word
       def negWord(c: Column) = when(c === 0L, lit("0" * 64))
         .otherwise(concat(lit("f" * 48), lower(hex(-c))))
       val t = tracesTable(s, dir)

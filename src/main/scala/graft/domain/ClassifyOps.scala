@@ -156,8 +156,7 @@ object ClassifyOps extends QueryModule {
   private val c3FactoryDecode = QueryDef(
     "c3_factory_decode",
     (s, dir) => {
-      import graft.functions.AbiCalldata.{abi_selector, abi_word}
-      def word(c: org.apache.spark.sql.Column) = lpad(lower(hex(c)), 64, "0")
+      import graft.functions.AbiCalldata.{abi_selector, abi_word, word}
       val dec = pools(s)
         .withColumn("token_a", when(pmod(col("pool_id"), lit(2)) === 0,
           col("t0_id")).otherwise(col("t1_id")))

@@ -703,11 +703,9 @@ object FidelityOps extends QueryModule {
     "f5_abi_decode_bin",
     (s, dir) => {
       import graft.functions.AbiCalldata._
-      val word = (c: org.apache.spark.sql.Column) =>
-        lpad(lower(hex(c.cast("long"))), 64, "0")
       tracesTable(s, dir)
-        .withColumn("calldata",
-          unhex(concat(col("selector"), word(col("q6")), word(col("p2")))))
+        .withColumn("calldata", unhex(concat(col("selector"),
+          word(col("q6").cast("long")), word(col("p2").cast("long")))))
         .withColumn("dec_selector", abi_selector(col("calldata")))
         .withColumn("w0", abi_word(col("calldata"), 0))
         .withColumn("w1", abi_word(col("calldata"), 1))

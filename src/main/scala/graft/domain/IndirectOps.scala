@@ -1,7 +1,7 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_array_len, abi_int_word, abi_word}
+import graft.functions.AbiCalldata.{abi_array_len, abi_int_word, abi_word, word}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,8 +38,6 @@ object IndirectOps extends graft.QueryModule {
     Seq(c1CurveIndexed, c1BalancerPoolId, f5AbiString, f5AbiTuple)
 
   private def withCtes(sql: String) = Some(s"WITH ${ChainFixture.sqlCtes} $sql")
-
-  private def word(c: Column) = lpad(lower(hex(c)), 64, "0")
 
   /** Per-(pool, coin_index) coin registry for curve-style multi-coin pools:
     * pool p has n_coins = 2 + p % 3 coins, coin k = (t0 + k) mod tokens —
@@ -203,7 +201,7 @@ object IndirectOps extends graft.QueryModule {
       t.withColumn("id", abi_word(col("calldata"), 0))
         .withColumn("off", abi_word(col("calldata"), 1))
         // bounds-gated walk: corrupt offset/length words NULL instead of
-        // raising through the ANSI INT cast (same contract as AbiArrayLen);
+        // raising through the ANSI INT cast (same contract as abi_array_len);
         // try_cast because conv is unsigned - a sign-bit length word
         // (>= 2^63) overflows a plain BIGINT cast past the offset gate
         .withColumn("len", expr(

@@ -2,7 +2,7 @@ package graft.domain
 
 import graft.QueryDef
 import graft.functions.AbiCalldata.{abi_address, abi_array_len, abi_int_word,
-  abi_log_address, abi_log_word, abi_word}
+  abi_log_address, abi_log_word, abi_word, word}
 import graft.ops.ExactAgg.{dsumPartial, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,7 +51,7 @@ import org.apache.spark.sql.functions._
 object RealAbiExtOps extends graft.QueryModule {
 
   import ChainFixture._
-  import RealAbiOps.{pow10d, sqlPow10, word}
+  import RealAbiOps.{pow10d, sqlPow10}
 
   def defs: Seq[QueryDef] = Seq(c1CurveMint, c1CurveBurn, c3CompoundInit)
 
@@ -408,7 +408,7 @@ object RealAbiExtOps extends graft.QueryModule {
     * reads ONE WORD earlier on arm 1. */
   private[graft] def compoundInitDecode(t: DataFrame): DataFrame = {
     // the length head is only non-NULL when the offset word resolved
-    // inside the buffer (AbiArrayLen's bounds check), so gating the
+    // inside the buffer (abi_array_len's bounds check), so gating the
     // walk on it both NULLs corrupt offsets and keeps the +37 cast in
     // range — a skewed offset must NULL, never throw or misread
     def strDec(offCol: String, lenCol: String) = expr(

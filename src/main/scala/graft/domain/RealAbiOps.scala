@@ -6,7 +6,7 @@ import graft.functions.AbiCalldata.{abi_address, abi_array_address,
   abi_log_address, abi_log_array_address, abi_log_array_elem,
   abi_log_array_int, abi_log_array_len, abi_log_b32_prefix, abi_log_word,
   abi_pool_id_address, abi_ret_int, abi_tuple_address, abi_tuple_word,
-  abi_word}
+  abi_word, sword, word}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   *     `sellGem(address usr, uint256 gemAmt)`
   *     (brontes-classifier/src/classifiers/maker/psm.rs): word0 is an
   *     ADDRESS (12-byte zero pad + 20 address bytes — a decode shape no
-  *     other layout here has, [[graft.functions.AbiAddress]]), word1 the
+  *     other layout here has,
+  *     [[graft.functions.AbiCalldata.abi_address]]), word1 the
   *     gem amount; the FEE rides the BuyGem/SellGem EVENT LOG, and the
   *     DAI-side amount COMBINES calldata and log: buy `amount_in =
   *     gemAmt + gemAmt·fee`, sell `amount_out = gemAmt − gemAmt·fee`
@@ -48,7 +49,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one trace scan each, broadcast dimension joins only, all
   * decode expressions inside whole-stage codegen (PlanSpec pins
   * no-fallback for the f5 family; these reuse the same expression set
-  * plus [[graft.functions.AbiAddress]]).
+  * plus [[graft.functions.AbiCalldata.abi_address]]).
   */
 object RealAbiOps extends graft.QueryModule {
 
@@ -63,14 +64,6 @@ object RealAbiOps extends graft.QueryModule {
     c3DiscoveryBreadth, c5OneinchCollapse)
 
   private def withCtes(sql: String) = Some(s"WITH ${ChainFixture.sqlCtes} $sql")
-
-  private[domain] def word(c: Column) = lpad(lower(hex(c)), 64, "0")
-
-  /** SIGNED int256 word: non-negative values zero-pad; negative values
-    * sign-extend with 0xff (hex of a negative BIGINT is already the
-    * 16-char two's complement of its low 8 bytes). */
-  private[domain] def sword(c: Column) =
-    when(c >= 0, word(c)).otherwise(concat(lit("f" * 48), lower(hex(c))))
 
   /** Exact 10^dec as DOUBLE: every power of ten through 10^22 is exactly
     * representable, so `raw / pow10d(dec)` is ONE correctly-rounded IEEE op
@@ -116,7 +109,8 @@ object RealAbiOps extends graft.QueryModule {
     .withColumn("cd_dx", abi_word(col("calldata"), 2))
 
   /** C1 (Maker PSM): buyGem on direction-0 frames, sellGem on direction-1.
-    * The usr ADDRESS word round-trips through [[AbiAddress]] (fixture md5
+    * The usr ADDRESS word round-trips through
+    * [[graft.functions.AbiCalldata.abi_address]] (fixture md5
     * addresses are 16 bytes → the packed 20-byte address is 4 zero bytes ‖
     * md5); the fee (basis-point integer, DAI side) rides the log's word1
     * next to the echoed gem amount. The gem is the pool's token1, DAI its
@@ -709,7 +703,8 @@ object RealAbiOps extends graft.QueryModule {
     *     cToken IS its own market), its token info fetched for the
     *     target address itself;
     *   - the LIQUIDATOR is a LOG data word (`logs.liquidator`, decoded by
-    *     the codegen'd [[AbiLogAddress]] — not `msg_sender`, unlike
+    *     the codegen'd [[graft.functions.AbiCalldata.abi_log_address]] —
+    *     not `msg_sender`, unlike
     *     Aave);
     *   - the DEBTOR and the COLLATERAL cToken ride the CALLDATA
     *     (`call_data.borrower`, `call_data.cTokenCollateral`);
@@ -1186,7 +1181,7 @@ object RealAbiOps extends graft.QueryModule {
     *     _coins, uint256 _A, uint256 _fee)`
     *     (classifier-abis/CurveMetapoolFactoryV2.json): the two strings
     *     are DYNAMIC members (head words 0/1 are tail offsets — the
-    *     [[graft.functions.AbiArrayLen]] walk reads each length through
+    *     [[graft.functions.AbiCalldata.abi_array_len]] walk reads each length through
     *     its offset), `_coins` is a FIXED address[4] inlined at head
     *     words 2-5 whose unused slots are ZERO — the reference derives
     *     the variable-length token vector by FILTERING the zero
@@ -1349,7 +1344,7 @@ object RealAbiOps extends graft.QueryModule {
         concat(word(length(c).cast("long")), rpad(lower(hex(c)), 64, "0"))
       def strDec(offCol: String, lenCol: String) = expr(
         // gate on the length head (NULL when the offset word failed
-        // AbiArrayLen's bounds check) so a corrupt offset NULLs instead
+        // abi_array_len's bounds check) so a corrupt offset NULLs instead
         // of overflowing the +37 cast — same contract as
         // RealAbiExtOps.compoundInitDecode
         s"""IF($lenCol IS NULL OR $lenCol < 0
@@ -1496,7 +1491,7 @@ object RealAbiOps extends graft.QueryModule {
     * are tail OFFSETS to three PARALLEL dynamic arrays; the element
     * decoders follow each offset, bound every read by the DECODED length,
     * and the address elements validate the 12-zero-byte pad
-    * ([[graft.functions.AbiArrayAddress]]). Up to three elements decoded
+    * ([[graft.functions.AbiCalldata.abi_array_address]]). Up to three elements decoded
     * statically (the fixture's width; a wider frame would NULL past
     * elem2 by the length bound, never misread). */
   private[graft] def flashLoanDecode(t: org.apache.spark.sql.DataFrame) = t
@@ -1588,7 +1583,7 @@ object RealAbiOps extends graft.QueryModule {
 
   /** C1 (Aave V2 `flashLoan`): THREE parallel dynamic arrays decoded
     * through head offsets 1/2/3 with the new
-    * [[graft.functions.AbiArrayAddress]] element decoder, plus the two
+    * [[graft.functions.AbiCalldata.abi_array_address]] element decoder, plus the two
     * frame addresses, the empty `bytes params`, and the uint16
     * referralCode word. The distinctive reference semantics is the
     * PER-PAIR quarantine: `assets.iter().zip(amounts).filter_map(...
@@ -1725,7 +1720,7 @@ object RealAbiOps extends graft.QueryModule {
     .withColumn("uid_off", abi_log_word(col("log_data"), 5))
     // a corrupt offset or length word must NULL the walk, never throw
     // (ANSI CAST(huge AS INT) raises) - gate each cast on buffer bounds,
-    // the same contract as AbiArrayLen and the strDec string walks; the
+    // the same contract as abi_array_len and the strDec string walks; the
     // length itself needs try_cast: conv yields an UNSIGNED decimal, so a
     // sign-bit length word (>= 2^63, e.g. 0xFF*8) overflows a plain BIGINT
     // cast even when the offset gate passes
@@ -2895,7 +2890,7 @@ object RealAbiOps extends graft.QueryModule {
     * deltas`, `uint256[] protocolFeeAmounts`
     * (classifier-abis/balancer/BalancerV2Vault.json; balancer_v2.rs
     * `logs.tokens` / `logs.deltas[i]`). The delta elements decode under
-    * the sign-extension contract ([[graft.functions.AbiArrayIntElem]]) —
+    * the sign-extension contract ([[graft.functions.AbiCalldata.abi_array_int]]) —
     * join deltas are positive, exit deltas negative, and the classifier
     * takes `.abs()` AFTER the zero skip (:85-96). */
   private[graft] def poolChangeDecode(t: org.apache.spark.sql.DataFrame) = t
@@ -3064,7 +3059,7 @@ object RealAbiOps extends graft.QueryModule {
 
   /** C1 (Balancer V2 `registerTokens` → PoolConfigUpdate): the pool rides
     * the TokensRegistered event's INDEXED `bytes32 poolId` TOPIC (decoded
-    * with the base-0 [[graft.functions.AbiB32Prefix]] — first 20 bytes,
+    * with [[graft.functions.AbiCalldata.abi_log_b32_prefix]] — first 20 bytes,
     * balancer_v2.rs:203-216 `pool_id_to_address(logs.poolId)`), and the
     * data section is TWO parallel dynamic address arrays — `address[]
     * tokens` and `address[] assetManagers`. Distinctively, the tokens

@@ -2,7 +2,7 @@ package graft.domain
 
 import graft.QueryDef
 import graft.functions.AbiCalldata.{abi_address, abi_log_address,
-  abi_log_b32_prefix, abi_log_word, abi_ret_int, abi_word}
+  abi_log_b32_prefix, abi_log_word, abi_ret_int, abi_word, sword, word}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
 object RealAbiSwapOps extends graft.QueryModule {
 
   import ChainFixture._
-  import RealAbiOps.{pow10d, sqlPow10, word}
+  import RealAbiOps.{pow10d, sqlPow10}
 
   def defs: Seq[QueryDef] = Seq(c1ClipperSwap, c1BalancerV1Swap,
     c3BalancerV1Bind, c5UniswapXBatch, c2RealFanout)
@@ -562,10 +562,10 @@ object RealAbiSwapOps extends graft.QueryModule {
         .withColumn("calldata", unhex(concat(col("selector"),
           lit("0" * 32), col("from_address"),
           word(when(col("zero_for_one"), 1L).otherwise(0L)),
-          RealAbiOps.sword(col("spec_src")),
+          sword(col("spec_src")),
           word(col("p2l") % 1000000))))
         .withColumn("ret_data", unhex(concat(
-          RealAbiOps.sword(col("a0_src")), RealAbiOps.sword(col("a1_src")))))
+          sword(col("a0_src")), sword(col("a1_src")))))
       val v3d = RealAbiOps.v3SwapDecode(v3f)
         .select(col("protocol"), lit("v3_swap").as("decoder"),
           col("token_in_id"), col("token_out_id"),

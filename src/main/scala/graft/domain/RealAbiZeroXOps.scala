@@ -2,7 +2,7 @@ package graft.domain
 
 import graft.QueryDef
 import graft.functions.AbiCalldata.{abi_address, abi_log_address,
-  abi_log_b32_prefix, abi_log_word, abi_word}
+  abi_log_b32_prefix, abi_log_word, abi_word, word}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
 object RealAbiZeroXOps extends graft.QueryModule {
 
   import ChainFixture._
-  import RealAbiOps.{pow10d, sqlPow10, word}
+  import RealAbiOps.{pow10d, sqlPow10}
 
   def defs: Seq[QueryDef] =
     Seq(c1ZeroxOrders, c2ZeroxFanout, c5ZeroxBatchFill)

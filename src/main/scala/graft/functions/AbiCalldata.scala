@@ -4,34 +4,49 @@ import org.apache.spark.sql.{Column, GraftColumnBridge => B}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.{concat, hex, lit, lower, lpad, when}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import AbiSlot._
+import AbiRead._
 
 /** F5 (native form): ABI calldata decode over real BinaryType — the
   * codegen'd analog of the reference's per-trace decoder dispatch
   * (brontes-classifier/src/classifiers/, decode via alloy `sol!` macros on
   * `&[u8]` calldata). Solidity ABI layout: a 4-byte function selector
   * followed by 32-byte big-endian words; uint values of practical size live
-  * in each word's low 8 bytes.
+  * in each word's low 8 bytes. Event-log `data` and return data carry the
+  * same words with no selector.
   *
-  * Both expressions implement `doGenCode` directly (NOT CodegenFallback),
-  * so a decode-heavy projection stays inside whole-stage codegen: the
-  * generated Java reads the byte array in place — no hex-string
-  * round-trip, no UTF8String slicing, no virtual `eval` call per row. At
-  * 100 TB the decode is the innermost loop of classification; keeping it
-  * codegen'd is the difference between a fused scan→decode→filter stage
-  * and one interpreted expression breaking the pipeline.
+  * Every decode below is one [[AbiDecode]] naming two choices, so a layout
+  * is data (a `ProtocolSpec` row can name its decode as a pair):
+  *   - an [[AbiSlot]], where the 32-byte word starts: a fixed word, a
+  *     dynamic array's length or element, or a field of an offset-passed
+  *     tuple;
+  *   - an [[AbiRead]], what is read from that word: uint or signed int as
+  *     BIGINT, a zero-padded address or a leading 20 bytes as hex, or the
+  *     4-byte selector.
+  *
+  * The byte walk lives once, in [[AbiKernel]]. `nullSafeEval` calls it,
+  * and `doGenCode` emits a static call into it with the slot's constants
+  * inlined (as Spark's own generated code calls `DateTimeUtils`), so the
+  * interpreted and the generated path cannot drift apart, and a
+  * decode-heavy projection stays inside whole-stage codegen: a fused
+  * scan→decode→filter stage, no hex-string round trip, no virtual `eval`
+  * per row.
   */
 object AbiCalldata {
 
+  private def decode(c: Column, name: String, slot: AbiSlot, read: AbiRead): Column =
+    B.column(AbiDecode(B.expression(c), name, slot, read))
+
   /** Low 8 bytes of ABI word `i` (after the 4-byte selector) as BIGINT;
     * NULL when the calldata is too short for that word. */
-  def abi_word(c: Column, i: Int): Column =
-    B.column(AbiWord(B.expression(c), i))
+  def abi_word(c: Column, i: Int): Column = decode(c, "abi_word", Word(4, i), Uint)
 
   /** First 4 bytes as a lowercase hex selector string; NULL when short. */
-  def abi_selector(c: Column): Column =
-    B.column(AbiSelector(B.expression(c)))
+  def abi_selector(c: Column): Column = decode(c, "abi_selector", Word(0, 0), Selector)
 
   /** Word `i` decoded as SIGNED int256 (two's complement) → BIGINT. The
     * V3-style layout: swap deltas are int256 where exact-output amounts
@@ -39,26 +54,25 @@ object AbiCalldata {
     * word is short or its magnitude exceeds 64 bits (upper 24 bytes must
     * be uniform sign-extension). */
   def abi_int_word(c: Column, i: Int): Column =
-    B.column(AbiIntWord(B.expression(c), i))
+    decode(c, "abi_int_word", Word(4, i), Sint)
 
   /** Word `i` of EVENT LOG `data` (no selector prefix — logs carry bare
     * 32-byte words) → BIGINT; the log-decoded amount path (the reference's
     * `log` arm of action_impl!, brontes-macros/src/action_classifier.rs). */
-  def abi_log_word(c: Column, i: Int): Column =
-    B.column(AbiLogWord(B.expression(c), i))
+  def abi_log_word(c: Column, i: Int): Column = decode(c, "abi_log_word", Word(0, i), Uint)
 
   /** Length of the dynamic array whose OFFSET pointer sits in head word
     * `headIdx` (Solidity dynamic ABI: head word holds byte offset from the
     * args start; the tail starts with a length word). Curve multi-token
     * layout (classifiers/curve/). */
   def abi_array_len(c: Column, headIdx: Int): Column =
-    B.column(AbiArrayLen(B.expression(c), headIdx))
+    decode(c, "abi_array_len", ArrayLen(4, headIdx), Uint)
 
   /** Element `elemIdx` (low 8 bytes as BIGINT) of the dynamic array whose
     * offset pointer sits in head word `headIdx`; NULL beyond the decoded
     * length. */
   def abi_array_elem(c: Column, headIdx: Int, elemIdx: Int): Column =
-    B.column(AbiArrayElem(B.expression(c), headIdx, elemIdx))
+    decode(c, "abi_array_elem", ArrayElem(4, headIdx, elemIdx), Uint)
 
   /** ABI `address` in word `i`: the word's trailing 20 bytes as a 40-char
     * lowercase hex string, NULL when the buffer is short or the 12-byte
@@ -66,8 +80,7 @@ object AbiCalldata {
     * zero-padded — nonzero padding means the word is not an address). The
     * Maker-PSM-style layout: `buyGem(address usr, uint256 gemAmt)`
     * (classifiers/maker/psm.rs `call_data.usr`). */
-  def abi_address(c: Column, i: Int): Column =
-    B.column(AbiAddress(B.expression(c), i))
+  def abi_address(c: Column, i: Int): Column = decode(c, "abi_address", Word(4, i), Address)
 
   /** Word `i` of RETURN data decoded as SIGNED int256 → BIGINT. Return
     * buffers carry bare 32-byte words (no selector prefix); same
@@ -75,8 +88,7 @@ object AbiCalldata {
     * source: `swap` returns `(int256 amount0, int256 amount1)` where the
     * pool's OUTPUT side arrives negative
     * (classifiers/uniswap/uniswap_v3.rs `return_data.amount0/amount1`). */
-  def abi_ret_int(c: Column, i: Int): Column =
-    B.column(AbiRetIntWord(B.expression(c), i))
+  def abi_ret_int(c: Column, i: Int): Column = decode(c, "abi_ret_int", Word(0, i), Sint)
 
   /** Low 8 bytes of FIELD `fieldIdx` of the dynamic TUPLE whose offset
     * pointer sits in head word `headIdx` (a struct with any dynamic member
@@ -85,14 +97,14 @@ object AbiCalldata {
     * carries `bytes userData` (classifiers/balancer/balancer_v2.rs
     * `call_data.swapRequest.amount`). */
   def abi_tuple_word(c: Column, headIdx: Int, fieldIdx: Int): Column =
-    B.column(AbiTupleWord(B.expression(c), headIdx, fieldIdx))
+    decode(c, "abi_tuple_word", TupleField(headIdx, fieldIdx), Uint)
 
   /** ABI `address` FIELD of an offset-passed tuple: trailing 20 bytes of
     * tuple field `fieldIdx`, 12-zero-byte pad validated (NULL otherwise) —
     * [[abi_address]] through one offset indirection
     * (`swapRequest.tokenIn/tokenOut/from/to`). */
   def abi_tuple_address(c: Column, headIdx: Int, fieldIdx: Int): Column =
-    B.column(AbiTupleAddress(B.expression(c), headIdx, fieldIdx))
+    decode(c, "abi_tuple_address", TupleField(headIdx, fieldIdx), Address)
 
   /** LEADING 20 bytes of tuple field `fieldIdx` as a 40-char hex string —
     * the Balancer `bytes32 poolId` shape, whose FIRST portion is the
@@ -100,7 +112,7 @@ object AbiCalldata {
     * :219-226); the trailing 12 bytes are the pool specialization + nonce
     * and are NOT validated (any value is legal there). */
   def abi_pool_id_address(c: Column, headIdx: Int, fieldIdx: Int): Column =
-    B.column(AbiTupleB32Prefix(B.expression(c), headIdx, fieldIdx))
+    decode(c, "abi_pool_id_address", TupleField(headIdx, fieldIdx), Prefix20)
 
   /** ABI `address` in bare-word buffer position `i` (event-log `data` /
     * return data — no selector prefix): trailing 20 bytes, 12-zero-byte
@@ -108,7 +120,7 @@ object AbiCalldata {
     * EVENT carries the liquidator as a data word
     * (classifiers/compound/compound_v2.rs `logs.liquidator`). */
   def abi_log_address(c: Column, i: Int): Column =
-    B.column(AbiLogAddress(B.expression(c), i))
+    decode(c, "abi_log_address", Word(0, i), Address)
 
   /** ABI `address` ELEMENT of the dynamic `address[]` whose offset
     * pointer sits in head word `headIdx`: [[abi_array_elem]]'s
@@ -118,7 +130,7 @@ object AbiCalldata {
     * receiverAddress, address[] assets, uint256[] amounts, ...)`
     * (classifiers/aave/v2.rs `call_data.assets`). */
   def abi_array_address(c: Column, headIdx: Int, elemIdx: Int): Column =
-    B.column(AbiArrayAddress(B.expression(c), headIdx, elemIdx))
+    decode(c, "abi_array_address", ArrayElem(4, headIdx, elemIdx), Address)
 
   /** [[abi_array_len]] over a BARE-word buffer (event-log `data` — no
     * 4-byte selector, and ABI offsets are relative to the data start).
@@ -126,15 +138,15 @@ object AbiCalldata {
     * tokens, int256[] deltas, ...)` rides the LOG, not the calldata
     * (classifiers/balancer/balancer_v2.rs `logs.tokens`). */
   def abi_log_array_len(c: Column, headIdx: Int): Column =
-    B.column(AbiArrayLen(B.expression(c), headIdx, base = 0))
+    decode(c, "abi_log_array_len", ArrayLen(0, headIdx), Uint)
 
   /** [[abi_array_elem]] over a bare-word (log/return) buffer. */
   def abi_log_array_elem(c: Column, headIdx: Int, elemIdx: Int): Column =
-    B.column(AbiArrayElem(B.expression(c), headIdx, elemIdx, base = 0))
+    decode(c, "abi_log_array_elem", ArrayElem(0, headIdx, elemIdx), Uint)
 
   /** [[abi_array_address]] over a bare-word (log/return) buffer. */
   def abi_log_array_address(c: Column, headIdx: Int, elemIdx: Int): Column =
-    B.column(AbiArrayAddress(B.expression(c), headIdx, elemIdx, base = 0))
+    decode(c, "abi_log_array_address", ArrayElem(0, headIdx, elemIdx), Address)
 
   /** SIGNED int256 ELEMENT of the dynamic array whose offset pointer sits
     * in head word `headIdx`: [[abi_array_elem]]'s offset-and-length walk
@@ -142,13 +154,15 @@ object AbiCalldata {
     * (upper 24 bytes uniform 0x00/0xff agreeing with the low word's sign
     * bit; out-of-i64-range → NULL). The `int256[] deltas` arm of Balancer
     * V2 `PoolBalanceChanged` (classifiers/balancer/balancer_v2.rs
-    * `logs.deltas[i]` — negative on exit, positive on join). */
+    * `logs.deltas[i]` — negative on exit, positive on join; the
+    * classifier takes `.abs()` after a zero skip, so the SIGN must survive
+    * the decode). */
   def abi_array_int(c: Column, headIdx: Int, elemIdx: Int): Column =
-    B.column(AbiArrayIntElem(B.expression(c), headIdx, elemIdx))
+    decode(c, "abi_array_int", ArrayElem(4, headIdx, elemIdx), Sint)
 
   /** [[abi_array_int]] over a bare-word (log/return) buffer. */
   def abi_log_array_int(c: Column, headIdx: Int, elemIdx: Int): Column =
-    B.column(AbiArrayIntElem(B.expression(c), headIdx, elemIdx, base = 0))
+    decode(c, "abi_log_array_int", ArrayElem(0, headIdx, elemIdx), Sint)
 
   /** LEADING 20 bytes of the STATIC word at position `wordIdx` as 40-char
     * hex — the `bytes32 poolId` shape in a fixed calldata slot (Balancer
@@ -157,204 +171,86 @@ object AbiCalldata {
     * [[abi_pool_id_address]] there is NO tuple indirection; the trailing
     * 12 bytes (specialization + nonce) are free, so no pad validation. */
   def abi_b32_prefix(c: Column, wordIdx: Int): Column =
-    B.column(AbiB32Prefix(B.expression(c), wordIdx))
+    decode(c, "abi_b32_prefix", Word(4, wordIdx), Prefix20)
 
   /** [[abi_b32_prefix]] over a bare-word buffer (an indexed `bytes32`
     * TOPIC, e.g. TokensRegistered's poolId topic1). */
   def abi_log_b32_prefix(c: Column, wordIdx: Int): Column =
-    B.column(AbiB32Prefix(B.expression(c), wordIdx, base = 0))
+    decode(c, "abi_log_b32_prefix", Word(0, wordIdx), Prefix20)
+
+  // ── encoders: the inverse of the decodes, for synthesizing buffers ──
+
+  /** A non-negative BIGINT as one ABI word: 64 lowercase hex chars. */
+  def word(c: Column): Column = lpad(lower(hex(c)), 64, "0")
+
+  /** SIGNED int256 word: non-negative values zero-pad; negative values
+    * sign-extend with 0xff (hex of a negative BIGINT is already the
+    * 16-char two's complement of its low 8 bytes). */
+  def sword(c: Column): Column =
+    when(c >= 0, word(c)).otherwise(concat(lit("f" * 48), lower(hex(c))))
 }
 
-case class AbiWord(child: Expression, wordIdx: Int) extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
+/** Where an [[AbiDecode]]'s word starts. `base` is 4 for calldata (the
+  * words follow the selector) and 0 for bare log or return data; ABI
+  * offsets count from `base`. */
+sealed trait AbiSlot extends Product with Serializable {
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_word"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val tailOff = 4 + wordIdx * 32 + 24
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < tailOff + 8) null
-    else {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v = (v << 8) | (b(tailOff + i) & 0xffL); i += 1 }
-      v
-    }
+  /** (kind, base, head, idx) as [[AbiKernel.at]] takes them. */
+  private[functions] def args: (Int, Int, Int, Int) = this match {
+    case Word(base, i) => (AbiKernel.Word, base, i, 0)
+    case ArrayLen(base, head) => (AbiKernel.ArrayLen, base, head, 0)
+    case ArrayElem(base, head, j) => (AbiKernel.ArrayElem, base, head, j)
+    case TupleField(head, field) => (AbiKernel.TupleField, 4, head, field)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($c.length < ${tailOff + 8}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $v = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $v = ($v << 8) | ($c[$tailOff + $i] & 0xffL);
-         |  }
-         |  ${ev.value} = $v;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
-/** Signed int256 word decode: upper 24 bytes must be uniform 0x00/0xff
-  * sign-extension (the value fits i64), low 8 bytes read big-endian as
-  * two's-complement. Out-of-i64-range values decode to NULL — explicit
-  * quarantine, not silent truncation. */
-case class AbiIntWord(child: Expression, wordIdx: Int) extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_int_word"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val wordOff = 4 + wordIdx * 32
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < wordOff + 32) null
-    else {
-      val ext = b(wordOff) & 0xff
-      if (ext != 0 && ext != 0xff) null
-      else {
-        var ok = true
-        var i = 1
-        while (i < 24) { if ((b(wordOff + i) & 0xff) != ext) ok = false; i += 1 }
-        // the low word's top bit must agree with the extension bytes, or
-        // the value needs >64 bits
-        if (!ok || ((b(wordOff + 24) & 0x80) == 0x80) != (ext == 0xff)) null
-        else {
-          var v = 0L
-          i = 0
-          while (i < 8) { v = (v << 8) | (b(wordOff + 24 + i) & 0xffL); i += 1 }
-          v
-        }
-      }
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val ext = ctx.freshName("ext")
-      val ok = ctx.freshName("ok")
-      s"""
-         |if ($c.length < ${wordOff + 32}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $ext = $c[$wordOff] & 0xff;
-         |  boolean $ok = $ext == 0 || $ext == 0xff;
-         |  for (int $i = 1; $ok && $i < 24; $i++) {
-         |    if (($c[$wordOff + $i] & 0xff) != $ext) $ok = false;
-         |  }
-         |  if (!$ok || ((($c[${wordOff + 24}] & 0x80) == 0x80) != ($ext == 0xff))) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $v = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $v = ($v << 8) | ($c[${wordOff + 24} + $i] & 0xffL);
-         |    }
-         |    ${ev.value} = $v;
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+object AbiSlot {
+  /** Word `i` of the buffer. */
+  final case class Word(base: Int, i: Int) extends AbiSlot
+  /** The length word of the dynamic array whose offset sits in word `head`. */
+  final case class ArrayLen(base: Int, head: Int) extends AbiSlot
+  /** Element `j` of that array; NULL unless `j` is below its length. */
+  final case class ArrayElem(base: Int, head: Int, j: Int) extends AbiSlot
+  /** Static field `field` of the calldata tuple whose offset sits in word
+    * `head` (a struct with a dynamic member is passed by offset). */
+  final case class TupleField(head: Int, field: Int) extends AbiSlot
 }
 
-/** Bare-word decode for event-log `data` payloads: same low-8-bytes read
-  * as [[AbiWord]] but with NO 4-byte selector offset — logs are packed
-  * 32-byte words from position 0. */
-case class AbiLogWord(child: Expression, wordIdx: Int) extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
+/** What an [[AbiDecode]] reads from its slot's word, and as which type. */
+sealed abstract class AbiRead(val code: Int, val dataType: DataType)
+    extends Product with Serializable
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_log_word"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val tailOff = wordIdx * 32 + 24
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < tailOff + 8) null
-    else {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v = (v << 8) | (b(tailOff + i) & 0xffL); i += 1 }
-      v
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($c.length < ${tailOff + 8}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $v = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $v = ($v << 8) | ($c[$tailOff + $i] & 0xffL);
-         |  }
-         |  ${ev.value} = $v;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+object AbiRead {
+  /** The low 8 bytes, big-endian. */
+  case object Uint extends AbiRead(AbiKernel.Uint, LongType)
+  /** int256 that fits 64 bits: the upper 24 bytes are uniform 0x00/0xff
+    * sign extension agreeing with the low word's sign bit (out of range →
+    * NULL, never a silently wrapped magnitude). */
+  case object Sint extends AbiRead(AbiKernel.Sint, LongType)
+  /** 12 zero pad bytes (else NULL), then 20 bytes as lowercase hex. */
+  case object Address extends AbiRead(AbiKernel.Address, StringType)
+  /** The leading 20 bytes as lowercase hex, the rest unchecked. */
+  case object Prefix20 extends AbiRead(AbiKernel.Prefix20, StringType)
+  /** The leading 4 bytes as lowercase hex: needs 4 bytes, not a word. */
+  case object Selector extends AbiRead(AbiKernel.Selector, StringType)
 }
 
-/** Dynamic-array LENGTH via offset-following: head word `headIdx` holds the
-  * byte offset (from the args start, i.e. after the selector) of the tail;
-  * the tail's first word is the element count. NULL when the calldata is
-  * too short at either hop. */
-case class AbiArrayLen(child: Expression, headIdx: Int, base: Int = 4)
+/** The one ABI decode expression: `read` applied to the word at `slot` of
+  * a BINARY buffer, NULL when the buffer does not hold it. `name` is the
+  * SQL/pretty name (`abi_word`, `abi_pool_id_address`, …). */
+case class AbiDecode(child: Expression, name: String, slot: AbiSlot, read: AbiRead)
     extends UnaryExpression {
-  require(headIdx >= 0, "headIdx must be non-negative")
+
+  private val (kind, base, head, idx) = slot.args
+  require(head >= 0 && idx >= 0, "indices must be non-negative")
   require(base == 4 || base == 0, "base is 4 (calldata) or 0 (log/return)")
 
-  override def dataType: DataType = LongType
+  override def dataType: DataType = read.dataType
   override def nullable: Boolean = true
-  override def prettyName: String =
-    if (base == 0) "abi_log_array_len" else "abi_array_len"
+  override def prettyName: String = name
+  // plans show the layout: abi_word(calldata#1, Word(4,0), Uint)
+  override protected def stringArgs: Iterator[Any] = Iterator(child, slot, read)
+
   // SQL-surface type contract: a wrong-typed argument fails at
   // ANALYSIS time instead of as a codegen/eval ClassCastException
   // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
@@ -364,63 +260,26 @@ case class AbiArrayLen(child: Expression, headIdx: Int, base: Int = 4)
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
 
-  private val headOff = base + headIdx * 32 + 24
-
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < headOff + 8) null
-    else {
-      // an ABI offset's upper 24 bytes are ALWAYS zero — nonzero high
-      // bytes are corruption, not an offset with small low bytes
-      var i = 0
-      while (i < 24) { if (b(headOff - 24 + i) != 0) return null; i += 1 }
-      var off = 0L
-      i = 0
-      while (i < 8) { off = (off << 8) | (b(headOff + i) & 0xffL); i += 1 }
-      // reject oversized offsets BEFORE the arithmetic: a crafted head word
-      // near 2^63 would wrap `base + off + 24` negative and dodge the length
-      // check, turning corrupt bytes into an AIOOBE instead of NULL
-      if (off < 0 || off > b.length) return null
-      val lenOff = base + off + 24
-      if (b.length < lenOff + 8) null
-      else {
-        var v = 0L
-        i = 0
-        while (i < 8) { v = (v << 8) | (b(lenOff.toInt + i) & 0xffL); i += 1 }
-        v
-      }
-    }
+    val p = AbiKernel.at(b, kind, base, head, idx, read.code)
+    if (p < 0) null
+    else if (dataType == LongType) AbiKernel.low8(b, p)
+    else AbiKernel.text(b, p, read.code)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val lenOff = ctx.freshName("lenOff")
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val pz = ctx.freshName("pz")
+      val k = "graft.functions.AbiKernel"
+      val p = ctx.freshName("p")
+      val value =
+        if (dataType == LongType) s"$k.low8($c, $p)" else s"$k.text($c, $p, ${read.code})"
       s"""
-         |if ($c.length < ${headOff + 8}) {
+         |int $p = $k.at($c, $kind, $base, $head, $idx, ${read.code});
+         |if ($p < 0) {
          |  ${ev.isNull} = true;
          |} else {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  long $lenOff = ${base}L + $off + 24L;
-         |  if (!$pz || $off < 0 || $off > $c.length || $c.length < $lenOff + 8) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $v = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $v = ($v << 8) | ($c[(int) $lenOff + $i] & 0xffL);
-         |    }
-         |    ${ev.value} = $v;
-         |  }
+         |  ${ev.value} = $value;
          |}
        """.stripMargin
     })
@@ -429,164 +288,67 @@ case class AbiArrayLen(child: Expression, headIdx: Int, base: Int = 4)
     copy(child = newChild)
 }
 
-/** Dynamic-array ELEMENT via offset-following: element `elemIdx`'s low 8
-  * bytes as BIGINT; NULL when `elemIdx >= length` (decoded, not assumed)
-  * or the buffer is short. */
-case class AbiArrayElem(child: Expression, headIdx: Int, elemIdx: Int,
-    base: Int = 4) extends UnaryExpression {
-  require(headIdx >= 0 && elemIdx >= 0, "indices must be non-negative")
-  require(base == 4 || base == 0, "base is 4 (calldata) or 0 (log/return)")
+/** The ABI byte walk shared by [[AbiDecode]]'s interpreted and generated
+  * paths (the generated Java calls these statically). */
+object AbiKernel {
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String =
-    if (base == 0) "abi_log_array_elem" else "abi_array_elem"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
+  // slot kinds
+  final val Word = 0
+  final val ArrayLen = 1
+  final val ArrayElem = 2
+  final val TupleField = 3
 
-  private val headOff = base + headIdx * 32 + 24
+  // reads
+  final val Uint = 0
+  final val Sint = 1
+  final val Address = 2
+  final val Prefix20 = 3
+  final val Selector = 4
 
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < headOff + 8) null
-    else {
-      // upper-24-zero offset pad, as in AbiArrayLen
-      var i = 0
-      while (i < 24) { if (b(headOff - 24 + i) != 0) return null; i += 1 }
-      var off = 0L
-      i = 0
-      while (i < 8) { off = (off << 8) | (b(headOff + i) & 0xffL); i += 1 }
-      // same oversized-offset rejection as AbiArrayLen: guard before the
-      // lenOff/elemOff arithmetic can wrap
-      if (off < 0 || off > b.length) return null
-      val lenOff = base + off + 24
-      if (b.length < lenOff + 8) null
+  /** Start of the slot's word when the slot resolves inside `b` and the
+    * word passes `read`'s checks; -1 (NULL) otherwise. `head` is the word
+    * index (Word) or the offset word's index (the rest); `idx` is the
+    * array element or tuple field. */
+  def at(b: Array[Byte], kind: Int, base: Int, head: Int, idx: Int, read: Int): Int = {
+    val width = if (read == Selector) 4 else 32
+    val p =
+      if (kind == Word) fit(b, base + 32L * head, width)
       else {
-        var n = 0L
-        i = 0
-        while (i < 8) { n = (n << 8) | (b(lenOff.toInt + i) & 0xffL); i += 1 }
-        // length word ends 8 bytes after lenOff; element words follow, and
-        // each element's low-8 tail sits 24 bytes into its word: tail(j) =
-        // lenOff + 8 + 24 + 32j = lenOff + 32 + 32j
-        val elemOff = lenOff + 32 + elemIdx * 32L
-        if (elemIdx >= n || b.length < elemOff + 8) null
+        val off = offset(b, base + 32L * head)
+        if (off < 0) -1
+        else if (kind == TupleField) fit(b, base + off + 32L * idx, width)
         else {
-          var v = 0L
-          i = 0
-          while (i < 8) { v = (v << 8) | (b(elemOff.toInt + i) & 0xffL); i += 1 }
-          v
+          val len = fit(b, base + off, 32)
+          if (kind == ArrayLen || len < 0) len
+          else if (idx >= low8(b, len)) -1
+          else fit(b, len + 32L + 32L * idx, width)
         }
       }
-    }
+    if (p < 0) -1
+    else if (read == Sint && !signExtends(b, p)) -1
+    else if (read == Address && !zeros(b, p, 12)) -1
+    else p
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val lenOff = ctx.freshName("lenOff")
-      val elemOff = ctx.freshName("elemOff")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val pz = ctx.freshName("pz")
-      s"""
-         |if ($c.length < ${headOff + 8}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  long $lenOff = ${base}L + $off + 24L;
-         |  if (!$pz || $off < 0 || $off > $c.length || $c.length < $lenOff + 8) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $n = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $n = ($n << 8) | ($c[(int) $lenOff + $i] & 0xffL);
-         |    }
-         |    long $elemOff = $lenOff + 32L + ${elemIdx}L * 32L;
-         |    if (${elemIdx}L >= $n || $c.length < $elemOff + 8) {
-         |      ${ev.isNull} = true;
-         |    } else {
-         |      long $v = 0L;
-         |      for (int $i = 0; $i < 8; $i++) {
-         |        $v = ($v << 8) | ($c[(int) $elemOff + $i] & 0xffL);
-         |      }
-         |      ${ev.value} = $v;
-         |    }
-         |  }
-         |}
-       """.stripMargin
-    })
+  /** The word's low 8 bytes, big-endian (Uint and Sint). */
+  def low8(b: Array[Byte], p: Int): Long = {
+    var v = 0L
+    var i = p + 24
+    while (i < p + 32) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
+    v
+  }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+  /** The hex string a string `read` yields from the word at `p`. */
+  def text(b: Array[Byte], p: Int, read: Int): UTF8String =
+    if (read == Address) hex(b, p + 12, 20)
+    else if (read == Selector) hex(b, p, 4)
+    else hex(b, p, 20)
 
-/** Dynamic-array ADDRESS element via offset-following: the same
-  * head-offset/length walk as [[AbiArrayElem]], but the element decodes
-  * under [[AbiAddress]]'s contract — trailing 20 bytes as lowercase hex,
-  * leading 12 bytes validated zero (nonzero pad → NULL, not a truncated
-  * address); NULL when `elemIdx >= length` or the buffer is short. The
-  * `address[] assets` arm of Aave V2 flashLoan (classifiers/aave/v2.rs). */
-case class AbiArrayAddress(child: Expression, headIdx: Int, elemIdx: Int,
-    base: Int = 4) extends UnaryExpression {
-  require(headIdx >= 0 && elemIdx >= 0, "indices must be non-negative")
-  require(base == 4 || base == 0, "base is 4 (calldata) or 0 (log/return)")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String =
-    if (base == 0) "abi_log_array_address" else "abi_array_address"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val headOff = base + headIdx * 32 + 24
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < headOff + 8) return null
-    // upper-24-zero offset pad, as in AbiArrayLen
+  private def hex(b: Array[Byte], from: Int, n: Int): UTF8String = {
+    val out = new Array[Byte](2 * n)
     var i = 0
-    while (i < 24) { if (b(headOff - 24 + i) != 0) return null; i += 1 }
-    var off = 0L
-    i = 0
-    while (i < 8) { off = (off << 8) | (b(headOff + i) & 0xffL); i += 1 }
-    // same oversized-offset rejection as AbiArrayLen/AbiArrayElem
-    if (off < 0 || off > b.length) return null
-    val lenOff = base + off + 24
-    if (b.length < lenOff + 8) return null
-    var n = 0L
-    i = 0
-    while (i < 8) { n = (n << 8) | (b(lenOff.toInt + i) & 0xffL); i += 1 }
-    // element WORD starts right after the length word: lenOff ends the
-    // length's low-8 tail, so word(j) begins at lenOff + 8 + 32j
-    val wordOff = lenOff + 8 + elemIdx * 32L
-    if (elemIdx >= n || b.length < wordOff + 32) return null
-    val w = wordOff.toInt
-    var zero = true
-    i = 0
-    while (i < 12) { if (b(w + i) != 0) zero = false; i += 1 }
-    if (!zero) return null
-    val out = new Array[Byte](40)
-    i = 0
-    while (i < 20) {
-      val v = b(w + 12 + i) & 0xff
+    while (i < n) {
+      val v = b(from + i) & 0xff
       out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
       out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
       i += 1
@@ -594,792 +356,36 @@ case class AbiArrayAddress(child: Expression, headIdx: Int, elemIdx: Int,
     UTF8String.fromBytes(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val lenOff = ctx.freshName("lenOff")
-      val wordOff = ctx.freshName("wordOff")
-      val n = ctx.freshName("n")
-      val w = ctx.freshName("w")
-      val zero = ctx.freshName("zero")
-      val out = ctx.freshName("hex")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val pz = ctx.freshName("pz")
-      s"""
-         |if ($c.length < ${headOff + 8}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  long $lenOff = ${base}L + $off + 24L;
-         |  if (!$pz || $off < 0 || $off > $c.length || $c.length < $lenOff + 8) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $n = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $n = ($n << 8) | ($c[(int) $lenOff + $i] & 0xffL);
-         |    }
-         |    long $wordOff = $lenOff + 8L + ${elemIdx}L * 32L;
-         |    if (${elemIdx}L >= $n || $c.length < $wordOff + 32) {
-         |      ${ev.isNull} = true;
-         |    } else {
-         |      int $w = (int) $wordOff;
-         |      boolean $zero = true;
-         |      for (int $i = 0; $i < 12; $i++) {
-         |        if ($c[$w + $i] != 0) $zero = false;
-         |      }
-         |      if (!$zero) {
-         |        ${ev.isNull} = true;
-         |      } else {
-         |        byte[] $out = new byte[40];
-         |        for (int $i = 0; $i < 20; $i++) {
-         |          int $v = $c[$w + 12 + $i] & 0xff;
-         |          $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |          $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |        }
-         |        ${ev.value} = UTF8String.fromBytes($out);
-         |      }
-         |    }
-         |  }
-         |}
-       """.stripMargin
-    })
+  // `pos` when `width` bytes from it fit in `b`, else -1
+  private def fit(b: Array[Byte], pos: Long, width: Int): Int =
+    if (pos + width <= b.length) pos.toInt else -1
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SIGNED int256 ELEMENT via offset-following: the same
-  * head-offset/length walk as [[AbiArrayElem]], but the element decodes
-  * under [[AbiRetIntWord]]'s sign contract — upper 24 bytes uniform
-  * 0x00/0xff, agreeing with the low word's sign bit (a proper two's
-  * complement sign extension); anything else → NULL, never a silently
-  * wrapped magnitude. The `int256[] deltas` member of Balancer V2's
-  * PoolBalanceChanged event (balancer_v2.rs `logs.deltas[i]` — the
-  * classifier takes `.abs()` after a zero skip; the SIGN must survive
-  * the decode for that arm to exist). */
-case class AbiArrayIntElem(child: Expression, headIdx: Int, elemIdx: Int,
-    base: Int = 4) extends UnaryExpression {
-  require(headIdx >= 0 && elemIdx >= 0, "indices must be non-negative")
-  require(base == 4 || base == 0, "base is 4 (calldata) or 0 (log/return)")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String =
-    if (base == 0) "abi_log_array_int" else "abi_array_int"
-  // SQL-surface type contract (see AbiWord)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val headOff = base + headIdx * 32 + 24
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < headOff + 8) return null
-    // upper-24-zero offset pad, as in AbiArrayLen
-    var i = 0
-    while (i < 24) { if (b(headOff - 24 + i) != 0) return null; i += 1 }
-    var off = 0L
-    i = 0
-    while (i < 8) { off = (off << 8) | (b(headOff + i) & 0xffL); i += 1 }
-    // same oversized-offset rejection as AbiArrayLen: guard before the
-    // lenOff/elemOff arithmetic can wrap
-    if (off < 0 || off > b.length) return null
-    val lenOff = base + off + 24
-    if (b.length < lenOff + 8) return null
-    var n = 0L
-    i = 0
-    while (i < 8) { n = (n << 8) | (b(lenOff.toInt + i) & 0xffL); i += 1 }
-    // element WORD starts 8 bytes after the length tail: lenOff + 8 + 32j
-    val wordOff = lenOff + 8 + elemIdx * 32L
-    if (elemIdx >= n || b.length < wordOff + 32) return null
-    val w = wordOff.toInt
-    val ext = b(w) & 0xff
-    if (ext != 0 && ext != 0xff) return null
-    var ok = true
-    i = 1
-    while (i < 24) { if ((b(w + i) & 0xff) != ext) ok = false; i += 1 }
-    if (!ok || ((b(w + 24) & 0x80) == 0x80) != (ext == 0xff)) null
+  /** The ABI offset held by the word at `pos`, or -1. An offset word's
+    * upper 24 bytes are ALWAYS zero (nonzero high bytes are corruption,
+    * not an offset with small low bytes), and the offset must lie inside
+    * the buffer: rejecting it before any arithmetic keeps a crafted word
+    * near 2^63 from wrapping a position negative. */
+  private def offset(b: Array[Byte], pos: Long): Long = {
+    val p = fit(b, pos, 32)
+    if (p < 0 || !zeros(b, p, 24)) -1L
     else {
-      var v = 0L
-      i = 0
-      while (i < 8) { v = (v << 8) | (b(w + 24 + i) & 0xffL); i += 1 }
-      v
+      val off = low8(b, p)
+      if (off < 0 || off > b.length) -1L else off
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val lenOff = ctx.freshName("lenOff")
-      val wOff = ctx.freshName("wOff")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val pz = ctx.freshName("pz")
-      val ext = ctx.freshName("ext")
-      val ok = ctx.freshName("ok")
-      s"""
-         |if ($c.length < ${headOff + 8}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  long $lenOff = ${base}L + $off + 24L;
-         |  if (!$pz || $off < 0 || $off > $c.length || $c.length < $lenOff + 8) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $n = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $n = ($n << 8) | ($c[(int) $lenOff + $i] & 0xffL);
-         |    }
-         |    long $wOff = $lenOff + 8L + ${elemIdx}L * 32L;
-         |    if (${elemIdx}L >= $n || $c.length < $wOff + 32) {
-         |      ${ev.isNull} = true;
-         |    } else {
-         |      int $ext = $c[(int) $wOff] & 0xff;
-         |      boolean $ok = $ext == 0 || $ext == 0xff;
-         |      for (int $i = 1; $ok && $i < 24; $i++) {
-         |        if (($c[(int) $wOff + $i] & 0xff) != $ext) $ok = false;
-         |      }
-         |      if (!$ok ||
-         |          ((($c[(int) $wOff + 24] & 0x80) == 0x80) != ($ext == 0xff))) {
-         |        ${ev.isNull} = true;
-         |      } else {
-         |        long $v = 0L;
-         |        for (int $i = 0; $i < 8; $i++) {
-         |          $v = ($v << 8) | ($c[(int) $wOff + 24 + $i] & 0xffL);
-         |        }
-         |        ${ev.value} = $v;
-         |      }
-         |    }
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** LEADING 20 bytes of a STATIC 32-byte word as 40-char hex — the
-  * `bytes32 poolId` shape in a FIXED slot (no tuple indirection, cf.
-  * [[AbiTupleB32Prefix]]): "the first portion of which is the pool's
-  * contract address" (balancer_v2.rs pool_id_to_address :219-226).
-  * `base = 4` reads calldata slot `wordIdx` after the selector; `base =
-  * 0` reads a bare-word buffer — return data, or an indexed bytes32
-  * TOPIC (TokensRegistered's poolId). The trailing 12 bytes
-  * (specialization + nonce) are free; no pad validation. */
-case class AbiB32Prefix(child: Expression, wordIdx: Int, base: Int = 4)
-    extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
-  require(base == 4 || base == 0, "base is 4 (calldata) or 0 (log/return)")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String =
-    if (base == 0) "abi_log_b32_prefix" else "abi_b32_prefix"
-  // SQL-surface type contract (see AbiWord)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val wordOff = base + wordIdx * 32
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < wordOff + 32) null
-    else {
-      val out = new Array[Byte](40)
-      var i = 0
-      while (i < 20) {
-        val v = b(wordOff + i) & 0xff
-        out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
-        out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-        i += 1
-      }
-      UTF8String.fromBytes(out)
-    }
+  private def zeros(b: Array[Byte], from: Int, n: Int): Boolean = {
+    var i = from
+    while (i < from + n) { if (b(i) != 0) return false; i += 1 }
+    true
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val v = ctx.freshName("v")
-      val i = ctx.freshName("i")
-      s"""
-         |if ($c.length < ${wordOff + 32}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $out = new byte[40];
-         |  for (int $i = 0; $i < 20; $i++) {
-         |    int $v = $c[$wordOff + $i] & 0xff;
-         |    $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |    $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |  }
-         |  ${ev.value} = UTF8String.fromBytes($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** ABI address-word decode: a Solidity `address` argument occupies the
-  * trailing 20 bytes of its 32-byte word; the leading 12 bytes MUST be
-  * zero (validated — nonzero padding decodes to NULL, not a truncated
-  * address). Returns lowercase hex, the address form the rest of the
-  * fixture uses. */
-case class AbiAddress(child: Expression, wordIdx: Int) extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_address"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val wordOff = 4 + wordIdx * 32
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < wordOff + 32) null
-    else {
-      var zero = true
-      var i = 0
-      while (i < 12) { if (b(wordOff + i) != 0) zero = false; i += 1 }
-      if (!zero) null
-      else {
-        val out = new Array[Byte](40)
-        i = 0
-        while (i < 20) {
-          val v = b(wordOff + 12 + i) & 0xff
-          out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
-          out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-          i += 1
-        }
-        UTF8String.fromBytes(out)
-      }
-    }
+  // uniform 0x00/0xff upper 24 bytes agreeing with the low word's sign bit
+  private def signExtends(b: Array[Byte], p: Int): Boolean = {
+    val ext = b(p)
+    if ((ext != 0 && ext != -1) || (b(p + 24) < 0) != (ext == -1)) return false
+    var i = p + 1
+    while (i < p + 24) { if (b(i) != ext) return false; i += 1 }
+    true
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val zero = ctx.freshName("zero")
-      val out = ctx.freshName("hex")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      s"""
-         |if ($c.length < ${wordOff + 32}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $zero = true;
-         |  for (int $i = 0; $i < 12; $i++) {
-         |    if ($c[$wordOff + $i] != 0) $zero = false;
-         |  }
-         |  if (!$zero) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    byte[] $out = new byte[40];
-         |    for (int $i = 0; $i < 20; $i++) {
-         |      int $v = $c[${wordOff + 12} + $i] & 0xff;
-         |      $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |      $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |    }
-         |    ${ev.value} = UTF8String.fromBytes($out);
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Signed int256 word decode over BARE words (return data / log data —
-  * no 4-byte selector prefix): same sign-extension contract as
-  * [[AbiIntWord]] (upper 24 bytes uniform 0x00/0xff, low 8 bytes read as
-  * two's complement, out-of-i64-range → NULL). The return-data arm of
-  * action_impl! (brontes-macros), e.g. UniswapV3 swapReturn. */
-case class AbiRetIntWord(child: Expression, wordIdx: Int) extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_ret_int"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val wordOff = wordIdx * 32
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < wordOff + 32) null
-    else {
-      val ext = b(wordOff) & 0xff
-      if (ext != 0 && ext != 0xff) null
-      else {
-        var ok = true
-        var i = 1
-        while (i < 24) { if ((b(wordOff + i) & 0xff) != ext) ok = false; i += 1 }
-        if (!ok || ((b(wordOff + 24) & 0x80) == 0x80) != (ext == 0xff)) null
-        else {
-          var v = 0L
-          i = 0
-          while (i < 8) { v = (v << 8) | (b(wordOff + 24 + i) & 0xffL); i += 1 }
-          v
-        }
-      }
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val ext = ctx.freshName("ext")
-      val ok = ctx.freshName("ok")
-      s"""
-         |if ($c.length < ${wordOff + 32}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $ext = $c[$wordOff] & 0xff;
-         |  boolean $ok = $ext == 0 || $ext == 0xff;
-         |  for (int $i = 1; $ok && $i < 24; $i++) {
-         |    if (($c[$wordOff + $i] & 0xff) != $ext) $ok = false;
-         |  }
-         |  if (!$ok || ((($c[${wordOff + 24}] & 0x80) == 0x80) != ($ext == 0xff))) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    long $v = 0L;
-         |    for (int $i = 0; $i < 8; $i++) {
-         |      $v = ($v << 8) | ($c[${wordOff + 24} + $i] & 0xffL);
-         |    }
-         |    ${ev.value} = $v;
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Offset-following tuple decode geometry shared by the three tuple-field
-  * expressions: a struct with any dynamic member is ABI-passed as an
-  * OFFSET in its head word (relative to the args start, byte 4); its
-  * static fields are consecutive 32-byte words at that tail. Emits Java
-  * that resolves `base = 4 + offset` with the same oversized-offset guard
-  * as [[AbiArrayLen]] (wrap-safe), then runs `body(base)`. */
-private[functions] trait AbiTupleGeometry { self: UnaryExpression =>
-  def headIdx: Int
-  def fieldIdx: Int
-
-  protected final def headOff: Int = 4 + headIdx * 32 + 24
-  // absolute position of the field word, given the decoded tuple offset
-  protected final def fieldAt(off: Long): Long = 4L + off + fieldIdx * 32L
-
-  protected final def tupleFieldOff(b: Array[Byte]): Long = {
-    if (b.length < headOff + 8) return -1L
-    // an ABI offset word is a uint256 that must fit the buffer, so its
-    // upper 24 bytes are ALWAYS zero — a nonzero high byte is corruption,
-    // not a huge offset that happens to have small low bytes (mirrors
-    // AbiArrayLen's convention)
-    var i = 0
-    while (i < 24) { if (b(headOff - 24 + i) != 0) return -1L; i += 1 }
-    var off = 0L
-    i = 0
-    while (i < 8) { off = (off << 8) | (b(headOff + i) & 0xffL); i += 1 }
-    if (off < 0 || off > b.length) return -1L
-    val f = fieldAt(off)
-    if (b.length < f + 32) -1L else f
-  }
-}
-
-/** Low-8-bytes uint decode of a dynamic-tuple FIELD (offset-following) —
-  * the Balancer SwapRequest shape (balancer_v2.rs swapRequest.amount). */
-case class AbiTupleWord(child: Expression, headIdx: Int, fieldIdx: Int)
-    extends UnaryExpression with AbiTupleGeometry {
-  require(headIdx >= 0 && fieldIdx >= 0, "indices must be non-negative")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_tuple_word"
-  // SQL-surface type contract (see AbiWord)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    val f = tupleFieldOff(b)
-    if (f < 0) null
-    else {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v = (v << 8) | (b(f.toInt + 24 + i) & 0xffL); i += 1 }
-      v
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val f = ctx.freshName("f")
-      val v = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val pz = ctx.freshName("pz")
-      s"""
-         |long $f = -1L;
-         |if ($c.length >= ${headOff + 8}) {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  if ($pz && $off >= 0 && $off <= $c.length
-         |      && $c.length >= ${4L + fieldIdx * 32L}L + $off + 32L) {
-         |    $f = ${4L + fieldIdx * 32L}L + $off;
-         |  }
-         |}
-         |if ($f < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $v = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $v = ($v << 8) | ($c[(int) $f + 24 + $i] & 0xffL);
-         |  }
-         |  ${ev.value} = $v;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** ABI `address` FIELD of an offset-passed tuple: trailing 20 bytes,
-  * 12-zero-byte pad validated (swapRequest.tokenIn/tokenOut/from/to). */
-case class AbiTupleAddress(child: Expression, headIdx: Int, fieldIdx: Int)
-    extends UnaryExpression with AbiTupleGeometry {
-  require(headIdx >= 0 && fieldIdx >= 0, "indices must be non-negative")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_tuple_address"
-  // SQL-surface type contract (see AbiWord)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    val f = tupleFieldOff(b)
-    if (f < 0) null
-    else {
-      var zero = true
-      var i = 0
-      while (i < 12) { if (b(f.toInt + i) != 0) zero = false; i += 1 }
-      if (!zero) null
-      else {
-        val out = new Array[Byte](40)
-        i = 0
-        while (i < 20) {
-          val v = b(f.toInt + 12 + i) & 0xff
-          out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
-          out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-          i += 1
-        }
-        UTF8String.fromBytes(out)
-      }
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val f = ctx.freshName("f")
-      val zero = ctx.freshName("zero")
-      val out = ctx.freshName("hex")
-      val v = ctx.freshName("v")
-      val i = ctx.freshName("i")
-      val pz = ctx.freshName("pz")
-      s"""
-         |long $f = -1L;
-         |if ($c.length >= ${headOff + 8}) {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  if ($pz && $off >= 0 && $off <= $c.length
-         |      && $c.length >= ${4L + fieldIdx * 32L}L + $off + 32L) {
-         |    $f = ${4L + fieldIdx * 32L}L + $off;
-         |  }
-         |}
-         |if ($f < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $zero = true;
-         |  for (int $i = 0; $i < 12; $i++) {
-         |    if ($c[(int) $f + $i] != 0) $zero = false;
-         |  }
-         |  if (!$zero) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    byte[] $out = new byte[40];
-         |    for (int $i = 0; $i < 20; $i++) {
-         |      int $v = $c[(int) $f + 12 + $i] & 0xff;
-         |      $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |      $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |    }
-         |    ${ev.value} = UTF8String.fromBytes($out);
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Balancer `bytes32 poolId` decode through one tuple indirection: the
-  * LEADING 20 bytes of the field word as 40-char hex — "the first portion
-  * of which is the pool's contract address" (balancer_v2.rs
-  * pool_id_to_address :219-226). The trailing 12 bytes (specialization +
-  * nonce) are free; no pad validation, unlike the address decodes. */
-case class AbiTupleB32Prefix(child: Expression, headIdx: Int, fieldIdx: Int)
-    extends UnaryExpression with AbiTupleGeometry {
-  require(headIdx >= 0 && fieldIdx >= 0, "indices must be non-negative")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_pool_id_address"
-  // SQL-surface type contract (see AbiWord)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    val f = tupleFieldOff(b)
-    if (f < 0) null
-    else {
-      val out = new Array[Byte](40)
-      var i = 0
-      while (i < 20) {
-        val v = b(f.toInt + i) & 0xff
-        out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
-        out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-        i += 1
-      }
-      UTF8String.fromBytes(out)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val off = ctx.freshName("off")
-      val f = ctx.freshName("f")
-      val out = ctx.freshName("hex")
-      val v = ctx.freshName("v")
-      val i = ctx.freshName("i")
-      val pz = ctx.freshName("pz")
-      s"""
-         |long $f = -1L;
-         |if ($c.length >= ${headOff + 8}) {
-         |  boolean $pz = true;
-         |  for (int $i = 0; $i < 24; $i++) {
-         |    if ($c[${headOff - 24} + $i] != 0) $pz = false;
-         |  }
-         |  long $off = 0L;
-         |  for (int $i = 0; $i < 8; $i++) {
-         |    $off = ($off << 8) | ($c[$headOff + $i] & 0xffL);
-         |  }
-         |  if ($pz && $off >= 0 && $off <= $c.length
-         |      && $c.length >= ${4L + fieldIdx * 32L}L + $off + 32L) {
-         |    $f = ${4L + fieldIdx * 32L}L + $off;
-         |  }
-         |}
-         |if ($f < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $out = new byte[40];
-         |  for (int $i = 0; $i < 20; $i++) {
-         |    int $v = $c[(int) $f + $i] & 0xff;
-         |    $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |    $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |  }
-         |  ${ev.value} = UTF8String.fromBytes($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Bare-word address decode (log data / return data — no 4-byte selector
-  * offset): trailing 20 bytes of word `wordIdx`, 12-zero-byte pad
-  * validated as in [[AbiAddress]]. Event-log address payloads, e.g.
-  * Compound's LiquidateBorrow liquidator. */
-case class AbiLogAddress(child: Expression, wordIdx: Int) extends UnaryExpression {
-  require(wordIdx >= 0, "wordIdx must be non-negative")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_log_address"
-  // SQL-surface type contract (see AbiWord)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  private val wordOff = wordIdx * 32
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < wordOff + 32) null
-    else {
-      var zero = true
-      var i = 0
-      while (i < 12) { if (b(wordOff + i) != 0) zero = false; i += 1 }
-      if (!zero) null
-      else {
-        val out = new Array[Byte](40)
-        i = 0
-        while (i < 20) {
-          val v = b(wordOff + 12 + i) & 0xff
-          out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
-          out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-          i += 1
-        }
-        UTF8String.fromBytes(out)
-      }
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val zero = ctx.freshName("zero")
-      val out = ctx.freshName("hex")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      s"""
-         |if ($c.length < ${wordOff + 32}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $zero = true;
-         |  for (int $i = 0; $i < 12; $i++) {
-         |    if ($c[$wordOff + $i] != 0) $zero = false;
-         |  }
-         |  if (!$zero) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    byte[] $out = new byte[40];
-         |    for (int $i = 0; $i < 20; $i++) {
-         |      int $v = $c[${wordOff + 12} + $i] & 0xff;
-         |      $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |      $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |    }
-         |    ${ev.value} = UTF8String.fromBytes($out);
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class AbiSelector(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "abi_selector"
-  // SQL-surface type contract: a wrong-typed argument fails at
-  // ANALYSIS time instead of as a codegen/eval ClassCastException
-  // (AbstractDataType/ExpectsInputTypes are private[sql], so the public
-  // checkInputDataTypes hook carries the contract)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[Array[Byte]]
-    if (b.length < 4) null
-    else {
-      val out = new Array[Byte](8)
-      var i = 0
-      while (i < 4) {
-        val v = b(i) & 0xff
-        out(2 * i) = Character.forDigit(v >>> 4, 16).toByte
-        out(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-        i += 1
-      }
-      UTF8String.fromBytes(out)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("hex")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      s"""
-         |if ($c.length < 4) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $out = new byte[8];
-         |  for (int $i = 0; $i < 4; $i++) {
-         |    int $v = $c[$i] & 0xff;
-         |    $out[2 * $i] = (byte) java.lang.Character.forDigit($v >>> 4, 16);
-         |    $out[2 * $i + 1] = (byte) java.lang.Character.forDigit($v & 0xf, 16);
-         |  }
-         |  ${ev.value} = UTF8String.fromBytes($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

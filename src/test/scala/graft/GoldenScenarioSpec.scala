@@ -1403,7 +1403,7 @@ class GoldenScenarioSpec extends SparkTestBase {
 
   test("real_abi univ3: a >64-bit return delta decodes to NULL, not a truncated value") {
     // non-uniform sign-extension bytes ⇒ magnitude needs >64 bits ⇒
-    // explicit NULL quarantine (AbiRetIntWord's contract)
+    // explicit NULL quarantine (abi_ret_int's contract)
     val big = "00" * 16 + "01" + "00" * 15 // 2^120: word 0 invalid
     val out = Seq(big + w64(7L)).toDF("h")
       .select(

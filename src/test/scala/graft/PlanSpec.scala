@@ -9,6 +9,17 @@ class PlanSpec extends SparkTestBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, SfDir).queryExecution.executedPlan.toString
 
+  /** Asserts that the expression behind each facade column implements
+    * `doGenCode` itself rather than falling back to interpreted eval. */
+  private def assertNotFallback(cs: org.apache.spark.sql.Column*): Unit =
+    for (c <- cs) {
+      val e = org.apache.spark.sql.GraftColumnBridge.expression(c)
+      assert(!e.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback], e)
+    }
+
+  private val dummyBin = org.apache.spark.sql.functions.lit(Array[Byte](1, 2, 3, 4))
+
   test("d12 reads its chunk table through the cache it pins") {
     // the chunk table feeds the shared-chunk rollup and the per-source
     // rollup; released before the lazy result runs, it is derived twice
@@ -146,14 +157,10 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("abi decode expressions are codegen'd, not fallback") {
-    import graft.functions.{AbiSelector, AbiWord}
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.functions.AbiCalldata.{abi_selector, abi_word}
     import org.apache.spark.sql.functions._
     // the expressions implement doGenCode directly
-    val dummy = org.apache.spark.sql.catalyst.expressions.Literal(
-      Array[Byte](1, 2, 3, 4), org.apache.spark.sql.types.BinaryType)
-    assert(!AbiWord(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiSelector(dummy).isInstanceOf[CodegenFallback])
+    assertNotFallback(abi_word(dummyBin, 0), abi_selector(dummyBin))
     // eval parity: codegen'd projection == hand-computed ground truth
     val df = spark.range(5).select(
       unhex(concat(lit("a9059cbb"),
@@ -184,18 +191,13 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("heterogeneous-layout abi expressions are codegen'd, not fallback") {
-    import graft.functions.{AbiArrayElem, AbiArrayLen, AbiIntWord, AbiLogWord}
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     import org.apache.spark.sql.functions._
-    val dummy = org.apache.spark.sql.catalyst.expressions.Literal(
-      Array[Byte](1, 2, 3, 4), org.apache.spark.sql.types.BinaryType)
-    assert(!AbiIntWord(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiLogWord(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiArrayLen(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiArrayElem(dummy, 0, 0).isInstanceOf[CodegenFallback])
-    assert(!graft.functions.AbiArrayAddress(dummy, 0, 0)
-      .isInstanceOf[CodegenFallback])
-    assert(!graft.functions.AbiAddress(dummy, 0).isInstanceOf[CodegenFallback])
+    import graft.functions.AbiCalldata._
+    assertNotFallback(abi_int_word(dummyBin, 0), abi_log_word(dummyBin, 0),
+      abi_array_len(dummyBin, 0), abi_array_elem(dummyBin, 0, 0),
+      abi_array_address(dummyBin, 0, 0), abi_address(dummyBin, 0),
+      abi_log_array_len(dummyBin, 0), abi_log_array_elem(dummyBin, 0, 0),
+      abi_log_array_address(dummyBin, 0, 0))
     // eval parity over all four layouts, including the signed negative
     // word and the offset-followed tail: id>=1 so -id is genuinely negative
     val df = spark.range(1, 6).select(
@@ -215,7 +217,6 @@ class PlanSpec extends SparkTestBase {
         lpad(lower(hex(col("id") * 3)), 64, "0"),
         lpad(lower(hex(col("id") * 5)), 64, "0"))).as("lg"),
       col("id"))
-    import graft.functions.AbiCalldata._
     val out = df.select(
         abi_int_word(col("cd_int"), 0).as("i0"),
         abi_int_word(col("cd_int"), 1).as("i1"),
@@ -251,20 +252,12 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("tuple/return-data abi expressions are codegen'd, not fallback") {
-    import graft.functions.{AbiArrayIntElem, AbiB32Prefix, AbiLogAddress,
-      AbiRetIntWord, AbiTupleAddress, AbiTupleB32Prefix, AbiTupleWord}
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    val dummy = org.apache.spark.sql.catalyst.expressions.Literal(
-      Array[Byte](1, 2, 3, 4), org.apache.spark.sql.types.BinaryType)
-    assert(!AbiRetIntWord(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiTupleWord(dummy, 0, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiTupleAddress(dummy, 0, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiTupleB32Prefix(dummy, 0, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiLogAddress(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiArrayIntElem(dummy, 0, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiArrayIntElem(dummy, 0, 0, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiB32Prefix(dummy, 0).isInstanceOf[CodegenFallback])
-    assert(!AbiB32Prefix(dummy, 0, 0).isInstanceOf[CodegenFallback])
+    import graft.functions.AbiCalldata._
+    assertNotFallback(abi_ret_int(dummyBin, 0), abi_tuple_word(dummyBin, 0, 0),
+      abi_tuple_address(dummyBin, 0, 0), abi_pool_id_address(dummyBin, 0, 0),
+      abi_log_address(dummyBin, 0), abi_array_int(dummyBin, 0, 0),
+      abi_log_array_int(dummyBin, 0, 0), abi_b32_prefix(dummyBin, 0),
+      abi_log_b32_prefix(dummyBin, 0))
     // the new real-layout decode queries keep their projections inside
     // whole-stage codegen spans
     for (name <- Seq("c1_univ3_swap", "c1_balancer_onswap",

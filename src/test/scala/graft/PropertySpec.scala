@@ -194,11 +194,13 @@ class PropertySpec extends SparkTestBase {
 
   // ── ABI decode expressions vs independent BigInteger references ──────────
   //
-  // The codegen'd byte-walkers (AbiCalldata.scala) are compared against
+  // The ABI decodes (AbiCalldata.scala) are compared against
   // straightforward BigInteger/slice formulations on RANDOM buffers —
   // including truncations, corrupt offsets, and invalid pads — the shapes
   // the planted goldens can't enumerate. The references are deliberately
-  // different formulations (bitLength checks vs byte-pattern scans).
+  // different formulations (bitLength checks vs byte-pattern scans). Each
+  // fuzz runs twice, interpreted and through whole-stage codegen, so both
+  // of a decode's paths meet the hostile bytes.
 
   // signed wrap on purpose: the impl reads the low 8 bytes as the raw
   // 64-bit pattern (an oversized unsigned offset lands negative and is
@@ -224,6 +226,9 @@ class PropertySpec extends SparkTestBase {
   private def refB32Prefix(b: Array[Byte], off: Int): Option[String] =
     if (off < 0 || b.length < off + 32) None
     else Some(b.slice(off, off + 20).map("%02x".format(_)).mkString)
+
+  private def refSelector(b: Array[Byte]): Option[String] =
+    if (b.length < 4) None else Some(b.take(4).map("%02x".format(_)).mkString)
 
   /** Tuple field position via the documented low-8-byte offset read, or
     * -1 when unresolvable (short head, corrupt high bytes, oversized
@@ -346,11 +351,35 @@ class PropertySpec extends SparkTestBase {
   } yield ("ab54a9d8".grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
     ++ words.flatten).dropRight(trunc)
 
-  test("abi decode expressions equal BigInteger references on random buffers") {
-    import graft.functions.AbiCalldata._
+  /** Projects `cols` over the buffers (as column `b`) and returns the rows,
+    * through one of the two paths an [[graft.functions.AbiDecode]] has.
+    * Interpreted: a frame over a local Seq is folded by the optimizer's
+    * ConvertToLocalRelation rule, which evaluates the projection through
+    * `eval`. Codegen: with that rule excluded the projection runs inside a
+    * whole-stage-codegen span, which the plan must show. */
+  private def decodeRows(bufs: Seq[Array[Byte]], cols: Seq[org.apache.spark.sql.Column],
+      codegen: Boolean): Array[org.apache.spark.sql.Row] = {
     import spark.implicits._
+    val rule = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    val key = "spark.sql.optimizer.excludedRules"
+    val prior = spark.conf.getOption(key)
+    if (codegen) spark.conf.set(key, rule)
+    try {
+      val df = bufs.map(Tuple1(_)).toDF("b").select(col("b") +: cols: _*)
+      val rows = df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      val span = """\*\(\d+\) Project""".r.findFirstIn(p)
+      assert(span.isDefined == codegen, s"codegen=$codegen:\n$p")
+      rows
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def fixedSlotFuzz(codegen: Boolean): Unit = {
+    import graft.functions.AbiCalldata._
     val bufs = (1 to 80).map(s => sample(abiBufGen, 7000L + s)).toList
-    val df = bufs.map(Tuple1(_)).toDF("b")
     val cols = (0 to 2).flatMap { i =>
       Seq(abi_word(col("b"), i).as(s"w$i"),
         abi_int_word(col("b"), i).as(s"i$i"),
@@ -361,8 +390,8 @@ class PropertySpec extends SparkTestBase {
         abi_tuple_word(col("b"), 0, i).as(s"t$i"),
         abi_tuple_address(col("b"), 0, i).as(s"ta$i"),
         abi_pool_id_address(col("b"), 0, i).as(s"tp$i"))
-    }
-    val out = df.select(col("b") +: cols: _*).collect()
+    } :+ abi_selector(col("b")).as("sel")
+    val out = decodeRows(bufs, cols, codegen)
     for (r <- out) {
       val b = r.getAs[Array[Byte]]("b")
       def gl(n: String): Option[Long] =
@@ -387,18 +416,25 @@ class PropertySpec extends SparkTestBase {
         assert(gs(s"tp$i") == (if (f < 0) None else refB32Prefix(b, f)),
           s"abi_pool_id_address $i len=${b.length}")
       }
+      assert(gs("sel") == refSelector(b), s"abi_selector len=${b.length}")
     }
   }
 
-  test("dynamic-shape decoders equal BigInteger references on random buffers") {
-    // the offset-FOLLOWING decoders — array length/element/address and
-    // the query-form dynamic-string walk — on the same hostile buffer
-    // population: truncations, corrupt head offsets (nonzero high bytes),
-    // out-of-range offsets, lengths past the buffer
+  test("abi decode expressions equal BigInteger references on random buffers") {
+    fixedSlotFuzz(codegen = false)
+  }
+
+  test("abi decode expressions equal BigInteger references through whole-stage codegen") {
+    fixedSlotFuzz(codegen = true)
+  }
+
+  private def dynamicShapeFuzz(codegen: Boolean): Unit = {
+    // the offset-FOLLOWING decoders — array length/element/address — on
+    // the same hostile buffer population: truncations, corrupt head
+    // offsets (nonzero high bytes), out-of-range offsets, lengths past the
+    // buffer
     import graft.functions.AbiCalldata._
-    import spark.implicits._
     val bufs = (1 to 80).map(s => sample(abiBufGen, 9000L + s)).toList
-    val df = bufs.map(Tuple1(_)).toDF("b")
     val cols = (0 to 1).flatMap { h =>
       Seq(abi_array_len(col("b"), h).as(s"n$h"),
         abi_log_array_len(col("b"), h).as(s"ln$h")) ++
@@ -411,7 +447,7 @@ class PropertySpec extends SparkTestBase {
           abi_log_array_int(col("b"), h, k).as(s"lei${h}_$k")))
     } ++ Seq(abi_b32_prefix(col("b"), 0).as("bp0"),
       abi_log_b32_prefix(col("b"), 0).as("lbp0"))
-    val out = df.select(col("b") +: cols: _*).collect()
+    val out = decodeRows(bufs, cols, codegen)
     for (r <- out) {
       val b = r.getAs[Array[Byte]]("b")
       def gl(n: String): Option[Long] =
@@ -442,8 +478,16 @@ class PropertySpec extends SparkTestBase {
       assert(gs("lbp0") == (if (b.length < 32) None
         else refB32Prefix(b, 0)), s"abi_log_b32_prefix len=${b.length}")
     }
-    // string walk: only buffers where the walk RESOLVES are in contract
-    // (the queries pack these buffers themselves); value equality there
+  }
+
+  test("dynamic-shape decoders equal BigInteger references on random buffers") {
+    dynamicShapeFuzz(codegen = false)
+    // the query-form dynamic-STRING walk on the same population: only
+    // buffers where the walk RESOLVES are in contract (the queries pack
+    // these buffers themselves); value equality there
+    import graft.functions.AbiCalldata._
+    import spark.implicits._
+    val bufs = (1 to 80).map(s => sample(abiBufGen, 9000L + s)).toList
     val resolvable = bufs.map(b => (b, refStrWalk(b, 0)))
       .collect { case (b, Some(exp)) => (b, exp) }
     assert(resolvable.nonEmpty, "generator must produce resolvable walks")
@@ -459,6 +503,10 @@ class PropertySpec extends SparkTestBase {
       assert(row.getString(1) == expHex, s"string content")
     }
   }
+  test("dynamic-shape decoders equal BigInteger references through whole-stage codegen") {
+    dynamicShapeFuzz(codegen = true)
+  }
+
 test("expr-based walks are TOTAL: corrupt offset/length words NULL, never throw") {
     // the decode cores whose dynamic walks run through expr() string
     // arithmetic (not a Catalyst expression with its own bounds checks)
