@@ -1,8 +1,9 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_address, abi_array_len, abi_int_word,
-  abi_log_address, abi_log_word, abi_word, sword, word}
+import graft.functions.{AbiParam, AbiRead, AbiValue}
+import graft.functions.AbiLayout.{address, arr, bytes, bytes32, calldata,
+  elems, fields, string, uint, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +34,13 @@ import org.apache.spark.sql.functions._
 object CensusOps extends graft.QueryModule {
 
   import ChainFixture._
+  import RealAbiOps.framesOf
 
   def defs: Seq[QueryDef] = Seq(c2CensusCurve, c2CensusMisc)
 
   private def withCtes(sql: String) = Some(s"WITH ${ChainFixture.sqlCtes} $sql")
 
   private def pad(c: Column): Column = concat(lit("0" * 8), c)
-  private def addrW(c: Column): Column = concat(lit("0" * 32), c)
 
   /** Uniform census frame: every family reduces to this grain before
     * the shared rollup. */
@@ -126,9 +127,7 @@ object CensusOps extends graft.QueryModule {
     * walks reproduce it row-for-row. */
   private[graft] def curveExpected(s: SparkSession, dir: String): DataFrame =
     rollup(CurveFams.map { cf =>
-      val base = tracesTable(s, dir).filter(col("selector") === cf.sel)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val base = framesOf(s, dir, cf.sel)
       cf.burnRes.fold(base)(r => base.filter(pmod(col("p2l"), lit(3)) === r))
         .select(curveName(cf) ++ Seq(lit(true).as("ok"),
           expr(renderSql(cf.aSql, duck = false)).cast("long").as("a"),
@@ -190,11 +189,8 @@ object CensusOps extends graft.QueryModule {
     withCtes(curveSql))
 
   private def curveSpark(s: SparkSession, dir: String): DataFrame = {
-      def slice(sel: String) = tracesTable(s, dir)
-        .filter(col("selector") === sel)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
-        .withColumn("topic1", unhex(addrW(col("from_address"))))
+      def slice(sel: String) = framesOf(s, dir, sel)
+        .withColumn("topic1", RealAbiExtOps.ProviderTopic.pack(col("from_address")))
       // the burn slice feeds THREE families (remove/one_coin/imbalance)
       // - persist it so the scan runs once, not per family; withPersisted
       // checkpoints the (tiny) rollup and releases the slice's blocks
@@ -207,27 +203,23 @@ object CensusOps extends graft.QueryModule {
         val t = base(SelCurveSwap)
           .withColumn("i_src", (col("p2l") % 2).cast("long"))
           .withColumn("j_src", lit(1L) - col("p2l") % 2)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            sword(col("i_src")), sword(col("j_src")),
-            word(col("q6l")), word(col("p2l")))))
-          .withColumn("i_dec", abi_int_word(col("calldata"), 0))
-          .withColumn("j_dec", abi_int_word(col("calldata"), 1))
-          .withColumn("dx_dec", abi_word(col("calldata"), 2))
-          .withColumn("mindy_dec", abi_word(col("calldata"), 3))
-        t.select(curveName(curveFam("cse")) ++ Seq(
-          (col("i_dec") === col("i_src") && col("j_dec") === col("j_src") &&
-            col("dx_dec") === col("q6l") && col("mindy_dec") === col("p2l"))
+          .withColumn("calldata", IndirectOps.ExchangeCall.pack(col("selector"),
+            col("i_src"), col("j_src"), col("q6l"), col("p2l")))
+        IndirectOps.ExchangeCall.decode(t, "calldata")
+          .select(curveName(curveFam("cse")) ++ Seq(
+          (col("di") === col("i_src") && col("dj") === col("j_src") &&
+            col("dx") === col("q6l") && col("min_dy") === col("p2l"))
             .as("ok"),
-          col("dx_dec").as("a"), col("mindy_dec").as("b")): _*)
+          col("dx").as("a"), col("min_dy").as("b")): _*)
       }
 
       def addGeom(t: DataFrame) = t
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(col("q6l")), word(col("q6l") + 1000000L), word(col("p2l")))))
-        .withColumn("log_data", unhex(concat(
-          word(col("q6l")), word(col("q6l") + 1000000L),
-          word(col("p2l") % 1000), word((col("p2l") + 1) % 1000),
-          word(col("q6l") * 2 + col("p2l")), word(col("q6l") + col("p2l")))))
+        .withColumn("calldata", RealAbiExtOps.addLiquidityCall(2).pack(
+          col("selector"), col("q6l"), col("q6l") + 1000000L, col("p2l")))
+        .withColumn("log_data", RealAbiExtOps.addLiquidityLog(2).pack(
+          col("q6l"), col("q6l") + 1000000L,
+          col("p2l") % 1000, (col("p2l") + 1) % 1000,
+          col("q6l") * 2 + col("p2l"), col("q6l") + col("p2l")))
       def addOk = col("provider") === pad(col("from_address")) &&
         col("cd_amt_0") === col("amt_dec_0") &&
         col("cd_amt_1") === col("amt_dec_1") &&
@@ -244,12 +236,11 @@ object CensusOps extends graft.QueryModule {
       // remove_liquidity: 6 arms; supply at word 2n pins the no-invariant tail
       val rm = {
         val t = base(SelBurn).filter(col("p2l") % 3 === 0)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            word(col("p2l")), word(expr("q6l div 2")), word(expr("q6l div 3")))))
-          .withColumn("log_data", unhex(concat(
-            word(col("q6l")), word(col("q6l") + 5),
-            word(col("p2l") % 1000), word((col("p2l") + 1) % 1000),
-            word(col("q6l") + col("p2l")))))
+          .withColumn("calldata", RealAbiExtOps.removeLiquidityCall(2).pack(
+            col("selector"), col("p2l"), expr("q6l div 2"), expr("q6l div 3")))
+          .withColumn("log_data", RealAbiExtOps.removeLiquidityLog(2).pack(
+            col("q6l"), col("q6l") + 5, col("p2l") % 1000,
+            (col("p2l") + 1) % 1000, col("q6l") + col("p2l")))
         val d = RealAbiExtOps.curveRemoveLiquidityDecode(t, 2)
         d.select(curveName(curveFam("csr")) ++ Seq(
           (col("provider") === pad(col("from_address")) &&
@@ -263,10 +254,10 @@ object CensusOps extends graft.QueryModule {
       val oc = {
         val t = base(SelBurn).filter(col("p2l") % 3 === 1)
           .withColumn("i_src", (expr("p2l div 3") % 2).cast("long"))
-          .withColumn("calldata", unhex(concat(col("selector"),
-            word(col("p2l")), sword(col("i_src")), word(expr("q6l div 2")))))
-          .withColumn("log_data", unhex(concat(
-            word(col("q6l")), word(col("q6l") - expr("q6l div 100")))))
+          .withColumn("calldata", RealAbiExtOps.OneCoinCall.pack(col("selector"),
+            col("p2l"), col("i_src"), expr("q6l div 2")))
+          .withColumn("log_data", RealAbiExtOps.OneCoinLog.pack(
+            col("q6l"), col("q6l") - expr("q6l div 100")))
         val d = RealAbiExtOps.curveOneCoinDecode(t)
         d.select(curveName(curveFam("cso")) ++ Seq(
           (col("provider") === pad(col("from_address")) &&
@@ -367,10 +358,7 @@ object CensusOps extends graft.QueryModule {
     * reproduce byte-for-byte (DomainSpec asserts equality with
     * [[miscSpark]]'s real decode output). */
   private[graft] def miscExpected(s: SparkSession, dir: String): DataFrame = {
-    val base = tracesTable(s, dir)
-      .filter(col("selector") === SelV2Swap)
-      .withColumn("q6l", col("q6").cast("long"))
-      .withColumn("p2l", col("p2").cast("long"))
+    val base = framesOf(s, dir, SelV2Swap)
       .withColumn("fam", ((col("q6l") + col("p2l")) % 8).cast("int"))
       .withColumn("sub", (expr("p2l div 8")).cast("long"))
     rollup(MiscSites.map { st =>
@@ -430,29 +418,63 @@ object CensusOps extends graft.QueryModule {
     *   - cowswap swap (1): the single-order settle — ONE Trade log
     *     through the ported tradeLogDecode, solver = msg_sender
     *     (cowswap/mod.rs:42-64). */
+  /** `createPair(address tokenA, address tokenB)`. */
+  private val CreatePairCall = calldata(address("a_dec"), address("b_dec"))
+  // the three curve factories share the leading name/symbol strings and
+  // coins[0]; A sits where each head puts it
+  private def curveDeploy(head: AbiParam*) =
+    calldata(Seq(string("dec_name"), string(""), address("coin0")) ++ head: _*)
+  /** deploy_pool(name, symbol, coins[2], A, gamma, 8 params) (crypto). */
+  private val CryptoPoolCall = curveDeploy(Seq(address(""), uint("a_dec")) ++
+    Seq.fill(9)(uint("")): _*)
+  /** deploy_pool(name, symbol, coins[3], weth, implId, A, gamma, 6 params,
+    * initial_prices[2]) (tricrypto). */
+  private val TricryptoCall = curveDeploy(Seq(address(""), address(""),
+    address(""), uint(""), uint("a_dec")) ++ Seq.fill(9)(uint("")): _*)
+  /** deploy_plain_pool(name, symbol, coins[4], A, fee) (stable-ng). */
+  private val StableUsdCall = curveDeploy(address(""), address(""), address(""),
+    uint("a_dec"), uint(""))
+  /** Aave V3 `flashLoanSimple(address receiver, address asset, uint256
+    * amount, bytes params, uint16 referralCode)`. */
+  private val FlashSimpleCall = calldata(address(""), address("asset_dec"),
+    uint("amt_dec"), bytes(""), uint(""))
+  /** DODOSwap: fromToken, toToken, fromAmount, toAmount, trader, receiver. */
+  private val DodoSwapLog = words(address("from_tok"), address(""),
+    uint("from_amt"), uint("to_amt"), address("trader_dec"), address("recip_dec"))
+  /** `sellShares(uint shareAmount, address to, uint baseMinAmount, uint
+    * quoteMinAmount, bytes data, uint deadline)` → (baseAmount,
+    * quoteAmount). */
+  private val SellSharesCall = calldata(uint(""), address("to_dec"), uint(""),
+    uint(""), bytes(""), uint(""))
+  private val SellSharesRet = words(uint("base_dec"), uint("quote_dec"))
+  /** DODOFlashLoan: borrower, assetTo, baseAmount, quoteAmount. */
+  private val DodoFlashLog = words(address("borrower_dec"), address(""),
+    uint("base_dec"), uint("quote_dec"))
+  /** The general-pool `onSwap(SwapRequest, uint256[] balances, uint256
+    * indexIn, uint256 indexOut)` overload. */
+  private val OnSwapGeneralCall = calldata(RealAbiOps.SwapRequest,
+    arr("n_balances", AbiRead.Uint), uint(""), uint(""))
+  /** PoolRegistered: the poolId and pool-address topics, then the
+    * specialization. */
+  private val PoolRegisteredTopics = words(bytes32(""), address("pool_dec"))
+  private val PoolRegisteredLog = words(uint("spec_dec"))
+
   private def miscSpark(s: SparkSession, dir: String): DataFrame = {
     // one slice feeds all EIGHT families - persist so the scan runs once;
     // withPersisted checkpoints the rollup and releases the slice's blocks
-    graft.Pins.withPersisted(tracesTable(s, dir)
-      .filter(col("selector") === SelV2Swap)
-      .withColumn("q6l", col("q6").cast("long"))
-      .withColumn("p2l", col("p2").cast("long"))
+    graft.Pins.withPersisted(framesOf(s, dir, SelV2Swap)
       .withColumn("fam", ((col("q6l") + col("p2l")) % 8).cast("int"))
       .withColumn("sub", (expr("p2l div 8")).cast("long"))) { t0 =>
     val nameStr = lit("Curve Pool Census")
     val symStr = lit("crvCNS")
-    def strTail(c: Column) =
-      concat(word(length(c).cast("long")), rpad(lower(hex(c)), 64, "0"))
     val tokA = md5(concat(lit("tok:"), col("tok_id")))
     val tokB = md5(concat(lit("tok:"), (col("tok_id") + 1) % TokRefSpace))
 
     // f0: sushi/pancake createPair (2 words)
     val f0 = {
-      val t = t0.filter(col("fam") === 0)
-        .withColumn("calldata",
-          unhex(concat(col("selector"), addrW(tokA), addrW(tokB))))
-        .withColumn("a_dec", abi_address(col("calldata"), 0))
-        .withColumn("b_dec", abi_address(col("calldata"), 1))
+      val t = CreatePairCall.decode(t0.filter(col("fam") === 0)
+        .withColumn("calldata", CreatePairCall.pack(col("selector"), tokA, tokB)),
+        "calldata")
       t.select(lit(site(0, 0).family).as("family"), tagOf(0).as("tag"),
         lit(site(0, 0).body).as("body"),
         (col("a_dec") === pad(tokA) && col("b_dec") === pad(tokB)).as("ok"),
@@ -466,15 +488,14 @@ object CensusOps extends graft.QueryModule {
         col("q6l").as("a"), lit(0L).as("b"))
     // f2: sushi/pancake createPool (tokenA, tokenB, fee)
     val f2 = {
-      val t = t0.filter(col("fam") === 2)
-        .withColumn("calldata", unhex(concat(col("selector"),
-          addrW(tokA), addrW(tokB), word(col("p2l") % 10000))))
-        .withColumn("a_dec", abi_address(col("calldata"), 0))
-        .withColumn("b_dec", abi_address(col("calldata"), 1))
-        .withColumn("fee_dec", abi_word(col("calldata"), 2))
+      val create = RealAbiOps.CreatePoolCall
+      val t = create.decode(t0.filter(col("fam") === 2)
+        .withColumn("calldata",
+          create.pack(col("selector"), tokA, tokB, col("p2l") % 10000)),
+        "calldata")
       t.select(lit(site(2, 0).family).as("family"), tagOf(2).as("tag"),
         lit(site(2, 0).body).as("body"),
-        (col("a_dec") === pad(tokA) && col("b_dec") === pad(tokB) &&
+        (col("ta") === pad(tokA) && col("tb") === pad(tokB) &&
           col("fee_dec") === col("p2l") % 10000).as("ok"),
         col("fee_dec").as("a"), lit(0L).as("b"))
     }
@@ -483,41 +504,24 @@ object CensusOps extends graft.QueryModule {
     val f3 = {
       val t = t0.filter(col("fam") === 3)
         .withColumn("v", (col("sub") % 3).cast("int"))
-      def scal(k: Int) = word(col("p2l") + k)
-      val cdCrypto = concat(col("selector"), word(lit(448L)), word(lit(512L)),
-        addrW(tokA), addrW(tokB), word(col("q6l")), word(col("p2l")),
-        scal(1), scal(2), scal(3), scal(4), scal(5), scal(6), scal(7), scal(8),
-        strTail(nameStr), strTail(symStr))
-      // head 17: nameOff symOff coins[3] weth implId A gamma + 6 params
-      // + initial_prices[2] inline -> string tails at 544/608
-      val cdTri = concat(col("selector"), word(lit(544L)), word(lit(608L)),
-        addrW(tokA), addrW(tokB), addrW(md5(lit("coin3"))),
-        addrW(md5(lit("weth"))), word(col("p2l") % 9), word(col("q6l")),
-        word(col("p2l")), scal(1), scal(2), scal(3), scal(4), scal(5), scal(6),
-        scal(7), scal(8), strTail(nameStr), strTail(symStr))
-      val cdUsd = concat(col("selector"), word(lit(256L)), word(lit(320L)),
-        addrW(tokA), addrW(tokB), lit("0" * 64), lit("0" * 64),
-        word(col("q6l")), word(col("p2l")),
-        strTail(nameStr), strTail(symStr))
-      val packed = t.withColumn("calldata", unhex(
-          when(col("v") === 0, cdCrypto).when(col("v") === 1, cdTri)
-            .otherwise(cdUsd)))
-        .withColumn("name_len", abi_array_len(col("calldata"), 0))
-        .withColumn("name_off", abi_word(col("calldata"), 0))
-        .withColumn("dec_name", expr(
-          """IF(name_len IS NULL OR name_len < 0
-            | OR name_len > octet_length(calldata), NULL,
-            | CAST(substring(calldata, CAST(name_off + 37 AS INT),
-            | CAST(name_len AS INT)) AS STRING))"""
-            .stripMargin.replace("\n", "")))
-        .withColumn("coin0", abi_address(col("calldata"), 2))
-        .withColumn("a_dec",
-          when(col("v") === 0, abi_word(col("calldata"), 4))
-            .when(col("v") === 1, abi_word(col("calldata"), 7))
-            .otherwise(abi_word(col("calldata"), 6)))
-      packed.select(lit(site(3, 0).family).as("family"), tagOf(3).as("tag"),
+      val scal = (1 to 8).map(k => col("p2l") + k)
+      val packed = t.withColumn("calldata",
+          when(col("v") === 0, CryptoPoolCall.pack((Seq(col("selector"),
+            nameStr, symStr, tokA, tokB, col("q6l"), col("p2l")) ++ scal).map(AbiValue.ofColumn): _*))
+          .when(col("v") === 1, TricryptoCall.pack((Seq(col("selector"),
+            nameStr, symStr, tokA, tokB, md5(lit("coin3")), md5(lit("weth")),
+            col("p2l") % 9, col("q6l"), col("p2l")) ++ scal).map(AbiValue.ofColumn): _*))
+          .otherwise(StableUsdCall.pack(col("selector"), nameStr, symStr,
+            tokA, tokB, lit(""), lit(""), col("q6l"), col("p2l"))))
+      def read(name: String) = when(col("v") === 0,
+        CryptoPoolCall.read(col("calldata"), name))
+        .when(col("v") === 1, TricryptoCall.read(col("calldata"), name))
+        .otherwise(StableUsdCall.read(col("calldata"), name))
+      val dec = Seq("dec_name", "dec_name_len", "coin0", "a_dec")
+        .foldLeft(packed)((d, n) => d.withColumn(n, read(n)))
+      dec.select(lit(site(3, 0).family).as("family"), tagOf(3).as("tag"),
         lit(site(3, 0).body).as("body"),
-        (col("dec_name") === nameStr && col("name_len") === length(nameStr) &&
+        (col("dec_name") === nameStr && col("dec_name_len") === length(nameStr) &&
           col("coin0") === pad(tokA) && col("a_dec") === col("q6l")).as("ok"),
         col("a_dec").as("a"), lit(0L).as("b"))
     }
@@ -527,9 +531,8 @@ object CensusOps extends graft.QueryModule {
         .withColumn("v", (col("sub") % 3).cast("int"))
       val liq = {
         val d = RealAbiOps.liquidationCallDecode(t.filter(col("v") === 0)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            addrW(tokA), addrW(tokB), addrW(col("from_address")),
-            word(col("q6l")), word(col("p2l") % 2)))))
+          .withColumn("calldata", RealAbiOps.LiquidationCall.pack(col("selector"),
+            tokA, tokB, col("from_address"), col("q6l"), col("p2l") % 2)))
         d.select(lit(site(4, 0).family).as("family"),
           lit(site(4, 0).tag).as("tag"),
           lit(site(4, 0).body).as("body"),
@@ -539,14 +542,11 @@ object CensusOps extends graft.QueryModule {
       }
       val arr = {
         val d = RealAbiOps.flashLoanDecode(t.filter(col("v") === 1)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            addrW(md5(lit("rcv"))), word(lit(224L)), word(lit(320L)),
-            word(lit(416L)), addrW(col("from_address")), word(lit(512L)),
-            word(col("p2l") % 7),
-            word(lit(2L)), addrW(tokA), addrW(tokB),
-            word(lit(2L)), word(col("q6l")), word(col("q6l") + 1),
-            word(lit(2L)), word(lit(0L)), word(lit(1L)),
-            word(lit(0L))))))
+          .withColumn("calldata", RealAbiOps.FlashLoanCall.pack(col("selector"),
+            md5(lit("rcv")), elems(lit(2L), tokA, tokB),
+            elems(lit(2L), col("q6l"), col("q6l") + 1),
+            elems(lit(2L), lit(0L), lit(1L)),
+            col("from_address"), lit(""), col("p2l") % 7)))
         d.select(lit(site(4, 1).family).as("family"),
           lit(site(4, 1).tag).as("tag"),
           lit(site(4, 1).body).as("body"),
@@ -555,12 +555,10 @@ object CensusOps extends graft.QueryModule {
           (col("amt0") + col("amt1")).as("a"), col("n_assets").as("b"))
       }
       val simple = {
-        val d = t.filter(col("v") === 2)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            addrW(md5(lit("rcv"))), addrW(tokA), word(col("q6l")),
-            word(lit(160L)), word(col("p2l") % 7), word(lit(0L)))))
-          .withColumn("asset_dec", abi_address(col("calldata"), 1))
-          .withColumn("amt_dec", abi_word(col("calldata"), 2))
+        val d = FlashSimpleCall.decode(t.filter(col("v") === 2)
+          .withColumn("calldata", FlashSimpleCall.pack(col("selector"),
+            md5(lit("rcv")), tokA, col("q6l"), lit(""), col("p2l") % 7)),
+          "calldata")
         // assets/amounts are SINGLETON vectors - no array walk exists
         d.select(lit(site(4, 2).family).as("family"),
           lit(site(4, 2).tag).as("tag"),
@@ -576,15 +574,9 @@ object CensusOps extends graft.QueryModule {
       val t = t0.filter(col("fam") === 5)
         .withColumn("v", (col("sub") % 4).cast("int"))
       val swp = {
-        val d = t.filter(col("v") <= 1)
-          .withColumn("log_data", unhex(concat(
-            addrW(tokA), addrW(tokB), word(col("q6l")), word(col("p2l")),
-            addrW(col("from_address")), addrW(md5(lit("rcp"))))))
-          .withColumn("from_tok", abi_log_address(col("log_data"), 0))
-          .withColumn("from_amt", abi_log_word(col("log_data"), 2))
-          .withColumn("to_amt", abi_log_word(col("log_data"), 3))
-          .withColumn("trader_dec", abi_log_address(col("log_data"), 4))
-          .withColumn("recip_dec", abi_log_address(col("log_data"), 5))
+        val d = DodoSwapLog.decode(t.filter(col("v") <= 1)
+          .withColumn("log_data", DodoSwapLog.pack(tokA, tokB, col("q6l"),
+            col("p2l"), col("from_address"), md5(lit("rcp")))), "log_data")
         d.select(lit(site(5, 0).family).as("family"),
           when(col("v") === 0, site(5, 0).tag).otherwise(site(5, 1).tag)
             .as("tag"),
@@ -595,17 +587,13 @@ object CensusOps extends graft.QueryModule {
           col("from_amt").as("a"), col("to_amt").as("b"))
       }
       val shares = {
-        val d = t.filter(col("v") === 2)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            word(col("p2l")), addrW(md5(lit("rcp"))),
-            word(expr("q6l div 2")), word(lit(0L)), word(lit(192L)),
-            word(col("q6l") + col("p2l")), word(lit(0L)))))
-          .withColumn("ret_data", unhex(concat(word(col("q6l")),
-            when(col("p2l") % 3 === 0, word(lit(0L)))
-              .otherwise(word(col("p2l"))))))
-          .withColumn("to_dec", abi_address(col("calldata"), 1))
-          .withColumn("base_dec", abi_log_word(col("ret_data"), 0))
-          .withColumn("quote_dec", abi_log_word(col("ret_data"), 1))
+        val d = SellSharesRet.decode(SellSharesCall.decode(t.filter(col("v") === 2)
+          .withColumn("calldata", SellSharesCall.pack(col("selector"),
+            col("p2l"), md5(lit("rcp")), expr("q6l div 2"), lit(0L), lit(""),
+            col("q6l") + col("p2l")))
+          .withColumn("ret_data", SellSharesRet.pack(col("q6l"),
+            when(col("p2l") % 3 === 0, lit(0L)).otherwise(col("p2l")))),
+          "calldata"), "ret_data")
           .withColumn("n_sides",
             when(col("base_dec") > 0, 1L).otherwise(0L) +
               when(col("quote_dec") > 0, 1L).otherwise(0L))
@@ -616,13 +604,9 @@ object CensusOps extends graft.QueryModule {
           (col("base_dec") + col("quote_dec")).as("a"), col("n_sides").as("b"))
       }
       val flash = {
-        val d = t.filter(col("v") === 3)
-          .withColumn("log_data", unhex(concat(
-            addrW(col("from_address")), addrW(md5(lit("asset_to"))),
-            word(col("q6l")), word(col("p2l")))))
-          .withColumn("borrower_dec", abi_log_address(col("log_data"), 0))
-          .withColumn("base_dec", abi_log_word(col("log_data"), 2))
-          .withColumn("quote_dec", abi_log_word(col("log_data"), 3))
+        val d = DodoFlashLog.decode(t.filter(col("v") === 3)
+          .withColumn("log_data", DodoFlashLog.pack(col("from_address"),
+            md5(lit("asset_to")), col("q6l"), col("p2l"))), "log_data")
         d.select(lit(site(5, 3).family).as("family"),
           lit(site(5, 3).tag).as("tag"), lit(site(5, 3).body).as("body"),
           (col("borrower_dec") === pad(col("from_address"))).as("ok"),
@@ -635,19 +619,15 @@ object CensusOps extends graft.QueryModule {
       val t = t0.filter(col("fam") === 6)
         .withColumn("v", (col("sub") % 2).cast("int"))
       val onswap = {
-        // head: [tupleOff=128, balancesOff=416, indexIn=0, indexOut=1];
-        // SwapRequest tail (9 words, userData offset-only); balances tail
         val d = RealAbiOps.onSwapDecode(t.filter(col("v") === 0)
-          .withColumn("calldata", unhex(concat(col("selector"),
-            word(lit(128L)), word(lit(416L)), word(lit(0L)), word(lit(1L)),
-            word(col("p2l") % 3), addrW(tokA), addrW(tokB), word(col("q6l")),
-            md5(concat(lit("pl:"), col("tx_hash"))),
-            md5(concat(lit("pl2:"), col("tx_hash"))),
-            word(col("block_number")), addrW(col("from_address")),
-            addrW(md5(lit("rcp"))), word(lit(288L)),
-            word(lit(2L)), word(col("q6l")), word(col("p2l")))))
-          .withColumn("ret_data", unhex(word(col("p2l"))))
-          .withColumn("n_balances", abi_array_len(col("calldata"), 1)))
+          .withColumn("calldata", OnSwapGeneralCall.pack(col("selector"),
+            fields(col("p2l") % 3, tokA, tokB, col("q6l"),
+              concat(md5(concat(lit("pl:"), col("tx_hash"))),
+                md5(concat(lit("pl2:"), col("tx_hash")))),
+              col("block_number"), col("from_address"), md5(lit("rcp")), lit("")),
+            elems(lit(2L), col("q6l"), col("p2l")), lit(0L), lit(1L)))
+          .withColumn("ret_data", RealAbiOps.OnSwapRet.pack(col("p2l")))
+          .withColumn("n_balances", OnSwapGeneralCall.read(col("calldata"), "n_balances")))
         d.select(lit(site(6, 0).family).as("family"),
           lit(site(6, 0).tag).as("tag"), lit(site(6, 0).body).as("body"),
           (col("tok_in_dec") === pad(tokA) && col("amt_dec") === col("q6l") &&
@@ -655,18 +635,19 @@ object CensusOps extends graft.QueryModule {
             col("n_balances") === 2L &&
             // the one head difference from the ported overload: word 1
             // is the balances array's OFFSET, not a scalar balance
-            col("bal_in") === 416L).as("ok"),
+            col("bal_in") ===
+              OnSwapGeneralCall.offset(col("calldata"), "n_balances")).as("ok"),
           col("amt_dec").as("a"), col("out_dec").as("b"))
       }
       val reg = {
-        val d = t.filter(col("v") === 1)
-          .withColumn("log_topics", unhex(concat(
-            md5(concat(lit("pid:"), col("tx_hash"))),
-            md5(concat(lit("pid2:"), col("tx_hash"))),
-            addrW(md5(concat(lit("pool:"), col("p2l") % NumPools))))))
-          .withColumn("log_data", unhex(word(col("p2l") % 3)))
-          .withColumn("pool_dec", abi_log_address(col("log_topics"), 1))
-          .withColumn("spec_dec", abi_log_word(col("log_data"), 0))
+        val d = PoolRegisteredLog.decode(PoolRegisteredTopics.decode(
+          t.filter(col("v") === 1)
+          .withColumn("log_topics", PoolRegisteredTopics.pack(
+            concat(md5(concat(lit("pid:"), col("tx_hash"))),
+              md5(concat(lit("pid2:"), col("tx_hash")))),
+            md5(concat(lit("pool:"), col("p2l") % NumPools))))
+          .withColumn("log_data", PoolRegisteredLog.pack(col("p2l") % 3)),
+          "log_topics"), "log_data")
         d.select(lit(site(6, 1).family).as("family"),
           lit(site(6, 1).tag).as("tag"), lit(site(6, 1).body).as("body"),
           (col("pool_dec") ===
@@ -681,11 +662,9 @@ object CensusOps extends graft.QueryModule {
         md5(concat(lit("uid2:"), col("tx_hash"))),
         md5(concat(lit("uid3:"), col("tx_hash"))), lit("0" * 16))
       val d = RealAbiOps.tradeLogDecode(t0.filter(col("fam") === 7)
-        .withColumn("topic1", unhex(addrW(col("from_address"))))
-        .withColumn("log_data", unhex(concat(
-          addrW(tokA), addrW(tokB), word(col("q6l")), word(col("p2l")),
-          word(col("p2l") % 1000), word(lit(192L)),
-          word(lit(56L)), uid))))
+        .withColumn("topic1", RealAbiOps.TradeTopic.pack(col("from_address")))
+        .withColumn("log_data", RealAbiOps.TradeLog.pack(tokA, tokB,
+          col("q6l"), col("p2l"), col("p2l") % 1000, uid)))
       d.select(lit(site(7, 0).family).as("family"),
         lit(site(7, 0).tag).as("tag"), lit(site(7, 0).body).as("body"),
         (col("owner_dec") === pad(col("from_address")) &&

@@ -1,7 +1,9 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_array_len, abi_int_word, abi_word, word}
+import graft.functions.AbiRead
+import graft.functions.AbiLayout.{bytes32, calldata, fields, int, rows, string,
+  tuples, uint}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +27,7 @@ import org.apache.spark.sql.functions._
   *     brontes-classifier/src/lib.rs:33-80).
   *
   * Spark-first shape: packing and decoding are codegen'd expressions
-  * ([[graft.functions.AbiCalldata]] + builtin substring/conv/hex); every
+  * ([[graft.functions.AbiLayout]] over one ABI kernel); every
   * registry is a broadcast dimension, so the fact table never shuffles —
   * at 100 TB the decode stays an embarrassingly parallel scan ⟕ broadcast
   * joins, exactly like the non-indirected C1 path.
@@ -33,6 +35,7 @@ import org.apache.spark.sql.functions._
 object IndirectOps extends graft.QueryModule {
 
   import ChainFixture._
+  import RealAbiOps.{decimalsOf, framesOf}
 
   def defs: Seq[QueryDef] =
     Seq(c1CurveIndexed, c1BalancerPoolId, f5AbiString, f5AbiTuple)
@@ -51,6 +54,16 @@ object IndirectOps extends graft.QueryModule {
       .withColumn("coin_token_id",
         (col("pool_id") % NumTokens + col("coin_idx")) % TokRefSpace)
 
+  /** Curve `exchange` frames with the coin indices the fixture trades:
+    * i = q6 mod n_coins, j any other coin. The registry dispatch: only
+    * curve-protocol targets take these decoders. */
+  private[domain] def curveSwapFrames(s: SparkSession, dir: String): DataFrame =
+    framesOf(s, dir, SelCurveSwap)
+      .join(broadcast(RealAbiExtOps.curvePools(s)), col("to_address") === col("cp_addr"))
+      .withColumn("i", col("q6l") % col("n_coins"))
+      .withColumn("j",
+        (col("i") + 1 + col("p2l") % (col("n_coins") - 1)) % col("n_coins"))
+
   /** Oracle CTE body matching [[poolCoins]]. */
   private val poolCoinsCte: String =
     s"""pc AS (
@@ -59,6 +72,9 @@ object IndirectOps extends graft.QueryModule {
       FROM pool p CROSS JOIN range(4) t(k)
       WHERE p.protocol = 'curve' AND k < 2 + p.pool_id % 3)"""
 
+  /** `exchange(int128 i, int128 j, uint256 dx, uint256 min_dy)`. */
+  private[graft] val ExchangeCall =
+    calldata(int("di"), int("dj"), uint("dx"), uint("min_dy"))
   /** C1 (index-addressed): Curve `exchange(int128 i, int128 j, dx, min_dy)`.
     * The calldata words are COIN INDICES — the decoder reads them with the
     * signed-word expression, then resolves token identity through TWO
@@ -67,30 +83,15 @@ object IndirectOps extends graft.QueryModule {
   private val c1CurveIndexed = QueryDef(
     "c1_curve_indexed",
     (s, dir) => {
-      val cp = pools(s).filter(col("protocol") === "curve")
-        .withColumn("n_coins", lit(2L) + col("pool_id") % 3)
-        .select(col("address").as("cp_addr"), col("n_coins"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelCurveSwap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
-        // registry dispatch: only curve-protocol targets take this decoder
-        .join(broadcast(cp), col("to_address") === col("cp_addr"))
-        .withColumn("i", col("q6l") % col("n_coins"))
-        .withColumn("j",
-          (col("i") + 1 + col("p2l") % (col("n_coins") - 1)) % col("n_coins"))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(col("i")), word(col("j")), word(col("q6l")), word(col("p2l")))))
-      val dec = t
-        .withColumn("di", abi_int_word(col("calldata"), 0))
-        .withColumn("dj", abi_int_word(col("calldata"), 1))
-        .withColumn("dx", abi_word(col("calldata"), 2))
-        .withColumn("min_dy", abi_word(col("calldata"), 3))
+      val t = curveSwapFrames(s, dir)
+        .withColumn("calldata", ExchangeCall.pack(col("selector"),
+          col("i"), col("j"), col("q6l"), col("p2l")))
+      val dec = ExchangeCall.decode(t, "calldata")
       val pcIn = poolCoins(s).select(col("address").as("in_addr"),
         col("coin_idx").as("in_idx"), col("coin_token_id").as("token_in_id"))
       val pcOut = poolCoins(s).select(col("address").as("out_addr"),
         col("coin_idx").as("out_idx"), col("coin_token_id").as("token_out_id"))
-      val tk = tokens(s).select(col("token_id").as("tk_id"), col("decimals"))
+      val tk = decimalsOf(s, "tk_id", "decimals")
       dec
         .join(broadcast(pcIn),
           col("to_address") === col("in_addr") && col("di") === col("in_idx"), "left")
@@ -135,6 +136,7 @@ object IndirectOps extends graft.QueryModule {
       case ("balancer_v2", sel, "swap", _) => sel
     }.getOrElse(sys.error("balancer_v2 swap selector missing from registry"))
 
+  private[graft] val PoolIdSwapCall = calldata(bytes32("pool_word"), uint("amount"))
   /** C1 (poolId indirection): Balancer-style `onSwap` whose word0 is a
     * bytes32 poolId — the leading bytes ARE the pool address (the fixture's
     * 16-byte md5 analog of balancer_v2.rs:223 `Address::from_slice(
@@ -147,15 +149,15 @@ object IndirectOps extends graft.QueryModule {
       val t = tracesTable(s, dir)
         .filter(col("selector") === BalSwapSel)
         .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("calldata", unhex(concat(col("selector"),
+        .withColumn("calldata", PoolIdSwapCall.pack(col("selector"),
           // poolId word: 16-byte pool address ‖ 16-byte specialization tail
-          col("to_address"), lpad(lower(hex(col("q6l") % 1000)), 32, "0"),
-          word(col("q6l")))))
-      val dec = t
-        .withColumn("pool_addr", lower(hex(expr("substring(calldata, 5, 16)"))))
-        .withColumn("spec",
-          conv(hex(expr("substring(calldata, 29, 8)")), 16, 10).cast("long"))
-        .withColumn("amount", abi_word(col("calldata"), 1))
+          concat(col("to_address"), lpad(lower(hex(col("q6l") % 1000)), 32, "0")),
+          col("q6l")))
+      val dec = PoolIdSwapCall.decode(t, "calldata")
+        // the fixture's pool address is the poolId's leading 16 bytes, the
+        // specialization its low 8
+        .withColumn("pool_addr", substring(col("pool_word"), 1, 32))
+        .withColumn("spec", PoolIdSwapCall.read(col("calldata"), "pool_word", AbiRead.Uint))
       val p = pools(s).select(col("address").as("p_addr"), col("pool_id"),
         col("protocol"), col("t0_id"), col("t1_id"))
       dec.join(broadcast(p), col("pool_addr") === col("p_addr"), "left")
@@ -179,42 +181,25 @@ object IndirectOps extends graft.QueryModule {
       WHERE t.selector = '$BalSwapSel'
       GROUP BY 1 ORDER BY 1"""))
 
+  /** `label(uint256 id, string s)`. */
+  private[graft] val LabelCall = calldata(uint("id"), string("dstr"))
   /** F5 (dynamic string): `label(uint256 id, string s)` — the decoder walks
     * the head-offset table: head word1 is an OFFSET into the tail, the tail
     * is len ‖ utf8 bytes padded to a word. Offset, length, and content are
-    * all read from the bytes (builtin substring/conv stay codegen'd); the
-    * round-trip column proves content fidelity byte-for-byte. */
+    * all read from the bytes by one codegen'd string read; the round-trip
+    * column proves content fidelity byte-for-byte. */
   private val f5AbiString = QueryDef(
     "f5_abi_string",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelMint)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelMint)
         // p2 drives the length: q6 is a multiple of 2^6·5^6, so q6 % 32 ≡ 0
         .withColumn("slen", lit(1L) + col("p2l") % 32)
         .withColumn("s_str",
           expr("substring(md5(concat('s:', tx_hash)), 1, CAST(slen AS INT))"))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(col("q6l")), word(lit(64L)), word(col("slen")),
-          rpad(lower(hex(col("s_str"))), 64, "0"))))
-      t.withColumn("id", abi_word(col("calldata"), 0))
-        .withColumn("off", abi_word(col("calldata"), 1))
-        // bounds-gated walk: corrupt offset/length words NULL instead of
-        // raising through the ANSI INT cast (same contract as abi_array_len);
-        // try_cast because conv is unsigned - a sign-bit length word
-        // (>= 2^63) overflows a plain BIGINT cast past the offset gate
-        .withColumn("len", expr(
-          """IF(off IS NULL OR off < 0
-            | OR off > octet_length(calldata) - 36, NULL,
-            | try_cast(conv(hex(substring(calldata, CAST(off + 29 AS INT),
-            | 8)), 16, 10) AS BIGINT))""".stripMargin.replace("\n", "")))
-        .withColumn("dstr", expr(
-          """IF(len IS NULL OR len < 0
-            | OR len > octet_length(calldata) - 36 - off, NULL,
-            | CAST(substring(calldata, CAST(off + 37 AS INT),
-            | CAST(len AS INT)) AS STRING))""".stripMargin.replace("\n", "")))
-        .groupBy(col("len"))
+        .withColumn("calldata",
+          LabelCall.pack(col("selector"), col("q6l"), col("s_str")))
+      LabelCall.decode(t, "calldata")
+        .groupBy(col("dstr_len").as("len"))
         .agg(count(lit(1)).as("n"),
           sum(col("id")).as("sum_id"),
           countDistinct(col("dstr")).as("n_distinct_str"),
@@ -233,52 +218,33 @@ object IndirectOps extends graft.QueryModule {
         COUNT(*) AS n_roundtrip_ok
       FROM ds GROUP BY 1 ORDER BY 1"""))
 
+  /** `route((uint256 coin, uint256 amt, uint256 out)[] steps)`. */
+  private[graft] val RouteCall = calldata(
+    tuples("dn", 3, uint("coin"), uint("amt"), uint("out")))
   /** F5 (array-of-struct): `route((uint256 coin, uint256 amt, uint256 out)[])`
     * — offset-followed length, per-struct words addressed THROUGH the
-    * decoded offset (not assumed positions), sliced to the decoded length,
-    * exploded to one row per step, and each step's coin resolved against
+    * decoded offset (not assumed positions) and NULL past the decoded
+    * length, exploded to one row per step, and each step's coin resolved against
     * the token dimension (the aggregator/batch calldata shape —
     * multi_frame_classification/batch, cowswap/0x). */
   private val f5AbiTuple = QueryDef(
     "f5_abi_tuple",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV2Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelV2Swap)
         .withColumn("nsteps", lit(1L) + col("q6l") % 3)
-      def coinK(k: Int) = (col("tok_id") + k) % TokRefSpace
-      def amtK(k: Int) = col("q6l") + 13L * k
-      def outK(k: Int) = col("p2l") + 17L * k
-      def structWords(k: Int) =
-        concat(word(coinK(k)), word(amtK(k)), word(outK(k)))
-      val packed = t.withColumn("calldata", unhex(concat(col("selector"),
-        word(lit(32L)), word(col("nsteps")), structWords(0),
-        when(col("nsteps") >= 2, structWords(1)).otherwise(lit("")),
-        when(col("nsteps") >= 3, structWords(2)).otherwise(lit("")))))
-      // decode: the offset is READ from head word 0 and every struct word
-      // position derives from it — pos(m) = off + 61 + 32m (1-based, after
-      // the 4-byte selector and the len word)
-      // the off gate NULLs a corrupt head word instead of letting the
-      // ANSI INT cast throw; the dn slice already drops the rows, but the
-      // struct array is built BEFORE the slice evaluates
-      // try_cast: conv is unsigned, so a sign-bit field word (>= 2^63)
-      // would overflow a plain BIGINT cast even with the offset in bounds
-      def fieldExpr(m: Int) =
-        s"""IF(off IS NULL OR off < 0 OR off > octet_length(calldata),
-           | NULL, try_cast(conv(hex(substring(calldata,
-           | CAST(off + 61 + ${32 * m} AS INT), 8)), 16, 10) AS BIGINT))"""
-          .stripMargin.replaceAll("\n", "")
-      def structK(k: Int) = expr(
-        s"named_struct('coin', ${fieldExpr(3 * k)}, 'amt', ${fieldExpr(3 * k + 1)}, 'out', ${fieldExpr(3 * k + 2)})")
-      val dec = packed
-        .withColumn("off", abi_word(col("calldata"), 0))
-        .withColumn("dn", abi_array_len(col("calldata"), 0))
-        .withColumn("steps",
-          slice(array(structK(0), structK(1), structK(2)), lit(1), col("dn").cast("int")))
-        .select(col("q6l"), col("p2l"),
-          posexplode(col("steps")).as(Seq("step_idx", "step")))
-      val tk = tokens(s).select(col("token_id").as("tk_id"), col("decimals"))
+      val packed = t.withColumn("calldata", RouteCall.pack(col("selector"),
+        rows(col("nsteps"), (0 to 2).map(k => fields((col("tok_id") + k) % TokRefSpace,
+          col("q6l") + 13L * k, col("p2l") + 17L * k)): _*)))
+      // one row per decoded step: a step past the decoded length reads
+      // NULL (the element bound), so the explode keeps the first `dn`
+      val dec = RouteCall.decode(packed, "calldata")
+        .select(col("q6l"), col("p2l"), explode(array((0 to 2).map(k =>
+          struct(lit(k).as("step_idx"), col(s"coin$k").as("coin"),
+            col(s"amt$k").as("amt"), col(s"out$k").as("out"))): _*)).as("step"))
+        .filter(col("step.coin").isNotNull)
+        .select(col("q6l"), col("p2l"), col("step.step_idx").as("step_idx"),
+          col("step"))
+      val tk = decimalsOf(s, "tk_id", "decimals")
       dec
         .withColumn("coin", col("step.coin"))
         .join(broadcast(tk), col("coin") === col("tk_id"), "left")

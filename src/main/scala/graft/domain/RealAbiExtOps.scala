@@ -1,8 +1,8 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_address, abi_array_len, abi_int_word,
-  abi_log_address, abi_log_word, abi_word, word}
+import graft.functions.{AbiLayout, AbiValue}
+import graft.functions.AbiLayout.{address, calldata, int, string, uint, words}
 import graft.ops.ExactAgg.{dsumPartial, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,6 +51,7 @@ import org.apache.spark.sql.functions._
 object RealAbiExtOps extends graft.QueryModule {
 
   import ChainFixture._
+  import RealAbiOps.framesOf
   import RealAbiOps.{pow10d, sqlPow10}
 
   def defs: Seq[QueryDef] = Seq(c1CurveMint, c1CurveBurn, c3CompoundInit)
@@ -59,7 +60,7 @@ object RealAbiExtOps extends graft.QueryModule {
 
   /** Curve pools with their registry coin count (2-4, the base2/3/4
     * split), broadcast side of every join here. */
-  private def curvePools(s: SparkSession) =
+  private[domain] def curvePools(s: SparkSession) =
     pools(s).filter(col("protocol") === "curve")
       .withColumn("n_coins", lit(2L) + col("pool_id") % 3)
       .select(col("address").as("cp_addr"), col("pool_id").as("cp_pid"),
@@ -68,13 +69,9 @@ object RealAbiExtOps extends graft.QueryModule {
   /** Shared frame base: selector-pruned traces on curve pools, with the
     * source integers and the indexed-provider topic. */
   private def liqFrames(s: SparkSession, dir: String, sel: String) =
-    tracesTable(s, dir)
-      .filter(col("selector") === sel)
-      .withColumn("q6l", col("q6").cast("long"))
-      .withColumn("p2l", col("p2").cast("long"))
+    framesOf(s, dir, sel)
       .join(broadcast(curvePools(s)), col("to_address") === col("cp_addr"))
-      .withColumn("topic1",
-        unhex(concat(lit("0" * 32), col("from_address"))))
+      .withColumn("topic1", ProviderTopic.pack(col("from_address")))
 
   /** Source amount/fee formulas (the oracle recomputes these from q6/p2):
     * amounts step 1e6 per coin so every coin's word is distinct; fees are
@@ -87,47 +84,48 @@ object RealAbiExtOps extends graft.QueryModule {
     * invariant 2n, token_supply 2n+1; the calldata echoes the amounts
     * inline (fixed array: words 0..n-1) with min_mint_amount at word n.
     * Unit-tested on planted bytes (GoldenScenarioSpec). */
-  private[graft] def curveAddLiquidityDecode(t: DataFrame, n: Int): DataFrame = {
-    val d0 = t
-      .withColumn("provider", abi_log_address(col("topic1"), 0))
-      .withColumn("inv_dec", abi_log_word(col("log_data"), 2 * n))
-      .withColumn("supply_dec", abi_log_word(col("log_data"), 2 * n + 1))
-      .withColumn("min_mint_dec", abi_word(col("calldata"), n))
-    (0 until n).foldLeft(d0) { (d, k) =>
-      d.withColumn(s"amt_dec_$k", abi_log_word(col("log_data"), k))
-        .withColumn(s"fee_dec_$k", abi_log_word(col("log_data"), n + k))
-        .withColumn(s"cd_amt_$k", abi_word(col("calldata"), k))
-    }
-  }
+  private[graft] def curveAddLiquidityDecode(t: DataFrame, n: Int): DataFrame =
+    addLiquidityLog(n).decode(addLiquidityCall(n).decode(
+      ProviderTopic.decode(t, "topic1"), "calldata"), "log_data")
+
+  /** The indexed provider topic of AddLiquidity/RemoveLiquidity*. */
+  private[graft] val ProviderTopic = words(address("provider"))
+  // `name_k` for each of the n coins
+  private def coins(name: String, n: Int) = (0 until n).map(k => uint(s"${name}_$k"))
+  /** `add_liquidity(uint256[n] amounts, uint256 min_mint_amount)`. */
+  private[graft] def addLiquidityCall(n: Int): AbiLayout =
+    calldata(coins("cd_amt", n) :+ uint("min_mint_dec"): _*)
+  /** AddLiquidity data: amounts[n], fees[n], invariant, token_supply. */
+  private[graft] def addLiquidityLog(n: Int): AbiLayout = words(coins("amt_dec", n) ++
+    coins("fee_dec", n) ++ Seq(uint("inv_dec"), uint("supply_dec")): _*)
+  /** `remove_liquidity(uint256 _amount, uint256[n] min_amounts)`. */
+  private[graft] def removeLiquidityCall(n: Int): AbiLayout =
+    calldata(uint("cd_lp_dec") +: coins("cd_min", n): _*)
+  /** RemoveLiquidity data: amounts[n], fees[n], token_supply. */
+  private[graft] def removeLiquidityLog(n: Int): AbiLayout =
+    words(coins("amt_dec", n) ++ coins("fee_dec", n) :+ uint("supply_dec"): _*)
+  /** `remove_liquidity_one_coin(uint256 _token_amount, int128 i, uint256
+    * _min_amount)`. */
+  private[graft] val OneCoinCall =
+    calldata(uint("cd_lp_dec"), int("i_dec"), uint("cd_min_dec"))
+  private[graft] val OneCoinLog = words(uint("tok_amt_dec"), uint("coin_amt_dec"))
 
   /** The `remove_liquidity` decode core for width `n`: same inline
     * arrays but the event tail is `token_supply` at word 2n — NO
     * invariant word (base3.rs RemoveLiquidity vs AddLiquidity). The
     * calldata leads with the LP amount; the min_amounts array follows. */
-  private[graft] def curveRemoveLiquidityDecode(t: DataFrame, n: Int): DataFrame = {
-    val d0 = t
-      .withColumn("provider", abi_log_address(col("topic1"), 0))
-      .withColumn("supply_dec", abi_log_word(col("log_data"), 2 * n))
-      .withColumn("cd_lp_dec", abi_word(col("calldata"), 0))
-    (0 until n).foldLeft(d0) { (d, k) =>
-      d.withColumn(s"amt_dec_$k", abi_log_word(col("log_data"), k))
-        .withColumn(s"fee_dec_$k", abi_log_word(col("log_data"), n + k))
-        .withColumn(s"cd_min_$k", abi_word(col("calldata"), 1 + k))
-    }
-  }
+  private[graft] def curveRemoveLiquidityDecode(t: DataFrame, n: Int): DataFrame =
+    removeLiquidityLog(n).decode(removeLiquidityCall(n).decode(
+      ProviderTopic.decode(t, "topic1"), "calldata"), "log_data")
 
   /** The `remove_liquidity_one_coin` decode core (width-independent —
     * three static calldata words, two log words): the coin INDEX is the
     * calldata's `int128 i` (signed decode), the burn amount is the LOG's
     * `token_amount` (word 0; the reference scales THIS by the selected
     * coin's decimals, base3.rs:86-130), `coin_amount` rides word 1. */
-  private[graft] def curveOneCoinDecode(t: DataFrame): DataFrame = t
-    .withColumn("provider", abi_log_address(col("topic1"), 0))
-    .withColumn("cd_lp_dec", abi_word(col("calldata"), 0))
-    .withColumn("i_dec", abi_int_word(col("calldata"), 1))
-    .withColumn("cd_min_dec", abi_word(col("calldata"), 2))
-    .withColumn("tok_amt_dec", abi_log_word(col("log_data"), 0))
-    .withColumn("coin_amt_dec", abi_log_word(col("log_data"), 1))
+  private[graft] def curveOneCoinDecode(t: DataFrame): DataFrame =
+    OneCoinLog.decode(OneCoinCall.decode(
+      ProviderTopic.decode(t, "topic1"), "calldata"), "log_data")
 
   /** Per-coin explode of a width-n decoded add/remove frame into
     * (coin_k, amt_dec, fee_dec) rows, carrying the frame-grain columns. */
@@ -157,15 +155,12 @@ object RealAbiExtOps extends graft.QueryModule {
         "provider_ok", "echo_ok", "inv_dec", "supply_dec")
       val arms = (2 to 4).map { n =>
         val packed = liqFrames(s, dir, SelMint).filter(col("n_coins") === n)
-          .withColumn("calldata", unhex(concat(
-            lit(SelMint) +:
-              (0 until n).map(k => word(amtSrc(k))) :+
-              word(col("p2l")): _*)))
-          .withColumn("log_data", unhex(concat(
-            (0 until n).map(k => word(amtSrc(k))) ++
-              (0 until n).map(k => word(feeSrc(k))) ++
-              Seq(word(col("q6l") * 2 + col("p2l")),
-                word(col("q6l") + col("p2l"))): _*)))
+          .withColumn("calldata", addLiquidityCall(n).pack((lit(SelMint) +:
+            (0 until n).map(amtSrc) :+ col("p2l")).map(AbiValue.ofColumn): _*))
+          .withColumn("log_data", addLiquidityLog(n).pack(
+            ((0 until n).map(amtSrc) ++ (0 until n).map(feeSrc) ++
+              Seq(col("q6l") * 2 + col("p2l"), col("q6l") + col("p2l")))
+              .map(AbiValue.ofColumn): _*))
         val dec = curveAddLiquidityDecode(packed, n)
           .withColumn("provider_ok", col("provider") === padFrom)
           .withColumn("echo_ok",
@@ -254,13 +249,12 @@ object RealAbiExtOps extends graft.QueryModule {
       // arm A: remove_liquidity, one static decode per width
       val armA = (2 to 4).map { n =>
         val packed = base.filter(!col("is_one") && col("n_coins") === n)
-          .withColumn("calldata", unhex(concat(
-            lit(SelBurn) +: word(col("p2l")) +:
-              (0 until n).map(k => word(shiftright(amtSrc(k), 1))): _*)))
-          .withColumn("log_data", unhex(concat(
-            (0 until n).map(k => word(amtSrc(k))) ++
-              (0 until n).map(k => word(feeSrc(k))) :+
-              word(col("q6l") + col("p2l")): _*)))
+          .withColumn("calldata", removeLiquidityCall(n).pack((lit(SelBurn) +:
+            col("p2l") +: (0 until n).map(k => shiftright(amtSrc(k), 1)))
+            .map(AbiValue.ofColumn): _*))
+          .withColumn("log_data", removeLiquidityLog(n).pack(
+            ((0 until n).map(amtSrc) ++ (0 until n).map(feeSrc) :+
+              (col("q6l") + col("p2l"))).map(AbiValue.ofColumn): _*))
         val dec = curveRemoveLiquidityDecode(packed, n)
           .withColumn("provider_ok", col("provider") === padFrom)
           .withColumn("echo_ok",
@@ -295,10 +289,10 @@ object RealAbiExtOps extends graft.QueryModule {
       // arm B: remove_liquidity_one_coin — frame-grain already
       val packedB = base.filter(col("is_one"))
         .withColumn("i_src", col("p2l") % col("n_coins"))
-        .withColumn("calldata", unhex(concat(lit(SelBurn),
-          word(col("q6l")), word(col("i_src")), word(col("p2l")))))
-        .withColumn("log_data", unhex(concat(word(col("q6l")),
-          word(col("q6l") - col("p2l") % 1000))))
+        .withColumn("calldata", OneCoinCall.pack(lit(SelBurn),
+          col("q6l"), col("i_src"), col("p2l")))
+        .withColumn("log_data",
+          OneCoinLog.pack(col("q6l"), col("q6l") - col("p2l") % 1000))
       val bFrames = curveOneCoinDecode(packedB)
         .join(broadcast(IndirectOps.poolCoins(s)
           .select(col("address").as("pc_addr"), col("coin_idx"),
@@ -401,44 +395,32 @@ object RealAbiExtOps extends graft.QueryModule {
     *
     * Scale shape: one pruned trace scan, ZERO joins (the reference
     * body touches no DB), one 2-group rollup. */
+  /** CErc20 `initialize(address underlying_, address comptroller_,
+    * address interestRateModel_, uint initialExchangeRateMantissa_,
+    * string name_, string symbol_, uint8 decimals_)`. */
+  private[graft] val InitErc20Call = calldata(address("underlying_dec"),
+    address(""), address(""), uint("rate_dec"), string("dec_name"),
+    string("dec_sym"), uint("decimals_dec"))
+  /** CEther `initialize`: the same without `underlying_`. */
+  private[graft] val InitEtherCall = calldata(address(""), address(""),
+    uint("rate_dec"), string("dec_name"), string("dec_sym"), uint("decimals_dec"))
   /** The initialize decode core on any frame with (calldata, arm):
     * arm 0 = the 7-param CErc20 overload (underlying_ leads the head),
     * arm 1 = the 6-param CEther overload — every field, including both
     * dynamic-string head offsets and the trailing decimals_ scalar,
     * reads ONE WORD earlier on arm 1. */
   private[graft] def compoundInitDecode(t: DataFrame): DataFrame = {
-    // the length head is only non-NULL when the offset word resolved
-    // inside the buffer (abi_array_len's bounds check), so gating the
-    // walk on it both NULLs corrupt offsets and keeps the +37 cast in
-    // range — a skewed offset must NULL, never throw or misread
-    def strDec(offCol: String, lenCol: String) = expr(
-      s"""IF($lenCol IS NULL OR $lenCol < 0
-         | OR $lenCol > octet_length(calldata), NULL, CAST(substring(calldata,
-         | CAST($offCol + 37 AS INT), CAST($lenCol AS INT)) AS STRING))"""
-        .stripMargin.replace("\n", ""))
-    t.withColumn("underlying_dec",
-        when(col("arm") === 0, abi_address(col("calldata"), 0))
-          .otherwise(lit(null).cast("string")))
-      .withColumn("rate_dec",
-        when(col("arm") === 0, abi_word(col("calldata"), 3))
-          .otherwise(abi_word(col("calldata"), 2)))
-      .withColumn("name_off",
-        when(col("arm") === 0, abi_word(col("calldata"), 4))
-          .otherwise(abi_word(col("calldata"), 3)))
-      .withColumn("name_len",
-        when(col("arm") === 0, abi_array_len(col("calldata"), 4))
-          .otherwise(abi_array_len(col("calldata"), 3)))
-      .withColumn("sym_off",
-        when(col("arm") === 0, abi_word(col("calldata"), 5))
-          .otherwise(abi_word(col("calldata"), 4)))
-      .withColumn("sym_len",
-        when(col("arm") === 0, abi_array_len(col("calldata"), 5))
-          .otherwise(abi_array_len(col("calldata"), 4)))
-      .withColumn("decimals_dec",
-        when(col("arm") === 0, abi_word(col("calldata"), 6))
-          .otherwise(abi_word(col("calldata"), 5)))
-      .withColumn("dec_name", strDec("name_off", "name_len"))
-      .withColumn("dec_sym", strDec("sym_off", "sym_len"))
+    def read(name: String) = when(col("arm") === 0,
+      InitErc20Call.read(col("calldata"), name))
+      .otherwise(InitEtherCall.read(col("calldata"), name))
+    t.withColumn("underlying_dec", when(col("arm") === 0,
+        InitErc20Call.read(col("calldata"), "underlying_dec")))
+      .withColumn("rate_dec", read("rate_dec"))
+      .withColumn("name_len", read("dec_name_len"))
+      .withColumn("sym_len", read("dec_sym_len"))
+      .withColumn("decimals_dec", read("decimals_dec"))
+      .withColumn("dec_name", read("dec_name"))
+      .withColumn("dec_sym", read("dec_sym"))
   }
 
   private val c3CompoundInit = QueryDef(
@@ -446,32 +428,24 @@ object RealAbiExtOps extends graft.QueryModule {
     (s, dir) => {
       val nameStr = lit("Compound Wrapped Token")
       val symStr = lit("cTOK")
-      def strTail(c: Column) =
-        concat(word(length(c).cast("long")), rpad(lower(hex(c)), 64, "0"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelBurn)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelBurn)
         .withColumn("arm", (col("p2l") % 2).cast("int"))
         .withColumn("method",
           when(col("arm") === 0, "initialize_cerc20")
             .otherwise("initialize_cether"))
         .withColumn("dec_exp", col("p2l") % 18 + 6)
-      val cmpW = concat(lit("0" * 32), md5(concat(lit("cmp:"), col("p2l") % 2)))
-      val irmW = concat(lit("0" * 32), md5(concat(lit("irm:"), col("p2l") % 3)))
-      val undW = concat(lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))))
+      val cmp = md5(concat(lit("cmp:"), col("p2l") % 2))
+      val irm = md5(concat(lit("irm:"), col("p2l") % 3))
+      val und = md5(concat(lit("tok:"), col("tok_id")))
       val packed = t
         .withColumn("fsel", when(col("arm") === 0,
             substring(md5(lit("sel:init_cerc20")), 1, 8))
           .otherwise(substring(md5(lit("sel:init_cether")), 1, 8)))
         .withColumn("calldata", when(col("arm") === 0,
-          unhex(concat(col("fsel"), undW, cmpW, irmW, word(col("q6l")),
-            word(lit(224L)), word(lit(288L)), word(col("dec_exp")),
-            strTail(nameStr), strTail(symStr))))
-          .otherwise(
-          unhex(concat(col("fsel"), cmpW, irmW, word(col("q6l")),
-            word(lit(192L)), word(lit(256L)), word(col("dec_exp")),
-            strTail(nameStr), strTail(symStr)))))
+          InitErc20Call.pack(col("fsel"), und, cmp, irm, col("q6l"),
+            nameStr, symStr, col("dec_exp")))
+          .otherwise(InitEtherCall.pack(col("fsel"), cmp, irm, col("q6l"),
+            nameStr, symStr, col("dec_exp"))))
       compoundInitDecode(packed)
         // pool_address = info.from_address; tokens = [pool] — the
         // self-discovery semantic, carried as columns so the rollup

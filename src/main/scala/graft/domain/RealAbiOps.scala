@@ -1,12 +1,9 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_address, abi_array_address,
-  abi_array_elem, abi_array_len, abi_b32_prefix, abi_int_word,
-  abi_log_address, abi_log_array_address, abi_log_array_elem,
-  abi_log_array_int, abi_log_array_len, abi_log_b32_prefix, abi_log_word,
-  abi_pool_id_address, abi_ret_int, abi_tuple_address, abi_tuple_word,
-  abi_word, sword, word}
+import graft.functions.{AbiLayout, AbiRead}
+import graft.functions.AbiLayout.{address, arr, bytes, bytes32, calldata,
+  elems, fields, int, string, tuple, uint, words}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -77,6 +74,30 @@ object RealAbiOps extends graft.QueryModule {
 
   private[domain] val sqlPow10 = "CAST('1' || REPEAT('0', %s) AS DOUBLE)"
 
+  /** The `sel` trace frames with the two fixture integers every layout
+    * here packs, as BIGINT: q6l (quantity-derived) and p2l (price). */
+  private[domain] def framesOf(s: org.apache.spark.sql.SparkSession, dir: String,
+      sel: String) = tracesTable(s, dir).filter(col("selector") === sel)
+    .withColumn("q6l", col("q6").cast("long"))
+    .withColumn("p2l", col("p2").cast("long"))
+
+  /** The token registry as (`id`, `dec`): id and decimals. */
+  private[domain] def decimalsOf(s: org.apache.spark.sql.SparkSession, id: String,
+      dec: String) = tokens(s).select(col("token_id").as(id), col("decimals").as(dec))
+
+  /** The registry pairs of one protocol's pools. */
+  private def pairsOf(s: org.apache.spark.sql.SparkSession, protocol: String) =
+    pools(s).filter(col("protocol") === protocol)
+      .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
+
+  /** The C9 hook: a deterministic sliver of rows models a stale registry
+    * entry whose token1 resolves to an unregistered id (40/41). */
+  private val staleT1 = when((col("q6l") + col("p2l")) % 41 === 0,
+    lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id"))
+
+  private[graft] val PsmCall = calldata(address("usr"), uint("gem_amt"))
+  /** BuyGem/SellGem data: the gem amount echo, then the fee. */
+  private[graft] val PsmLog = words(uint(""), uint("fee_dec"))
   /** The PSM decode core on any frame with (calldata, log_data, is_buy):
     * usr from the address word, gemAmt from calldata word1, fee (bps, DAI
     * side) from the event log's word1, and the DAI leg combining them —
@@ -84,10 +105,8 @@ object RealAbiOps extends graft.QueryModule {
     * (psm.rs:40-47, :90-97). Unit-tested on planted bytes in the
     * reference's per-classifier test shape (psm equality asserts like
     * v1_meta.rs:228-340). */
-  private[graft] def psmDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("usr", abi_address(col("calldata"), 0))
-    .withColumn("gem_amt", abi_word(col("calldata"), 1))
-    .withColumn("fee_dec", abi_log_word(col("log_data"), 1))
+  private[graft] def psmDecode(t: org.apache.spark.sql.DataFrame) =
+    PsmLog.decode(PsmCall.decode(t, "calldata"), "log_data")
     .withColumn("gem_scaled", col("gem_amt").cast("double") / 1000000.0)
     .withColumn("dai_leg", when(col("is_buy"),
         col("gem_scaled") +
@@ -95,18 +114,18 @@ object RealAbiOps extends graft.QueryModule {
       .otherwise(col("gem_scaled") -
         col("gem_scaled") * (col("fee_dec").cast("double") / 10000.0)))
 
+  private[graft] val UnderlyingLog =
+    words(uint("sid"), uint("amt_in"), uint("bid"), uint("amt_out"))
+  /** `exchange_underlying(int128 i, int128 j, uint256 dx, uint256 min_dy)`. */
+  private[graft] val UnderlyingCall =
+    calldata(uint("cd_i"), uint(""), uint("cd_dx"), uint(""))
   /** The exchange_underlying decode core on any frame with (log_data,
     * calldata, caller_pool): coin ids and amounts from the
     * TokenExchangeUnderlying LOG, calldata echo for the cross-check; the
     * POOL is the frame's CALLER (v1_meta.rs `pool: info.from_address` —
     * the metapool impl is delegatecalled). */
-  private[graft] def underlyingDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("sid", abi_log_word(col("log_data"), 0))
-    .withColumn("amt_in", abi_log_word(col("log_data"), 1))
-    .withColumn("bid", abi_log_word(col("log_data"), 2))
-    .withColumn("amt_out", abi_log_word(col("log_data"), 3))
-    .withColumn("cd_i", abi_word(col("calldata"), 0))
-    .withColumn("cd_dx", abi_word(col("calldata"), 2))
+  private[graft] def underlyingDecode(t: org.apache.spark.sql.DataFrame) =
+    UnderlyingCall.decode(UnderlyingLog.decode(t, "log_data"), "calldata")
 
   /** C1 (Maker PSM): buyGem on direction-0 frames, sellGem on direction-1.
     * The usr ADDRESS word round-trips through
@@ -119,21 +138,17 @@ object RealAbiOps extends graft.QueryModule {
   private val c1PsmSwap = QueryDef(
     "c1_psm_swap",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV2Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelV2Swap)
         .withColumn("is_buy", col("direction") === 0)
         .withColumn("fee_bps", col("p2l") % 100)
         // address word: 12 zero bytes ‖ (4 zero bytes ‖ 16 md5 bytes)
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("from_address"), word(col("q6l")))))
-        .withColumn("log_data",
-          unhex(concat(word(col("q6l")), word(col("fee_bps")))))
+        .withColumn("calldata",
+          PsmCall.pack(col("selector"), col("from_address"), col("q6l")))
+        .withColumn("log_data", PsmLog.pack(col("q6l"), col("fee_bps")))
       val dec = psmDecode(t)
       val p = pools(s).select(col("address").as("p_addr"),
         col("t0_id").as("dai_id"), col("t1_id").as("gem_id"))
-      val tk = tokens(s).select(col("token_id").as("tk_id"), col("decimals"))
+      val tk = decimalsOf(s, "tk_id", "decimals")
       dec.join(broadcast(p), col("to_address") === col("p_addr"))
         .join(broadcast(tk), col("gem_id") === col("tk_id"), "left")
         .groupBy(when(col("is_buy"), "buy_gem").otherwise("sell_gem")
@@ -181,23 +196,13 @@ object RealAbiOps extends graft.QueryModule {
   private val c1CurveUnderlying = QueryDef(
     "c1_curve_underlying",
     (s, dir) => {
-      val cp = pools(s).filter(col("protocol") === "curve")
-        .withColumn("n_coins", lit(2L) + col("pool_id") % 3)
-        .select(col("address").as("cp_addr"), col("n_coins"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelCurveSwap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
-        .join(broadcast(cp), col("to_address") === col("cp_addr"))
+      val t = IndirectOps.curveSwapFrames(s, dir)
         // the impl frame: caller = the metapool (delegatecall shape)
         .withColumn("caller_pool", col("to_address"))
-        .withColumn("i", col("q6l") % col("n_coins"))
-        .withColumn("j",
-          (col("i") + 1 + col("p2l") % (col("n_coins") - 1)) % col("n_coins"))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(col("i")), word(col("j")), word(col("q6l")), word(col("p2l")))))
-        .withColumn("log_data", unhex(concat(
-          word(col("i")), word(col("q6l")), word(col("j")), word(col("p2l")))))
+        .withColumn("calldata", UnderlyingCall.pack(col("selector"),
+          col("i"), col("j"), col("q6l"), col("p2l")))
+        .withColumn("log_data",
+          UnderlyingLog.pack(col("i"), col("q6l"), col("j"), col("p2l")))
       val dec = underlyingDecode(t)
       val pcIn = IndirectOps.poolCoins(s).select(col("address").as("in_addr"),
         col("coin_idx").as("in_idx"), col("coin_token_id").as("token_in_id"))
@@ -243,6 +248,26 @@ object RealAbiOps extends graft.QueryModule {
       JOIN pcu cj ON c.to_address = cj.address AND c.j = cj.coin_idx
       GROUP BY 1 ORDER BY 1"""))
 
+  private[graft] val V3SwapCall = calldata(address("recipient"),
+    uint(""), int("spec_dec"), uint("")) // zeroForOne, sqrtPriceLimitX96
+  /** V3 `swap`/`mint`/`burn`/`collect` return the pool's two deltas. */
+  private[graft] val V3Deltas = words(int("a0"), int("a1"))
+  /** A V3 `swap` frame's calldata and return deltas from (direction,
+    * q6l, p2l): direction 0 pays q6l of token0 for p2l of token1. */
+  private[graft] def v3SwapPacked(t: org.apache.spark.sql.DataFrame) = t
+    .withColumn("zero_for_one", col("direction") === 0)
+    // pool-view deltas: input side positive, trader-bound side negative
+    .withColumn("a0_src",
+      when(col("zero_for_one"), col("q6l")).otherwise(-col("p2l")))
+    .withColumn("a1_src",
+      when(col("zero_for_one"), -col("p2l")).otherwise(col("q6l")))
+    // exact-input (positive) vs exact-output (negative) alternates
+    .withColumn("spec_src",
+      when((col("q6l") + col("p2l")) % 2 === 0, col("q6l")).otherwise(-col("p2l")))
+    .withColumn("calldata", V3SwapCall.pack(col("selector"),
+      col("from_address"), when(col("zero_for_one"), 1L).otherwise(0L),
+      col("spec_src"), col("p2l") % 1000000)) // sqrtPriceLimitX96 stand-in
+    .withColumn("ret_data", V3Deltas.pack(col("a0_src"), col("a1_src")))
   /** The V3 swap decode core on any frame with (calldata, ret_data, t0_id,
     * t1x): recipient from the calldata address word, amountSpecified as
     * SIGNED calldata int256, the two pool-view deltas as SIGNED return
@@ -250,11 +275,8 @@ object RealAbiOps extends graft.QueryModule {
     * in / token0 out with `in = amount1, out = |amount0|`, else the
     * converse (uniswap_v3.rs:31-46). Unit-tested on planted bytes for both
     * sign arms in the reference's per-classifier test shape. */
-  private[graft] def v3SwapDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("recipient", abi_address(col("calldata"), 0))
-    .withColumn("spec_dec", abi_int_word(col("calldata"), 2))
-    .withColumn("a0", abi_ret_int(col("ret_data"), 0))
-    .withColumn("a1", abi_ret_int(col("ret_data"), 1))
+  private[graft] def v3SwapDecode(t: org.apache.spark.sql.DataFrame) =
+    V3Deltas.decode(V3SwapCall.decode(t, "calldata"), "ret_data")
     .withColumn("token_in_id",
       when(col("a0") < 0, col("t1x")).otherwise(col("t0_id")))
     .withColumn("token_out_id",
@@ -263,30 +285,31 @@ object RealAbiOps extends graft.QueryModule {
     .withColumn("out_raw",
       when(col("a0") < 0, -col("a0")).otherwise(-col("a1")))
 
+  /** The SwapRequest struct, offset-passed for its `bytes userData`. */
+  private[graft] val SwapRequest =
+    tuple("", uint("kind"), address("tok_in_dec"), address("tok_out_dec"),
+      uint("amt_dec"), bytes32("pool_dec"), uint(""), address("from_dec"),
+      address(""), bytes("")) // lastChangeBlock, to, userData
+  private[graft] val OnSwapCall = calldata(SwapRequest,
+    uint("bal_in"), uint("")) // balanceTokenIn, balanceTokenOut
+  private[graft] val OnSwapRet = words(uint("out_dec"))
   /** The onSwap decode core on any frame with (calldata, ret_data): the
     * SwapRequest tuple fields through the offset indirection (kind,
     * tokenIn/tokenOut/from as validated addresses, amount, the poolId's
     * LEADING 20 bytes as the pool), plus head word1 (balanceTokenIn) and
     * the single-word return amount (balancer_v2.rs:20-47). */
-  private[graft] def onSwapDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("kind", abi_tuple_word(col("calldata"), 0, 0))
-    .withColumn("tok_in_dec", abi_tuple_address(col("calldata"), 0, 1))
-    .withColumn("tok_out_dec", abi_tuple_address(col("calldata"), 0, 2))
-    .withColumn("amt_dec", abi_tuple_word(col("calldata"), 0, 3))
-    .withColumn("pool_dec", abi_pool_id_address(col("calldata"), 0, 4))
-    .withColumn("from_dec", abi_tuple_address(col("calldata"), 0, 6))
-    .withColumn("bal_in", abi_word(col("calldata"), 1))
-    .withColumn("out_dec", abi_log_word(col("ret_data"), 0))
+  private[graft] def onSwapDecode(t: org.apache.spark.sql.DataFrame) =
+    OnSwapRet.decode(OnSwapCall.decode(t, "calldata"), "ret_data")
 
+  private[graft] val LiquidationCall = calldata(address("coll_dec"),
+    address("debt_dec"), address("debtor"), uint("debt_to_cover"),
+    uint("receive_atoken"))
   /** The liquidationCall decode core on any frame with (calldata): five
     * static words — three validated addresses, the debt amount, and the
     * receiveAToken bool (aave/v3.rs:10-40). */
-  private[graft] def liquidationCallDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("coll_dec", abi_address(col("calldata"), 0))
-    .withColumn("debt_dec", abi_address(col("calldata"), 1))
-    .withColumn("debtor", abi_address(col("calldata"), 2))
-    .withColumn("debt_to_cover", abi_word(col("calldata"), 3))
-    .withColumn("receive_atoken", abi_word(col("calldata"), 4) === 1)
+  private[graft] def liquidationCallDecode(t: org.apache.spark.sql.DataFrame) =
+    LiquidationCall.decode(t, "calldata")
+      .withColumn("receive_atoken", col("receive_atoken") === 1)
 
   /** C1 (Uniswap V3 `swap`): the reference decodes amounts from the call's
     * RETURN data as SIGNED int256 deltas — `(int256 amount0, int256
@@ -311,21 +334,14 @@ object RealAbiOps extends graft.QueryModule {
   private val c1UniV3Swap = QueryDef(
     "c1_univ3_swap",
     (s, dir) => {
-      val up = pools(s).filter(col("protocol") === "uniswap_v3")
-        .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV3Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val up = pairsOf(s, "uniswap_v3")
+      val t = framesOf(s, dir, SelV3Swap)
         .join(broadcast(up), col("to_address") === col("p_addr"))
         // C9 hook: the uniswap_v3 pool subspace never references the
         // unregistered ids 40/41 itself, so a deterministic sliver of rows
         // models a stale registry entry — token1 resolves to a missing id
         // and try_fetch_token_info fails (quarantine, not a sum)
-        .withColumn("t1x",
-          when((col("q6l") + col("p2l")) % 41 === 0,
-            lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id")))
-        .withColumn("zero_for_one", col("direction") === 0)
+        .withColumn("t1x", staleT1)
         // PARITY CONTRACT: the sign-resolved direction (a0 < 0 ⇒ token1
         // in) agrees with the oracle's direction-column resolution ONLY
         // because q6/p2 are strictly positive (TPC-H l_quantity ≥ 1,
@@ -334,27 +350,9 @@ object RealAbiOps extends graft.QueryModule {
         // future fixture/scale breaks that invariant.
         .filter(assert_true(col("q6l") > 0 && col("p2l") > 0,
           lit("c1_univ3_swap fixture invariant: q6 > 0 AND p2 > 0")).isNull)
-        // pool-view deltas: input side positive, trader-bound side negative
-        .withColumn("a0_src",
-          when(col("zero_for_one"), col("q6l")).otherwise(-col("p2l")))
-        .withColumn("a1_src",
-          when(col("zero_for_one"), -col("p2l")).otherwise(col("q6l")))
-        // exact-input (positive) vs exact-output (negative) alternates
-        .withColumn("spec_src",
-          when((col("q6l") + col("p2l")) % 2 === 0, col("q6l"))
-            .otherwise(-col("p2l")))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("from_address"), // recipient address word
-          word(when(col("zero_for_one"), 1L).otherwise(0L)), // bool word
-          sword(col("spec_src")), // int256 amountSpecified
-          word(col("p2l") % 1000000)))) // sqrtPriceLimitX96 stand-in
-        .withColumn("ret_data",
-          unhex(concat(sword(col("a0_src")), sword(col("a1_src")))))
-      val dec = v3SwapDecode(t)
-      val ti = tokens(s).select(col("token_id").as("ti_id"),
-        col("decimals").as("dec_in"))
-      val to = tokens(s).select(col("token_id").as("to_id"),
-        col("decimals").as("dec_out"))
+      val dec = v3SwapDecode(v3SwapPacked(t))
+      val ti = decimalsOf(s, "ti_id", "dec_in")
+      val to = decimalsOf(s, "to_id", "dec_out")
       dec
         .join(broadcast(ti), col("token_in_id") === col("ti_id"), "left")
         .join(broadcast(to), col("token_out_id") === col("to_id"), "left")
@@ -430,38 +428,26 @@ object RealAbiOps extends graft.QueryModule {
   private val c1BalancerOnSwap = QueryDef(
     "c1_balancer_onswap",
     (s, dir) => {
-      val bp = pools(s).filter(col("protocol") === "sushiswap")
-        .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV3Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val bp = pairsOf(s, "sushiswap")
+      val t = framesOf(s, dir, SelV3Swap)
         .join(broadcast(bp), col("to_address") === col("p_addr"))
         // C9 hook, same rotation as c1_univ3_swap: sushiswap pools never
         // reference ids 40/41, so a sliver of rows models a stale entry
-        .withColumn("t1x",
-          when((col("q6l") + col("p2l")) % 41 === 0,
-            lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id")))
+        .withColumn("t1x", staleT1)
         .withColumn("tin_id",
           when(col("direction") === 0, col("t0_id")).otherwise(col("t1x")))
         .withColumn("tout_id",
           when(col("direction") === 0, col("t1x")).otherwise(col("t0_id")))
         .withColumn("kind_src", col("p2l") % 2) // GIVEN_IN / GIVEN_OUT
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(lit(96L)), // head w0: tuple offset (3 head words * 32)
-          word(col("q6l") * 2), word(col("p2l") * 2), // balances in/out
-          // tuple tail: kind ‖ tokenIn ‖ tokenOut ‖ amount ‖ poolId ‖
-          //             lastChangeBlock ‖ from ‖ to ‖ userData offset ‖ len 0
-          word(col("kind_src")),
-          lit("0" * 32), md5(concat(lit("tok:"), col("tin_id"))),
-          lit("0" * 32), md5(concat(lit("tok:"), col("tout_id"))),
-          word(col("q6l")),
-          lit("0" * 8), col("p_addr"), lpad(lower(hex(col("p2l"))), 24, "0"),
-          word(col("block_number")),
-          lit("0" * 32), col("from_address"),
-          lit("0" * 32), col("from_address"),
-          word(lit(288L)), word(lit(0L)))))
-        .withColumn("ret_data", unhex(word(col("p2l"))))
+        .withColumn("calldata", OnSwapCall.pack(col("selector"),
+          fields(col("kind_src"), md5(concat(lit("tok:"), col("tin_id"))),
+            md5(concat(lit("tok:"), col("tout_id"))), col("q6l"),
+            concat(lit("0" * 8), col("p_addr"),
+              lpad(lower(hex(col("p2l"))), 24, "0")),
+            col("block_number"), col("from_address"), col("from_address"),
+            lit("")),
+          col("q6l") * 2, col("p2l") * 2))
+        .withColumn("ret_data", OnSwapRet.pack(col("p2l")))
       val dec = onSwapDecode(t)
       val ti = tokens(s).select(col("address").as("ti_addr"),
         col("token_id").as("token_in_id"), col("decimals").as("dec_in"))
@@ -521,6 +507,25 @@ object RealAbiOps extends graft.QueryModule {
         ON tt.token_id = CASE WHEN b.direction = 0 THEN b.t1x ELSE b.t0_id END
       GROUP BY 1 ORDER BY 1"""))
 
+  private[graft] val V2SwapLog =
+    words(uint("a0in"), uint("a1in"), uint("a0out"), uint("a1out"))
+  private[graft] val V2SwapCall = calldata(uint("cd_a0out"), uint("cd_a1out"),
+    address("recipient"), bytes(""))
+  /** A V2 `swap` frame's calldata and Swap log from (direction, q6l,
+    * p2l): direction 0 pays q6l of token0 in for p2l of token1 out. */
+  private[graft] def v2SwapPacked(t: org.apache.spark.sql.DataFrame) = t
+    .withColumn("a0in_src",
+      when(col("direction") === 0, col("q6l")).otherwise(lit(0L)))
+    .withColumn("a1in_src",
+      when(col("direction") === 0, lit(0L)).otherwise(col("q6l")))
+    .withColumn("a0out_src",
+      when(col("direction") === 0, lit(0L)).otherwise(col("p2l")))
+    .withColumn("a1out_src",
+      when(col("direction") === 0, col("p2l")).otherwise(lit(0L)))
+    .withColumn("calldata", V2SwapCall.pack(col("selector"),
+      col("a0out_src"), col("a1out_src"), col("from_address"), lit("")))
+    .withColumn("log_data", V2SwapLog.pack(col("a0in_src"), col("a1in_src"),
+      col("a0out_src"), col("a1out_src")))
   /** The V2 swap decode core on any frame with (calldata, log_data, t0_id,
     * t1x): the four Swap-event amounts from the LOG, recipient + the two
     * calldata amountOut echoes, then the reference's zero-side direction
@@ -529,14 +534,8 @@ object RealAbiOps extends graft.QueryModule {
     * NULLs every log field, and `log_ok` carries the
     * `log_data.swap_field?` failure: token identity resolves to NULL, the
     * row quarantines. */
-  private[graft] def v2SwapDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("a0in", abi_log_word(col("log_data"), 0))
-    .withColumn("a1in", abi_log_word(col("log_data"), 1))
-    .withColumn("a0out", abi_log_word(col("log_data"), 2))
-    .withColumn("a1out", abi_log_word(col("log_data"), 3))
-    .withColumn("cd_a0out", abi_word(col("calldata"), 0))
-    .withColumn("cd_a1out", abi_word(col("calldata"), 1))
-    .withColumn("recipient", abi_address(col("calldata"), 2))
+  private[graft] def v2SwapDecode(t: org.apache.spark.sql.DataFrame) =
+    V2SwapCall.decode(V2SwapLog.decode(t, "log_data"), "calldata")
     .withColumn("log_ok", col("a0in").isNotNull)
     // -1 sentinel (not NULL) for the failed-classification group: the two
     // engines disagree on NULL-first vs NULL-last ordering
@@ -573,16 +572,10 @@ object RealAbiOps extends graft.QueryModule {
   private val c1UniV2Swap = QueryDef(
     "c1_univ2_swap",
     (s, dir) => {
-      val vp = pools(s).filter(col("protocol") === "uniswap_v2")
-        .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV2Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val vp = pairsOf(s, "uniswap_v2")
+      val t = framesOf(s, dir, SelV2Swap)
         .join(broadcast(vp), col("to_address") === col("p_addr"))
-        .withColumn("t1x",
-          when((col("q6l") + col("p2l")) % 41 === 0,
-            lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id")))
+        .withColumn("t1x", staleT1)
         .withColumn("log_missing", (col("q6l") + col("p2l")) % 37 === 0)
         // PARITY CONTRACT (same as c1_univ3_swap): the zero-side direction
         // resolution (amount0In == 0 ⇒ token1 in) agrees with the oracle's
@@ -590,28 +583,10 @@ object RealAbiOps extends graft.QueryModule {
         // q6 would make BOTH in-sides zero and the resolutions diverge.
         .filter(assert_true(col("q6l") > 0 && col("p2l") > 0,
           lit("c1_univ2_swap fixture invariant: q6 > 0 AND p2 > 0")).isNull)
-        .withColumn("a0in_src",
-          when(col("direction") === 0, col("q6l")).otherwise(lit(0L)))
-        .withColumn("a1in_src",
-          when(col("direction") === 0, lit(0L)).otherwise(col("q6l")))
-        .withColumn("a0out_src",
-          when(col("direction") === 0, lit(0L)).otherwise(col("p2l")))
-        .withColumn("a1out_src",
-          when(col("direction") === 0, col("p2l")).otherwise(lit(0L)))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(col("a0out_src")), word(col("a1out_src")),
-          lit("0" * 32), col("from_address"), // to (recipient)
-          word(lit(128L))))) // bytes data offset
-        .withColumn("log_data",
-          when(col("log_missing"), unhex(lit("")))
-            .otherwise(unhex(concat(word(col("a0in_src")),
-              word(col("a1in_src")), word(col("a0out_src")),
-              word(col("a1out_src"))))))
-      val dec = v2SwapDecode(t)
-      val ti = tokens(s).select(col("token_id").as("ti_id"),
-        col("decimals").as("dec_in"))
-      val to = tokens(s).select(col("token_id").as("to_id"),
-        col("decimals").as("dec_out"))
+      val dec = v2SwapDecode(v2SwapPacked(t).withColumn("log_data",
+        when(col("log_missing"), unhex(lit(""))).otherwise(col("log_data"))))
+      val ti = decimalsOf(s, "ti_id", "dec_in")
+      val to = decimalsOf(s, "to_id", "dec_out")
       dec
         .join(broadcast(ti), col("token_in_id") === col("ti_id"), "left")
         .join(broadcast(to), col("token_out_id") === col("to_id"), "left")
@@ -677,6 +652,11 @@ object RealAbiOps extends graft.QueryModule {
       LEFT JOIN tok tt ON tt.token_id = v.tout
       GROUP BY 1 ORDER BY 1"""))
 
+  private[graft] val LiquidateBorrowCall =
+    calldata(address("borrower"), uint("repay_cd"), address("ctok_coll"))
+  private[graft] val LiquidateBorrowLog = words(address("liq_log"),
+    address("borrower_log"), uint("repay_amt"), address("ctok_coll_log"),
+    uint("seize_toks"))
   /** The liquidateBorrow decode core on any frame with (calldata,
     * log_data): borrower + cTokenCollateral from the CALLDATA (words 0
     * and 2, addresses); the LiquidateBorrow EVENT carries FIVE data
@@ -685,15 +665,8 @@ object RealAbiOps extends graft.QueryModule {
     * word 0, borrower echo word 1, repayAmount word 2, the collateral
     * cToken ADDRESS word 3, seizeTokens word 4. Log-missing carried as
     * `log_ok` (compound/compound_v2.rs:7-38). */
-  private[graft] def liquidateBorrowDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("borrower", abi_address(col("calldata"), 0))
-    .withColumn("repay_cd", abi_word(col("calldata"), 1))
-    .withColumn("ctok_coll", abi_address(col("calldata"), 2))
-    .withColumn("liq_log", abi_log_address(col("log_data"), 0))
-    .withColumn("borrower_log", abi_log_address(col("log_data"), 1))
-    .withColumn("repay_amt", abi_log_word(col("log_data"), 2))
-    .withColumn("ctok_coll_log", abi_log_address(col("log_data"), 3))
-    .withColumn("seize_toks", abi_log_word(col("log_data"), 4))
+  private[graft] def liquidateBorrowDecode(t: org.apache.spark.sql.DataFrame) =
+    LiquidateBorrowLog.decode(LiquidateBorrowCall.decode(t, "calldata"), "log_data")
     .withColumn("log_ok", col("repay_amt").isNotNull)
 
   /** C1 (Compound V2 `liquidateBorrow`): the MIXED-source liquidation
@@ -730,11 +703,8 @@ object RealAbiOps extends graft.QueryModule {
       val cdim = pools(s).select(col("address").as("c_addr"),
         col("protocol"), (lit(6L) + col("pool_id") % 5).as("c_dec"),
         col("pool_id"))
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelLiquidation &&
-          size(col("trace_address")) === 2)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelLiquidation)
+        .filter(size(col("trace_address")) === 2)
         .join(broadcast(cdim), col("to_address") === col("c_addr"))
         .withColumn("log_missing", (col("q6l") + col("p2l")) % 43 === 0)
         // collateral cToken: another registered market, except the % 41
@@ -745,18 +715,12 @@ object RealAbiOps extends graft.QueryModule {
             .otherwise((col("pool_id") + 7) % 60))))
         .withColumn("debtor_src",
           md5(concat(lit("eoa:"), (col("q6l") + col("p2l")) % 12)))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("debtor_src"),
-          word(col("q6l")),
-          lit("0" * 32), col("coll_src"))))
+        .withColumn("calldata", LiquidateBorrowCall.pack(col("selector"),
+          col("debtor_src"), col("q6l"), col("coll_src")))
         .withColumn("log_data",
           when(col("log_missing"), unhex(lit("")))
-            .otherwise(unhex(concat(
-              lit("0" * 32), col("from_address"), // liquidator
-              lit("0" * 32), col("debtor_src"), // borrower echo
-              word(col("q6l")), // repayAmount
-              lit("0" * 32), col("coll_src"), // cTokenCollateral echo
-              word(col("p2l")))))) // seizeTokens
+            .otherwise(LiquidateBorrowLog.pack(col("from_address"),
+              col("debtor_src"), col("q6l"), col("coll_src"), col("p2l"))))
       val dec = liquidateBorrowDecode(t)
       val coll = pools(s).select(col("address").as("k_addr"),
         (lit(6L) + col("pool_id") % 5).as("k_dec"))
@@ -842,21 +806,16 @@ object RealAbiOps extends graft.QueryModule {
         .select(col("tx_hash"), col("to_address").as("caller"))
       val lp = pools(s).select(col("address").as("p_addr"), col("protocol"),
         col("t0_id"), col("t1_id"))
-      val t = tr
-        .filter(col("selector") === SelLiquidation &&
-          size(col("trace_address")) === 1)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelLiquidation)
+        .filter(size(col("trace_address")) === 1)
         .join(broadcast(lp), col("to_address") === col("p_addr"))
         .join(roots, Seq("tx_hash"))
         .withColumn("debtor_src",
           md5(concat(lit("eoa:"), (col("q6l") + col("p2l")) % 12)))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), md5(concat(lit("tok:"), col("t1_id"))), // collateral
-          lit("0" * 32), md5(concat(lit("tok:"), col("t0_id"))), // debt
-          lit("0" * 32), col("debtor_src"), // user
-          word(col("q6l")), // debtToCover
-          word(col("p2l") % 2)))) // receiveAToken bool
+        .withColumn("calldata", LiquidationCall.pack(col("selector"),
+          md5(concat(lit("tok:"), col("t1_id"))), // collateral
+          md5(concat(lit("tok:"), col("t0_id"))), // debt
+          col("debtor_src"), col("q6l"), col("p2l") % 2))
       val dec = liquidationCallDecode(t)
       val td = tokens(s).select(col("address").as("td_addr"),
         col("decimals").as("dec_debt"))
@@ -914,6 +873,9 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Uniswap V3 position lifecycle: mint / burn / collect ──────────────────
 
+  private[graft] val MintCall = calldata(address("recipient"),
+    int("tick_lower"), int("tick_upper"), uint("liq_amount"), bytes("data"))
+  private[graft] val V3Amounts = words(int("a0_ret"), int("a1_ret"))
   /** The V3 `mint` decode core on any frame with (calldata, ret_data):
     * `mint(address recipient, int24 tickLower, int24 tickUpper, uint128
     * amount, bytes data)` — recipient from the ADDRESS word 0, BOTH ticks
@@ -923,41 +885,30 @@ object RealAbiOps extends graft.QueryModule {
     * uint256 amount1)` — the reference reads `return_data.amount0/amount1`
     * and `call_data.recipient`, ignoring the logs arm entirely
     * (classifiers/uniswap/uniswap_v3.rs:61-95, `_logs`). */
-  private[graft] def v3MintDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("recipient", abi_address(col("calldata"), 0))
-    .withColumn("tick_lower", abi_int_word(col("calldata"), 1))
-    .withColumn("tick_upper", abi_int_word(col("calldata"), 2))
-    .withColumn("liq_amount", abi_word(col("calldata"), 3))
-    .withColumn("data_off", abi_word(col("calldata"), 4))
-    .withColumn("a0_ret", abi_ret_int(col("ret_data"), 0))
-    .withColumn("a1_ret", abi_ret_int(col("ret_data"), 1))
+  private[graft] def v3MintDecode(t: org.apache.spark.sql.DataFrame) =
+    V3Amounts.decode(MintCall.decode(t, "calldata"), "ret_data")
+      .withColumn("data_off", MintCall.offset(col("calldata"), "data"))
 
+  private[graft] val BurnCall =
+    calldata(int("tick_lower"), int("tick_upper"), uint("liq_amount"))
   /** The V3 `burn` decode core: `burn(int24 tickLower, int24 tickUpper,
     * uint128 amount)` → `(uint256 amount0, uint256 amount1)` — the ticks
     * lead the calldata (no recipient: the reference fills BOTH recipient
     * and from with `info.from_address`), amounts from the return pair
     * (uniswap_v3.rs:96-126). */
-  private[graft] def v3BurnDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("tick_lower", abi_int_word(col("calldata"), 0))
-    .withColumn("tick_upper", abi_int_word(col("calldata"), 1))
-    .withColumn("liq_amount", abi_word(col("calldata"), 2))
-    .withColumn("a0_ret", abi_ret_int(col("ret_data"), 0))
-    .withColumn("a1_ret", abi_ret_int(col("ret_data"), 1))
+  private[graft] def v3BurnDecode(t: org.apache.spark.sql.DataFrame) =
+    V3Amounts.decode(BurnCall.decode(t, "calldata"), "ret_data")
 
+  private[graft] val CollectCall = calldata(address("recipient"),
+    int("tick_lower"), int("tick_upper"), uint("a0_req"), uint("a1_req"))
   /** The V3 `collect` decode core: `collect(address recipient, int24
     * tickLower, int24 tickUpper, uint128 amount0Requested, uint128
     * amount1Requested)` → `(uint128 amount0, uint128 amount1)` — five
     * static calldata words, amounts again from the RETURN pair
     * (uniswap_v3.rs:127-161 `return_data.amount0/amount1`,
     * `call_data.recipient`). */
-  private[graft] def v3CollectDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("recipient", abi_address(col("calldata"), 0))
-    .withColumn("tick_lower", abi_int_word(col("calldata"), 1))
-    .withColumn("tick_upper", abi_int_word(col("calldata"), 2))
-    .withColumn("a0_req", abi_word(col("calldata"), 3))
-    .withColumn("a1_req", abi_word(col("calldata"), 4))
-    .withColumn("a0_ret", abi_ret_int(col("ret_data"), 0))
-    .withColumn("a1_ret", abi_ret_int(col("ret_data"), 1))
+  private[graft] def v3CollectDecode(t: org.apache.spark.sql.DataFrame) =
+    V3Amounts.decode(CollectCall.decode(t, "calldata"), "ret_data")
 
   /** Shared tick-range derivation for the V3 position fixtures: a
     * spacing-10 range centered anywhere in [-8870, 8870] with half-width
@@ -969,26 +920,27 @@ object RealAbiOps extends graft.QueryModule {
     .withColumn("t_half", col("q6l") % 50 + 1)
     .withColumn("tick_lo_src", (col("t_center") - col("t_half")) * 10)
     .withColumn("tick_hi_src", (col("t_center") + col("t_half")) * 10)
+  /** `sel` frames on the `up` pools with their ticks, the C9 token1 and
+    * the position call's return amounts: the V3 position fixture. */
+  private def v3PositionFrames(s: org.apache.spark.sql.SparkSession, dir: String,
+      sel: String, up: org.apache.spark.sql.DataFrame) = tickCols(framesOf(s, dir, sel)
+    .join(broadcast(up), col("to_address") === col("p_addr"))
+    .withColumn("t1x", staleT1))
+    .withColumn("ret_data", V3Amounts.pack(col("q6l"), col("p2l")))
   private val tickLoSql =
     "((p2l % 1775) - 887 - (q6l % 50 + 1)) * 10"
 
   /** The three V3 position-call packings (selector ‖ words), shared by the
     * c1 entries and the [[q5JitReal]] feed. */
   private def mintCalldata(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("calldata", unhex(concat(col("selector"),
-      lit("0" * 32), col("from_address"), // recipient address word
-      sword(col("tick_lo_src")), sword(col("tick_hi_src")),
-      word(col("q6l")), // uint128 liquidity
-      word(lit(160L)), word(lit(0L))))) // bytes data: offset ‖ len 0
+    .withColumn("calldata", MintCall.pack(col("selector"), col("from_address"),
+      col("tick_lo_src"), col("tick_hi_src"), col("q6l"), lit("")))
   private def burnCalldata(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("calldata", unhex(concat(col("selector"),
-      sword(col("tick_lo_src")), sword(col("tick_hi_src")),
-      word(col("q6l")))))
+    .withColumn("calldata", BurnCall.pack(col("selector"),
+      col("tick_lo_src"), col("tick_hi_src"), col("q6l")))
   private def collectCalldata(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("calldata", unhex(concat(col("selector"),
-      lit("0" * 32), col("from_address"),
-      sword(col("tick_lo_src")), sword(col("tick_hi_src")),
-      word(col("q6l")), word(col("p2l")))))
+    .withColumn("calldata", CollectCall.pack(col("selector"), col("from_address"),
+      col("tick_lo_src"), col("tick_hi_src"), col("q6l"), col("p2l")))
 
   /** C1 (Uniswap V3 `mint`): the position-OPEN layout. Calldata is
     * `(recipient, int24 tickLower, int24 tickUpper, uint128 amount, bytes
@@ -1010,23 +962,10 @@ object RealAbiOps extends graft.QueryModule {
   private val c1UniV3Mint = QueryDef(
     "c1_univ3_mint",
     (s, dir) => {
-      val up = pools(s).filter(col("protocol") === "uniswap_v3")
-        .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
-      val t = mintCalldata(tickCols(tracesTable(s, dir)
-        .filter(col("selector") === SelMint)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
-        .join(broadcast(up), col("to_address") === col("p_addr"))
-        .withColumn("t1x",
-          when((col("q6l") + col("p2l")) % 41 === 0,
-            lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id")))))
-        .withColumn("ret_data",
-          unhex(concat(word(col("q6l")), word(col("p2l")))))
-      val dec = v3MintDecode(t)
-      val t0d = tokens(s).select(col("token_id").as("d0_id"),
-        col("decimals").as("dec0"))
-      val t1d = tokens(s).select(col("token_id").as("d1_id"),
-        col("decimals").as("dec1"))
+      val up = pairsOf(s, "uniswap_v3")
+      val dec = v3MintDecode(mintCalldata(v3PositionFrames(s, dir, SelMint, up)))
+      val t0d = decimalsOf(s, "d0_id", "dec0")
+      val t1d = decimalsOf(s, "d1_id", "dec1")
       dec
         .join(broadcast(t0d), col("t0_id") === col("d0_id"), "left")
         .join(broadcast(t1d), col("t1x") === col("d1_id"), "left")
@@ -1094,19 +1033,9 @@ object RealAbiOps extends graft.QueryModule {
   private val c1UniV3BurnCollect = QueryDef(
     "c1_univ3_burn_collect",
     (s, dir) => {
-      val up = pools(s).filter(col("protocol") === "uniswap_v3")
-        .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
-      val base = tickCols(tracesTable(s, dir)
-        .filter(col("selector") === SelBurn)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
-        .join(broadcast(up), col("to_address") === col("p_addr"))
-        .withColumn("t1x",
-          when((col("q6l") + col("p2l")) % 41 === 0,
-            lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id"))))
+      val up = pairsOf(s, "uniswap_v3")
+      val base = v3PositionFrames(s, dir, SelBurn, up)
         .withColumn("is_collect", size(col("trace_address")) === 2)
-        .withColumn("ret_data",
-          unhex(concat(word(col("q6l")), word(col("p2l")))))
       val burns = v3BurnDecode(burnCalldata(base.filter(!col("is_collect"))))
         .withColumn("action", lit("burn"))
         .withColumn("recipient", concat(lit("0" * 8), col("from_address")))
@@ -1120,10 +1049,8 @@ object RealAbiOps extends graft.QueryModule {
         "req_ok", "a0_ret", "a1_ret")
       val all = burns.select(shape.map(col): _*)
         .unionByName(colls.select(shape.map(col): _*))
-      val t0d = tokens(s).select(col("token_id").as("d0_id"),
-        col("decimals").as("dec0"))
-      val t1d = tokens(s).select(col("token_id").as("d1_id"),
-        col("decimals").as("dec1"))
+      val t0d = decimalsOf(s, "d0_id", "dec0")
+      val t1d = decimalsOf(s, "d1_id", "dec1")
       all
         .join(broadcast(t0d), col("t0_id") === col("d0_id"), "left")
         .join(broadcast(t1d), col("t1x") === col("d1_id"), "left")
@@ -1207,6 +1134,12 @@ object RealAbiOps extends graft.QueryModule {
     * Scale shape: the deployment scan is dimension-sized; all joins
     * broadcast; the string/address decodes are offset-followed byte
     * reads inside codegen. */
+  private[graft] val CreatePoolCall =
+    calldata(address("ta"), address("tb"), uint("fee_dec"))
+  private[graft] val CreatePoolRet = words(address("pool_dec"))
+  /** Dodo DVM/DSP/DPP NewPool data: base, quote, creator, pool. */
+  private[graft] val NewPoolLog = words(address("ta"), address("tb"),
+    address("creator_dec"), address("pool_dec"))
   /** C3 (discovery breadth — four more real `discovery_impl!` layouts):
     *
     *   - Uniswap V3 `createPool(tokenA, tokenB, fee)`
@@ -1230,10 +1163,7 @@ object RealAbiOps extends graft.QueryModule {
   private val c3DiscoveryBreadth = QueryDef(
     "c3_discovery_breadth",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelBurn)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelBurn)
         .withColumn("arm", (col("q6l") + col("p2l")) % 4)
         .withColumn("is_factory", col("p2l") % 4 =!= 0)
         .withColumn("protocol",
@@ -1247,29 +1177,20 @@ object RealAbiOps extends graft.QueryModule {
         array(lit(500L), lit(3000L), lit(10000L)),
         (col("p2l") % 3 + 1).cast("int"))
       val packed = t
-        .withColumn("calldata",
-          when(col("arm") === 0, unhex(concat(col("selector"),
-            lit("0" * 32), tokA, lit("0" * 32), tokB, word(feeTier)))))
-        .withColumn("ret_data",
-          when(col("arm") === 0, unhex(concat(lit("0" * 32), dep))))
-        .withColumn("log_data",
-          when(col("arm") =!= 0, unhex(concat(
-            lit("0" * 32), tokA, lit("0" * 32), tokB,
-            lit("0" * 32), col("from_address"), lit("0" * 32), dep))))
+        .withColumn("calldata", when(col("arm") === 0,
+          CreatePoolCall.pack(col("selector"), tokA, tokB, feeTier)))
+        .withColumn("ret_data", when(col("arm") === 0, CreatePoolRet.pack(dep)))
+        .withColumn("log_data", when(col("arm") =!= 0,
+          NewPoolLog.pack(tokA, tokB, col("from_address"), dep)))
+      def call(name: String) = CreatePoolCall.read(col("calldata"), name)
+      def log(name: String) = NewPoolLog.read(col("log_data"), name)
       val dec = packed
-        .withColumn("ta",
-          when(col("arm") === 0, abi_address(col("calldata"), 0))
-            .otherwise(abi_log_address(col("log_data"), 0)))
-        .withColumn("tb",
-          when(col("arm") === 0, abi_address(col("calldata"), 1))
-            .otherwise(abi_log_address(col("log_data"), 1)))
-        .withColumn("fee_dec",
-          when(col("arm") === 0, abi_word(col("calldata"), 2)))
-        .withColumn("pool_dec",
-          when(col("arm") === 0, abi_log_address(col("ret_data"), 0))
-            .otherwise(abi_log_address(col("log_data"), 3)))
-        .withColumn("creator_dec",
-          when(col("arm") =!= 0, abi_log_address(col("log_data"), 2)))
+        .withColumn("ta", when(col("arm") === 0, call("ta")).otherwise(log("ta")))
+        .withColumn("tb", when(col("arm") === 0, call("tb")).otherwise(log("tb")))
+        .withColumn("fee_dec", when(col("arm") === 0, call("fee_dec")))
+        .withColumn("pool_dec", when(col("arm") === 0,
+          CreatePoolRet.read(col("ret_data"), "pool_dec")).otherwise(log("pool_dec")))
+        .withColumn("creator_dec", when(col("arm") =!= 0, log("creator_dec")))
         // createPair/createPool canonical order: swap when tokenA > tokenB
         // (uniswap/discovery.rs:11-14, :30-34); dodo keeps (base, quote)
         .withColumn("swapped", col("arm") === 0 && col("ta") > col("tb"))
@@ -1321,10 +1242,18 @@ object RealAbiOps extends graft.QueryModule {
           AS n_pair_ok
       FROM db2 GROUP BY 1 ORDER BY 1"""))
 
+  /** `deploy_plain_pool(string _name, string _symbol, address[4] _coins,
+    * uint256 _A, uint256 _fee)`: the fixed `_coins` array is inline. */
+  private[graft] val PlainPoolCall = calldata(string("name"), string("sym"),
+    address("coin0"), address("coin1"), address("coin2"), address("coin3"),
+    uint("amp"), uint("fee"))
+  /** `deploy_metapool(address _base_pool, string _name, string _symbol,
+    * address _coin, uint256 _A, uint256 _fee)`. */
+  private[graft] val MetaPoolCall = calldata(address("base_addr"),
+    string("name"), string("sym"), address("meta_coin"), uint("amp"), uint("fee"))
   private val c3CurveFactory = QueryDef(
     "c3_curve_factory",
     (s, dir) => {
-      import graft.functions.AbiCalldata.{abi_array_len, abi_selector}
       val tokReg = s.range(TokRefSpace).select(
         md5(concat(lit("tok:"), col("id"))).as("r_addr"),
         col("id").as("r_id"))
@@ -1336,47 +1265,22 @@ object RealAbiOps extends graft.QueryModule {
         case 2 => (col("t0_id") + 7) % TokRefSpace
         case _ => (col("t0_id") + 13) % TokRefSpace
       }
-      def coinWord(k: Int) =
-        when(col("n_src") > k,
-          concat(lit("0" * 32), md5(concat(lit("tok:"), coinId(k)))))
-          .otherwise(lit("0" * 64))
-      def strTail(c: Column) =
-        concat(word(length(c).cast("long")), rpad(lower(hex(c)), 64, "0"))
-      def strDec(offCol: String, lenCol: String) = expr(
-        // gate on the length head (NULL when the offset word failed
-        // abi_array_len's bounds check) so a corrupt offset NULLs instead
-        // of overflowing the +37 cast — same contract as
-        // RealAbiExtOps.compoundInitDecode
-        s"""IF($lenCol IS NULL OR $lenCol < 0
-           | OR $lenCol > octet_length(calldata), NULL, CAST(substring(calldata,
-           | CAST($offCol + 37 AS INT), CAST($lenCol AS INT)) AS STRING))"""
-          .stripMargin.replace("\n", ""))
+      // an unused coin slot is the zero address
+      def coin(k: Int) =
+        when(col("n_src") > k, md5(concat(lit("tok:"), coinId(k)))).otherwise(lit(""))
       val aCol = col("pool_id") * 100 + 1
       val feeCol = col("pool_id") % 100
 
-      // plain arm: head = nameOff ‖ symOff ‖ coins[4] ‖ A ‖ fee (8 words),
-      // tail = len‖content per string
       val plain = pools(s).filter(col("pool_id") % 2 === 0)
         .withColumn("n_src", lit(2L) + col("pool_id") % 3)
         .withColumn("fsel", substring(md5(lit("fac:curve_plain")), 1, 8))
-        .withColumn("calldata", unhex(concat(col("fsel"),
-          word(lit(256L)), word(lit(320L)),
-          coinWord(0), coinWord(1), coinWord(2), coinWord(3),
-          word(aCol), word(feeCol),
-          strTail(nameStr), strTail(symStr))))
-      val pdec = plain
-        .withColumn("sel_ok", abi_selector(col("calldata")) === col("fsel"))
-        .withColumn("name_off", abi_word(col("calldata"), 0))
-        .withColumn("name_len", abi_array_len(col("calldata"), 0))
-        .withColumn("sym_off", abi_word(col("calldata"), 1))
-        .withColumn("sym_len", abi_array_len(col("calldata"), 1))
-        .withColumn("dec_name", strDec("name_off", "name_len"))
-        .withColumn("dec_sym", strDec("sym_off", "sym_len"))
-        .withColumn("coin_arr", array(
-          abi_address(col("calldata"), 2), abi_address(col("calldata"), 3),
-          abi_address(col("calldata"), 4), abi_address(col("calldata"), 5)))
-        .withColumn("amp", abi_word(col("calldata"), 6))
-        .withColumn("fee", abi_word(col("calldata"), 7))
+        .withColumn("calldata", PlainPoolCall.pack(col("fsel"), nameStr, symStr,
+          coin(0), coin(1), coin(2), coin(3), aCol, feeCol))
+      val pdec = PlainPoolCall.decode(plain, "calldata")
+        .withColumn("sel_ok",
+          PlainPoolCall.selector(col("calldata")) === col("fsel"))
+        .withColumn("coin_arr",
+          array(col("coin0"), col("coin1"), col("coin2"), col("coin3")))
       // the zero-address filter IS the variable length (parse_plain_pool)
       val pTok = pdec
         .select(col("pool_id"), explode(col("coin_arr")).as("addr"))
@@ -1388,37 +1292,23 @@ object RealAbiOps extends graft.QueryModule {
           (count(col("r_id")) === count(lit(1))).as("resolved"))
       val pRec = pdec.join(pTok, "pool_id")
         .select(lit("plain_pool").as("kind"),
-          (col("dec_name") === nameStr &&
+          (col("name") === nameStr &&
             col("name_len") === length(nameStr)).as("name_ok"),
-          (col("dec_sym") === symStr &&
+          (col("sym") === symStr &&
             col("sym_len") === length(symStr)).as("sym_ok"),
           (col("sel_ok") && col("amp") === aCol && col("fee") === feeCol)
             .as("shape_ok"),
           col("resolved"), col("n_tokens"), col("sum_ids"))
 
-      // metapool arm: head = basePool ‖ nameOff ‖ symOff ‖ coin ‖ A ‖ fee
-      // (6 words); tokens = query_base_pool(base) ++ [_coin]
+      // metapool arm: tokens = query_base_pool(base) ++ [_coin]
       val meta = pools(s).filter(col("pool_id") % 2 === 1)
         .withColumn("fsel", substring(md5(lit("fac:curve_meta")), 1, 8))
-        .withColumn("calldata", unhex(concat(col("fsel"),
-          lit("0" * 32),
+        .withColumn("calldata", MetaPoolCall.pack(col("fsel"),
           md5(concat(lit("pool:"), (col("pool_id") + 1) % NumPools)),
-          word(lit(192L)), word(lit(256L)),
-          lit("0" * 32), md5(concat(lit("tok:"), col("t1_id"))),
-          word(aCol), word(feeCol),
-          strTail(nameStr), strTail(symStr))))
-      val mdec = meta
-        .withColumn("sel_ok", abi_selector(col("calldata")) === col("fsel"))
-        .withColumn("base_addr", abi_address(col("calldata"), 0))
-        .withColumn("name_off", abi_word(col("calldata"), 1))
-        .withColumn("name_len", abi_array_len(col("calldata"), 1))
-        .withColumn("sym_off", abi_word(col("calldata"), 2))
-        .withColumn("sym_len", abi_array_len(col("calldata"), 2))
-        .withColumn("dec_name", strDec("name_off", "name_len"))
-        .withColumn("dec_sym", strDec("sym_off", "sym_len"))
-        .withColumn("meta_coin", abi_address(col("calldata"), 3))
-        .withColumn("amp", abi_word(col("calldata"), 4))
-        .withColumn("fee", abi_word(col("calldata"), 5))
+          nameStr, symStr, md5(concat(lit("tok:"), col("t1_id"))), aCol, feeCol))
+      val mdec = MetaPoolCall.decode(meta, "calldata")
+        .withColumn("sel_ok",
+          MetaPoolCall.selector(col("calldata")) === col("fsel"))
       val baseDim = pools(s).select(col("address").as("b_addr"),
         col("pool_id").as("b_id"), col("t0_id").as("b_t0"),
         col("t1_id").as("b_t1"))
@@ -1434,9 +1324,9 @@ object RealAbiOps extends graft.QueryModule {
           when(col("n_base") >= 4, (col("b_t0") + 13) % TokRefSpace)
             .otherwise(0L))
         .select(lit("metapool").as("kind"),
-          (col("dec_name") === nameStr &&
+          (col("name") === nameStr &&
             col("name_len") === length(nameStr)).as("name_ok"),
-          (col("dec_sym") === symStr &&
+          (col("sym") === symStr &&
             col("sym_len") === length(symStr)).as("sym_ok"),
           (col("sel_ok") && col("amp") === aCol && col("fee") === feeCol)
             .as("shape_ok"),
@@ -1484,6 +1374,11 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Aave V2 flashLoan: parallel dynamic arrays + repayment matching ──────
 
+  private[graft] val FlashLoanCall = calldata(address("receiver"),
+    arr("n_assets", AbiRead.Address, "asset0", "asset1", "asset2"),
+    arr("n_amounts", AbiRead.Uint, "amt0", "amt1", "amt2"),
+    arr("n_modes", AbiRead.Uint, "mode0", "mode1", "mode2"),
+    address("on_behalf"), bytes("params"), uint("ref_code"))
   /** The flashLoan decode core on any frame with `calldata`:
     * `flashLoan(address receiverAddress, address[] assets, uint256[]
     * amounts, uint256[] modes, address onBehalfOf, bytes params, uint16
@@ -1494,23 +1389,8 @@ object RealAbiOps extends graft.QueryModule {
     * ([[graft.functions.AbiCalldata.abi_array_address]]). Up to three elements decoded
     * statically (the fixture's width; a wider frame would NULL past
     * elem2 by the length bound, never misread). */
-  private[graft] def flashLoanDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("receiver", abi_address(col("calldata"), 0))
-    .withColumn("n_assets", abi_array_len(col("calldata"), 1))
-    .withColumn("n_amounts", abi_array_len(col("calldata"), 2))
-    .withColumn("n_modes", abi_array_len(col("calldata"), 3))
-    .withColumn("asset0", abi_array_address(col("calldata"), 1, 0))
-    .withColumn("asset1", abi_array_address(col("calldata"), 1, 1))
-    .withColumn("asset2", abi_array_address(col("calldata"), 1, 2))
-    .withColumn("amt0", abi_array_elem(col("calldata"), 2, 0))
-    .withColumn("amt1", abi_array_elem(col("calldata"), 2, 1))
-    .withColumn("amt2", abi_array_elem(col("calldata"), 2, 2))
-    .withColumn("mode0", abi_array_elem(col("calldata"), 3, 0))
-    .withColumn("mode1", abi_array_elem(col("calldata"), 3, 1))
-    .withColumn("mode2", abi_array_elem(col("calldata"), 3, 2))
-    .withColumn("on_behalf", abi_address(col("calldata"), 4))
-    .withColumn("n_params", abi_array_len(col("calldata"), 5))
-    .withColumn("ref_code", abi_word(col("calldata"), 6))
+  private[graft] def flashLoanDecode(t: org.apache.spark.sql.DataFrame) =
+    FlashLoanCall.decode(t, "calldata")
 
   /** Shared flashLoan fixture packing + pair explode. Frames:
     * SelCurveSwap traces play `flashLoan` calls on the Aave pool (the
@@ -1521,30 +1401,16 @@ object RealAbiOps extends graft.QueryModule {
     * classification (aave/v2.rs:50-57) — the opposite arm of the C1
     * whole-row `?` ladder. */
   private def flashLoanPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val t = tracesTable(s, dir)
-      .filter(col("selector") === SelCurveSwap)
-      .withColumn("q6l", col("q6").cast("long"))
-      .withColumn("p2l", col("p2").cast("long"))
+    val t = framesOf(s, dir, SelCurveSwap)
       .withColumn("n_src", lit(1L) + (col("q6l") + col("p2l")) % 3)
     def aid(k: Int) = (col("tok_id") + 11 * k) % TokRefSpace
-    def assetWord(k: Int) = when(col("n_src") > k,
-      concat(lit("0" * 32), md5(concat(lit("tok:"), aid(k))))).otherwise(lit(""))
-    def amtWord(k: Int) = when(col("n_src") > k,
-      word(col("q6l") + 1000000L * k)).otherwise(lit(""))
-    def modeWord(k: Int) = when(col("n_src") > k,
-      word((col("p2l") + k) % 3)).otherwise(lit(""))
-    val packed = t.withColumn("calldata", unhex(concat(col("selector"),
-      lit("0" * 32), col("from_address"), // receiverAddress
-      word(lit(224L)), // assets offset (7 head words)
-      word(lit(256L) + col("n_src") * 32), // amounts offset
-      word(lit(288L) + col("n_src") * 64), // modes offset
-      lit("0" * 32), col("from_address"), // onBehalfOf
-      word(lit(320L) + col("n_src") * 96), // params offset
-      word(col("p2l") % 65536), // uint16 referralCode
-      word(col("n_src")), assetWord(0), assetWord(1), assetWord(2),
-      word(col("n_src")), amtWord(0), amtWord(1), amtWord(2),
-      word(col("n_src")), modeWord(0), modeWord(1), modeWord(2),
-      word(lit(0L))))) // bytes params: len 0
+    val n = col("n_src")
+    val packed = t.withColumn("calldata", FlashLoanCall.pack(col("selector"),
+      col("from_address"), // receiverAddress
+      elems(n, (0 to 2).map(k => md5(concat(lit("tok:"), aid(k)))): _*),
+      elems(n, (0 to 2).map(k => col("q6l") + 1000000L * k): _*),
+      elems(n, (0 to 2).map(k => (col("p2l") + k) % 3): _*),
+      col("from_address"), lit(""), col("p2l") % 65536)) // onBehalfOf, params, referralCode
     val dec = flashLoanDecode(packed)
       .withColumn("frame_ok",
         col("receiver") === concat(lit("0" * 8), col("from_address")) &&
@@ -1552,18 +1418,13 @@ object RealAbiOps extends graft.QueryModule {
         col("n_assets") === col("n_src") &&
         col("n_amounts") === col("n_src") &&
         col("n_modes") === col("n_src") &&
-        col("n_params") === 0 && col("ref_code") === col("p2l") % 65536)
+        col("params_len") === 0 && col("ref_code") === col("p2l") % 65536)
     // pair explode: element decoders NULL past the decoded length, so
     // the length bound (not n_src) drives which pairs exist
     dec.select(col("tx_hash"), col("trace_idx").as("fl_idx"),
       col("n_assets"), col("frame_ok"),
-      explode(array(
-        struct(col("asset0").as("asset"), col("amt0").as("amt"),
-          col("mode0").as("mode")),
-        struct(col("asset1").as("asset"), col("amt1").as("amt"),
-          col("mode1").as("mode")),
-        struct(col("asset2").as("asset"), col("amt2").as("amt"),
-          col("mode2").as("mode")))).as("pair"))
+      explode(array((0 to 2).map(k => struct(col(s"asset$k").as("asset"),
+        col(s"amt$k").as("amt"), col(s"mode$k").as("mode"))): _*)).as("pair"))
       .filter(col("pair.asset").isNotNull)
       .select(col("tx_hash"), col("fl_idx"), col("n_assets"), col("frame_ok"),
         col("pair.asset").as("asset"), col("pair.amt").as("amt"),
@@ -1597,8 +1458,7 @@ object RealAbiOps extends graft.QueryModule {
   private val c1AaveFlashloan = QueryDef(
     "c1_aave_flashloan",
     (s, dir) => {
-      val tk = tokens(s).select(col("token_id").as("tk_id"),
-        col("decimals").as("tk_dec"))
+      val tk = decimalsOf(s, "tk_id", "tk_dec")
       flashLoanPairs(s, dir)
         .join(broadcast(tk),
           substring(col("asset"), 9, 32) === md5(concat(lit("tok:"), col("tk_id"))), "left")
@@ -1644,8 +1504,7 @@ object RealAbiOps extends graft.QueryModule {
   private val c5FlashloanReal = QueryDef(
     "c5_flashloan_real",
     (s, dir) => {
-      val tk = tokens(s).select(col("token_id").as("tk_id"),
-        col("decimals").as("tk_dec"))
+      val tk = decimalsOf(s, "tk_id", "tk_dec")
       val loans = flashLoanPairs(s, dir)
         .join(broadcast(tk),
           substring(col("asset"), 9, 32) === md5(concat(lit("tok:"), col("tk_id"))))
@@ -1701,6 +1560,9 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Cowswap GPv2 settle: Trade-log batch decode ───────────────────────────
 
+  private[graft] val TradeTopic = words(address("owner_dec"))
+  private[graft] val TradeLog = words(address("sell_tok"), address("buy_tok"),
+    uint("sell_amt"), uint("buy_amt"), uint("fee_amt"), bytes("uid"))
   /** The Trade EVENT decode core on any frame with (topic1, log_data):
     * `Trade(address indexed owner, address sellToken, address buyToken,
     * uint256 sellAmount, uint256 buyAmount, uint256 feeAmount, bytes
@@ -1710,30 +1572,9 @@ object RealAbiOps extends graft.QueryModule {
     * bytes member (data word 5 is its offset; a real GPv2 orderUid is
     * exactly 56 bytes: digest ‖ owner ‖ validTo). The offset/length/
     * content walk reads through the DECODED offset. */
-  private[graft] def tradeLogDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("owner_dec", abi_log_address(col("topic1"), 0))
-    .withColumn("sell_tok", abi_log_address(col("log_data"), 0))
-    .withColumn("buy_tok", abi_log_address(col("log_data"), 1))
-    .withColumn("sell_amt", abi_log_word(col("log_data"), 2))
-    .withColumn("buy_amt", abi_log_word(col("log_data"), 3))
-    .withColumn("fee_amt", abi_log_word(col("log_data"), 4))
-    .withColumn("uid_off", abi_log_word(col("log_data"), 5))
-    // a corrupt offset or length word must NULL the walk, never throw
-    // (ANSI CAST(huge AS INT) raises) - gate each cast on buffer bounds,
-    // the same contract as abi_array_len and the strDec string walks; the
-    // length itself needs try_cast: conv yields an UNSIGNED decimal, so a
-    // sign-bit length word (>= 2^63, e.g. 0xFF*8) overflows a plain BIGINT
-    // cast even when the offset gate passes
-    .withColumn("uid_len", expr(
-      """IF(uid_off IS NULL OR uid_off < 0
-        | OR uid_off > octet_length(log_data) - 32, NULL,
-        | try_cast(conv(hex(substring(log_data, CAST(uid_off + 25 AS INT),
-        | 8)), 16, 10) AS BIGINT))""".stripMargin.replace("\n", "")))
-    .withColumn("uid_hex", expr(
-      """IF(uid_len IS NULL OR uid_len < 0
-        | OR uid_len > octet_length(log_data) - 32 - uid_off,
-        | NULL, lower(hex(substring(log_data, CAST(uid_off + 33 AS INT),
-        | CAST(uid_len AS INT)))))""".stripMargin.replace("\n", "")))
+  private[graft] def tradeLogDecode(t: org.apache.spark.sql.DataFrame) =
+    TradeLog.decode(TradeTopic.decode(t, "topic1"), "log_data")
+      .withColumn("uid_off", TradeLog.offset(col("log_data"), "uid"))
 
   /** C5 (Cowswap `settle` on REAL bytes): the batch classifier reads the
     * user orders from the TRADE EVENT LOGS, not the settle calldata —
@@ -1776,14 +1617,12 @@ object RealAbiOps extends graft.QueryModule {
         md5(concat(lit(s"uid:$k:b:"), col("tx_hash"))),
         md5(concat(lit(s"uid:$k:c:"), col("tx_hash"))),
         md5(concat(lit(s"uid:$k:d:"), col("tx_hash")))), 1, 112)
-      def topicK(k: Int) = when(col("n_trades") > k, unhex(concat(
-        lit("0" * 32), md5(concat(lit("eoa:"), (col("p2l") + k) % 12)))))
-      def dataK(k: Int) = when(col("n_trades") > k, unhex(concat(
-        lit("0" * 32), md5(concat(lit("tok:"), sid(k))),
-        lit("0" * 32), md5(concat(lit("tok:"), bid(k))),
-        word(col("q6l") + 1000L * k), word(col("p2l") + 1000L * k),
-        word((col("q6l") + k) % 1000),
-        word(lit(192L)), word(lit(56L)), rpad(uidSrc(k), 128, "0"))))
+      def topicK(k: Int) = when(col("n_trades") > k,
+        TradeTopic.pack(md5(concat(lit("eoa:"), (col("p2l") + k) % 12))))
+      def dataK(k: Int) = when(col("n_trades") > k, TradeLog.pack(
+        md5(concat(lit("tok:"), sid(k))), md5(concat(lit("tok:"), bid(k))),
+        col("q6l") + 1000L * k, col("p2l") + 1000L * k, (col("q6l") + k) % 1000,
+        uidSrc(k)))
       val frames = base.select(col("tx_hash"), col("trace_idx"),
         col("n_trades"), col("q6l"), col("p2l"), col("tok_id"),
         explode(array((0 to 2).map(k =>
@@ -1810,7 +1649,7 @@ object RealAbiOps extends graft.QueryModule {
             .otherwise(0L)).as("n_missing"),
           sum(when(col("owner_dec") === col("owner_exp"), 1L).otherwise(0L))
             .as("n_owner_ok"),
-          sum(when(col("uid_len") === 56 && col("uid_hex") === col("uid_src"),
+          sum(when(col("uid_len") === 56 && col("uid") === col("uid_src"),
             1L).otherwise(0L)).as("n_uid_ok"),
           dsum(when(col("s_dec").isNotNull && col("b_dec").isNotNull,
             col("sell_amt").cast("double") / pow10d(col("s_dec")))
@@ -1940,20 +1779,9 @@ object RealAbiOps extends graft.QueryModule {
     (s, dir) => {
       val up = pools(s)
         .select(col("address").as("p_addr"), col("t0_id"), col("t1_id"))
-      val t0d = tokens(s).select(col("token_id").as("d0_id"),
-        col("decimals").as("dec0"))
-      val t1d = tokens(s).select(col("token_id").as("d1_id"),
-        col("decimals").as("dec1"))
-      def v3Frames(sel: String) = tickCols(tracesTable(s, dir)
-        .filter(col("selector") === sel)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
-        .join(broadcast(up), col("to_address") === col("p_addr"))
-        .withColumn("t1x",
-          when((col("q6l") + col("p2l")) % 41 === 0,
-            lit(NumTokens.toLong) + col("p2l") % 2).otherwise(col("t1_id"))))
-        .withColumn("ret_data",
-          unhex(concat(word(col("q6l")), word(col("p2l")))))
+      val t0d = decimalsOf(s, "d0_id", "dec0")
+      val t1d = decimalsOf(s, "d1_id", "dec1")
+      def v3Frames(sel: String) = v3PositionFrames(s, dir, sel, up)
       // try_fetch_token_info? — INNER joins: a failed classification is
       // a frame that never becomes an action
       def classify(dec: org.apache.spark.sql.DataFrame) = dec
@@ -2064,6 +1892,17 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── MakerDssFlash: the ERC-3156 single-asset mixed-source loan ────────────
 
+  /** `flashLoan(address receiver, address token, uint256 amount, bytes
+    * data)`. */
+  private[graft] val DssFlashCall = calldata(address("recv_cd"),
+    address("tok_cd"), uint("amt_cd"), bytes(""))
+  /** FlashLoan's indexed receiver topic, then its data words. */
+  private[graft] val DssFlashTopic = words(address("recv_topic"))
+  private[graft] val DssFlashLog =
+    words(address("tok_log"), uint("amt_log"), uint("fee_log"))
+  private[graft] def dssFlashDecode(t: org.apache.spark.sql.DataFrame) =
+    DssFlashLog.decode(DssFlashTopic.decode(
+      DssFlashCall.decode(t, "calldata"), "topic1"), "log_data")
   /** C1 (MakerDssFlash `flashLoan` → FlashLoan): the ERC-3156 shape —
     * `flashLoan(receiver, token, amount, data)` — where the classified
     * fields come from THREE sources (maker/dss_flash.rs:6-39): token and
@@ -2079,36 +1918,19 @@ object RealAbiOps extends graft.QueryModule {
   private val c1DssFlash = QueryDef(
     "c1_dss_flash",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelLiquidation)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelLiquidation)
         .withColumn("has_log", col("p2l") % 7 =!= 0)
         .withColumn("bucket", col("tok_id") % 5)
       val tokA = md5(concat(lit("tok:"), col("tok_id")))
       val packed = t
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("from_address"), // receiver
-          lit("0" * 32), tokA, // token
-          word(col("q6l")), // amount
-          word(lit(128L)), word(lit(0L))))) // bytes data: len 0
+        .withColumn("calldata", DssFlashCall.pack(col("selector"),
+          col("from_address"), tokA, col("q6l"), lit("")))
         .withColumn("topic1",
-          when(col("has_log"),
-            unhex(concat(lit("0" * 32), col("from_address")))))
-        .withColumn("log_data",
-          when(col("has_log"), unhex(concat(
-            lit("0" * 32), tokA, word(col("q6l")),
-            word(col("p2l") % 500)))))
-      val dec = packed
-        .withColumn("recv_cd", abi_address(col("calldata"), 0))
-        .withColumn("tok_cd", abi_address(col("calldata"), 1))
-        .withColumn("amt_cd", abi_word(col("calldata"), 2))
-        .withColumn("recv_topic", abi_log_address(col("topic1"), 0))
-        .withColumn("tok_log", abi_log_address(col("log_data"), 0))
-        .withColumn("amt_log", abi_log_word(col("log_data"), 1))
-        .withColumn("fee_log", abi_log_word(col("log_data"), 2))
-      val tk = tokens(s).select(col("token_id").as("tk_id"),
-        col("decimals").as("tk_dec"))
+          when(col("has_log"), DssFlashTopic.pack(col("from_address"))))
+        .withColumn("log_data", when(col("has_log"),
+          DssFlashLog.pack(tokA, col("q6l"), col("p2l") % 500)))
+      val dec = dssFlashDecode(packed)
+      val tk = decimalsOf(s, "tk_id", "tk_dec")
       dec
         .join(broadcast(tk),
           substring(col("tok_cd"), 9, 32) ===
@@ -2162,6 +1984,11 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Dodo buyShares: return-data Mint with LAZY per-side fetch ─────────────
 
+  private[graft] val BuySharesCall = calldata(address("to_dec"))
+  private[graft] val BuySharesRet =
+    words(int("shares_dec"), int("base_dec"), int("quote_dec"))
+  private[graft] def buySharesDecode(t: org.apache.spark.sql.DataFrame) =
+    BuySharesRet.decode(BuySharesCall.decode(t, "calldata"), "ret_data")
   /** C1 (Dodo DSP `buyShares` → Mint): the amounts ride the RETURN data
     * — `buyShares(address to)` returns `(shares, baseInput, quoteInput)`
     * (dodo/dodo_v2.rs:109-156) — and the token fetches are LAZY: each
@@ -2176,30 +2003,22 @@ object RealAbiOps extends graft.QueryModule {
   private val c1DodoShares = QueryDef(
     "c1_dodo_shares",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelMint)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelMint)
         .withColumn("base_in",
           when(col("p2l") % 3 === 0, lit(0L)).otherwise(col("q6l")))
         .withColumn("quote_in",
           when(col("p2l") % 5 === 0, lit(0L)).otherwise(col("q6l") + 7))
       val packed = t
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("from_address")))) // to
-        .withColumn("ret_data", unhex(concat(word(col("p2l")), // shares
-          word(col("base_in")), word(col("quote_in")))))
-        .withColumn("to_dec", abi_address(col("calldata"), 0))
-        .withColumn("shares_dec", abi_ret_int(col("ret_data"), 0))
-        .withColumn("base_dec", abi_ret_int(col("ret_data"), 1))
-        .withColumn("quote_dec", abi_ret_int(col("ret_data"), 2))
+        .withColumn("calldata",
+          BuySharesCall.pack(col("selector"), col("from_address")))
+        .withColumn("ret_data",
+          BuySharesRet.pack(col("p2l"), col("base_in"), col("quote_in")))
+      val dec = buySharesDecode(packed)
       val po = pools(s).select(col("address").as("p_addr"),
         col("t0_id").as("p_t0"), col("t1_id").as("p_t1"))
-      val tkA = tokens(s).select(col("token_id").as("a_id"),
-        col("decimals").as("a_dec"))
-      val tkB = tokens(s).select(col("token_id").as("b_id"),
-        col("decimals").as("b_dec"))
-      packed
+      val tkA = decimalsOf(s, "a_id", "a_dec")
+      val tkB = decimalsOf(s, "b_id", "b_dec")
+      dec
         .join(broadcast(po), col("to_address") === col("p_addr"))
         .withColumn("swapped", md5(concat(lit("tok:"), col("p_t0"))) >
           md5(concat(lit("tok:"), col("p_t1"))))
@@ -2273,19 +2092,17 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── ZeroX fillOtcOrder: log-only swap + DELEGATED-log collection ──────────
 
+  private[graft] val OtcFilledLog = words(bytes32(""), address("maker_dec"),
+    address("taker_dec"), address("maker_tok"), address("taker_tok"),
+    uint("maker_fill"), uint("taker_fill"))
   /** The OtcOrderFilled decode core on any frame with `log_data`:
     * `OtcOrderFilled(bytes32 orderHash, address maker, address taker,
     * address makerToken, address takerToken, uint128
     * makerTokenFilledAmount, uint128 takerTokenFilledAmount)` — NOTHING
     * indexed, all seven fields ride the data section
     * (classifier-abis/zero-x/ZeroXOtcOrdersFeature.json). */
-  private[graft] def otcFilledDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("maker_dec", abi_log_address(col("log_data"), 1))
-    .withColumn("taker_dec", abi_log_address(col("log_data"), 2))
-    .withColumn("maker_tok", abi_log_address(col("log_data"), 3))
-    .withColumn("taker_tok", abi_log_address(col("log_data"), 4))
-    .withColumn("maker_fill", abi_log_word(col("log_data"), 5))
-    .withColumn("taker_fill", abi_log_word(col("log_data"), 6))
+  private[graft] def otcFilledDecode(t: org.apache.spark.sql.DataFrame) =
+    OtcFilledLog.decode(t, "log_data")
 
   /** C1 (ZeroX `fillOtcOrder` → Swap): the swap decodes ENTIRELY from
     * the OtcOrderFilled EVENT — `from = recipient = logs.taker`, amounts
@@ -2321,15 +2138,14 @@ object RealAbiOps extends graft.QueryModule {
       val logs = tr
         .filter((col("trace_idx") % 5 === 0 && col("p2l") % 2 === 0) ||
           (col("trace_idx") % 5 === 1 && col("p2l") % 2 === 1))
-        .withColumn("log_data", unhex(concat(
-          md5(concat(lit("oh:"), col("tx_hash"), col("trace_idx"))),
-          md5(concat(lit("oh2:"), col("tx_hash"), col("trace_idx"))),
-          lit("0" * 32), md5(concat(lit("mkr:"), col("p2l") % 9)),
-          lit("0" * 32), col("from_address"), // taker
-          lit("0" * 32),
+        .withColumn("log_data", OtcFilledLog.pack(
+          concat(md5(concat(lit("oh:"), col("tx_hash"), col("trace_idx"))),
+            md5(concat(lit("oh2:"), col("tx_hash"), col("trace_idx")))),
+          md5(concat(lit("mkr:"), col("p2l") % 9)),
+          col("from_address"), // taker
           md5(concat(lit("tok:"), (col("tok_id") + 1) % TokRefSpace)),
-          lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))),
-          word(col("q6l")), word(col("p2l") + 1))))
+          md5(concat(lit("tok:"), col("tok_id"))),
+          col("q6l"), col("p2l") + 1))
         .select(col("tx_hash").as("l_tx"), col("trace_idx").as("l_idx"),
           col("log_data"), col("tok_id").as("l_tok"))
       val cand = roots.select(col("tx_hash"), col("f_idx"), col("f_from"),
@@ -2342,10 +2158,8 @@ object RealAbiOps extends graft.QueryModule {
         .filter(col("rn") === 1)
         .select(col("tx_hash"), col("f_idx"), col("l_idx"),
           col("log_data"), col("l_tok"))
-      val tkIn = tokens(s).select(col("token_id").as("in_id"),
-        col("decimals").as("in_dec"))
-      val tkOut = tokens(s).select(col("token_id").as("out_id"),
-        col("decimals").as("out_dec"))
+      val tkIn = decimalsOf(s, "in_id", "in_dec")
+      val tkOut = decimalsOf(s, "out_id", "out_dec")
       otcFilledDecode(
         roots.join(firstLog, Seq("tx_hash", "f_idx"), "left"))
         .withColumn("log_src",
@@ -2424,6 +2238,10 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Uniswap V2 mint/burn: registry-SORTED pair + strict failure ladder ────
 
+  /** `mint(address to)` / `burn(address to)`; Mint/Burn carry the two
+    * amounts. */
+  private[graft] val V2MintCall = calldata(address("recip_dec"))
+  private[graft] val V2MintLog = words(uint("am0_dec"), uint("am1_dec"))
   /** C1 (Uniswap V2 `mint`/`burn` → Mint/Burn): the thinnest real layout
     * — `mint(address to)` / `burn(address to)` carry ONE calldata word;
     * both amounts ride the Mint/Burn EVENT's two data words
@@ -2453,22 +2271,15 @@ object RealAbiOps extends graft.QueryModule {
         .withColumn("q6l", col("q6").cast("long"))
         .withColumn("p2l", col("p2").cast("long"))
         .withColumn("has_log", col("p2l") % 7 =!= 0)
-      val packed = t
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("from_address")))) // to
+      val packed = V2MintLog.decode(V2MintCall.decode(t
+        .withColumn("calldata", V2MintCall.pack(col("selector"), col("from_address")))
         .withColumn("log_data",
-          when(col("has_log"),
-            unhex(concat(word(col("q6l")), word(col("p2l")))))
-            .otherwise(unhex(lit(""))))
-        .withColumn("recip_dec", abi_address(col("calldata"), 0))
-        .withColumn("am0_dec", abi_log_word(col("log_data"), 0))
-        .withColumn("am1_dec", abi_log_word(col("log_data"), 1))
+          when(col("has_log"), V2MintLog.pack(col("q6l"), col("p2l")))
+            .otherwise(unhex(lit("")))), "calldata"), "log_data")
       val po = pools(s).select(col("address").as("p_addr"),
         col("t0_id").as("p_t0"), col("t1_id").as("p_t1"))
-      val tkA = tokens(s).select(col("token_id").as("a_id"),
-        col("decimals").as("a_dec"))
-      val tkB = tokens(s).select(col("token_id").as("b_id"),
-        col("decimals").as("b_dec"))
+      val tkA = decimalsOf(s, "a_id", "a_dec")
+      val tkB = decimalsOf(s, "b_id", "b_dec")
       packed
         .join(broadcast(po), col("to_address") === col("p_addr"))
         // get_protocol_details_sorted: canonical ADDRESS order, which is
@@ -2568,73 +2379,66 @@ object RealAbiOps extends graft.QueryModule {
     * the router's selector table. Scale shape: one pruned trace scan,
     * zero joins, all four decodes in one codegen'd projection, one
     * 4-group rollup. */
+  private[graft] val OneinchSwapCall = calldata(address("executor"),
+    address("src_dec"), address(""), address(""), address("recip_dec"),
+    uint("amt_dec"), uint(""), uint("flags"), bytes("permit"), bytes(""))
+  /** The order tuple: salt, makerAsset, takerAsset, maker, receiver,
+    * allowedSender, making, taking, offsets, interactions. */
+  private[graft] val OneinchFillCall = calldata(
+    tuple("", uint(""), address("src_dec"), address(""), address(""),
+      address("recip_dec"), address(""), uint("amt_dec"), uint("taking"),
+      uint(""), bytes("")),
+    bytes(""), bytes(""), uint(""), uint(""), uint(""), address("target"))
+  private[graft] val OneinchUnoswapCall = calldata(address("recip_dec"),
+    address("src_dec"), uint("amt_dec"), uint(""),
+    arr("n_pools_dec", AbiRead.Uint, "pool0"))
+  /** clipperExchange, recipient, srcToken, dstToken, inputAmount,
+    * outputAmount, goodUntil, r, vs. */
+  private[graft] val OneinchClipperCall = calldata(address(""),
+    address("recip_dec"), address("src_dec"), address(""), uint("amt_dec"),
+    uint(""), uint("good_until"), uint(""), uint(""))
+  private val oneinchArms = Seq(OneinchSwapCall, OneinchFillCall,
+    OneinchUnoswapCall, OneinchClipperCall)
+  // `name` read through the layout of the frame's arm
+  private def oneinchRead(name: String): Column = {
+    val reads = oneinchArms.map(_.read(col("calldata"), name))
+    (1 until 3).foldLeft(when(col("arm") === 0, reads.head)) {
+      (w, k) => w.when(col("arm") === k, reads(k))
+    }.otherwise(reads(3))
+  }
   /** The per-method router decode on any frame with (calldata, arm): the
     * selector table's field positions — swap's desc is INLINE (recipient
     * = word 4), fillOrderTo's order is OFFSET-passed (receiver = tuple
     * field 4), unoswapTo/clipperSwapTo are flat words. */
-  private[graft] def oneinchRouterDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("recip_dec",
-      when(col("arm") === 0, abi_address(col("calldata"), 4))
-        .when(col("arm") === 1, abi_tuple_address(col("calldata"), 0, 4))
-        .when(col("arm") === 2, abi_address(col("calldata"), 0))
-        .otherwise(abi_address(col("calldata"), 1)))
-    .withColumn("src_dec",
-      when(col("arm") === 0, abi_address(col("calldata"), 1))
-        .when(col("arm") === 1, abi_tuple_address(col("calldata"), 0, 1))
-        .when(col("arm") === 2, abi_address(col("calldata"), 1))
-        .otherwise(abi_address(col("calldata"), 2)))
-    .withColumn("amt_dec",
-      when(col("arm") === 0, abi_word(col("calldata"), 5))
-        .when(col("arm") === 1, abi_tuple_word(col("calldata"), 0, 6))
-        .when(col("arm") === 2, abi_word(col("calldata"), 2))
-        .otherwise(abi_word(col("calldata"), 4)))
+  private[graft] def oneinchRouterDecode(t: org.apache.spark.sql.DataFrame) =
+    Seq("recip_dec", "src_dec", "amt_dec")
+      .foldLeft(t)((d, n) => d.withColumn(n, oneinchRead(n)))
 
   /** Shared 1inch fixture: packs one of the four V5 method calldatas on
     * every SelCurveSwap trace (arm = (q6+p2) % 4). */
   private def oneinchFrames(s: org.apache.spark.sql.SparkSession,
       dir: String) = {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelCurveSwap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelCurveSwap)
         .withColumn("arm", (col("q6l") + col("p2l")) % 4)
         .withColumn("half", expr("q6l div 2"))
         .withColumn("n_pools", lit(1L) + col("p2l") % 2)
-      val eoaW = concat(lit("0" * 32), col("from_address"))
-      val tokW = concat(lit("0" * 32),
-        md5(concat(lit("tok:"), col("tok_id"))))
-      val tok2W = concat(lit("0" * 32),
-        md5(concat(lit("tok:"), (col("tok_id") + 1) % TokRefSpace)))
-      t.withColumn("calldata", unhex(
-        when(col("arm") === 0, concat(lit("12aa3caf"), // swap
-          eoaW, // executor
-          tokW, tok2W, eoaW, eoaW, // desc inline: src,dst,srcRecv,dstRecv
-          word(col("q6l")), word(col("half")), word(col("p2l") % 1000),
-          word(lit(320L)), word(lit(352L)), // permit/data offsets
-          word(lit(0L)), word(lit(0L)))) // two empty bytes tails
-        .when(col("arm") === 1, concat(lit("e5d7bde6"), // fillOrderTo
-          word(lit(224L)), // order_ tuple offset (7 head words)
-          word(lit(576L)), word(lit(608L)), // signature/interaction offs
-          word(col("q6l")), word(col("half")), word(lit(0L)),
-          eoaW, // target
-          // order_ tail: salt ‖ makerAsset ‖ takerAsset ‖ maker ‖
-          // receiver ‖ allowedSender ‖ making ‖ taking ‖ offsets ‖
-          // interactions-offset (tuple-relative) ‖ interactions len 0
-          word(col("p2l")), tokW, tok2W, eoaW, eoaW, word(lit(0L)),
-          word(col("q6l")), word(col("half")), word(lit(0L)),
-          word(lit(320L)), word(lit(0L)),
-          word(lit(0L)), word(lit(0L)))) // signature/interaction: len 0
-        .when(col("arm") === 2, concat(lit("f78dc253"), // unoswapTo
-          eoaW, tokW, word(col("q6l")), word(col("half")),
-          word(lit(160L)), // pools offset (5 head words)
-          word(col("n_pools")),
-          word(col("q6l")),
-          when(col("n_pools") > 1, word(col("q6l") + 1)).otherwise(lit(""))))
-        .otherwise(concat(lit("093d4fa5"), // clipperSwapTo
-          concat(lit("0" * 32), col("to_address")), // clipperExchange
-          eoaW, tokW, tok2W,
-          word(col("q6l")), word(col("half")), word(col("p2l")),
-          word(lit(1L)), word(lit(2L)))))) // r ‖ vs
+      val eoa = col("from_address")
+      val tok = md5(concat(lit("tok:"), col("tok_id")))
+      val tok2 = md5(concat(lit("tok:"), (col("tok_id") + 1) % TokRefSpace))
+      val (q6l, half) = (col("q6l"), col("half"))
+      t.withColumn("calldata",
+        // swap: executor, desc inline (src, dst, srcRecv, dstRecv, amount,
+        // minReturn, flags), permit, data
+        when(col("arm") === 0, OneinchSwapCall.pack(lit("12aa3caf"), eoa,
+          tok, tok2, eoa, eoa, q6l, half, col("p2l") % 1000, lit(""), lit("")))
+        .when(col("arm") === 1, OneinchFillCall.pack(lit("e5d7bde6"),
+          fields(col("p2l"), tok, tok2, eoa, eoa, lit(""), q6l, half,
+            lit(0L), lit("")),
+          lit(""), lit(""), q6l, half, lit(0L), eoa))
+        .when(col("arm") === 2, OneinchUnoswapCall.pack(lit("f78dc253"), eoa,
+          tok, q6l, half, elems(col("n_pools"), q6l, q6l + 1)))
+        .otherwise(OneinchClipperCall.pack(lit("093d4fa5"), col("to_address"),
+          eoa, tok, tok2, q6l, half, col("p2l"), lit(1L), lit(2L))))
         .withColumn("method",
           when(col("arm") === 0, "swap")
             .when(col("arm") === 1, "fill_order")
@@ -2721,19 +2525,20 @@ object RealAbiOps extends graft.QueryModule {
     "c1_oneinch_router",
     (s, dir) => {
       val packed = oneinchFrames(s, dir)
+      val cd = col("calldata")
       val dec = oneinchRouterDecode(packed)
         .withColumn("shape_ok",
           when(col("arm") === 0,
-            abi_word(col("calldata"), 7) === col("p2l") % 1000 &&
-              abi_array_len(col("calldata"), 8) === 0)
+            OneinchSwapCall.read(cd, "flags") === col("p2l") % 1000 &&
+              OneinchSwapCall.read(cd, "permit_len") === 0)
           .when(col("arm") === 1,
-            abi_address(col("calldata"), 6) ===
+            OneinchFillCall.read(cd, "target") ===
               concat(lit("0" * 8), col("from_address")) &&
-              abi_tuple_word(col("calldata"), 0, 7) === col("half"))
+              OneinchFillCall.read(cd, "taking") === col("half"))
           .when(col("arm") === 2,
-            abi_array_len(col("calldata"), 4) === col("n_pools") &&
-              abi_array_elem(col("calldata"), 4, 0) === col("q6l"))
-          .otherwise(abi_word(col("calldata"), 6) === col("p2l")))
+            OneinchUnoswapCall.read(cd, "n_pools_dec") === col("n_pools") &&
+              OneinchUnoswapCall.read(cd, "pool0") === col("q6l"))
+          .otherwise(OneinchClipperCall.read(cd, "good_until") === col("p2l")))
       dec.groupBy("method")
         .agg(count(lit(1)).as("n_frames"),
           sum(when(col("recip_dec") ===
@@ -2760,23 +2565,17 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Balancer V2 flashLoan: the ALL-OR-NOTHING parallel-array loan ─────────
 
+  private[graft] val BalancerFlashCall = calldata(address("receiver"),
+    arr("n_tokens_dec", AbiRead.Address, "tok0", "tok1", "tok2"),
+    arr("n_amounts", AbiRead.Uint, "amt0", "amt1", "amt2"), bytes("userdata"))
   /** The Balancer V2 flashLoan decode core on any frame with `calldata`:
     * `flashLoan(address recipient, address[] tokens, uint256[] amounts,
     * bytes userData)` (classifier-abis/balancer/BalancerV2Vault.json) —
     * head words 1/2/3 are tail offsets to the two PARALLEL arrays and
     * the userData bytes. Same element decoders as [[flashLoanDecode]];
     * the SEMANTIC difference is downstream (the token-fetch gate). */
-  private[graft] def balancerFlashDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("receiver", abi_address(col("calldata"), 0))
-    .withColumn("n_tokens_dec", abi_array_len(col("calldata"), 1))
-    .withColumn("n_amounts", abi_array_len(col("calldata"), 2))
-    .withColumn("tok0", abi_array_address(col("calldata"), 1, 0))
-    .withColumn("tok1", abi_array_address(col("calldata"), 1, 1))
-    .withColumn("tok2", abi_array_address(col("calldata"), 1, 2))
-    .withColumn("amt0", abi_array_elem(col("calldata"), 2, 0))
-    .withColumn("amt1", abi_array_elem(col("calldata"), 2, 1))
-    .withColumn("amt2", abi_array_elem(col("calldata"), 2, 2))
-    .withColumn("n_userdata", abi_array_len(col("calldata"), 3))
+  private[graft] def balancerFlashDecode(t: org.apache.spark.sql.DataFrame) =
+    BalancerFlashCall.decode(t, "calldata")
 
   /** C1 (Balancer V2 `flashLoan`): the same parallel `tokens[]`/
     * `amounts[]` calldata shape as [[c1AaveFlashloan]], but the OPPOSITE
@@ -2794,29 +2593,19 @@ object RealAbiOps extends graft.QueryModule {
     "c1_balancer_flashloan",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV3Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelV3Swap)
         .withColumn("n_src", lit(1L) + (col("q6l") + col("p2l")) % 3)
       def tid(k: Int) = (col("tok_id") + 13 * k) % TokRefSpace
-      def tokWord(k: Int) = when(col("n_src") > k,
-        concat(lit("0" * 32), md5(concat(lit("tok:"), tid(k))))).otherwise(lit(""))
-      def amtWord(k: Int) = when(col("n_src") > k,
-        word(col("q6l") + 500000L * k)).otherwise(lit(""))
-      val packed = t.withColumn("calldata", unhex(concat(col("selector"),
-        lit("0" * 32), col("from_address"), // recipient (IFlashLoanRecipient)
-        word(lit(128L)), // tokens offset (4 head words)
-        word(lit(160L) + col("n_src") * 32), // amounts offset
-        word(lit(192L) + col("n_src") * 64), // userData offset
-        word(col("n_src")), tokWord(0), tokWord(1), tokWord(2),
-        word(col("n_src")), amtWord(0), amtWord(1), amtWord(2),
-        word(lit(0L))))) // bytes userData: len 0
+      val packed = t.withColumn("calldata", BalancerFlashCall.pack(col("selector"),
+        col("from_address"), // recipient (IFlashLoanRecipient)
+        elems(col("n_src"), (0 to 2).map(k => md5(concat(lit("tok:"), tid(k)))): _*),
+        elems(col("n_src"), (0 to 2).map(k => col("q6l") + 500000L * k): _*),
+        lit("")))
       val dec = balancerFlashDecode(packed)
         .withColumn("frame_ok",
           col("receiver") === concat(lit("0" * 8), col("from_address")) &&
           col("n_tokens_dec") === col("n_src") &&
-          col("n_amounts") === col("n_src") && col("n_userdata") === 0)
+          col("n_amounts") === col("n_src") && col("userdata_len") === 0)
       val pairs = dec.select(col("tx_hash"), col("trace_idx"),
         col("n_src").as("n_assets"), col("frame_ok"),
         explode(array((0 to 2).map(k => struct(lit(k).as("k"),
@@ -2879,6 +2668,14 @@ object RealAbiOps extends graft.QueryModule {
 
   // ── Balancer V2 joinPool/exitPool + registerTokens: LOG-side arrays ──────
 
+  /** `joinPool`/`exitPool(bytes32 poolId, address sender, address
+    * recipient, (…) request)`; the request is never read. */
+  private[graft] val JoinExitCall = calldata(bytes32("pool_dec"),
+    address("sender_dec"), address("recip_dec"), tuple("", uint("")))
+  private[graft] val PoolBalanceChangedLog = words(
+    arr("n_tok", AbiRead.Address, "tok0", "tok1", "tok2"),
+    arr("n_del", AbiRead.Sint, "del0", "del1", "del2"),
+    arr("n_fee", AbiRead.Uint, "fee0", "fee1", "fee2"))
   /** The joinPool/exitPool + PoolBalanceChanged decode core on any frame
     * with (calldata, log_data): the POOL is the leading 20 bytes of the
     * STATIC `bytes32 poolId` calldata slot (balancer_v2.rs
@@ -2893,22 +2690,8 @@ object RealAbiOps extends graft.QueryModule {
     * the sign-extension contract ([[graft.functions.AbiCalldata.abi_array_int]]) —
     * join deltas are positive, exit deltas negative, and the classifier
     * takes `.abs()` AFTER the zero skip (:85-96). */
-  private[graft] def poolChangeDecode(t: org.apache.spark.sql.DataFrame) = t
-    .withColumn("pool_dec", abi_b32_prefix(col("calldata"), 0))
-    .withColumn("sender_dec", abi_address(col("calldata"), 1))
-    .withColumn("recip_dec", abi_address(col("calldata"), 2))
-    .withColumn("n_tok", abi_log_array_len(col("log_data"), 0))
-    .withColumn("n_del", abi_log_array_len(col("log_data"), 1))
-    .withColumn("n_fee", abi_log_array_len(col("log_data"), 2))
-    .withColumn("tok0", abi_log_array_address(col("log_data"), 0, 0))
-    .withColumn("tok1", abi_log_array_address(col("log_data"), 0, 1))
-    .withColumn("tok2", abi_log_array_address(col("log_data"), 0, 2))
-    .withColumn("del0", abi_log_array_int(col("log_data"), 1, 0))
-    .withColumn("del1", abi_log_array_int(col("log_data"), 1, 1))
-    .withColumn("del2", abi_log_array_int(col("log_data"), 1, 2))
-    .withColumn("fee0", abi_log_array_elem(col("log_data"), 2, 0))
-    .withColumn("fee1", abi_log_array_elem(col("log_data"), 2, 1))
-    .withColumn("fee2", abi_log_array_elem(col("log_data"), 2, 2))
+  private[graft] def poolChangeDecode(t: org.apache.spark.sql.DataFrame) =
+    PoolBalanceChangedLog.decode(JoinExitCall.decode(t, "calldata"), "log_data")
 
   /** C1 (Balancer V2 `joinPool`/`exitPool` → Mint/Burn): the amounts ride
     * the PoolBalanceChanged LOG, not the request tuple — the calldata's
@@ -2950,29 +2733,18 @@ object RealAbiOps extends graft.QueryModule {
         else col("q6l") + 1000000L * k
       def deltaK(k: Int) =
         when(col("kind") === "mint", magK(k)).otherwise(-magK(k))
-      def tokWord(k: Int) = when(col("n_src") > k,
-        concat(lit("0" * 32), md5(concat(lit("tok:"), tid(k))))).otherwise(lit(""))
-      def delWord(k: Int) =
-        when(col("n_src") > k, sword(deltaK(k))).otherwise(lit(""))
-      def feeWord(k: Int) = when(col("n_src") > k,
-        word(col("p2l") % 1000 + 7 * k)).otherwise(lit(""))
+      val n = col("n_src")
       val packed = t
-        .withColumn("calldata", unhex(concat(col("selector"),
+        .withColumn("calldata", JoinExitCall.pack(col("selector"),
           // bytes32 poolId: 20-byte pool address (= the frame's pool
           // target, to_address) ‖ 12-byte spec+nonce junk
-          lit("0" * 8), col("to_address"),
-          substring(md5(concat(lit("nonce:"), col("tx_hash"))), 1, 24),
-          lit("0" * 32), col("from_address"), // sender
-          lit("0" * 32), col("from_address"), // recipient
-          word(lit(128L)), // request tuple offset (4 head words)
-          word(lit(1L))))) // request tail (classifier never reads it)
-        .withColumn("log_data", unhex(concat(
-          word(lit(96L)), // tokens[] offset (3 head words)
-          word(lit(128L) + col("n_src") * 32), // deltas[] offset
-          word(lit(160L) + col("n_src") * 64), // protocolFeeAmounts[] offset
-          word(col("n_src")), tokWord(0), tokWord(1), tokWord(2),
-          word(col("n_src")), delWord(0), delWord(1), delWord(2),
-          word(col("n_src")), feeWord(0), feeWord(1), feeWord(2))))
+          concat(lit("0" * 8), col("to_address"),
+            substring(md5(concat(lit("nonce:"), col("tx_hash"))), 1, 24)),
+          col("from_address"), col("from_address"), fields(lit(1L))))
+        .withColumn("log_data", PoolBalanceChangedLog.pack(
+          elems(n, (0 to 2).map(k => md5(concat(lit("tok:"), tid(k)))): _*),
+          elems(n, (0 to 2).map(deltaK): _*),
+          elems(n, (0 to 2).map(k => col("p2l") % 1000 + 7 * k): _*)))
       val dec = poolChangeDecode(packed)
         .withColumn("frame_ok",
           col("pool_dec") === concat(lit("0" * 8), col("to_address")) &&
@@ -3057,6 +2829,14 @@ object RealAbiOps extends graft.QueryModule {
         CAST(SUM(fee) AS BIGINT) AS sum_fees
       FROM bjw13 GROUP BY 1, 2 ORDER BY 1, 2"""))
 
+  /** TokensRegistered: the indexed poolId topic, then `address[] tokens`
+    * and `address[] assetManagers`. */
+  private[graft] val TokensRegisteredTopic = words(bytes32("pool_dec"))
+  private[graft] val TokensRegisteredLog = words(
+    arr("n_tok", AbiRead.Address, "tok0", "tok1", "tok2"),
+    arr("n_mgr", AbiRead.Address, "mgr0", "mgr1", "mgr2"))
+  private[graft] def registerDecode(t: org.apache.spark.sql.DataFrame) =
+    TokensRegisteredLog.decode(TokensRegisteredTopic.decode(t, "topic1"), "log_data")
   /** C1 (Balancer V2 `registerTokens` → PoolConfigUpdate): the pool rides
     * the TokensRegistered event's INDEXED `bytes32 poolId` TOPIC (decoded
     * with [[graft.functions.AbiCalldata.abi_log_b32_prefix]] — first 20 bytes,
@@ -3073,36 +2853,24 @@ object RealAbiOps extends graft.QueryModule {
   private val c1BalancerRegister = QueryDef(
     "c1_balancer_register",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelLiquidation)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelLiquidation)
         .withColumn("n_src", lit(1L) + (col("q6l") + col("p2l")) % 3)
       def tid(k: Int) = (col("tok_id") + 7 * k) % TokRefSpace
-      def tokWord(k: Int) = when(col("n_src") > k,
-        concat(lit("0" * 32), md5(concat(lit("tok:"), tid(k))))).otherwise(lit(""))
-      def mgrWord(k: Int) = when(col("n_src") > k,
-        concat(lit("0" * 32), md5(concat(lit("mgr:"), (col("p2l") + k) % 12))))
-        .otherwise(lit(""))
+      val n = col("n_src")
       val packed = t
-        .withColumn("topic1", unhex(concat(
+        .withColumn("topic1", TokensRegisteredTopic.pack(concat(
           lit("0" * 8), col("to_address"),
           substring(md5(concat(lit("nonce:"), col("tx_hash"))), 1, 24))))
-        .withColumn("log_data", unhex(concat(
-          word(lit(64L)), // tokens[] offset (2 head words)
-          word(lit(96L) + col("n_src") * 32), // assetManagers[] offset
-          word(col("n_src")), tokWord(0), tokWord(1), tokWord(2),
-          word(col("n_src")), mgrWord(0), mgrWord(1), mgrWord(2))))
-      val dec = packed
-        .withColumn("pool_dec", abi_log_b32_prefix(col("topic1"), 0))
-        .withColumn("n_tok", abi_log_array_len(col("log_data"), 0))
-        .withColumn("n_mgr", abi_log_array_len(col("log_data"), 1))
+        .withColumn("log_data", TokensRegisteredLog.pack(
+          elems(n, (0 to 2).map(k => md5(concat(lit("tok:"), tid(k)))): _*),
+          elems(n, (0 to 2).map(k =>
+            md5(concat(lit("mgr:"), (col("p2l") + k) % 12))): _*)))
+      val dec = registerDecode(packed)
       val pairs = dec.select(col("n_src").as("n_tokens"),
         col("pool_dec"), col("to_address"), col("p2l"),
         col("n_tok"), col("n_mgr"),
         explode(array((0 to 2).map(k => struct(lit(k).as("k"),
-          abi_log_array_address(col("log_data"), 0, k).as("tok"),
-          abi_log_array_address(col("log_data"), 1, k).as("mgr"))): _*))
+          col(s"tok$k").as("tok"), col(s"mgr$k").as("mgr"))): _*))
           .as("p"))
         .select(col("n_tokens"), col("pool_dec"), col("to_address"),
           col("p2l"), col("n_tok"), col("n_mgr"), col("p.k").as("k"),

@@ -1,8 +1,8 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_address, abi_log_address,
-  abi_log_b32_prefix, abi_log_word, abi_ret_int, abi_word, sword, word}
+import graft.functions.AbiLayout.{address, bytes, bytes32, calldata, int,
+  uint, words}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,6 +39,7 @@ import org.apache.spark.sql.functions._
 object RealAbiSwapOps extends graft.QueryModule {
 
   import ChainFixture._
+  import RealAbiOps.{decimalsOf, framesOf}
   import RealAbiOps.{pow10d, sqlPow10}
 
   def defs: Seq[QueryDef] = Seq(c1ClipperSwap, c1BalancerV1Swap,
@@ -55,19 +56,19 @@ object RealAbiSwapOps extends graft.QueryModule {
     "swap", "sell_eth_for_token", "sell_token_for_eth",
     "transmit_and_swap", "transmit_and_sell_token_for_eth")
 
+  private[graft] val ClipperTopics =
+    words(address("in_asset"), address("out_asset"), address("recip_dec"))
+  private[graft] val ClipperLog =
+    words(uint("amt_in"), uint("amt_out"), bytes("aux"))
   /** The Clipper decode core on any frame with (log_topics, log_data):
     * everything from the Swapped EVENT — assets + recipient from the
     * three topic words (indexed params), amounts from data words 0/1,
     * and the auxiliaryData head offset at data word 2 (= 96 on a
     * well-formed 3-static-word data section, validating the bytes tail
     * is where ABI puts it). */
-  private[graft] def clipperDecode(t: DataFrame): DataFrame = t
-    .withColumn("in_asset", abi_log_address(col("log_topics"), 0))
-    .withColumn("out_asset", abi_log_address(col("log_topics"), 1))
-    .withColumn("recip_dec", abi_log_address(col("log_topics"), 2))
-    .withColumn("amt_in", abi_log_word(col("log_data"), 0))
-    .withColumn("amt_out", abi_log_word(col("log_data"), 1))
-    .withColumn("aux_off", abi_log_word(col("log_data"), 2))
+  private[graft] def clipperDecode(t: DataFrame): DataFrame =
+    ClipperLog.decode(ClipperTopics.decode(t, "log_topics"), "log_data")
+      .withColumn("aux_off", ClipperLog.offset(col("log_data"), "aux"))
 
   /** C1 (ClipperExchange, all five selectors → Swap): the log-only,
     * topics-sourced swap. Fixture: every SelV3Swap frame becomes one
@@ -82,24 +83,19 @@ object RealAbiSwapOps extends graft.QueryModule {
   private val c1ClipperSwap = QueryDef(
     "c1_clipper_swap",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelV3Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelV3Swap)
         .withColumn("arm", ((col("q6l") + col("p2l")) % 5).cast("int"))
         .withColumn("method",
           element_at(array(ClipperMethods.map(lit): _*), col("arm") + 1))
         .withColumn("has_log", col("p2l") % 6 =!= 0)
         .withColumn("out_tid", (col("tok_id") + 3) % TokRefSpace)
       val packed = t
-        .withColumn("log_topics", when(col("has_log"), unhex(concat(
-            lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))),
-            lit("0" * 32), md5(concat(lit("tok:"), col("out_tid"))),
-            lit("0" * 32), col("from_address"))))
+        .withColumn("log_topics", when(col("has_log"), ClipperTopics.pack(
+            md5(concat(lit("tok:"), col("tok_id"))),
+            md5(concat(lit("tok:"), col("out_tid"))), col("from_address")))
           .otherwise(unhex(lit(""))))
-        .withColumn("log_data", when(col("has_log"), unhex(concat(
-            word(col("q6l")), word(col("p2l")),
-            word(lit(96L)), word(lit(0L)))))
+        .withColumn("log_data", when(col("has_log"),
+            ClipperLog.pack(col("q6l"), col("p2l"), lit("")))
           .otherwise(unhex(lit(""))))
       val tkIn = tokens(s).select(col("address").as("in_a"),
         col("decimals").as("in_dec"))
@@ -171,6 +167,9 @@ object RealAbiSwapOps extends graft.QueryModule {
           AS sum_out_scaled
       FROM cls GROUP BY 1 ORDER BY 1"""))
 
+  private[graft] val BalV1Call = calldata(address("in_asset"), uint("cd_in"),
+    address("out_asset"), uint("cd_out"), uint("")) // maxPrice
+  private[graft] val BalV1Ret = words(int("ret_amt"), int("spot_after"))
   /** The Balancer V1 swap decode core on any frame with (calldata,
     * ret_data, arm): the MIRROR PAIR — both selectors share one 5-word
     * calldata geometry (tokenIn ‖ bound-in ‖ tokenOut ‖ bound-out ‖
@@ -180,19 +179,14 @@ object RealAbiSwapOps extends graft.QueryModule {
     * (arm 1): amount_in = return word 0, amount_out = calldata word 3
     * (:50-56). cd_bound echoes the OTHER side's calldata word so the
     * flip itself is observable. */
-  private[graft] def balV1SwapDecode(t: DataFrame): DataFrame = t
-    .withColumn("in_asset", abi_address(col("calldata"), 0))
-    .withColumn("out_asset", abi_address(col("calldata"), 2))
-    .withColumn("amt_in",
-      when(col("arm") === 0, abi_word(col("calldata"), 1))
-        .otherwise(abi_ret_int(col("ret_data"), 0)))
-    .withColumn("amt_out",
-      when(col("arm") === 0, abi_ret_int(col("ret_data"), 0))
-        .otherwise(abi_word(col("calldata"), 3)))
-    .withColumn("cd_bound",
-      when(col("arm") === 0, abi_word(col("calldata"), 3))
-        .otherwise(abi_word(col("calldata"), 1)))
-    .withColumn("spot_after", abi_ret_int(col("ret_data"), 1))
+  private[graft] def balV1SwapDecode(t: DataFrame): DataFrame =
+    BalV1Ret.decode(BalV1Call.decode(t, "calldata"), "ret_data")
+      .withColumn("amt_in",
+        when(col("arm") === 0, col("cd_in")).otherwise(col("ret_amt")))
+      .withColumn("amt_out",
+        when(col("arm") === 0, col("ret_amt")).otherwise(col("cd_out")))
+      .withColumn("cd_bound",
+        when(col("arm") === 0, col("cd_out")).otherwise(col("cd_in")))
 
   /** C1 (Balancer V1 `swapExactAmountIn`/`swapExactAmountOut` → Swap):
     * the calldata↔return MIRROR pair (balancer_v1.rs:9-71). Reference
@@ -216,10 +210,7 @@ object RealAbiSwapOps extends graft.QueryModule {
   private val c1BalancerV1Swap = QueryDef(
     "c1_balv1_swap",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelCurveSwap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelCurveSwap)
         .withColumn("arm", (col("p2l") % 2).cast("int")) // q6 is always
         // even in this fixture (quantity-derived) - parity comes from p2
         .withColumn("method",
@@ -227,17 +218,17 @@ object RealAbiSwapOps extends graft.QueryModule {
         .withColumn("has_ret", col("p2l") % 9 =!= 0)
         .withColumn("out_tid", (col("tok_id") + 5) % TokRefSpace)
       val packed = t
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))),
-          when(col("arm") === 0, word(col("q6l")))
-            .otherwise(word(col("q6l") * 2)), // maxAmountIn bound
-          lit("0" * 32), md5(concat(lit("tok:"), col("out_tid"))),
-          when(col("arm") === 0, expr("lpad(lower(hex(q6l div 2)), 64, '0')"))
-            .otherwise(word(col("p2l"))), // minAmountOut bound / exact out
-          word(col("p2l") + 3)))) // maxPrice
-        .withColumn("ret_data", when(col("has_ret"), unhex(concat(
-            when(col("arm") === 0, word(col("p2l"))).otherwise(word(col("q6l"))),
-            word(col("p2l") + 7)))) // spotPriceAfter
+        .withColumn("calldata", BalV1Call.pack(col("selector"),
+          md5(concat(lit("tok:"), col("tok_id"))),
+          when(col("arm") === 0, col("q6l"))
+            .otherwise(col("q6l") * 2), // maxAmountIn bound
+          md5(concat(lit("tok:"), col("out_tid"))),
+          when(col("arm") === 0, expr("q6l div 2"))
+            .otherwise(col("p2l")), // minAmountOut bound / exact out
+          col("p2l") + 3)) // maxPrice
+        .withColumn("ret_data", when(col("has_ret"), BalV1Ret.pack(
+            when(col("arm") === 0, col("p2l")).otherwise(col("q6l")),
+            col("p2l") + 7)) // spotPriceAfter
           .otherwise(unhex(lit(""))))
       val tkIn = tokens(s).select(col("address").as("in_a"),
         col("decimals").as("in_dec"))
@@ -304,6 +295,9 @@ object RealAbiSwapOps extends graft.QueryModule {
           AS sum_out_scaled
       FROM bv1s GROUP BY 1 ORDER BY 1"""))
 
+  /** `bind(address token, uint balance, uint denorm)`. */
+  private[graft] val BindCall =
+    calldata(address("tok_dec"), uint("bal_dec"), uint("denorm_dec"))
   /** C3 (Balancer V1 `bind(token, balance, denorm)` → NewPool): the
     * ACCRETIVE discovery shape (balancer_v1.rs:73-97) — no factory
     * event: each bind call on a pool re-reads the pool's CURRENT
@@ -323,18 +317,11 @@ object RealAbiSwapOps extends graft.QueryModule {
     "c3_balv1_bind",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelMint)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelMint)
         .withColumn("bind_tid", (col("tok_id") + 11) % TokRefSpace)
-      val packed = t
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), md5(concat(lit("tok:"), col("bind_tid"))),
-          word(col("q6l")), word(col("p2l") % 50 + 1))))
-        .withColumn("tok_dec", abi_address(col("calldata"), 0))
-        .withColumn("bal_dec", abi_word(col("calldata"), 1))
-        .withColumn("denorm_dec", abi_word(col("calldata"), 2))
+      val packed = BindCall.decode(t.withColumn("calldata", BindCall.pack(
+        col("selector"), md5(concat(lit("tok:"), col("bind_tid"))),
+        col("q6l"), col("p2l") % 50 + 1)), "calldata")
       val po = pools(s).select(col("address").as("p_addr"),
         col("pool_id").as("pid"))
       val w = Window.partitionBy("pid")
@@ -369,16 +356,16 @@ object RealAbiSwapOps extends graft.QueryModule {
         CAST(SUM(p2l % 50 + 1) AS BIGINT) AS sum_denorm
       FROM bnd GROUP BY 1 ORDER BY 1"""))
 
+  private[graft] val FillTopics = words(bytes32("ohash_dec"),
+    address("filler_dec"), address("swapper_dec"))
+  private[graft] val FillLog = words(uint("nonce_dec"))
   /** The UniswapX per-fill decode on exploded (fill_topics, fill_data)
     * rows: orderHash / filler / swapper are the Fill event's three
     * INDEXED params (topic words 0-2,
     * classifier-abis/UniswapXExclusiveDutchOrderReactor.json), the
     * nonce its single data word. */
-  private[graft] def unixFillDecode(t: DataFrame): DataFrame = t
-    .withColumn("ohash_dec", abi_log_b32_prefix(col("fill_topics"), 0))
-    .withColumn("filler_dec", abi_log_address(col("fill_topics"), 1))
-    .withColumn("swapper_dec", abi_log_address(col("fill_topics"), 2))
-    .withColumn("nonce_dec", abi_log_word(col("fill_data"), 0))
+  private[graft] def unixFillDecode(t: DataFrame): DataFrame =
+    FillLog.decode(FillTopics.decode(t, "fill_topics"), "fill_data")
 
   /** C5 (UniswapX `execute`/`executeBatch`/`executeWithCallback`/
     * `executeBatchWithCallback` → Batch): the LOG-MULTIPLICITY batch
@@ -406,10 +393,7 @@ object RealAbiSwapOps extends graft.QueryModule {
   private val c5UniswapXBatch = QueryDef(
     "c5_unix_batch",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelBurn)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelBurn)
         .withColumn("arm", ((col("q6l") + col("p2l")) % 4).cast("int"))
         .withColumn("method", element_at(array(
           lit("execute"), lit("execute_batch"),
@@ -420,14 +404,13 @@ object RealAbiSwapOps extends graft.QueryModule {
             .otherwise(lit(1L) + (col("q6l") + col("p2l")) % 3))
       def fillAt(k: Int) = struct(
         lit(k).as("k"),
-        when(col("n_fills") > k, unhex(concat(
-          md5(concat(lit("oh:"), col("tx_hash"), lit(s":$k"))),
-          md5(concat(lit("oh2:"), col("tx_hash"), lit(s":$k"))),
-          lit("0" * 32), md5(concat(lit("filler:"), col("p2l") % 7)),
-          lit("0" * 32),
-          md5(concat(lit("eoa:"), (col("p2l") + k) % NumEoas)))))
+        when(col("n_fills") > k, FillTopics.pack(
+          concat(md5(concat(lit("oh:"), col("tx_hash"), lit(s":$k"))),
+            md5(concat(lit("oh2:"), col("tx_hash"), lit(s":$k")))),
+          md5(concat(lit("filler:"), col("p2l") % 7)),
+          md5(concat(lit("eoa:"), (col("p2l") + k) % NumEoas))))
           .otherwise(unhex(lit(""))).as("fill_topics"),
-        when(col("n_fills") > k, unhex(word(col("q6l") + k)))
+        when(col("n_fills") > k, FillLog.pack(col("q6l") + k))
           .otherwise(unhex(lit(""))).as("fill_data"))
       val legs = t
         .select(col("method"), col("tx_hash"), col("to_address"),
@@ -514,10 +497,7 @@ object RealAbiSwapOps extends graft.QueryModule {
     (s, dir) => {
       val po = pools(s).select(col("address").as("p_addr"),
         col("pool_id").as("pid"), col("t0_id"), col("t1_id"))
-      val base = tracesTable(s, dir)
-        .filter(col("selector") === SelV2Swap)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val base = framesOf(s, dir, SelV2Swap)
         .join(broadcast(po), col("to_address") === col("p_addr"))
         // same parity contract as c1_univ2_swap/c1_univ3_swap: the
         // zero-side / sign-side direction resolutions need q6,p2 > 0
@@ -531,49 +511,18 @@ object RealAbiSwapOps extends graft.QueryModule {
           .otherwise(element_at(array(lit("uniswap_v3"), lit("sushiswap_v3"),
             lit("pancakeswap_v3")), col("tag_idx"))))
         .withColumn("t1x", col("t1_id"))
-      val v2f = base.filter(col("family") === 0)
-        .withColumn("a0in_src",
-          when(col("direction") === 0, col("q6l")).otherwise(lit(0L)))
-        .withColumn("a1in_src",
-          when(col("direction") === 0, lit(0L)).otherwise(col("q6l")))
-        .withColumn("a0out_src",
-          when(col("direction") === 0, lit(0L)).otherwise(col("p2l")))
-        .withColumn("a1out_src",
-          when(col("direction") === 0, col("p2l")).otherwise(lit(0L)))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          word(col("a0out_src")), word(col("a1out_src")),
-          lit("0" * 32), col("from_address"), word(lit(128L)))))
-        .withColumn("log_data", unhex(concat(word(col("a0in_src")),
-          word(col("a1in_src")), word(col("a0out_src")),
-          word(col("a1out_src")))))
-      val v2d = RealAbiOps.v2SwapDecode(v2f)
+      val v2d = RealAbiOps.v2SwapDecode(
+        RealAbiOps.v2SwapPacked(base.filter(col("family") === 0)))
         .select(col("protocol"), lit("v2_swap").as("decoder"),
           col("token_in_id"), col("token_out_id"),
           col("in_raw"), col("out_raw"), col("direction"))
-      val v3f = base.filter(col("family") === 1)
-        .withColumn("zero_for_one", col("direction") === 0)
-        .withColumn("a0_src",
-          when(col("zero_for_one"), col("q6l")).otherwise(-col("p2l")))
-        .withColumn("a1_src",
-          when(col("zero_for_one"), -col("p2l")).otherwise(col("q6l")))
-        .withColumn("spec_src",
-          when((col("q6l") + col("p2l")) % 2 === 0, col("q6l"))
-            .otherwise(-col("p2l")))
-        .withColumn("calldata", unhex(concat(col("selector"),
-          lit("0" * 32), col("from_address"),
-          word(when(col("zero_for_one"), 1L).otherwise(0L)),
-          sword(col("spec_src")),
-          word(col("p2l") % 1000000))))
-        .withColumn("ret_data", unhex(concat(
-          sword(col("a0_src")), sword(col("a1_src")))))
-      val v3d = RealAbiOps.v3SwapDecode(v3f)
+      val v3d = RealAbiOps.v3SwapDecode(
+        RealAbiOps.v3SwapPacked(base.filter(col("family") === 1)))
         .select(col("protocol"), lit("v3_swap").as("decoder"),
           col("token_in_id"), col("token_out_id"),
           col("in_raw"), col("out_raw"), col("direction"))
-      val ti = tokens(s).select(col("token_id").as("ti_id"),
-        col("decimals").as("dec_in"))
-      val to = tokens(s).select(col("token_id").as("to_id"),
-        col("decimals").as("dec_out"))
+      val ti = decimalsOf(s, "ti_id", "dec_in")
+      val to = decimalsOf(s, "to_id", "dec_out")
       v2d.unionByName(v3d)
         .join(broadcast(ti), col("token_in_id") === col("ti_id"), "left")
         .join(broadcast(to), col("token_out_id") === col("to_id"), "left")

@@ -1,8 +1,8 @@
 package graft.domain
 
 import graft.QueryDef
-import graft.functions.AbiCalldata.{abi_address, abi_log_address,
-  abi_log_b32_prefix, abi_log_word, abi_word, word}
+import graft.functions.AbiLayout.{address, bytes, bytes32, calldata, uint,
+  words}
 import graft.ops.ExactAgg.{dsum, sqlSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -50,6 +50,7 @@ import org.apache.spark.sql.functions._
 object RealAbiZeroXOps extends graft.QueryModule {
 
   import ChainFixture._
+  import RealAbiOps.{decimalsOf, framesOf}
   import RealAbiOps.{pow10d, sqlPow10}
 
   def defs: Seq[QueryDef] =
@@ -65,6 +66,18 @@ object RealAbiZeroXOps extends graft.QueryModule {
     "fill_limit_order", "fill_rfq_order",
     "fill_or_kill_limit_order", "fill_or_kill_rfq_order")
 
+  /** LimitOrderFilled: orderHash, maker, taker, feeRecipient, makerToken,
+    * takerToken, takerFill, makerFill, takerFeeFilled, protocolFeePaid,
+    * pool. */
+  private[graft] val LimitFilledLog = words(bytes32(""), address(""),
+    address("taker_dec"), address(""), address("maker_tok"),
+    address("taker_tok"), uint("taker_fill"), uint("maker_fill"), uint(""),
+    uint("proto_fee"), bytes32("pool_dec"))
+  /** RfqOrderFilled: orderHash, maker, taker, makerToken, takerToken,
+    * takerFill, makerFill, pool. */
+  private[graft] val RfqFilledLog = words(bytes32(""), address(""),
+    address("taker_dec"), address("maker_tok"), address("taker_tok"),
+    uint("taker_fill"), uint("maker_fill"), bytes32("pool_dec"))
   /** The native-order decode core on any frame with (log_data,
     * is_limit): `orderHash`/`maker`/`taker` read the SHARED word 0-2
     * prefix; every later field dispatches its position on the event —
@@ -75,26 +88,16 @@ object RealAbiZeroXOps extends graft.QueryModule {
     * field order of OtcOrderFilled ([[RealAbiOps.otcFilledDecode]]),
     * which is exactly the kind of near-miss the per-event dispatch has
     * to get right. */
-  private[graft] def zeroxOrderDecode(t: DataFrame): DataFrame = t
-    .withColumn("taker_dec", abi_log_address(col("log_data"), 2))
-    .withColumn("maker_tok",
-      when(col("is_limit"), abi_log_address(col("log_data"), 4))
-        .otherwise(abi_log_address(col("log_data"), 3)))
-    .withColumn("taker_tok",
-      when(col("is_limit"), abi_log_address(col("log_data"), 5))
-        .otherwise(abi_log_address(col("log_data"), 4)))
-    .withColumn("taker_fill",
-      when(col("is_limit"), abi_log_word(col("log_data"), 6))
-        .otherwise(abi_log_word(col("log_data"), 5)))
-    .withColumn("maker_fill",
-      when(col("is_limit"), abi_log_word(col("log_data"), 7))
-        .otherwise(abi_log_word(col("log_data"), 6)))
-    .withColumn("proto_fee",
-      when(col("is_limit"), abi_log_word(col("log_data"), 9))
-        .otherwise(lit(null).cast("long")))
-    .withColumn("pool_dec",
-      when(col("is_limit"), abi_log_b32_prefix(col("log_data"), 10))
-        .otherwise(abi_log_b32_prefix(col("log_data"), 7)))
+  private[graft] def zeroxOrderDecode(t: DataFrame): DataFrame = {
+    def read(name: String) = when(col("is_limit"),
+      LimitFilledLog.read(col("log_data"), name))
+      .otherwise(RfqFilledLog.read(col("log_data"), name))
+    Seq("taker_dec", "maker_tok", "taker_tok", "taker_fill", "maker_fill")
+      .foldLeft(t)((d, n) => d.withColumn(n, read(n)))
+      .withColumn("proto_fee", when(col("is_limit"),
+        LimitFilledLog.read(col("log_data"), "proto_fee")))
+      .withColumn("pool_dec", read("pool_dec"))
+  }
 
   /** C1 (ZeroX native orders, 4 selectors → Swap): reference semantics
     * pinned (zerox/mod.rs:471-596):
@@ -118,39 +121,30 @@ object RealAbiZeroXOps extends graft.QueryModule {
   private val c1ZeroxOrders = QueryDef(
     "c1_zerox_orders",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelLiquidation)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelLiquidation)
         .withColumn("arm", ((col("q6l") + col("p2l")) % 4).cast("int"))
         .withColumn("method",
           element_at(array(OrderMethods.map(lit): _*), col("arm") + 1))
         .withColumn("is_limit", col("arm") % 2 === 0)
         .withColumn("has_log", col("p2l") % 7 =!= 0)
         .withColumn("out_tid", (col("tok_id") + 9) % TokRefSpace)
-      val sharedPrefix = concat(
-        md5(concat(lit("oh:"), col("tx_hash"))),
-        md5(concat(lit("oh2:"), col("tx_hash"))),
-        lit("0" * 32), md5(concat(lit("mkr:"), col("p2l") % 9)),
-        lit("0" * 32), col("from_address"))
+      val hash = concat(md5(concat(lit("oh:"), col("tx_hash"))),
+        md5(concat(lit("oh2:"), col("tx_hash"))))
+      val maker = md5(concat(lit("mkr:"), col("p2l") % 9))
+      val makerTok = md5(concat(lit("tok:"), col("out_tid")))
+      val takerTok = md5(concat(lit("tok:"), col("tok_id")))
       val poolB32 = concat(md5(concat(lit("pl:"), col("tx_hash"))),
         md5(concat(lit("pl2:"), col("tx_hash"))))
       val packed = t
         .withColumn("log_data", when(!col("has_log"), unhex(lit("")))
-          .when(col("is_limit"), unhex(concat(sharedPrefix,
-            lit("0" * 32), md5(concat(lit("fee:"), col("p2l") % 4)),
-            lit("0" * 32), md5(concat(lit("tok:"), col("out_tid"))),
-            lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))),
-            word(col("q6l")), word(col("p2l")),
-            word(col("p2l") % 1000), word(col("q6l") % 777), poolB32)))
-          .otherwise(unhex(concat(sharedPrefix,
-            lit("0" * 32), md5(concat(lit("tok:"), col("out_tid"))),
-            lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))),
-            word(col("q6l")), word(col("p2l")), poolB32))))
-      val tkIn = tokens(s).select(col("token_id").as("in_id"),
-        col("decimals").as("in_dec"))
-      val tkOut = tokens(s).select(col("token_id").as("out_id"),
-        col("decimals").as("out_dec"))
+          .when(col("is_limit"), LimitFilledLog.pack(hash, maker,
+            col("from_address"), md5(concat(lit("fee:"), col("p2l") % 4)),
+            makerTok, takerTok, col("q6l"), col("p2l"), col("p2l") % 1000,
+            col("q6l") % 777, poolB32))
+          .otherwise(RfqFilledLog.pack(hash, maker, col("from_address"),
+            makerTok, takerTok, col("q6l"), col("p2l"), poolB32)))
+      val tkIn = decimalsOf(s, "in_id", "in_dec")
+      val tkOut = decimalsOf(s, "out_id", "out_dec")
       zeroxOrderDecode(packed)
         .join(broadcast(tkIn),
           substring(col("taker_tok"), 9, 32) ===
@@ -240,6 +234,18 @@ object RealAbiZeroXOps extends graft.QueryModule {
     "sell_token_for_token_to_uniswap_v3",
     "sell_to_liquidity_provider", "settle_orders")
 
+  /** `sellEthForTokenToUniswapV3(bytes encodedPath, uint minBuyAmount,
+    * address recipient)`. */
+  private[graft] val SellEthCall =
+    calldata(bytes("path"), uint(""), address("recip_cd"))
+  /** `sellTokenFor{Eth,Token}ToUniswapV3(bytes encodedPath, uint
+    * sellAmount, uint minBuyAmount, address recipient)`. */
+  private[graft] val SellTokenCall =
+    calldata(bytes("path"), uint(""), uint(""), address("recip_cd"))
+  /** LiquidityProviderSwap: inputToken, outputToken, inputAmount,
+    * outputAmount, provider, recipient. */
+  private[graft] val LpSwapLog = words(address(""), address(""), uint(""),
+    uint(""), address("from_lp"), address("recip_lp"))
   /** The fan-out decode core on any frame with (calldata, log_data, m):
     * the bytes-typed `encodedPath` contributes only its HEAD OFFSET
     * word (96 = 3 head words for sellEthForToken, 128 = 4 for the two
@@ -247,15 +253,13 @@ object RealAbiZeroXOps extends graft.QueryModule {
     * position — word 2 or 3 by method; the LiquidityProviderSwap
     * fields are all non-indexed data words (provider 4, recipient 5,
     * classifier-abis/zero-x/ZeroXLiquidityProviderFeature.json). */
-  private[graft] def zeroxFanoutDecode(t: DataFrame): DataFrame = t
-    .withColumn("off_dec", abi_word(col("calldata"), 0))
-    .withColumn("recip_cd",
-      when(col("m") === 9, abi_address(col("calldata"), 2))
-        .when(col("m") === 10 || col("m") === 11,
-          abi_address(col("calldata"), 3))
-        .otherwise(lit(null).cast("string")))
-    .withColumn("from_lp", abi_log_address(col("log_data"), 4))
-    .withColumn("recip_lp", abi_log_address(col("log_data"), 5))
+  private[graft] def zeroxFanoutDecode(t: DataFrame): DataFrame =
+    LpSwapLog.decode(t, "log_data")
+      .withColumn("off_dec", SellEthCall.offset(col("calldata"), "path"))
+      .withColumn("recip_cd",
+        when(col("m") === 9, SellEthCall.read(col("calldata"), "recip_cd"))
+          .when(col("m") === 10 || col("m") === 11,
+            SellTokenCall.read(col("calldata"), "recip_cd")))
 
   /** C2 (the ZeroX aggregator registry + OneInchFusion → Aggregator):
     * fourteen (protocol, selector) entries, one output shape, four
@@ -280,10 +284,7 @@ object RealAbiZeroXOps extends graft.QueryModule {
   private val c2ZeroxFanout = QueryDef(
     "c2_zerox_fanout",
     (s, dir) => {
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelTransfer)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelTransfer)
         .withColumn("m", ((col("q6l") + col("p2l")) % 14).cast("int"))
         .withColumn("method",
           element_at(array(FanoutMethods.map(lit): _*), col("m") + 1))
@@ -297,27 +298,22 @@ object RealAbiZeroXOps extends graft.QueryModule {
         .withColumn("has_log",
           col("m") =!= 12 || col("p2l") % 6 =!= 0)
         .withColumn("out_tid", (col("tok_id") + 7) % TokRefSpace)
-      val rcpWord = concat(lit("0" * 32),
-        md5(concat(lit("rcp:"), col("p2l") % 11)))
-      val pathTail = concat(word(lit(32L)),
-        md5(concat(lit("path:"), col("tx_hash"))),
+      val rcp = md5(concat(lit("rcp:"), col("p2l") % 11))
+      val path = concat(md5(concat(lit("path:"), col("tx_hash"))),
         md5(concat(lit("path2:"), col("tx_hash"))))
       val packed = t
         .withColumn("calldata",
-          when(col("m") === 9, unhex(concat(col("selector"),
-            word(lit(96L)), word(col("p2l")), rcpWord, pathTail)))
-          .when(col("m") === 10 || col("m") === 11,
-            unhex(concat(col("selector"), word(lit(128L)),
-              word(col("q6l")), word(col("p2l")), rcpWord, pathTail)))
+          when(col("m") === 9,
+            SellEthCall.pack(col("selector"), path, col("p2l"), rcp))
+          .when(col("m") === 10 || col("m") === 11, SellTokenCall.pack(
+            col("selector"), path, col("q6l"), col("p2l"), rcp))
           .otherwise(unhex(col("selector"))))
         .withColumn("log_data",
-          when(col("m") === 12 && col("has_log"), unhex(concat(
-            lit("0" * 32), md5(concat(lit("tok:"), col("tok_id"))),
-            lit("0" * 32), md5(concat(lit("tok:"), col("out_tid"))),
-            word(col("q6l")), word(col("p2l")),
-            lit("0" * 32), md5(concat(lit("lp:"), col("p2l") % 5)),
-            lit("0" * 32),
-            md5(concat(lit("lpr:"), (col("q6l") + col("p2l")) % 8)))))
+          when(col("m") === 12 && col("has_log"), LpSwapLog.pack(
+            md5(concat(lit("tok:"), col("tok_id"))),
+            md5(concat(lit("tok:"), col("out_tid"))), col("q6l"), col("p2l"),
+            md5(concat(lit("lp:"), col("p2l") % 5)),
+            md5(concat(lit("lpr:"), (col("q6l") + col("p2l")) % 8))))
           .otherwise(unhex(lit(""))))
       zeroxFanoutDecode(packed)
         .withColumn("ok",
@@ -410,25 +406,19 @@ object RealAbiZeroXOps extends graft.QueryModule {
     "c5_zerox_batchfill",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val t = tracesTable(s, dir)
-        .filter(col("selector") === SelMint)
-        .withColumn("q6l", col("q6").cast("long"))
-        .withColumn("p2l", col("p2").cast("long"))
+      val t = framesOf(s, dir, SelMint)
         .withColumn("n_fills",
           when(col("p2l") % 8 === 0, 0L)
             .otherwise(lit(1L) + (col("q6l") + col("p2l")) % 3))
       def fillAt(k: Int) = struct(
         lit(k).as("k"),
-        when(col("n_fills") > k, unhex(concat(
-          md5(concat(lit("oh:"), col("tx_hash"), lit(s":$k"))),
-          md5(concat(lit("oh2:"), col("tx_hash"), lit(s":$k"))),
-          lit("0" * 32), md5(concat(lit("mkr:"), col("p2l") % 9)),
-          lit("0" * 32), col("from_address"),
-          lit("0" * 32),
+        when(col("n_fills") > k, RealAbiOps.OtcFilledLog.pack(
+          concat(md5(concat(lit("oh:"), col("tx_hash"), lit(s":$k"))),
+            md5(concat(lit("oh2:"), col("tx_hash"), lit(s":$k")))),
+          md5(concat(lit("mkr:"), col("p2l") % 9)), col("from_address"),
           md5(concat(lit("tok:"), (col("tok_id") + 2 * k + 1) % TokRefSpace)),
-          lit("0" * 32),
           md5(concat(lit("tok:"), (col("tok_id") + 2 * k) % TokRefSpace)),
-          word(col("p2l") + k), word(col("q6l") + k))))
+          col("p2l") + k, col("q6l") + k))
           .otherwise(unhex(lit(""))).as("log_data"))
       val legs = t
         .select(col("tx_hash"), col("trace_idx"), col("from_address"),
@@ -438,10 +428,8 @@ object RealAbiZeroXOps extends graft.QueryModule {
           col("q6l"), col("p2l"), col("n_fills"),
           col("f.k").as("k"), col("f.log_data").as("log_data"))
         .withColumn("is_fill", col("k") < col("n_fills"))
-      val tkIn = tokens(s).select(col("token_id").as("in_id"),
-        col("decimals").as("in_dec"))
-      val tkOut = tokens(s).select(col("token_id").as("out_id"),
-        col("decimals").as("out_dec"))
+      val tkIn = decimalsOf(s, "in_id", "in_dec")
+      val tkOut = decimalsOf(s, "out_id", "out_dec")
       val w = Window.partitionBy("tx_hash", "trace_idx")
       RealAbiOps.otcFilledDecode(legs)
         .join(broadcast(tkIn),

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge => B}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -10,6 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import AbiSlot._
 import AbiRead._
+import AbiLayout.{decodeAt => decode}
 
 /** F5 (native form): ABI calldata decode over real BinaryType — the
   * codegen'd analog of the reference's per-trace decoder dispatch
@@ -20,13 +21,16 @@ import AbiRead._
   * same words with no selector.
   *
   * Every decode below is one [[AbiDecode]] naming two choices, so a layout
-  * is data (a `ProtocolSpec` row can name its decode as a pair):
+  * is data ([[AbiLayout]] names each of its parameters' decodes as a
+  * pair; these facade functions are the pairs by their SQL names):
   *   - an [[AbiSlot]], where the 32-byte word starts: a fixed word, a
-  *     dynamic array's length or element, or a field of an offset-passed
+  *     dynamic array's length or element, a field of an element of a
+  *     dynamic array of static tuples, or a field of an offset-passed
   *     tuple;
   *   - an [[AbiRead]], what is read from that word: uint or signed int as
-  *     BIGINT, a zero-padded address or a leading 20 bytes as hex, or the
-  *     4-byte selector.
+  *     BIGINT, a zero-padded address or a leading 20 bytes as hex, the
+  *     4-byte selector, or a dynamic `string`/`bytes` (the length word,
+  *     then that much content, NULL unless it all lies in the buffer).
   *
   * The byte walk lives once, in [[AbiKernel]]. `nullSafeEval` calls it,
   * and `doGenCode` emits a static call into it with the slot's constants
@@ -38,15 +42,12 @@ import AbiRead._
   */
 object AbiCalldata {
 
-  private def decode(c: Column, name: String, slot: AbiSlot, read: AbiRead): Column =
-    B.column(AbiDecode(B.expression(c), name, slot, read))
-
   /** Low 8 bytes of ABI word `i` (after the 4-byte selector) as BIGINT;
     * NULL when the calldata is too short for that word. */
-  def abi_word(c: Column, i: Int): Column = decode(c, "abi_word", Word(4, i), Uint)
+  def abi_word(c: Column, i: Int): Column = decode(c, Word(4, i), Uint)
 
   /** First 4 bytes as a lowercase hex selector string; NULL when short. */
-  def abi_selector(c: Column): Column = decode(c, "abi_selector", Word(0, 0), Selector)
+  def abi_selector(c: Column): Column = decode(c, Word(0, 0), Selector)
 
   /** Word `i` decoded as SIGNED int256 (two's complement) → BIGINT. The
     * V3-style layout: swap deltas are int256 where exact-output amounts
@@ -54,25 +55,25 @@ object AbiCalldata {
     * word is short or its magnitude exceeds 64 bits (upper 24 bytes must
     * be uniform sign-extension). */
   def abi_int_word(c: Column, i: Int): Column =
-    decode(c, "abi_int_word", Word(4, i), Sint)
+    decode(c, Word(4, i), Sint)
 
   /** Word `i` of EVENT LOG `data` (no selector prefix — logs carry bare
     * 32-byte words) → BIGINT; the log-decoded amount path (the reference's
     * `log` arm of action_impl!, brontes-macros/src/action_classifier.rs). */
-  def abi_log_word(c: Column, i: Int): Column = decode(c, "abi_log_word", Word(0, i), Uint)
+  def abi_log_word(c: Column, i: Int): Column = decode(c, Word(0, i), Uint)
 
   /** Length of the dynamic array whose OFFSET pointer sits in head word
     * `headIdx` (Solidity dynamic ABI: head word holds byte offset from the
     * args start; the tail starts with a length word). Curve multi-token
     * layout (classifiers/curve/). */
   def abi_array_len(c: Column, headIdx: Int): Column =
-    decode(c, "abi_array_len", ArrayLen(4, headIdx), Uint)
+    decode(c, ArrayLen(4, headIdx), Uint)
 
   /** Element `elemIdx` (low 8 bytes as BIGINT) of the dynamic array whose
     * offset pointer sits in head word `headIdx`; NULL beyond the decoded
     * length. */
   def abi_array_elem(c: Column, headIdx: Int, elemIdx: Int): Column =
-    decode(c, "abi_array_elem", ArrayElem(4, headIdx, elemIdx), Uint)
+    decode(c, ArrayElem(4, headIdx, elemIdx), Uint)
 
   /** ABI `address` in word `i`: the word's trailing 20 bytes as a 40-char
     * lowercase hex string, NULL when the buffer is short or the 12-byte
@@ -80,7 +81,7 @@ object AbiCalldata {
     * zero-padded — nonzero padding means the word is not an address). The
     * Maker-PSM-style layout: `buyGem(address usr, uint256 gemAmt)`
     * (classifiers/maker/psm.rs `call_data.usr`). */
-  def abi_address(c: Column, i: Int): Column = decode(c, "abi_address", Word(4, i), Address)
+  def abi_address(c: Column, i: Int): Column = decode(c, Word(4, i), Address)
 
   /** Word `i` of RETURN data decoded as SIGNED int256 → BIGINT. Return
     * buffers carry bare 32-byte words (no selector prefix); same
@@ -88,7 +89,7 @@ object AbiCalldata {
     * source: `swap` returns `(int256 amount0, int256 amount1)` where the
     * pool's OUTPUT side arrives negative
     * (classifiers/uniswap/uniswap_v3.rs `return_data.amount0/amount1`). */
-  def abi_ret_int(c: Column, i: Int): Column = decode(c, "abi_ret_int", Word(0, i), Sint)
+  def abi_ret_int(c: Column, i: Int): Column = decode(c, Word(0, i), Sint)
 
   /** Low 8 bytes of FIELD `fieldIdx` of the dynamic TUPLE whose offset
     * pointer sits in head word `headIdx` (a struct with any dynamic member
@@ -97,14 +98,14 @@ object AbiCalldata {
     * carries `bytes userData` (classifiers/balancer/balancer_v2.rs
     * `call_data.swapRequest.amount`). */
   def abi_tuple_word(c: Column, headIdx: Int, fieldIdx: Int): Column =
-    decode(c, "abi_tuple_word", TupleField(headIdx, fieldIdx), Uint)
+    decode(c, TupleField(headIdx, fieldIdx), Uint)
 
   /** ABI `address` FIELD of an offset-passed tuple: trailing 20 bytes of
     * tuple field `fieldIdx`, 12-zero-byte pad validated (NULL otherwise) —
     * [[abi_address]] through one offset indirection
     * (`swapRequest.tokenIn/tokenOut/from/to`). */
   def abi_tuple_address(c: Column, headIdx: Int, fieldIdx: Int): Column =
-    decode(c, "abi_tuple_address", TupleField(headIdx, fieldIdx), Address)
+    decode(c, TupleField(headIdx, fieldIdx), Address)
 
   /** LEADING 20 bytes of tuple field `fieldIdx` as a 40-char hex string —
     * the Balancer `bytes32 poolId` shape, whose FIRST portion is the
@@ -112,7 +113,7 @@ object AbiCalldata {
     * :219-226); the trailing 12 bytes are the pool specialization + nonce
     * and are NOT validated (any value is legal there). */
   def abi_pool_id_address(c: Column, headIdx: Int, fieldIdx: Int): Column =
-    decode(c, "abi_pool_id_address", TupleField(headIdx, fieldIdx), Prefix20)
+    decode(c, TupleField(headIdx, fieldIdx), Prefix20)
 
   /** ABI `address` in bare-word buffer position `i` (event-log `data` /
     * return data — no selector prefix): trailing 20 bytes, 12-zero-byte
@@ -120,7 +121,7 @@ object AbiCalldata {
     * EVENT carries the liquidator as a data word
     * (classifiers/compound/compound_v2.rs `logs.liquidator`). */
   def abi_log_address(c: Column, i: Int): Column =
-    decode(c, "abi_log_address", Word(0, i), Address)
+    decode(c, Word(0, i), Address)
 
   /** ABI `address` ELEMENT of the dynamic `address[]` whose offset
     * pointer sits in head word `headIdx`: [[abi_array_elem]]'s
@@ -130,7 +131,7 @@ object AbiCalldata {
     * receiverAddress, address[] assets, uint256[] amounts, ...)`
     * (classifiers/aave/v2.rs `call_data.assets`). */
   def abi_array_address(c: Column, headIdx: Int, elemIdx: Int): Column =
-    decode(c, "abi_array_address", ArrayElem(4, headIdx, elemIdx), Address)
+    decode(c, ArrayElem(4, headIdx, elemIdx), Address)
 
   /** [[abi_array_len]] over a BARE-word buffer (event-log `data` — no
     * 4-byte selector, and ABI offsets are relative to the data start).
@@ -138,15 +139,15 @@ object AbiCalldata {
     * tokens, int256[] deltas, ...)` rides the LOG, not the calldata
     * (classifiers/balancer/balancer_v2.rs `logs.tokens`). */
   def abi_log_array_len(c: Column, headIdx: Int): Column =
-    decode(c, "abi_log_array_len", ArrayLen(0, headIdx), Uint)
+    decode(c, ArrayLen(0, headIdx), Uint)
 
   /** [[abi_array_elem]] over a bare-word (log/return) buffer. */
   def abi_log_array_elem(c: Column, headIdx: Int, elemIdx: Int): Column =
-    decode(c, "abi_log_array_elem", ArrayElem(0, headIdx, elemIdx), Uint)
+    decode(c, ArrayElem(0, headIdx, elemIdx), Uint)
 
   /** [[abi_array_address]] over a bare-word (log/return) buffer. */
   def abi_log_array_address(c: Column, headIdx: Int, elemIdx: Int): Column =
-    decode(c, "abi_log_array_address", ArrayElem(0, headIdx, elemIdx), Address)
+    decode(c, ArrayElem(0, headIdx, elemIdx), Address)
 
   /** SIGNED int256 ELEMENT of the dynamic array whose offset pointer sits
     * in head word `headIdx`: [[abi_array_elem]]'s offset-and-length walk
@@ -158,11 +159,11 @@ object AbiCalldata {
     * classifier takes `.abs()` after a zero skip, so the SIGN must survive
     * the decode). */
   def abi_array_int(c: Column, headIdx: Int, elemIdx: Int): Column =
-    decode(c, "abi_array_int", ArrayElem(4, headIdx, elemIdx), Sint)
+    decode(c, ArrayElem(4, headIdx, elemIdx), Sint)
 
   /** [[abi_array_int]] over a bare-word (log/return) buffer. */
   def abi_log_array_int(c: Column, headIdx: Int, elemIdx: Int): Column =
-    decode(c, "abi_log_array_int", ArrayElem(0, headIdx, elemIdx), Sint)
+    decode(c, ArrayElem(0, headIdx, elemIdx), Sint)
 
   /** LEADING 20 bytes of the STATIC word at position `wordIdx` as 40-char
     * hex — the `bytes32 poolId` shape in a fixed calldata slot (Balancer
@@ -171,12 +172,12 @@ object AbiCalldata {
     * [[abi_pool_id_address]] there is NO tuple indirection; the trailing
     * 12 bytes (specialization + nonce) are free, so no pad validation. */
   def abi_b32_prefix(c: Column, wordIdx: Int): Column =
-    decode(c, "abi_b32_prefix", Word(4, wordIdx), Prefix20)
+    decode(c, Word(4, wordIdx), Prefix20)
 
   /** [[abi_b32_prefix]] over a bare-word buffer (an indexed `bytes32`
     * TOPIC, e.g. TokensRegistered's poolId topic1). */
   def abi_log_b32_prefix(c: Column, wordIdx: Int): Column =
-    decode(c, "abi_log_b32_prefix", Word(0, wordIdx), Prefix20)
+    decode(c, Word(0, wordIdx), Prefix20)
 
   // ── encoders: the inverse of the decodes, for synthesizing buffers ──
 
@@ -195,22 +196,31 @@ object AbiCalldata {
   * offsets count from `base`. */
 sealed trait AbiSlot extends Product with Serializable {
 
-  /** (kind, base, head, idx) as [[AbiKernel.at]] takes them. */
-  private[functions] def args: (Int, Int, Int, Int) = this match {
-    case Word(base, i) => (AbiKernel.Word, base, i, 0)
-    case ArrayLen(base, head) => (AbiKernel.ArrayLen, base, head, 0)
-    case ArrayElem(base, head, j) => (AbiKernel.ArrayElem, base, head, j)
-    case TupleField(head, field) => (AbiKernel.TupleField, 4, head, field)
+  /** (kind, base, head, idx, width) as [[AbiKernel.at]] takes them. */
+  private[functions] def args: (Int, Int, Int, Int, Int) = this match {
+    case Word(base, i) => (AbiKernel.Word, base, i, 0, 1)
+    case ArrayLen(base, head) => (AbiKernel.ArrayLen, base, head, 0, 1)
+    case ArrayElem(base, head, j) => (AbiKernel.ArrayElem, base, head, j, 1)
+    case TupleArrayField(base, head, j, field, width) =>
+      (AbiKernel.ArrayElem, base, head, j * width + field, width)
+    case TupleField(head, field) => (AbiKernel.TupleField, 4, head, field, 1)
   }
 }
 
 object AbiSlot {
   /** Word `i` of the buffer. */
   final case class Word(base: Int, i: Int) extends AbiSlot
-  /** The length word of the dynamic array whose offset sits in word `head`. */
+  /** The length word of the dynamic array (or `bytes`/`string`) whose
+    * offset sits in word `head`. */
   final case class ArrayLen(base: Int, head: Int) extends AbiSlot
   /** Element `j` of that array; NULL unless `j` is below its length. */
   final case class ArrayElem(base: Int, head: Int, j: Int) extends AbiSlot
+  /** Field `field` of element `j` of a dynamic array of static tuples,
+    * each `width` words wide; NULL unless `j` is below its length. */
+  final case class TupleArrayField(base: Int, head: Int, j: Int, field: Int, width: Int)
+      extends AbiSlot {
+    require(field < width, "field must lie inside the tuple")
+  }
   /** Static field `field` of the calldata tuple whose offset sits in word
     * `head` (a struct with a dynamic member is passed by offset). */
   final case class TupleField(head: Int, field: Int) extends AbiSlot
@@ -233,21 +243,30 @@ object AbiRead {
   case object Prefix20 extends AbiRead(AbiKernel.Prefix20, StringType)
   /** The leading 4 bytes as lowercase hex: needs 4 bytes, not a word. */
   case object Selector extends AbiRead(AbiKernel.Selector, StringType)
+  /** A dynamic `string` at an [[AbiSlot.ArrayLen]] slot: the length word
+    * (upper 24 bytes zero), then that many content bytes as UTF-8; NULL
+    * unless the whole content lies inside the buffer. */
+  case object Str extends AbiRead(AbiKernel.Str, StringType)
+  /** A dynamic `bytes` at an [[AbiSlot.ArrayLen]] slot, as [[Str]] but
+    * the content as lowercase hex. */
+  case object Bytes extends AbiRead(AbiKernel.Bytes, StringType)
 }
 
 /** The one ABI decode expression: `read` applied to the word at `slot` of
-  * a BINARY buffer, NULL when the buffer does not hold it. `name` is the
-  * SQL/pretty name (`abi_word`, `abi_pool_id_address`, …). */
-case class AbiDecode(child: Expression, name: String, slot: AbiSlot, read: AbiRead)
+  * a BINARY buffer, NULL when the buffer does not hold it. Its SQL/pretty
+  * name (`abi_word`, `abi_pool_id_address`, …) follows from the pair. */
+case class AbiDecode(child: Expression, slot: AbiSlot, read: AbiRead)
     extends UnaryExpression {
 
-  private val (kind, base, head, idx) = slot.args
-  require(head >= 0 && idx >= 0, "indices must be non-negative")
+  private val (kind, base, head, idx, width) = slot.args
+  require(head >= 0 && idx >= 0 && width >= 1, "indices must be non-negative")
   require(base == 4 || base == 0, "base is 4 (calldata) or 0 (log/return)")
+  require(read != AbiRead.Str && read != AbiRead.Bytes || kind == AbiKernel.ArrayLen,
+    "a string/bytes read needs an ArrayLen slot")
 
   override def dataType: DataType = read.dataType
   override def nullable: Boolean = true
-  override def prettyName: String = name
+  override def prettyName: String = AbiDecode.nameOf(slot, read)
   // plans show the layout: abi_word(calldata#1, Word(4,0), Uint)
   override protected def stringArgs: Iterator[Any] = Iterator(child, slot, read)
 
@@ -262,7 +281,7 @@ case class AbiDecode(child: Expression, name: String, slot: AbiSlot, read: AbiRe
 
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
-    val p = AbiKernel.at(b, kind, base, head, idx, read.code)
+    val p = AbiKernel.at(b, kind, base, head, idx, width, read.code)
     if (p < 0) null
     else if (dataType == LongType) AbiKernel.low8(b, p)
     else AbiKernel.text(b, p, read.code)
@@ -275,7 +294,7 @@ case class AbiDecode(child: Expression, name: String, slot: AbiSlot, read: AbiRe
       val value =
         if (dataType == LongType) s"$k.low8($c, $p)" else s"$k.text($c, $p, ${read.code})"
       s"""
-         |int $p = $k.at($c, $kind, $base, $head, $idx, ${read.code});
+         |int $p = $k.at($c, $kind, $base, $head, $idx, $width, ${read.code});
          |if ($p < 0) {
          |  ${ev.isNull} = true;
          |} else {
@@ -286,6 +305,34 @@ case class AbiDecode(child: Expression, name: String, slot: AbiSlot, read: AbiRe
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object AbiDecode {
+
+  /** The SQL name of a (slot, read) pair: `abi_` ‖ `log_` for a bare-word
+    * buffer ‖ the slot's shape ‖ the read (`abi_log_array_address`). */
+  def nameOf(slot: AbiSlot, read: AbiRead): String = {
+    val (kind, base, _, _, width) = slot.args
+    val shape = (kind, read) match {
+      case (_, Selector) => return "abi_selector"
+      case (_, Str) => "string"
+      case (_, Bytes) => "bytes"
+      case (AbiKernel.Word, Uint) => "word"
+      case (AbiKernel.Word, Sint) => if (base == 0) return "abi_ret_int" else "int_word"
+      case (AbiKernel.Word, Address) => "address"
+      case (AbiKernel.Word, _) => "b32_prefix"
+      case (AbiKernel.ArrayLen, _) => "array_len"
+      case (AbiKernel.ArrayElem, r) if width > 1 =>
+        if (r == Address) "tuple_array_address" else "tuple_array_word"
+      case (AbiKernel.ArrayElem, Uint) => "array_elem"
+      case (AbiKernel.ArrayElem, Sint) => "array_int"
+      case (AbiKernel.ArrayElem, _) => "array_address"
+      case (_, Address) => "tuple_address"
+      case (_, Prefix20) => "pool_id_address"
+      case _ => "tuple_word"
+    }
+    if (base == 0) s"abi_log_$shape" else s"abi_$shape"
+  }
 }
 
 /** The ABI byte walk shared by [[AbiDecode]]'s interpreted and generated
@@ -304,29 +351,34 @@ object AbiKernel {
   final val Address = 2
   final val Prefix20 = 3
   final val Selector = 4
+  final val Str = 5
+  final val Bytes = 6
 
   /** Start of the slot's word when the slot resolves inside `b` and the
     * word passes `read`'s checks; -1 (NULL) otherwise. `head` is the word
     * index (Word) or the offset word's index (the rest); `idx` is the
-    * array element or tuple field. */
-  def at(b: Array[Byte], kind: Int, base: Int, head: Int, idx: Int, read: Int): Int = {
-    val width = if (read == Selector) 4 else 32
+    * tuple field, or the array word past the length word, which belongs to
+    * element `idx / width` (`width` words per element). */
+  def at(b: Array[Byte], kind: Int, base: Int, head: Int, idx: Int, width: Int,
+      read: Int): Int = {
+    val size = if (read == Selector) 4 else 32
     val p =
-      if (kind == Word) fit(b, base + 32L * head, width)
+      if (kind == Word) fit(b, base + 32L * head, size)
       else {
         val off = offset(b, base + 32L * head)
         if (off < 0) -1
-        else if (kind == TupleField) fit(b, base + off + 32L * idx, width)
+        else if (kind == TupleField) fit(b, base + off + 32L * idx, size)
         else {
           val len = fit(b, base + off, 32)
           if (kind == ArrayLen || len < 0) len
-          else if (idx >= low8(b, len)) -1
-          else fit(b, len + 32L + 32L * idx, width)
+          else if (idx / width >= low8(b, len)) -1
+          else fit(b, len + 32L + 32L * idx, size)
         }
       }
     if (p < 0) -1
     else if (read == Sint && !signExtends(b, p)) -1
     else if (read == Address && !zeros(b, p, 12)) -1
+    else if ((read == Str || read == Bytes) && contentLength(b, p) < 0) -1
     else p
   }
 
@@ -338,11 +390,23 @@ object AbiKernel {
     v
   }
 
-  /** The hex string a string `read` yields from the word at `p`. */
+  /** The string a string `read` yields from the word at `p`. */
   def text(b: Array[Byte], p: Int, read: Int): UTF8String =
     if (read == Address) hex(b, p + 12, 20)
     else if (read == Selector) hex(b, p, 4)
+    else if (read == Str) UTF8String.fromBytes(b, p + 32, contentLength(b, p))
+    else if (read == Bytes) hex(b, p + 32, contentLength(b, p))
     else hex(b, p, 20)
+
+  // the length held by the `bytes`/`string` length word at `p` when its
+  // upper 24 bytes are zero and that much content follows it inside `b`,
+  // else -1 (a length past the buffer is corruption, not a short string)
+  private def contentLength(b: Array[Byte], p: Int): Int =
+    if (!zeros(b, p, 24)) -1
+    else {
+      val len = low8(b, p)
+      if (len < 0 || len > b.length - (p + 32L)) -1 else len.toInt
+    }
 
   private def hex(b: Array[Byte], from: Int, n: Int): UTF8String = {
     val out = new Array[Byte](2 * n)

@@ -1706,7 +1706,7 @@ class GoldenScenarioSpec extends SparkTestBase {
       g.getAs[Long]("n_amounts") == 1L)
     assert(g.getAs[String]("tok0") == weth)
     assert(g.getAs[Long]("amt0") == 653220647374307183L)
-    assert(g.getAs[Long]("n_userdata") == 0L)
+    assert(g.getAs[Long]("userdata_len") == 0L)
     assert(g.isNullAt(g.fieldIndex("tok1")), "past the decoded length")
     val s = out(1)
     assert(s.getAs[Long]("n_tokens_dec") == 1L, "tokens length still reads")
@@ -1790,7 +1790,7 @@ class GoldenScenarioSpec extends SparkTestBase {
     assert(g.isNullAt(g.fieldIndex("amt2")))
     assert(g.getAs[Long]("mode0") == 0L && g.getAs[Long]("mode1") == 1L)
     assert(g.getAs[String]("on_behalf") == rcpt)
-    assert(g.getAs[Long]("n_params") == 0L, "empty bytes params decodes len 0")
+    assert(g.getAs[Long]("params_len") == 0L, "empty bytes params decodes len 0")
     assert(g.getAs[Long]("ref_code") == 77L)
     val b = out(1)
     assert(b.getAs[String]("asset0") == a0)
@@ -1825,7 +1825,7 @@ class GoldenScenarioSpec extends SparkTestBase {
     assert(out.getAs[Long]("uid_off") == 192L)
     assert(out.getAs[Long]("uid_len") == 56L,
       "a GPv2 orderUid is exactly 56 bytes: digest ‖ owner ‖ validTo")
-    assert(out.getAs[String]("uid_hex") == uid)
+    assert(out.getAs[String]("uid") == uid)
   }
 
   test("real_abi compound: liquidateBorrow is MIXED-source — liquidator from the LOG, amounts filled") {
@@ -2287,5 +2287,120 @@ test("census: the onSwap overload pair differs ONLY in its head tail") {
       "minimal overload: same tuple fields through its 3-word head")
     assert(m.getAs[Long]("bal_in") == 1000L,
       "minimal overload: word 1 IS a scalar balance")
+  }
+
+  // ── planted bytes for the layouts whose queries carry no other golden ──
+
+  test("real_abi dss flash: token/amount from CALLDATA, receiver from the TOPIC, fee from LOG data") {
+    // maker/dss_flash.rs:6-39 — flashLoan(receiver, token, amount, data)
+    // with FlashLoan(address indexed receiver, token, amount, fee)
+    val recv = "00000000" + "aa" * 16
+    val tok = "6b175474e89094c44da98b954eedeac495271d0f"
+    def a(x: String) = "0" * 24 + x
+    val cd = "5cffe9de" + a(recv) + a(tok) + w64(1000000L) + w64(128L) + w64(0L)
+    val log = a(tok) + w64(1000000L) + w64(90L)
+    val out = graft.domain.RealAbiOps.dssFlashDecode(
+      Seq((cd, Option(a(recv)), Option(log)), (cd, None, None),
+        (cd.patch(8, "01", 2), Option(a(recv)), Option(log)))
+        .toDF("c", "t", "l")
+        .select(unhex(col("c")).as("calldata"), unhex(col("t")).as("topic1"),
+          unhex(col("l")).as("log_data")))
+      .collect()
+    val g = out(0)
+    assert(g.getAs[String]("recv_cd") == recv && g.getAs[String]("tok_cd") == tok &&
+      g.getAs[Long]("amt_cd") == 1000000L)
+    assert(g.getAs[String]("recv_topic") == recv,
+      "the receiver rides the indexed topic, not a data word")
+    assert(g.getAs[String]("tok_log") == tok && g.getAs[Long]("amt_log") == 1000000L &&
+      g.getAs[Long]("fee_log") == 90L)
+    val n = out(1)
+    assert(n.isNullAt(n.fieldIndex("amt_log")) && n.getAs[Long]("amt_cd") == 1000000L,
+      "an absent event NULLs the log side only: flash_loan_field? fails first")
+    val bad = out(2)
+    assert(bad.isNullAt(bad.fieldIndex("recv_cd")),
+      "a nonzero pad byte in the receiver word is not an address")
+  }
+
+  test("real_abi dodo buyShares: the three amounts ride the RETURN words") {
+    // dodo/dodo_v2.rs:109-156 — buyShares(address to) returns
+    // (shares, baseInput, quoteInput); a short return NULLs the missing word
+    val to = "00000000" + "bb" * 16
+    val cd = "4c85b425" + "0" * 24 + to
+    val out = graft.domain.RealAbiOps.buySharesDecode(
+      Seq((cd, w64(77L) + w64(0L) + w64(5000L)), (cd, w64(77L) + w64(12L)))
+        .toDF("c", "r")
+        .select(unhex(col("c")).as("calldata"), unhex(col("r")).as("ret_data")))
+      .collect()
+    val g = out(0)
+    assert(g.getAs[String]("to_dec") == to)
+    assert(g.getAs[Long]("shares_dec") == 77L && g.getAs[Long]("base_dec") == 0L &&
+      g.getAs[Long]("quote_dec") == 5000L, "a zero base side decodes AS zero")
+    val s = out(1)
+    assert(s.getAs[Long]("base_dec") == 12L && s.isNullAt(s.fieldIndex("quote_dec")),
+      "a two-word return has no quoteInput")
+  }
+
+  test("real_abi zerox otc: OtcOrderFilled carries every field in its data words") {
+    // ZeroXOtcOrdersFeature.json — OtcOrderFilled(bytes32 orderHash,
+    // maker, taker, makerToken, takerToken, uint128 makerTokenFilledAmount,
+    // uint128 takerTokenFilledAmount): nothing indexed, and makerToken
+    // precedes takerToken
+    val maker = "00000000" + "11" * 16
+    val taker = "00000000" + "22" * 16
+    val mTok = "a0b86991c6218b36c1d19d4a2e9eb0ce3606eb48"
+    val tTok = "c02aaa39b223fe8d0a0e5c4f27ead9083c756cc2"
+    def a(x: String) = "0" * 24 + x
+    val log = "ef" * 32 + a(maker) + a(taker) + a(mTok) + a(tTok) +
+      w64(2500000000L) + w64(1000000000000000000L)
+    val r = graft.domain.RealAbiOps.otcFilledDecode(
+      Seq(log).toDF("l").select(unhex(col("l")).as("log_data"))).head()
+    assert(r.getAs[String]("maker_dec") == maker && r.getAs[String]("taker_dec") == taker)
+    assert(r.getAs[String]("maker_tok") == mTok && r.getAs[String]("taker_tok") == tTok,
+      "the order hash word is skipped, not read as an address")
+    assert(r.getAs[Long]("maker_fill") == 2500000000L &&
+      r.getAs[Long]("taker_fill") == 1000000000000000000L)
+  }
+
+  test("real_abi balancer register: poolId from the TOPIC, two parallel address arrays") {
+    // balancer_v2.rs:203-216 — TokensRegistered(bytes32 indexed poolId,
+    // address[] tokens, address[] assetManagers)
+    val pool = "ba12222222228d8ba445958a75a0704d566bf2c8"
+    def a(x: String) = "0" * 24 + x
+    val (t0, t1) = ("11" * 20, "22" * 20)
+    val (m0, m1) = ("33" * 20, "44" * 20)
+    // tokens at 64 (2 head words), managers at 64 + 32 + 2*32 = 160
+    val log = w64(64L) + w64(160L) + w64(2L) + a(t0) + a(t1) +
+      w64(2L) + a(m0) + a(m1)
+    val r = graft.domain.RealAbiOps.registerDecode(
+      Seq((pool + "0002" + "00" * 10, log)).toDF("t", "l")
+        .select(unhex(col("t")).as("topic1"), unhex(col("l")).as("log_data")))
+      .head()
+    assert(r.getAs[String]("pool_dec") == pool,
+      "the poolId's leading 20 bytes are the pool; specialization is free")
+    assert(r.getAs[Long]("n_tok") == 2L && r.getAs[Long]("n_mgr") == 2L)
+    assert(r.getAs[String]("tok0") == t0 && r.getAs[String]("tok1") == t1)
+    assert(r.getAs[String]("mgr0") == m0 && r.getAs[String]("mgr1") == m1)
+    assert(r.isNullAt(r.fieldIndex("tok2")), "past the decoded length")
+  }
+
+  test("real_abi discovery: createPool calldata + return, Dodo NewPool data words") {
+    // uniswap/discovery.rs:25-44 — createPool(tokenA, tokenB, fee) →
+    // pool; dodo/discovery.rs:5-61 — NewPool(base, quote, creator, pool)
+    import graft.domain.RealAbiOps.{CreatePoolCall, CreatePoolRet, NewPoolLog}
+    def a(x: String) = "0" * 24 + x
+    val (tA, tB) = ("c0" * 20, "a0" * 20)
+    val (creator, pool) = ("cc" * 20, "dd" * 20)
+    val r = Seq(("a1671295" + a(tA) + a(tB) + w64(3000L), a(pool),
+        a(tA) + a(tB) + a(creator) + a(pool))).toDF("c", "r", "l")
+      .select(unhex(col("c")).as("calldata"), unhex(col("r")).as("ret"),
+        unhex(col("l")).as("log"))
+    val call = CreatePoolCall.decode(r, "calldata").head()
+    assert(call.getAs[String]("ta") == tA && call.getAs[String]("tb") == tB &&
+      call.getAs[Long]("fee_dec") == 3000L)
+    assert(CreatePoolRet.decode(r, "ret").head().getAs[String]("pool_dec") == pool,
+      "the deployed pool is the create call's RETURN word")
+    val log = NewPoolLog.decode(r, "log").head()
+    assert(log.getAs[String]("ta") == tA && log.getAs[String]("tb") == tB &&
+      log.getAs[String]("creator_dec") == creator && log.getAs[String]("pool_dec") == pool)
   }
 }

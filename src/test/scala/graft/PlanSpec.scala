@@ -136,24 +136,45 @@ class PlanSpec extends SparkTestBase {
   test("indirected decodes stay broadcast-only and never fall out of codegen") {
     // Curve (pool, coin_index) registry joins, Balancer poolId->pair join,
     // and the array-of-struct explode: all dimensions broadcast, the trace
-    // fact never shuffles into a sort-merge join, and the decode stage sits
-    // inside WholeStageCodegen
-    for (q <- Seq("c1_curve_indexed", "c1_balancer_poolid", "f5_abi_tuple",
-        "f5_abi_string", "c1_psm_swap", "c1_curve_underlying",
-        "c1_univ3_swap", "c1_balancer_onswap", "c1_univ2_swap",
-        "c1_compound_liquidation", "c1_univ3_mint",
-        "c1_univ3_burn_collect", "c3_curve_factory", "c1_aave_flashloan",
-        "c1_clipper_swap", "c1_balv1_swap", "c3_balv1_bind",
-        "c5_unix_batch", "c2_real_fanout", "c1_zerox_orders",
-        "c2_zerox_fanout", "c5_zerox_batchfill", "c3_compound_init",
-        "c2_census_curve", "c2_census_misc")) {
+    // fact never shuffles into a sort-merge join
+    val broadcastOnly = Set("c1_curve_indexed", "c1_balancer_poolid",
+      "f5_abi_tuple", "f5_abi_string", "c1_psm_swap", "c1_curve_underlying",
+      "c1_univ3_swap", "c1_balancer_onswap", "c1_univ2_swap",
+      "c1_compound_liquidation", "c1_univ3_mint",
+      "c1_univ3_burn_collect", "c3_curve_factory", "c1_aave_flashloan",
+      "c1_clipper_swap", "c1_balv1_swap", "c3_balv1_bind",
+      "c5_unix_batch", "c2_real_fanout", "c1_zerox_orders",
+      "c2_zerox_fanout", "c5_zerox_batchfill", "c3_compound_init",
+      "c2_census_curve", "c2_census_misc")
+    // every whole-stage span of every ABI-layout query must COMPILE: a
+    // span whose generated method grows past 64 KB stays in the plan
+    // while Spark runs it interpreted, so a rendered `*(n)` proves nothing
+    val modules = Seq(graft.domain.RealAbiOps, graft.domain.RealAbiSwapOps,
+      graft.domain.RealAbiZeroXOps, graft.domain.RealAbiExtOps,
+      graft.domain.IndirectOps, graft.domain.CensusOps)
+    val queries = modules.flatMap(_.defs.map(_.name))
+    assert(queries.size == 41 && broadcastOnly.subsetOf(queries.toSet))
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val failed = queries.flatMap(q => Pins.scope {
       val df = SparkEntry.queries(q)(spark, SfDir)
       df.collect() // finalize the AQE plan so codegen spans are rendered
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("SortMergeJoin"), s"$q:\n$p")
-      assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n$p")
-      assert("""\*\(\d+\)""".r.findFirstIn(p).isDefined, s"$q:\n$p")
-    }
+      val plan = df.queryExecution.executedPlan
+      val p = plan.toString
+      if (broadcastOnly(q)) {
+        assert(!p.contains("SortMergeJoin"), s"$q:\n$p")
+        assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n$p")
+      }
+      val spans = Plans.collect(plan) {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+      }
+      assert(spans.nonEmpty, s"$q has no whole-stage span:\n$p")
+      spans.flatMap { w =>
+        scala.util.Try(org.apache.spark.sql.catalyst.expressions.codegen
+          .CodeGenerator.compile(w.doCodeGen()._2)).failed.toOption
+          .map(e => s"$q *(${w.codegenStageId}): ${e.getMessage.take(200)}")
+      }
+    })
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 
   test("abi decode expressions are codegen'd, not fallback") {

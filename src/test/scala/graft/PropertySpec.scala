@@ -294,27 +294,26 @@ class PropertySpec extends SparkTestBase {
       else refInt(b, wordOff.toInt)
     }
 
-  /** The query-form dynamic-STRING walk (f5_abi_string / c3_curve_factory
-    * shape): head word at `headIdx` → tail length → content slice, with
-    * SQL substring's clamping on a short tail. Defined only where the
-    * walk RESOLVES (full length word, sane length) — the queries apply it
-    * exclusively to buffers they packed themselves, so hostile lengths
-    * (which would trip the ANSI INT cast) are out of contract; the fuzz
-    * filters to resolvable buffers and checks value equality there. */
-  private def refStrWalk(b: Array[Byte], headIdx: Int): Option[(Long, String)] =
-    refWord(b, 4 + headIdx * 32).flatMap { off =>
-      val lenPos = 4 + off + 24
-      if (off < 0 || lenPos < 0 || b.length < lenPos + 8) None
-      else {
-        val len = beLong(b, lenPos.toInt)
-        if (len < 0 || len > 1000) None
-        else {
-          val from = (4 + off + 32).toInt
-          val content = b.slice(from, math.min(b.length.toLong,
-            from + len).toInt)
-          Some((len, content.map("%02x".format(_)).mkString))
-        }
-      }
+  /** `bytes`/`string` content at the dynamic head `headIdx`: the whole
+    * length word as an unsigned BigInteger below 2^63, then that many
+    * bytes, ALL inside the buffer — truncated content is None, never a
+    * shorter string. */
+  private def refDyn(b: Array[Byte], headIdx: Int, base: Int): Option[Array[Byte]] =
+    refArrayGeom(b, headIdx, base).flatMap { case (lenOff, _) =>
+      val word = (lenOff - 24).toInt
+      val len = new java.math.BigInteger(1, b.slice(word, word + 32))
+      val end = word + 32 + len.longValue
+      if (len.bitLength() > 63 || end > b.length) None
+      else Some(b.slice(word + 32, end.toInt))
+    }
+
+  /** Field `f` (the word's start) of element `j` of a dynamic array of
+    * `width`-word static tuples; None past the decoded length. */
+  private def refTupleArrWord(b: Array[Byte], headIdx: Int, j: Int, f: Int,
+      width: Int, base: Int): Option[Int] =
+    refArrayGeom(b, headIdx, base).flatMap { case (lenOff, n) =>
+      val wordOff = lenOff + 8 + 32L * (j * width + f)
+      if (j >= n || b.length < wordOff + 32) None else Some(wordOff.toInt)
     }
 
   private val abiBufGen: Gen[Array[Byte]] = for {
@@ -447,7 +446,48 @@ class PropertySpec extends SparkTestBase {
           abi_log_array_int(col("b"), h, k).as(s"lei${h}_$k")))
     } ++ Seq(abi_b32_prefix(col("b"), 0).as("bp0"),
       abi_log_b32_prefix(col("b"), 0).as("lbp0"))
+    // the string/bytes read and the tuple-array field slot, on both bases
+    import graft.functions.{AbiLayout, AbiRead, AbiSlot}
+    def at(slot: AbiSlot, read: AbiRead) = AbiLayout.decodeAt(col("b"), slot, read)
+    val dynCols = for (base <- Seq(0, 4); h <- 0 to 1) yield Seq(
+      at(AbiSlot.ArrayLen(base, h), AbiRead.Str).as(s"s${base}_$h"),
+      at(AbiSlot.ArrayLen(base, h), AbiRead.Bytes).as(s"x${base}_$h")) ++
+      (for (width <- 2 to 3; j <- 0 to 2; f <- Seq(0, width - 1)) yield
+        at(AbiSlot.TupleArrayField(base, h, j, f, width), AbiRead.Uint)
+          .as(s"tu${base}_${h}_${width}_${j}_$f")) ++
+      (for (j <- 0 to 2; f <- 0 to 1) yield
+        at(AbiSlot.TupleArrayField(base, h, j, f, 2), AbiRead.Address)
+          .as(s"ta${base}_${h}_2_${j}_$f"))
     val out = decodeRows(bufs, cols, codegen)
+    // a separate projection: whole-stage codegen keeps at most 100 fields
+    val dynOut = decodeRows(bufs, dynCols.flatten, codegen)
+    var (resolved, truncated) = (0, 0)
+    for (r <- dynOut) {
+      val b = r.getAs[Array[Byte]]("b")
+      def gl(n: String): Option[Long] =
+        if (r.isNullAt(r.fieldIndex(n))) None else Some(r.getAs[Long](n))
+      def gs(n: String): Option[String] = Option(r.getAs[String](n))
+      for (base <- Seq(0, 4); h <- 0 to 1) {
+        val exp = refDyn(b, h, base)
+        assert(gs(s"s${base}_$h") ==
+          exp.map(new String(_, java.nio.charset.StandardCharsets.UTF_8)),
+          s"string base=$base h=$h len=${b.length}")
+        assert(gs(s"x${base}_$h") == exp.map(_.map("%02x".format(_)).mkString),
+          s"bytes base=$base h=$h len=${b.length}")
+        if (exp.isDefined) resolved += 1
+        else if (refArrayLen(b, h, base).exists(n => n >= 0 && n <= 64)) truncated += 1
+        for (width <- 2 to 3; j <- 0 to 2; f <- Seq(0, width - 1)) {
+          val n = s"${base}_${h}_${width}_${j}_$f"
+          val w = refTupleArrWord(b, h, j, f, width, base)
+          assert(gl(s"tu$n") == w.flatMap(refWord(b, _)), s"tuple array word $n")
+          if (width == 2)
+            assert(gs(s"ta$n") == w.flatMap(refAddr(b, _)), s"tuple array address $n")
+        }
+      }
+    }
+    // the population reaches both arms of the content check: content
+    // inside the buffer, and a sane length whose content runs past it
+    assert(resolved > 0 && truncated > 0, s"resolved=$resolved truncated=$truncated")
     for (r <- out) {
       val b = r.getAs[Array[Byte]]("b")
       def gl(n: String): Option[Long] =
@@ -482,26 +522,6 @@ class PropertySpec extends SparkTestBase {
 
   test("dynamic-shape decoders equal BigInteger references on random buffers") {
     dynamicShapeFuzz(codegen = false)
-    // the query-form dynamic-STRING walk on the same population: only
-    // buffers where the walk RESOLVES are in contract (the queries pack
-    // these buffers themselves); value equality there
-    import graft.functions.AbiCalldata._
-    import spark.implicits._
-    val bufs = (1 to 80).map(s => sample(abiBufGen, 9000L + s)).toList
-    val resolvable = bufs.map(b => (b, refStrWalk(b, 0)))
-      .collect { case (b, Some(exp)) => (b, exp) }
-    assert(resolvable.nonEmpty, "generator must produce resolvable walks")
-    val sdf = resolvable.map(p => Tuple1(p._1)).toDF("b")
-      .withColumn("off", abi_word(col("b"), 0))
-      .withColumn("len", expr(
-        "CAST(conv(hex(substring(b, CAST(off + 29 AS INT), 8)), 16, 10) AS BIGINT)"))
-      .withColumn("content", lower(hex(expr(
-        "substring(b, CAST(off + 37 AS INT), CAST(len AS INT))"))))
-      .select("len", "content").collect()
-    for (((_, (expLen, expHex)), row) <- resolvable.zip(sdf)) {
-      assert(row.getLong(0) == expLen, s"string len $expLen")
-      assert(row.getString(1) == expHex, s"string content")
-    }
   }
   test("dynamic-shape decoders equal BigInteger references through whole-stage codegen") {
     dynamicShapeFuzz(codegen = true)
@@ -533,7 +553,7 @@ test("expr-based walks are TOTAL: corrupt offset/length words NULL, never throw"
     val t1 = tradeBufs.toDF("d")
       .select(unhex(lit("ab" * 32)).as("topic1"), unhex(col("d")).as("log_data"))
     val r1 = graft.domain.RealAbiOps.tradeLogDecode(t1)
-      .select("uid_len", "uid_hex").collect()
+      .select("uid_len", "uid").collect()
     assert(r1.length == tradeBufs.length)
     assert(r1.forall(_.isNullAt(1)), "every hostile uid walk must NULL")
     // compoundInitDecode: valid string offsets but a hostile LENGTH word
@@ -548,5 +568,103 @@ test("expr-based walks are TOTAL: corrupt offset/length words NULL, never throw"
     assert(r2.head.isNullAt(0), "a hostile name length must NULL the walk")
     assert(r2.head.getAs[String]("dec_sym") == "aaaa",
       "the sibling walk with a sane length still reads")
+  }
+
+  /** One random layout parameter: the param, its value columns (schema
+    * fields), the packed value over them, and the decoded name → value
+    * each row must read back. */
+  private case class FuzzParam(param: graft.functions.AbiParam,
+      fields: Seq[org.apache.spark.sql.types.StructField],
+      value: graft.functions.AbiValue, gen: Gen[Seq[Any]],
+      expect: Seq[Any] => Seq[(String, Any)])
+
+  private def fuzzParam(n: String, calldata: Boolean): Gen[FuzzParam] = {
+    import graft.functions.{AbiLayout => AL, AbiRead, AbiValue}
+    import org.apache.spark.sql.types._
+    def f(name: String, t: DataType) = StructField(name, t)
+    val hexGen = (bytes: Int) =>
+      Gen.listOfN(bytes, Arbitrary.arbitrary[Byte]).map(_.map("%02x".format(_)).mkString)
+    val uintGen = Gen.chooseNum(0L, Long.MaxValue)
+    // one static word: (factory, type, value gen, decoded value)
+    val words: Seq[(String => graft.functions.AbiParam, DataType, Gen[Any], Any => Any)] = Seq(
+      (AL.uint, LongType, uintGen, identity),
+      (AL.int, LongType, Arbitrary.arbitrary[Long], identity),
+      (AL.address, StringType, hexGen(20), identity),
+      (AL.bytes32, StringType, hexGen(32), v => v.toString.take(40)))
+    val reads = Seq(AbiRead.Uint, AbiRead.Sint, AbiRead.Address)
+    val word = Gen.oneOf(words).map { case (mk, t, g, dec) =>
+      FuzzParam(mk(n), Seq(f(n, t)), col(n), g.map(Seq(_)), v => Seq(n -> dec(v.head)))
+    }
+    val array = Gen.oneOf(0, 1, 2).map { ri =>
+      val (_, t, g, _) = words(ri)
+      val elems = (0 to 2).map(j => s"${n}e$j")
+      FuzzParam(AL.arr(n, reads(ri), elems: _*), f(n, LongType) +: elems.map(f(_, t)),
+        AL.elems(col(n), elems.map(col): _*),
+        for (len <- Gen.chooseNum(0L, 3L); vs <- Gen.listOfN(3, g)) yield len +: vs,
+        v => (n -> v.head) +: elems.zip(v.tail).zipWithIndex.map {
+          case ((e, x), j) => e -> (if (j < v.head.asInstanceOf[Long]) x else null)
+        })
+    }
+    val tupleArray = Gen.chooseNum(1, 3).map { width =>
+      val fs = (0 until width).map(i => s"${n}f${i}_")
+      val cells = for (j <- 0 to 2; c <- fs) yield s"$c$j"
+      FuzzParam(AL.tuples(n, 3, fs.map(AL.uint): _*),
+        f(n, LongType) +: cells.map(f(_, LongType)),
+        AL.rows(col(n), (0 to 2).map(j =>
+          AL.fields(fs.map(c => AbiValue.ofColumn(col(s"$c$j"))): _*)): _*),
+        for (len <- Gen.chooseNum(0L, 3L); vs <- Gen.listOfN(cells.size, uintGen)) yield len +: vs,
+        v => (n -> v.head) +: cells.zip(v.tail).zipWithIndex.map {
+          case ((c, x), k) => c -> (if (k / width < v.head.asInstanceOf[Long]) x else null)
+        })
+    }
+    // an offset-passed tuple whose `bytes` member sits between static
+    // fields: the nested tail's offset is relative to the tuple
+    val tuple = Gen.chooseNum(1, 3).map { k =>
+      val fs = (0 until k).map(i => s"${n}t$i")
+      FuzzParam(AL.tuple("", (fs.take(1).map(AL.uint) :+ AL.bytes("")) ++ fs.drop(1).map(AL.uint): _*),
+        fs.map(f(_, LongType)) :+ f(s"${n}b", StringType),
+        AL.fields(((fs.take(1).map(col) :+ col(s"${n}b")) ++ fs.drop(1).map(col))
+          .map(AbiValue.ofColumn): _*),
+        for (vs <- Gen.listOfN(k, uintGen); b <- Gen.chooseNum(0, 70).flatMap(hexGen))
+          yield vs :+ b,
+        v => fs.zip(v))
+    }
+    val dyn = Gen.oneOf(true, false).map { str =>
+      FuzzParam(if (str) AL.string(n) else AL.bytes(n), Seq(f(n, StringType)), col(n),
+        if (str) Gen.chooseNum(0, 40).flatMap(Gen.listOfN(_, Gen.oneOf(
+          Gen.alphaNumChar, Gen.oneOf('é', '€', '中')))).map(cs => Seq(cs.mkString))
+        else Gen.chooseNum(0, 70).flatMap(hexGen).map(Seq(_)),
+        v => {
+          val x = v.head.toString
+          val len = if (str) x.getBytes("UTF-8").length else x.length / 2
+          Seq(n -> x, s"${n}_len" -> len.toLong)
+        })
+    }
+    Gen.oneOf(Seq(word, array, tupleArray, dyn) ++ (if (calldata) Seq(tuple) else Nil))
+      .flatMap(identity)
+  }
+
+  test("AbiLayout: decode(pack(values)) == values over random layouts") {
+    import graft.functions.{AbiLayout, AbiValue}
+    import scala.jdk.CollectionConverters._
+    for (seed <- 1 to 40) {
+      val calldata = seed % 2 == 0
+      val ps = sample(Gen.chooseNum(1, 5).flatMap(k =>
+        Gen.sequence[List[FuzzParam], FuzzParam]((0 until k).map(i =>
+          fuzzParam(s"p$i", calldata)))), 11000L + seed)
+      val layout = AbiLayout(if (calldata) 4 else 0, ps.map(_.param))
+      val rows = (0 until 3).map(r => ps.map(p => sample(p.gen, seed * 100L + r * 7 +
+        ps.indexOf(p))))
+      val schema = org.apache.spark.sql.types.StructType(ps.flatMap(_.fields))
+      val df = spark.createDataFrame(
+        rows.map(r => org.apache.spark.sql.Row(r.flatten: _*)).asJava, schema)
+      val values = ps.map(_.value)
+      val buf = if (calldata) layout.pack((lit("a1b2c3d4"): AbiValue) +: values: _*)
+        else layout.pack(values: _*)
+      val out = layout.decode(df.withColumn("buf", buf), "buf").collect()
+      for ((row, r) <- out.zip(rows); (p, v) <- ps.zip(r); (name, exp) <- p.expect(v))
+        assert(row.get(row.fieldIndex(name)) == exp,
+          s"seed=$seed $name in $layout: ${row.get(row.fieldIndex(name))} != $exp")
+    }
   }
 }
