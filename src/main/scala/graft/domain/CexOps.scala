@@ -2,7 +2,7 @@ package graft.domain
 
 import graft.{Pins, QueryDef, QueryModule}
 import graft.ops.ExactAgg._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,14 @@ import org.apache.spark.sql.functions._
   * pair_exchange.sql (A8), cex_dex_markout.rs:47-880 (Q3), cex_dex.rs:77-560
   * (Q4), tree/mod.rs:57-94 (J1), metadata_loader.rs (J12), range.rs (R1),
   * dex_pricing.rs:88 (R6 DisablePricingFor).
+  *
+  * One route pricer, [[routeVwamOf]] (oracle twin [[routeVwamCtes]]),
+  * prices thin swaps through k bridging tokens, leg by leg
+  * (get_vwap_price_via_intermediary, time_window_vwam.rs:170-234, routed
+  * to any depth as at :484); j4_intermediary (k = 1) and j4_multihop
+  * (k = 2) differ only in how they rank its routes. The feed fragments —
+  * trade buckets, exchange fee, quote book, per-EOA swap history — are
+  * each defined once per engine.
   *
   * Scale shape: the trade↔swap match is equi-keyed on (pair, 30s time
   * bucket) with the trade side exploded into the ≤3 buckets its window can
@@ -98,22 +106,29 @@ object CexOps extends QueryModule {
       FROM actions
       WHERE action_type = 'swap' AND amount_in IS NOT NULL AND amount_out IS NOT NULL)"""
 
-  /** Bucketed swap↔trade pairs within the WIDEST phase window. Spark side
-    * of the (pair, bucket) equi-join; trade rows explode into the ≤3
-    * buckets their ±P3 reach can touch. */
-  private def phasePairs(s: SparkSession, dir: String): DataFrame = {
-    val t = cexTrades(s, dir)
+  /** Trades exploded into the ≤3 (P3-wide) time buckets their ±P3 reach
+    * can touch: the trade side of every (pair, bucket) equi-join. */
+  private def tradeBuckets(trades: DataFrame): DataFrame =
+    trades
       .withColumn("t_bucket", explode(array(
         expr(s"ts_us div $P3") - 1, expr(s"ts_us div $P3"), expr(s"ts_us div $P3") + 1)))
       .select(col("t_bucket"), col("pair_a").as("t_a"), col("pair_b").as("t_b"),
         col("exchange"), col("ts_us").as("t_ts"), col("px"), col("amt"))
-    dexSwaps(s, dir)
-      .withColumn("d_bucket", expr(s"ts_us div $P3"))
-      .join(t, col("d_bucket") === col("t_bucket") &&
-        col("pair_a") === col("t_a") && col("pair_b") === col("t_b") &&
+
+  /** `rows` (with a `ts_us`) joined to the bucketed trades of pair
+    * (`a`, `b`) within ±P3 of it. */
+  private def tradesNear(rows: DataFrame, a: String, b: String,
+      buckets: DataFrame): DataFrame =
+    rows.withColumn("d_bucket", expr(s"ts_us div $P3"))
+      .join(buckets, col("d_bucket") === col("t_bucket") &&
+        col(a) === col("t_a") && col(b) === col("t_b") &&
         abs(col("t_ts") - col("ts_us")) <= P3)
+
+  /** Bucketed swap↔trade pairs within the WIDEST phase window, with the
+    * swap↔trade distance `dt`. */
+  private def phasePairs(s: SparkSession, dir: String): DataFrame =
+    tradesNear(dexSwaps(s, dir), "pair_a", "pair_b", tradeBuckets(cexTrades(s, dir)))
       .withColumn("dt", abs(col("t_ts") - col("ts_us")))
-  }
 
   private val phasePairsCte =
     s"""tb AS (
@@ -128,6 +143,202 @@ object CexOps extends QueryModule {
       FROM dex d JOIN tb t
         ON t.bucket = d.ts_us // $P3 AND t.pair_a = d.pair_a AND t.pair_b = d.pair_b
        AND ABS(t.ts_us - d.ts_us) <= $P3)"""
+
+  /** Exchange taker/maker fee fraction: deterministic (1+ex_id)·1e-4. */
+  private val FeeUnit = 1e-4
+  private val exFee = (expr("CAST(substring(exchange, 3) AS BIGINT)") + 1) * FeeUnit
+  private val exFeeSql = "(CAST(substring(exchange, 3) AS BIGINT) + 1) * 1.0e-4"
+
+  /** Per-EOA swap history: the inspectors' FILTER_THRESHOLD count. */
+  private def swapHistory(swaps: DataFrame): DataFrame =
+    swaps.groupBy(col("from_address").as("h_eoa")).agg(count(lit(1)).as("n_hist"))
+
+  private val swapHistoryCte =
+    "hist AS (SELECT from_address AS h_eoa, COUNT(*) AS n_hist FROM dex GROUP BY 1)"
+
+  /** The quote book: per (pair, ts) the mid and ask of bid/ask quotes
+    * with INDEPENDENT hash-derived bps offsets (cex_quotes.rs's real
+    * books are asymmetric), so the mid genuinely differs from the trade
+    * price and the quote path exercises non-cancelling spread math. */
+  private def quoteBook(trades: DataFrame): DataFrame = {
+    val bidBps = expr("CAST(FLOOR(px * 10000.0) AS BIGINT)") % 20 + 1
+    val askBps = expr("CAST(FLOOR(px * 70000.0) AS BIGINT)") % 25 + 2
+    val bid = col("px") * (lit(1.0) - bidBps * 1e-4)
+    val ask = col("px") * (lit(1.0) + askBps * 1e-4)
+    trades
+      .select(col("pair_a"), col("pair_b"), col("ts_us"),
+        ((bid + ask) / 2).as("mid"), ask.as("ask"))
+      .groupBy("pair_a", "pair_b", "ts_us")
+      .agg(max(col("mid")).as("mid"), max(col("ask")).as("ask"))
+      .withColumn("pair_key", concat(col("pair_a"), lit(":"), col("pair_b")))
+  }
+
+  private val quoteBookCte =
+    """qbook AS (SELECT pair_a, pair_b, ts_us,
+        MAX((px * (1.0e0 - (CAST(FLOOR(px * 10000.0e0) AS BIGINT) % 20 + 1) * 1.0e-4)
+           + px * (1.0e0 + (CAST(FLOOR(px * 70000.0e0) AS BIGINT) % 25 + 2) * 1.0e-4)) / 2) AS mid,
+        MAX(px * (1.0e0 + (CAST(FLOOR(px * 70000.0e0) AS BIGINT) % 25 + 2) * 1.0e-4)) AS ask
+      FROM cex GROUP BY 1, 2, 3)"""
+
+  // ── the route pricer (J4 intermediary and multi-hop arms) ─────────────────
+
+  private val SwapKey = Seq("block_number", "tx_hash", "trace_idx")
+
+  /** Trades-VWAM of thin swaps through `hops` bridging tokens — brontes'
+    * get_vwap_price_via_intermediary (time_window_vwam.rs:170-234), routed
+    * to any depth as its verified subgraphs do (:484 + graphs/subgraph.rs):
+    *   - routes a→x1→…→xk→b (k = `hops`, all tokens distinct) over the
+    *     traded-pair graph (calculate_intermediary_addresses :487-516);
+    *   - fallback set: swaps whose direct ±P3 trade volume cannot cover
+    *     `amount_in` (get_vwap_price returns None on insufficient volume,
+    *     :258-378);
+    *   - each (swap, route) explodes into k+1 legs, and every leg prices
+    *     on its OWN phase-escalated window: the narrowest phase whose
+    *     volume covers the leg's requirement, which is `amount_in` scaled
+    *     by the prices of the legs before it (second_leg_volume =
+    *     first_leg.price · volume, :209, applied leg by leg).
+    * Input frames: swaps (block_number, tx_hash, trace_idx, ts_us, pair_a,
+    * pair_b, amount_in), trades (exchange, ts_us, px, amt, pair_a, pair_b).
+    * Output: one row per priced (swap, route) with x1..xk, `implied` (the
+    * product of the leg prices) and `liq` (the bottleneck leg's ±P3
+    * volume, the subgraph verifier's liquidity bar).
+    * Scale shape: the route table is token-space-sized → broadcast; the
+    * one big join is the (pair, bucket)-equi legs×trades join, and ALL
+    * legs price in one leg-conditional aggregation at (swap, route)
+    * grain: one join, one aggregation, no self-join. Per-leg sums range
+    * over exactly the addends leg_no partitions, decimal-exact reduction
+    * is order-free, and a leg with no matched trades yields NULL sums →
+    * NULL price → the route drops. */
+  private[graft] def routeVwamOf(swaps: DataFrame, trades: DataFrame,
+      hops: Int): DataFrame = {
+    require(hops >= 1, s"a route has at least one bridge, got $hops")
+    val xs = (1 to hops).map(i => s"x$i")
+    val legs = 1 to hops + 1
+    // directed trade-pair edges (tiny: token-space sized)
+    val pairsDim = trades.select("pair_a", "pair_b").distinct()
+    val edges = pairsDim.select(col("pair_a").as("u"), col("pair_b").as("v"))
+      .unionByName(pairsDim.select(col("pair_b").as("u"), col("pair_a").as("v")))
+    val toks = ("a" +: xs) :+ "b"
+    val routes = (1 to hops).foldLeft(edges.select(col("u").as("a"), col("v").as("x1"))) {
+        (r, i) => r.join(edges.select(col("u").as(s"m$i"), col("v").as(toks(i + 1))),
+          col(toks(i)) === col(s"m$i"))
+      }
+      .filter(toks.combinations(2).map { case Seq(p, q) => col(p) =!= col(q) }.reduce(_ && _))
+      .select(("a" +: "b" +: xs).map(col): _*).distinct()
+    val buckets = tradeBuckets(trades)
+    val direct = tradesNear(swaps, "pair_a", "pair_b", buckets)
+      .groupBy(SwapKey.map(col): _*)
+      .agg(dsum(col("amt")).as("direct_v"))
+    val sw = swaps
+      .join(direct, SwapKey, "left")
+      .filter(col("direct_v").isNull || col("direct_v") < col("amount_in"))
+      .select((SwapKey ++ Seq("ts_us", "pair_a", "pair_b", "amount_in")).map(col): _*)
+    val ends = ("pair_a" +: xs) :+ "pair_b"
+    val legRows = sw
+      .join(broadcast(routes), col("pair_a") === col("a") && col("pair_b") === col("b"))
+      .withColumn("leg", explode(array(legs.map { l =>
+        val (u, v) = (col(ends(l - 1)), col(ends(l)))
+        struct(lit(l).as("leg_no"), least(u, v).as("l_a"), greatest(u, v).as("l_b"))
+      }: _*)))
+      .select((SwapKey ++ Seq("ts_us", "amount_in") ++ xs).map(col) ++
+        Seq(col("leg.leg_no").as("leg_no"), col("leg.l_a").as("l_a"),
+          col("leg.l_b").as("l_b")): _*)
+    def legSum(l: Int, bound: Long, c: Column) =
+      dsum(when(col("leg_no") === l && abs(col("t_ts") - col("ts_us")) <= bound, c))
+    val aggCols = min(col("amount_in")).as("amount_in") +: (for {
+      l <- legs; (p, bound) <- Seq(1 -> P1, 2 -> P2, 3 -> P3)
+      c <- Seq(legSum(l, bound, col("px") * col("amt")).as(s"pv${p}_$l"),
+        legSum(l, bound, col("amt")).as(s"v${p}_$l"))
+    } yield c)
+    val legAgg = tradesNear(legRows, "l_a", "l_b", buckets)
+      .groupBy((SwapKey ++ xs).map(col): _*)
+      .agg(aggCols.head, aggCols.tail: _*)
+    // phase pick = narrowest window whose volume covers the requirement
+    def pick(l: Int, req: Column) = {
+      def covers(p: Int) = col(s"v${p}_$l") >= req
+      def vwam(p: Int) = col(s"pv${p}_$l") / col(s"v${p}_$l")
+      when(covers(1), vwam(1)).when(covers(2), vwam(2)).when(covers(3), vwam(3))
+    }
+    val (priced, _) = legs.foldLeft((legAgg, col("amount_in"))) { case ((df, req), l) =>
+      val vwam = s"vwam$l"
+      (df.withColumn(vwam, pick(l, req)).filter(col(vwam).isNotNull), req * col(vwam))
+    }
+    priced.select((SwapKey ++ xs).map(col) ++ Seq(
+      legs.map(l => col(s"vwam$l")).reduce(_ * _).as("implied"),
+      least(legs.map(l => col(s"v3_$l")): _*).as("liq")): _*)
+  }
+
+  /** Oracle twin of [[routeVwamOf]], generated per depth and kept in the
+    * oracle's own formulation: legs aggregated per leg number, then one
+    * self-join CTE per leg (`rv1`…) carrying the leg prices, ending in
+    * `route_px` (swap key, x1..xk, implied, liq). Needs `cex`, `dex` and
+    * `pp` ([[phasePairsCte]]). */
+  private def routeVwamCtes(hops: Int): String = {
+    val xs = (1 to hops).map(i => s"x$i")
+    val n = hops + 1
+    val tok = "e1.u" +: (1 to n).map(i => s"e$i.v") // route token j
+    val edgeJoins = (2 to n).map(i => s"JOIN edges e$i ON e${i - 1}.v = e$i.u").mkString(" ")
+    val allDistinct = tok.indices.combinations(2)
+      .map { case Seq(i, j) => s"${tok(i)} <> ${tok(j)}" }.mkString(" AND ")
+    val ends = ("s.pair_a" +: xs.map(x => s"c.$x")) :+ "s.pair_b"
+    val cxs = xs.map(x => s"c.$x").mkString(", ")
+    val legSelects = (1 to n).map { l =>
+      s"""SELECT s.*, $cxs, $l AS leg_no,
+          LEAST(${ends(l - 1)}, ${ends(l)}) AS l_a, GREATEST(${ends(l - 1)}, ${ends(l)}) AS l_b
+        FROM swf s JOIN cands c ON s.pair_a = c.a AND s.pair_b = c.b"""
+    }.mkString("\n        UNION ALL\n        ")
+    val keyCols = Seq("block_number", "tx_hash", "trace_idx") ++ xs
+    val key = keyCols.mkString(", ")
+    def pick(a: String, req: String) =
+      (1 to 3).map(p => s"WHEN $a.v$p >= $req THEN $a.pv$p / $a.v$p")
+        .mkString("CASE ", " ", " END")
+    val legCtes = (2 to n).map { l =>
+      val req = ("p.amount_in" +: (1 until l).map(j => s"p.vwam$j")).mkString(" * ")
+      s"""rv$l AS (
+        SELECT p.*, a.v3 AS liq$l, ${pick("a", req)} AS vwam$l
+        FROM rv${l - 1} p JOIN legagg a
+          ON a.leg_no = $l AND ${keyCols.map(k => s"p.$k = a.$k").mkString(" AND ")}
+        WHERE p.vwam${l - 1} IS NOT NULL)"""
+    }.mkString(",\n      ")
+    s"""pdim AS (SELECT DISTINCT pair_a, pair_b FROM cex),
+      edges AS (SELECT pair_a AS u, pair_b AS v FROM pdim
+                UNION ALL SELECT pair_b, pair_a FROM pdim),
+      cands AS (
+        SELECT DISTINCT e1.u AS a, e$n.v AS b,
+          ${xs.zipWithIndex.map { case (x, i) => s"e${i + 1}.v AS $x" }.mkString(", ")}
+        FROM edges e1 $edgeJoins
+        WHERE $allDistinct),
+      direct_v AS (
+        SELECT block_number, tx_hash, trace_idx, ${sqlSum("amt")} AS dv
+        FROM pp GROUP BY 1, 2, 3),
+      swf AS (
+        SELECT d.block_number, d.tx_hash, d.trace_idx, d.ts_us,
+          d.pair_a, d.pair_b, d.amount_in
+        FROM dex d LEFT JOIN direct_v v USING (block_number, tx_hash, trace_idx)
+        WHERE v.dv IS NULL OR v.dv < d.amount_in),
+      rlegs AS (
+        $legSelects),
+      legagg AS (
+        SELECT $key, leg_no,
+          MIN(amount_in) AS amount_in,
+          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P1 THEN px * amt END")} AS pv1,
+          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P1 THEN amt END")} AS v1,
+          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P2 THEN px * amt END")} AS pv2,
+          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P2 THEN amt END")} AS v2,
+          ${sqlSum("px * amt")} AS pv3, ${sqlSum("amt")} AS v3
+        FROM rlegs l JOIN tb t
+          ON t.bucket = l.ts_us // $P3 AND t.pair_a = l.l_a AND t.pair_b = l.l_b
+         AND ABS(t.ts_us - l.ts_us) <= $P3
+        GROUP BY ALL),
+      rv1 AS (
+        SELECT $key, amount_in, v3 AS liq1, ${pick("legagg", "amount_in")} AS vwam1
+        FROM legagg WHERE leg_no = 1),
+      $legCtes,
+      route_px AS (
+        SELECT $key, ${(1 to n).map(l => s"vwam$l").mkString(" * ")} AS implied,
+          LEAST(${(1 to n).map(l => s"liq$l").mkString(", ")}) AS liq
+        FROM rv$n WHERE vwam$n IS NOT NULL)"""
+  }
 
   // ── queries ───────────────────────────────────────────────────────────────
 
@@ -187,7 +398,6 @@ object CexOps extends QueryModule {
   private val j4WeightedVwam = QueryDef(
     "j4_weighted_vwam",
     (s, dir) => {
-      val fee = (expr("CAST(substring(exchange, 3) AS BIGINT)") + 1) * FeeUnit
       val w = when(col("t_ts") < col("ts_us"),
         exp(lit(PreDecayVwap) * (col("ts_us") - col("t_ts")).cast("double")))
         .otherwise(
@@ -196,8 +406,8 @@ object CexOps extends QueryModule {
         .withColumn("w", w)
         .groupBy("block_number", "tx_hash", "trace_idx")
         .agg(
-          dsumR(col("px") * (lit(1.0) - fee) * col("w") * col("amt")).as("vxp_mk"),
-          dsumR(col("px") * (lit(1.0) + fee) * col("w") * col("amt")).as("vxp_tk"),
+          dsumR(col("px") * (lit(1.0) - exFee) * col("w") * col("amt")).as("vxp_mk"),
+          dsumR(col("px") * (lit(1.0) + exFee) * col("w") * col("amt")).as("vxp_tk"),
           dsumR(col("w") * col("amt")).as("wv"),
           count(lit(1)).as("n_trades"),
           min(col("pair_a")).as("pair_a"))
@@ -213,7 +423,7 @@ object CexOps extends QueryModule {
         SELECT *,
           CASE WHEN t_ts < ts_us THEN EXP($PreDecayVwap * CAST(ts_us - t_ts AS DOUBLE))
                ELSE EXP($PostDecayVwap * CAST(t_ts - ts_us AS DOUBLE)) END AS w,
-          (CAST(substring(exchange, 3) AS BIGINT) + 1) * 1.0e-4 AS fee
+          $exFeeSql AS fee
         FROM pp),
       wleg AS (
         SELECT block_number, tx_hash, trace_idx,
@@ -228,377 +438,55 @@ object CexOps extends QueryModule {
         CAST(SUM(n_trades) AS BIGINT) AS n_trades
       FROM wleg GROUP BY 1 ORDER BY 1"""))
 
-  /** J4 (intermediary arm): trades-VWAM through a bridging token — the
-    * get_vwap_price_via_intermediary path (time_window_vwam.rs:170-234)
-    * that the quotes side already has (j3_intermediary), now on the TRADES
-    * path:
-    *   - fallback trigger: the direct pair's ±P3 trade volume cannot cover
-    *     the swap's input (get_vwap_price returns None on insufficient
-    *     volume, :258-378);
-    *   - candidates: tokens connected by traded pairs to BOTH ends
-    *     (calculate_intermediary_addresses :487-516);
-    *   - each leg prices on its OWN phase-escalated window, with the
-    *     second leg's required volume scaled by the first leg's price
-    *     (second_leg_volume = first_leg.price · volume, :209);
-    *   - price = leg1 × leg2, best intermediary wins by price
-    *     (max_by_key(global.price_maker), :233).
-    * Scale shape: the traded-pair dim and the (a,b,x) candidate table are
-    * token-space-sized → broadcast; the only big joins are the two
-    * (pair, bucket) equi-joins of swap-legs against bucketed trades. */
+  /** J4 (intermediary arm): trades-VWAM through one bridging token — the
+    * [[routeVwamOf]] pricer at one hop, the trades-path twin of the quotes
+    * side's j3_intermediary. The best intermediary wins by price
+    * (max_by_key(global.price_maker), time_window_vwam.rs:233). */
   private val j4Intermediary = QueryDef(
     "j4_intermediary",
-    (s, dir) => {
-      // directed trade-pair edges (tiny: token-space sized)
-      val pairsDim = cexTrades(s, dir).select("pair_a", "pair_b").distinct()
-      val edges = pairsDim.select(col("pair_a").as("u"), col("pair_b").as("v"))
-        .unionByName(pairsDim.select(col("pair_b").as("u"), col("pair_a").as("v")))
-      val cands = edges.select(col("u").as("a"), col("v").as("x"))
-        .join(edges.select(col("u").as("x2"), col("v").as("b")), col("x") === col("x2"))
-        .filter(col("a") =!= col("b") && col("x") =!= col("a") && col("x") =!= col("b"))
-        .select("a", "b", "x").distinct()
-      // fallback set: swaps whose direct ±P3 window can't cover amount_in
-      val direct = phasePairs(s, dir)
-        .groupBy("block_number", "tx_hash", "trace_idx")
-        .agg(dsum(col("amt")).as("direct_v"))
-      val sw = dexSwaps(s, dir)
-        .join(direct, Seq("block_number", "tx_hash", "trace_idx"), "left")
-        .filter(col("direct_v").isNull || col("direct_v") < col("amount_in"))
-        .select("block_number", "tx_hash", "trace_idx", "ts_us",
-          "pair_a", "pair_b", "amount_in")
-      // two legs per (swap, candidate), each joined to its pair's buckets
-      val legs = sw
-        .join(broadcast(cands), col("pair_a") === col("a") && col("pair_b") === col("b"))
-        .withColumn("leg", explode(array(
-          struct(lit(1).as("leg_no"), least(col("pair_a"), col("x")).as("l_a"),
-            greatest(col("pair_a"), col("x")).as("l_b")),
-          struct(lit(2).as("leg_no"), least(col("x"), col("pair_b")).as("l_a"),
-            greatest(col("x"), col("pair_b")).as("l_b")))))
-        .select(col("block_number"), col("tx_hash"), col("trace_idx"),
-          col("ts_us"), col("amount_in"), col("x"),
-          col("leg.leg_no").as("leg_no"), col("leg.l_a").as("l_a"),
-          col("leg.l_b").as("l_b"))
-      val t = cexTrades(s, dir)
-        .withColumn("t_bucket", explode(array(
-          expr(s"ts_us div $P3") - 1, expr(s"ts_us div $P3"), expr(s"ts_us div $P3") + 1)))
-        .select(col("t_bucket"), col("pair_a").as("t_a"), col("pair_b").as("t_b"),
-          col("ts_us").as("t_ts"), col("px"), col("amt"))
-      // BOTH legs aggregate in ONE pass at (swap, x) grain with
-      // leg-conditional sums: the old shape grouped at (swap, x, leg_no)
-      // and then self-joined leg 1 against leg 2 — Catalyst plans that as
-      // TWO full legs×trades joins (no exchange reuse across the branches)
-      // plus a sort-merge self-join. Per-leg sums range over exactly the
-      // same addends (leg_no partitions the joined rows), decimal-exact
-      // reduction is order-free, and a leg with no matched trades yields
-      // NULL sums → NULL vwam → filtered, exactly the rows the old inner
-      // self-join dropped. One join, one agg, zero self-joins.
-      def pvl(leg: Int, bound: Long) = dsum(when(col("leg_no") === leg &&
-        abs(col("t_ts") - col("ts_us")) <= bound, col("px") * col("amt")))
-      def vl(leg: Int, bound: Long) = dsum(when(col("leg_no") === leg &&
-        abs(col("t_ts") - col("ts_us")) <= bound, col("amt")))
-      val legAgg = legs
-        .withColumn("d_bucket", expr(s"ts_us div $P3"))
-        .join(t, col("d_bucket") === col("t_bucket") &&
-          col("l_a") === col("t_a") && col("l_b") === col("t_b") &&
-          abs(col("t_ts") - col("ts_us")) <= P3)
-        .groupBy("block_number", "tx_hash", "trace_idx", "x")
-        .agg(min(col("amount_in")).as("amount_in"),
-          pvl(1, P1).as("pv1"), vl(1, P1).as("v1"),
-          pvl(1, P2).as("pv2"), vl(1, P2).as("v2"),
-          pvl(1, P3).as("pv3"), vl(1, P3).as("v3"),
-          pvl(2, P1).as("pv1_2"), vl(2, P1).as("v1_2"),
-          pvl(2, P2).as("pv2_2"), vl(2, P2).as("v2_2"),
-          pvl(2, P3).as("pv3_2"), vl(2, P3).as("v3_2"))
-      // phase pick = narrowest window whose volume covers the requirement
-      def pick(req: org.apache.spark.sql.Column) =
-        when(col("v1") >= req, col("pv1") / col("v1"))
-          .when(col("v2") >= req, col("pv2") / col("v2"))
-          .when(col("v3") >= req, col("pv3") / col("v3"))
-      def pick2(req: org.apache.spark.sql.Column) =
-        when(col("v1_2") >= req, col("pv1_2") / col("v1_2"))
-          .when(col("v2_2") >= req, col("pv2_2") / col("v2_2"))
-          .when(col("v3_2") >= req, col("pv3_2") / col("v3_2"))
-      val priced = legAgg
-        .withColumn("vwam1", pick(col("amount_in")))
-        .filter(col("vwam1").isNotNull)
-        .withColumn("vwam2", pick2(col("amount_in") * col("vwam1")))
-        .filter(col("vwam2").isNotNull)
-        .withColumn("implied", col("vwam1") * col("vwam2"))
-      val w = Window.partitionBy("block_number", "tx_hash", "trace_idx")
-        .orderBy(col("implied").desc, col("x").asc)
-      priced.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .groupBy("x")
-        .agg(count(lit(1)).as("n_swaps"), dsumR(col("implied")).as("sum_implied"))
-        .withColumnRenamed("x", "intermediary")
-        .orderBy("intermediary")
-    },
-    withCtes(s"""$cexTradesCte,
-      pdim AS (SELECT DISTINCT pair_a, pair_b FROM cex),
-      edges AS (SELECT pair_a AS u, pair_b AS v FROM pdim
-                UNION ALL SELECT pair_b, pair_a FROM pdim),
-      cands AS (
-        SELECT DISTINCT e1.u AS a, e2.v AS b, e1.v AS x
-        FROM edges e1 JOIN edges e2 ON e1.v = e2.u
-        WHERE e1.u <> e2.v AND e1.v <> e1.u AND e1.v <> e2.v),
-      tbi AS (
-        SELECT pair_a, pair_b, ts_us, px, amt,
-          unnest([ts_us // $P3 - 1, ts_us // $P3, ts_us // $P3 + 1]) AS bucket
-        FROM cex),
-      direct_v AS (
-        SELECT d.block_number, d.tx_hash, d.trace_idx, ${sqlSum("t.amt")} AS dv
-        FROM dex d JOIN tbi t
-          ON t.bucket = d.ts_us // $P3 AND t.pair_a = d.pair_a AND t.pair_b = d.pair_b
-         AND ABS(t.ts_us - d.ts_us) <= $P3
-        GROUP BY 1, 2, 3),
-      swf AS (
-        SELECT d.block_number, d.tx_hash, d.trace_idx, d.ts_us,
-          d.pair_a, d.pair_b, d.amount_in
-        FROM dex d LEFT JOIN direct_v v USING (block_number, tx_hash, trace_idx)
-        WHERE v.dv IS NULL OR v.dv < d.amount_in),
-      legsi AS (
-        SELECT s.*, c.x, 1 AS leg_no,
-          LEAST(s.pair_a, c.x) AS l_a, GREATEST(s.pair_a, c.x) AS l_b
-        FROM swf s JOIN cands c ON s.pair_a = c.a AND s.pair_b = c.b
-        UNION ALL
-        SELECT s.*, c.x, 2,
-          LEAST(c.x, s.pair_b), GREATEST(c.x, s.pair_b)
-        FROM swf s JOIN cands c ON s.pair_a = c.a AND s.pair_b = c.b),
-      legagg AS (
-        SELECT block_number, tx_hash, trace_idx, x, leg_no,
-          MIN(amount_in) AS amount_in,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P1 THEN px * amt END")} AS pv1,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P1 THEN amt END")} AS v1,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P2 THEN px * amt END")} AS pv2,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P2 THEN amt END")} AS v2,
-          ${sqlSum("px * amt")} AS pv3, ${sqlSum("amt")} AS v3
-        FROM legsi l JOIN tbi t
-          ON t.bucket = l.ts_us // $P3 AND t.pair_a = l.l_a AND t.pair_b = l.l_b
-         AND ABS(t.ts_us - l.ts_us) <= $P3
-        GROUP BY 1, 2, 3, 4, 5),
-      leg1 AS (
-        SELECT block_number, tx_hash, trace_idx, x, amount_in,
-          CASE WHEN v1 >= amount_in THEN pv1 / v1
-               WHEN v2 >= amount_in THEN pv2 / v2
-               WHEN v3 >= amount_in THEN pv3 / v3 END AS vwam1
-        FROM legagg WHERE leg_no = 1),
-      priced AS (
-        SELECT a1.block_number, a1.tx_hash, a1.trace_idx, a1.x,
-          a1.vwam1 * (CASE WHEN a2.v1 >= a1.amount_in * a1.vwam1 THEN a2.pv1 / a2.v1
-                           WHEN a2.v2 >= a1.amount_in * a1.vwam1 THEN a2.pv2 / a2.v2
-                           WHEN a2.v3 >= a1.amount_in * a1.vwam1 THEN a2.pv3 / a2.v3
-                      END) AS implied
-        FROM leg1 a1 JOIN legagg a2
-          ON a2.leg_no = 2 AND a1.block_number = a2.block_number
-         AND a1.tx_hash = a2.tx_hash AND a1.trace_idx = a2.trace_idx AND a1.x = a2.x
-        WHERE a1.vwam1 IS NOT NULL),
+    (s, dir) => graft.ops.TopK.perGroup(
+        routeVwamOf(dexSwaps(s, dir), cexTrades(s, dir), 1),
+        SwapKey, Seq(col("implied").desc, col("x1").asc), 1)
+      .groupBy(col("x1").as("intermediary"))
+      .agg(count(lit(1)).as("n_swaps"), dsumR(col("implied")).as("sum_implied"))
+      .orderBy("intermediary"),
+    withCtes(s"""$cexTradesCte, $phasePairsCte, ${routeVwamCtes(1)},
       best AS (
         SELECT *, ROW_NUMBER() OVER (
             PARTITION BY block_number, tx_hash, trace_idx
-            ORDER BY implied DESC, x ASC) AS rn
-        FROM priced WHERE implied IS NOT NULL)
-      SELECT x AS intermediary, COUNT(*) AS n_swaps,
+            ORDER BY implied DESC, x1 ASC) AS rn
+        FROM route_px)
+      SELECT x1 AS intermediary, COUNT(*) AS n_swaps,
         ${sqlSumR("implied")} AS sum_implied
       FROM best WHERE rn = 1 GROUP BY 1 ORDER BY 1"""))
 
+  /** Each swap's BEST-LIQUIDITY two-hop route: the largest bottleneck leg
+    * volume wins, with price then route id as the deterministic tiebreak. */
+  private[graft] def mostLiquidRoute(routes: DataFrame): DataFrame =
+    graft.ops.TopK.perGroup(routes, SwapKey,
+      Seq(col("liq").desc, col("implied").desc, col("x1").asc, col("x2").asc), 1)
+
   /** J4 (multi-hop arm): trades-VWAM through TWO bridging tokens — the
-    * reference routes through verified subgraphs of arbitrary depth
-    * (time_window_vwam.rs:484 + graphs/subgraph.rs), so long-tail pairs two
-    * hops from a quote asset still price; j4_intermediary stops at one
-    * bridge. Three legs a→x1→x2→b, each phase-escalated on its own window
-    * with the downstream legs' required volume scaled by the upstream
-    * prices (second_leg_volume composition, :209, applied twice). Route
-    * selection is BEST-LIQUIDITY: the winning route maximizes its
-    * bottleneck leg volume (the min full-window volume across legs — the
-    * subgraph verifier's liquidity bar), with price then route id as the
-    * deterministic tiebreak. Scale shape unchanged from j4_intermediary:
-    * the 3-hop route table is token-space-sized → broadcast; the one big
-    * join is (pair, bucket)-equi legs×trades. */
+    * [[routeVwamOf]] pricer at two hops, so long-tail pairs two hops from
+    * a quote asset still price; each swap keeps its [[mostLiquidRoute]]. */
   private val j4Multihop = QueryDef(
     "j4_multihop",
-    (s, dir) => {
-      val pairsDim = cexTrades(s, dir).select("pair_a", "pair_b").distinct()
-      val edges = pairsDim.select(col("pair_a").as("u"), col("pair_b").as("v"))
-        .unionByName(pairsDim.select(col("pair_b").as("u"), col("pair_a").as("v")))
-      val cands = edges.select(col("u").as("a"), col("v").as("x1"))
-        .join(edges.select(col("u").as("m1"), col("v").as("x2")),
-          col("x1") === col("m1"))
-        .join(edges.select(col("u").as("m2"), col("v").as("b")),
-          col("x2") === col("m2"))
-        .filter(col("a") =!= col("b") && col("x1") =!= col("x2") &&
-          col("x1") =!= col("a") && col("x1") =!= col("b") &&
-          col("x2") =!= col("a") && col("x2") =!= col("b"))
-        .select("a", "b", "x1", "x2").distinct()
-      val direct = phasePairs(s, dir)
-        .groupBy("block_number", "tx_hash", "trace_idx")
-        .agg(dsum(col("amt")).as("direct_v"))
-      val sw = dexSwaps(s, dir)
-        .join(direct, Seq("block_number", "tx_hash", "trace_idx"), "left")
-        .filter(col("direct_v").isNull || col("direct_v") < col("amount_in"))
-        .select("block_number", "tx_hash", "trace_idx", "ts_us",
-          "pair_a", "pair_b", "amount_in")
-      val legs = sw
-        .join(broadcast(cands), col("pair_a") === col("a") && col("pair_b") === col("b"))
-        .withColumn("leg", explode(array(
-          struct(lit(1).as("leg_no"), least(col("pair_a"), col("x1")).as("l_a"),
-            greatest(col("pair_a"), col("x1")).as("l_b")),
-          struct(lit(2).as("leg_no"), least(col("x1"), col("x2")).as("l_a"),
-            greatest(col("x1"), col("x2")).as("l_b")),
-          struct(lit(3).as("leg_no"), least(col("x2"), col("pair_b")).as("l_a"),
-            greatest(col("x2"), col("pair_b")).as("l_b")))))
-        .select(col("block_number"), col("tx_hash"), col("trace_idx"),
-          col("ts_us"), col("amount_in"), col("x1"), col("x2"),
-          col("leg.leg_no").as("leg_no"), col("leg.l_a").as("l_a"),
-          col("leg.l_b").as("l_b"))
-      val t = cexTrades(s, dir)
-        .withColumn("t_bucket", explode(array(
-          expr(s"ts_us div $P3") - 1, expr(s"ts_us div $P3"), expr(s"ts_us div $P3") + 1)))
-        .select(col("t_bucket"), col("pair_a").as("t_a"), col("pair_b").as("t_b"),
-          col("ts_us").as("t_ts"), col("px"), col("amt"))
-      // ONE leg-conditional aggregation at (swap, x1, x2) grain replaces
-      // the (…, leg_no)-grain agg + two key-equi self-joins: the old plan
-      // recomputed the legs×trades join THREE times (l1/tail(2)/tail(3)
-      // branches share no exchange) and sort-merge-joined the results.
-      // Per-leg sums keep identical addends (leg_no partitions the joined
-      // rows; decimal reduction is order-free); a leg with no matched
-      // trades yields NULL sums → NULL vwam → filtered, matching the rows
-      // the old inner self-joins dropped. Same j4_intermediary fusion,
-      // one more leg.
-      def pvl(leg: Int, bound: Long) = dsum(when(col("leg_no") === leg &&
-        abs(col("t_ts") - col("ts_us")) <= bound, col("px") * col("amt")))
-      def vl(leg: Int, bound: Long) = dsum(when(col("leg_no") === leg &&
-        abs(col("t_ts") - col("ts_us")) <= bound, col("amt")))
-      def legCols(leg: Int): Seq[org.apache.spark.sql.Column] = {
-        val sfx = if (leg == 1) "" else s"_$leg"
-        Seq(pvl(leg, P1).as(s"pv1$sfx"), vl(leg, P1).as(s"v1$sfx"),
-          pvl(leg, P2).as(s"pv2$sfx"), vl(leg, P2).as(s"v2$sfx"),
-          pvl(leg, P3).as(s"pv3$sfx"), vl(leg, P3).as(s"v3$sfx"))
-      }
-      val aggCols = min(col("amount_in")).as("amount_in") +:
-        (1 to 3).flatMap(legCols)
-      val legAgg = legs
-        .withColumn("d_bucket", expr(s"ts_us div $P3"))
-        .join(t, col("d_bucket") === col("t_bucket") &&
-          col("l_a") === col("t_a") && col("l_b") === col("t_b") &&
-          abs(col("t_ts") - col("ts_us")) <= P3)
-        .groupBy("block_number", "tx_hash", "trace_idx", "x1", "x2")
-        .agg(aggCols.head, aggCols.tail: _*)
-      def pick(req: org.apache.spark.sql.Column) =
-        when(col("v1") >= req, col("pv1") / col("v1"))
-          .when(col("v2") >= req, col("pv2") / col("v2"))
-          .when(col("v3") >= req, col("pv3") / col("v3"))
-      def pickN(n: Int, req: org.apache.spark.sql.Column) =
-        when(col(s"v1_$n") >= req, col(s"pv1_$n") / col(s"v1_$n"))
-          .when(col(s"v2_$n") >= req, col(s"pv2_$n") / col(s"v2_$n"))
-          .when(col(s"v3_$n") >= req, col(s"pv3_$n") / col(s"v3_$n"))
-      val priced = legAgg
-        .withColumn("vwam1", pick(col("amount_in")))
-        .filter(col("vwam1").isNotNull)
-        .withColumn("vwam2", pickN(2, col("amount_in") * col("vwam1")))
-        .filter(col("vwam2").isNotNull)
-        .withColumn("vwam3",
-          pickN(3, col("amount_in") * col("vwam1") * col("vwam2")))
-        .filter(col("vwam3").isNotNull)
-        .withColumn("implied", col("vwam1") * col("vwam2") * col("vwam3"))
-        .withColumn("liq", least(col("v3"), col("v3_2"), col("v3_3")))
-      val w = Window.partitionBy("block_number", "tx_hash", "trace_idx")
-        .orderBy(col("liq").desc, col("implied").desc,
-          col("x1").asc, col("x2").asc)
-      priced.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .groupBy(col("x1").as("hop1"), col("x2").as("hop2"))
-        .agg(count(lit(1)).as("n_swaps"),
-          dsumR(col("implied")).as("sum_implied"),
-          dsum(col("liq")).as("sum_route_liq"))
-        .orderBy("hop1", "hop2")
-    },
-    withCtes(s"""$cexTradesCte,
-      pdim AS (SELECT DISTINCT pair_a, pair_b FROM cex),
-      edges AS (SELECT pair_a AS u, pair_b AS v FROM pdim
-                UNION ALL SELECT pair_b, pair_a FROM pdim),
-      cands AS (
-        SELECT DISTINCT e1.u AS a, e3.v AS b, e1.v AS x1, e2.v AS x2
-        FROM edges e1 JOIN edges e2 ON e1.v = e2.u
-        JOIN edges e3 ON e2.v = e3.u
-        WHERE e1.u <> e3.v AND e1.v <> e2.v
-          AND e1.v <> e1.u AND e1.v <> e3.v
-          AND e2.v <> e1.u AND e2.v <> e3.v),
-      tbi AS (
-        SELECT pair_a, pair_b, ts_us, px, amt,
-          unnest([ts_us // $P3 - 1, ts_us // $P3, ts_us // $P3 + 1]) AS bucket
-        FROM cex),
-      direct_v AS (
-        SELECT d.block_number, d.tx_hash, d.trace_idx, ${sqlSum("t.amt")} AS dv
-        FROM dex d JOIN tbi t
-          ON t.bucket = d.ts_us // $P3 AND t.pair_a = d.pair_a AND t.pair_b = d.pair_b
-         AND ABS(t.ts_us - d.ts_us) <= $P3
-        GROUP BY 1, 2, 3),
-      swf AS (
-        SELECT d.block_number, d.tx_hash, d.trace_idx, d.ts_us,
-          d.pair_a, d.pair_b, d.amount_in
-        FROM dex d LEFT JOIN direct_v v USING (block_number, tx_hash, trace_idx)
-        WHERE v.dv IS NULL OR v.dv < d.amount_in),
-      legsm AS (
-        SELECT s.*, c.x1, c.x2, 1 AS leg_no,
-          LEAST(s.pair_a, c.x1) AS l_a, GREATEST(s.pair_a, c.x1) AS l_b
-        FROM swf s JOIN cands c ON s.pair_a = c.a AND s.pair_b = c.b
-        UNION ALL
-        SELECT s.*, c.x1, c.x2, 2,
-          LEAST(c.x1, c.x2), GREATEST(c.x1, c.x2)
-        FROM swf s JOIN cands c ON s.pair_a = c.a AND s.pair_b = c.b
-        UNION ALL
-        SELECT s.*, c.x1, c.x2, 3,
-          LEAST(c.x2, s.pair_b), GREATEST(c.x2, s.pair_b)
-        FROM swf s JOIN cands c ON s.pair_a = c.a AND s.pair_b = c.b),
-      legagg AS (
-        SELECT block_number, tx_hash, trace_idx, x1, x2, leg_no,
-          MIN(amount_in) AS amount_in,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P1 THEN px * amt END")} AS pv1,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P1 THEN amt END")} AS v1,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P2 THEN px * amt END")} AS pv2,
-          ${sqlSum(s"CASE WHEN ABS(t.ts_us - l.ts_us) <= $P2 THEN amt END")} AS v2,
-          ${sqlSum("px * amt")} AS pv3, ${sqlSum("amt")} AS v3
-        FROM legsm l JOIN tbi t
-          ON t.bucket = l.ts_us // $P3 AND t.pair_a = l.l_a AND t.pair_b = l.l_b
-         AND ABS(t.ts_us - l.ts_us) <= $P3
-        GROUP BY 1, 2, 3, 4, 5, 6),
-      mleg1 AS (
-        SELECT block_number, tx_hash, trace_idx, x1, x2, amount_in, v3 AS liq1,
-          CASE WHEN v1 >= amount_in THEN pv1 / v1
-               WHEN v2 >= amount_in THEN pv2 / v2
-               WHEN v3 >= amount_in THEN pv3 / v3 END AS vwam1
-        FROM legagg WHERE leg_no = 1),
-      mleg12 AS (
-        SELECT a1.block_number, a1.tx_hash, a1.trace_idx, a1.x1, a1.x2,
-          a1.amount_in, a1.vwam1, a1.liq1, a2.v3 AS liq2,
-          (CASE WHEN a2.v1 >= a1.amount_in * a1.vwam1 THEN a2.pv1 / a2.v1
-                WHEN a2.v2 >= a1.amount_in * a1.vwam1 THEN a2.pv2 / a2.v2
-                WHEN a2.v3 >= a1.amount_in * a1.vwam1 THEN a2.pv3 / a2.v3
-           END) AS vwam2
-        FROM mleg1 a1 JOIN legagg a2
-          ON a2.leg_no = 2 AND a1.block_number = a2.block_number
-         AND a1.tx_hash = a2.tx_hash AND a1.trace_idx = a2.trace_idx
-         AND a1.x1 = a2.x1 AND a1.x2 = a2.x2
-        WHERE a1.vwam1 IS NOT NULL),
-      mpriced AS (
-        SELECT p.block_number, p.tx_hash, p.trace_idx, p.x1, p.x2,
-          p.vwam1 * p.vwam2 *
-          (CASE WHEN a3.v1 >= p.amount_in * p.vwam1 * p.vwam2 THEN a3.pv1 / a3.v1
-                WHEN a3.v2 >= p.amount_in * p.vwam1 * p.vwam2 THEN a3.pv2 / a3.v2
-                WHEN a3.v3 >= p.amount_in * p.vwam1 * p.vwam2 THEN a3.pv3 / a3.v3
-           END) AS implied,
-          LEAST(p.liq1, p.liq2, a3.v3) AS liq
-        FROM mleg12 p JOIN legagg a3
-          ON a3.leg_no = 3 AND p.block_number = a3.block_number
-         AND p.tx_hash = a3.tx_hash AND p.trace_idx = a3.trace_idx
-         AND p.x1 = a3.x1 AND p.x2 = a3.x2
-        WHERE p.vwam2 IS NOT NULL),
-      mbest AS (
+    (s, dir) => mostLiquidRoute(routeVwamOf(dexSwaps(s, dir), cexTrades(s, dir), 2))
+      .groupBy(col("x1").as("hop1"), col("x2").as("hop2"))
+      .agg(count(lit(1)).as("n_swaps"),
+        dsumR(col("implied")).as("sum_implied"),
+        dsum(col("liq")).as("sum_route_liq"))
+      .orderBy("hop1", "hop2"),
+    withCtes(s"""$cexTradesCte, $phasePairsCte, ${routeVwamCtes(2)},
+      best AS (
         SELECT *, ROW_NUMBER() OVER (
             PARTITION BY block_number, tx_hash, trace_idx
             ORDER BY liq DESC, implied DESC, x1 ASC, x2 ASC) AS rn
-        FROM mpriced WHERE implied IS NOT NULL)
+        FROM route_px)
       SELECT x1 AS hop1, x2 AS hop2, COUNT(*) AS n_swaps,
         ${sqlSumR("implied")} AS sum_implied,
         ${sqlSum("liq")} AS sum_route_liq
-      FROM mbest WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2"""))
+      FROM best WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   /** Q3: cex-dex markout — per-exchange VWAM vs dex execution rate, PnL in
     * the swap's input units × token price (the per-exchange arm of
@@ -858,9 +746,6 @@ object CexOps extends QueryModule {
       HAVING COUNT(*) >= 2
       ORDER BY 1, 2"""))
 
-  /** Exchange taker/maker fee fraction: deterministic (1+ex_id)·1e-4. */
-  private val FeeUnit = 1e-4
-
   /** Single-profitable-exchange PnL above this is an "outlier" (the
     * reference's HIGH_PROFIT_THRESHOLD = $10,000, markout/types.rs:26,
     * scaled to the fixture's PnL distribution so the arm genuinely
@@ -915,7 +800,7 @@ object CexOps extends QueryModule {
 
   /** Stable legs (F4's stable set: token ids 0..4): pair entirely inside
     * the stable set — the `is_stable_swaps` guard of arb_sanity_check. */
-  private def isStablePair(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private def isStablePair(a: Column, b: Column) =
     a < 5 && b < 5
 
   /** Q3 (global arm): the TimeWindowGlobal leg of the pricing matrix
@@ -943,14 +828,12 @@ object CexOps extends QueryModule {
     "q3_global",
     (s, dir) => {
       val searchers = ChainFixture.searchers(s)
-      val hist = dexSwaps(s, dir).groupBy(col("from_address").as("h_eoa"))
-        .agg(count(lit(1)).as("n_hist"))
-      val fee = (expr("CAST(substring(exchange, 3) AS BIGINT)") + 1) * FeeUnit
+      val hist = swapHistory(dexSwaps(s, dir))
       val exLegs = phasePairs(s, dir)
         .groupBy("block_number", "tx_hash", "trace_idx", "exchange")
         .agg(dsum(col("px") * col("amt")).as("pv"), dsum(col("amt")).as("v"),
-          dsum(col("px") * (lit(1.0) - fee) * col("amt")).as("pv_mk"),
-          dsum(col("px") * (lit(1.0) + fee) * col("amt")).as("pv_tk"),
+          dsum(col("px") * (lit(1.0) - exFee) * col("amt")).as("pv_mk"),
+          dsum(col("px") * (lit(1.0) + exFee) * col("amt")).as("pv_tk"),
           min(col("rate")).as("rate"), min(col("amount_in")).as("amount_in"),
           min(col("pair_a")).as("pair_a"), min(col("pair_b")).as("pair_b"),
           min(col("from_address")).as("eoa"))
@@ -987,14 +870,13 @@ object CexOps extends QueryModule {
         .orderBy("pair_a")
     },
     withCtes(s"""$cexTradesCte, $phasePairsCte,
-      hist AS (SELECT from_address AS h_eoa, COUNT(*) AS n_hist
-               FROM dex GROUP BY 1),
+      $swapHistoryCte,
       searchers_g AS $searchersCteBody,
       exleg AS (
         SELECT block_number, tx_hash, trace_idx, exchange,
           ${sqlSum("px * amt")} AS pv, ${sqlSum("amt")} AS v,
-          ${sqlSum("px * (1.0e0 - (CAST(substring(exchange, 3) AS BIGINT) + 1) * 1.0e-4) * amt")} AS pv_mk,
-          ${sqlSum("px * (1.0e0 + (CAST(substring(exchange, 3) AS BIGINT) + 1) * 1.0e-4) * amt")} AS pv_tk,
+          ${sqlSum(s"px * (1.0e0 - $exFeeSql) * amt")} AS pv_mk,
+          ${sqlSum(s"px * (1.0e0 + $exFeeSql) * amt")} AS pv_tk,
           MIN(rate) AS rate, MIN(amount_in) AS amount_in,
           MIN(pair_a) AS pair_a, MIN(pair_b) AS pair_b,
           MIN(from_address) AS eoa
@@ -1165,11 +1047,10 @@ object CexOps extends QueryModule {
   private val j5BasketFill = QueryDef(
     "j5_basket_fill",
     (s, dir) => {
-      val fee = (expr("CAST(substring(exchange, 3) AS BIGINT)") + 1) * FeeUnit
       val perSwap = basketFills(phasePairs(s, dir))
         .groupBy("block_number", "tx_hash", "trace_idx")
-        .agg(dsumR(col("px") * (lit(1.0) - fee) * col("taken")).as("vxp_mk"),
-          dsumR(col("px") * (lit(1.0) + fee) * col("taken")).as("vxp_tk"),
+        .agg(dsumR(col("px") * (lit(1.0) - exFee) * col("taken")).as("vxp_mk"),
+          dsumR(col("px") * (lit(1.0) + exFee) * col("taken")).as("vxp_tk"),
           dsumR(col("taken")).as("filled"),
           count(lit(1)).as("n_fills"),
           min(col("amount_in")).as("amount_in"), min(col("pair_a")).as("pair_a"))
@@ -1226,7 +1107,7 @@ object CexOps extends QueryModule {
         WHERE t.kept),
       tkn AS (
         SELECT *, LEAST(amt, to_fill - cum_before) AS taken,
-          (CAST(substring(exchange, 3) AS BIGINT) + 1) * 1.0e-4 AS fee
+          $exFeeSql AS fee
         FROM fl WHERE cum_before < to_fill),
       ps AS (
         SELECT block_number, tx_hash, trace_idx,
@@ -1282,33 +1163,20 @@ object CexOps extends QueryModule {
   val QuotesFilterThreshold = 20
 
   /** Q4: cex-dex against book QUOTES — nearest-before mid-price per pair
-    * via the one-shuffle as-of join, markout vs dex rate. Bid and ask get
-    * INDEPENDENT hash-derived bps offsets (cex_quotes.rs's real books are
-    * asymmetric), so the mid genuinely differs from the trade price and the
-    * quote path exercises non-cancelling spread math. Validity is the
+    * via the one-shuffle as-of join over the [[quoteBook]], markout vs
+    * dex rate. Validity is the
     * quotes inspector's own filter_possible_cex_dex (quotes/cex_dex.rs:
     * 449-512): pnl > 1.5 outright, OR a known bot (history above
     * FILTER_THRESHOLD ∨ labeled) that is at least breakeven (pnl > 0). */
   private val q4CexDexQuotes = QueryDef(
     "q4_cexdex_quotes",
     (s, dir) => {
-      val bidBps = expr("CAST(FLOOR(px * 10000.0) AS BIGINT)") % 20 + 1
-      val askBps = expr("CAST(FLOOR(px * 70000.0) AS BIGINT)") % 25 + 2
-      val bid = col("px") * (lit(1.0) - bidBps * 1e-4)
-      val ask = col("px") * (lit(1.0) + askBps * 1e-4)
-      val quotes = cexTrades(s, dir)
-        .select(col("pair_a"), col("pair_b"), col("ts_us"),
-          ((bid + ask) / 2).as("mid"), ask.as("ask"))
-        .groupBy("pair_a", "pair_b", "ts_us")
-        .agg(max(col("mid")).as("mid"), max(col("ask")).as("ask"))
-        .withColumn("pair_key", concat(col("pair_a"), lit(":"), col("pair_b")))
-        // both book arms ride the as-of in ONE struct value: the reference
-        // prices quotes PnL at mid AND at ask (cex_dex.rs per_arm outputs)
-        .select(col("pair_key"), col("ts_us"),
-          struct(col("mid"), col("ask")).as("q"))
+      // both book arms ride the as-of in ONE struct value: the reference
+      // prices quotes PnL at mid AND at ask (cex_dex.rs per_arm outputs)
+      val quotes = quoteBook(cexTrades(s, dir))
+        .select(col("pair_key"), col("ts_us"), struct(col("mid"), col("ask")).as("q"))
       val searchers = ChainFixture.searchers(s)
-      val hist = dexSwaps(s, dir).groupBy(col("from_address").as("h_eoa"))
-        .agg(count(lit(1)).as("n_hist"))
+      val hist = swapHistory(dexSwaps(s, dir))
       val sw = dexSwaps(s, dir)
         .withColumn("pair_key", concat(col("pair_a"), lit(":"), col("pair_b")))
       // ~60 pair keys can't parallelize a bare-key window at scale — salt
@@ -1334,21 +1202,16 @@ object CexOps extends QueryModule {
         .orderBy("pair_a")
     },
     withCtes(s"""$cexTradesCte,
-      q AS (SELECT pair_a, pair_b, ts_us,
-              MAX((px * (1.0e0 - (CAST(FLOOR(px * 10000.0e0) AS BIGINT) % 20 + 1) * 1.0e-4)
-                 + px * (1.0e0 + (CAST(FLOOR(px * 70000.0e0) AS BIGINT) % 25 + 2) * 1.0e-4)) / 2) AS mid,
-              MAX(px * (1.0e0 + (CAST(FLOOR(px * 70000.0e0) AS BIGINT) % 25 + 2) * 1.0e-4)) AS ask
-            FROM cex GROUP BY 1, 2, 3),
-      hist_q AS (SELECT from_address AS h_eoa, COUNT(*) AS n_hist
-                 FROM dex GROUP BY 1),
+      $quoteBookCte,
+      $swapHistoryCte,
       searchers_q AS $searchersCteBody,
       mq AS (
         SELECT d.pair_a, d.rate, d.amount_in, q.mid, q.ask,
           (q.mid - d.rate) * d.amount_in * ${tokenPriceSql("d.pair_a")} AS pnl,
           h.n_hist, s.s_eoa
-        FROM dex d ASOF LEFT JOIN q
+        FROM dex d ASOF LEFT JOIN qbook q
           ON d.pair_a = q.pair_a AND d.pair_b = q.pair_b AND d.ts_us >= q.ts_us
-        LEFT JOIN hist_q h ON d.from_address = h.h_eoa
+        LEFT JOIN hist h ON d.from_address = h.h_eoa
         LEFT JOIN searchers_q s ON d.from_address = s.s_eoa)
       SELECT pair_a, COUNT(*) AS n_swaps,
         CAST(SUM(CASE WHEN mid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_quoted,
@@ -1371,16 +1234,7 @@ object CexOps extends QueryModule {
   private val q4QuoteWindows = QueryDef(
     "q4_quote_windows",
     (s, dir) => {
-      val bidBps = expr("CAST(FLOOR(px * 10000.0) AS BIGINT)") % 20 + 1
-      val askBps = expr("CAST(FLOOR(px * 70000.0) AS BIGINT)") % 25 + 2
-      val mid = (col("px") * (lit(1.0) - bidBps * 1e-4) +
-        col("px") * (lit(1.0) + askBps * 1e-4)) / 2
-      val quotes = cexTrades(s, dir)
-        .select(col("pair_a"), col("pair_b"), col("ts_us"), mid.as("mid"))
-        .groupBy("pair_a", "pair_b", "ts_us")
-        .agg(max(col("mid")).as("mid"))
-        .withColumn("pair_key", concat(col("pair_a"), lit(":"), col("pair_b")))
-        .select(col("pair_key"), col("ts_us"), col("mid"))
+      val quotes = quoteBook(cexTrades(s, dir))
       val windows = Seq(("t2", 2000000L, None),
         ("t12", 12000000L, Some(5000000L)),
         ("t60", 60000000L, Some(30000000L)))
@@ -1422,10 +1276,7 @@ object CexOps extends QueryModule {
         .orderBy("pair_a")
     },
     withCtes(s"""$cexTradesCte,
-      qw AS (SELECT pair_a, pair_b, ts_us,
-              MAX((px * (1.0e0 - (CAST(FLOOR(px * 10000.0e0) AS BIGINT) % 20 + 1) * 1.0e-4)
-                 + px * (1.0e0 + (CAST(FLOOR(px * 70000.0e0) AS BIGINT) % 25 + 2) * 1.0e-4)) / 2) AS mid
-            FROM cex GROUP BY 1, 2, 3),
+      $quoteBookCte,
       dexw AS (SELECT *, ts_us + 2000000 AS tgt2, ts_us + 12000000 AS tgt12,
                  ts_us + 60000000 AS tgt60
                FROM dex),
@@ -1435,11 +1286,11 @@ object CexOps extends QueryModule {
           q12.mid AS mid12, q12.ts_us AS qts12,
           q60.mid AS mid60, q60.ts_us AS qts60
         FROM dexw d
-        ASOF LEFT JOIN qw q2 ON d.pair_a = q2.pair_a AND d.pair_b = q2.pair_b
+        ASOF LEFT JOIN qbook q2 ON d.pair_a = q2.pair_a AND d.pair_b = q2.pair_b
           AND d.tgt2 <= q2.ts_us
-        ASOF LEFT JOIN qw q12 ON d.pair_a = q12.pair_a AND d.pair_b = q12.pair_b
+        ASOF LEFT JOIN qbook q12 ON d.pair_a = q12.pair_a AND d.pair_b = q12.pair_b
           AND d.tgt12 <= q12.ts_us
-        ASOF LEFT JOIN qw q60 ON d.pair_a = q60.pair_a AND d.pair_b = q60.pair_b
+        ASOF LEFT JOIN qbook q60 ON d.pair_a = q60.pair_a AND d.pair_b = q60.pair_b
           AND d.tgt60 <= q60.ts_us)
       SELECT pair_a, COUNT(*) AS n_swaps,
         CAST(SUM(CASE WHEN mid2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_t2,

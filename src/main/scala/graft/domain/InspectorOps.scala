@@ -905,6 +905,31 @@ object InspectorOps extends QueryModule {
         "revenue_usd", "gas_usd", "profit_usd", "has_dex_price")
   }
 
+  /** Oracle twin of [[Accounting.unpricedTxs]]: the `unpriced` tx set. */
+  private[graft] val unpricedCte =
+    """unpriced AS (
+        SELECT DISTINCT tx_hash FROM actions
+        WHERE (token_in_id IS NOT NULL AND dec_in IS NULL)
+           OR (token_out_id IS NOT NULL AND dec_out IS NULL))"""
+
+  /** Oracle twin of [[liquidationBundlesOf]] up to its profit gate:
+    * `liqbase`, one row per liquidation tx with its header and `priced`
+    * flag (its `unpriced` CTE included). */
+  private[graft] val liqBundleCtes =
+    s"""liqb AS (
+        SELECT tx_hash, COUNT(*) AS n_liq FROM actions
+        WHERE action_type = 'liquidation' GROUP BY 1),
+      swb AS (SELECT tx_hash, COUNT(*) AS n_liq_swaps FROM swaps GROUP BY 1),
+      $unpricedCte,
+      liqbase AS (
+        SELECT l.tx_hash, h.block_number, h.eoa, l.n_liq,
+          CAST(COALESCE(s.n_liq_swaps, 0) AS BIGINT) AS n_liq_swaps,
+          h.revenue_usd, h.gas_usd,
+          CASE WHEN u.tx_hash IS NULL THEN 1 ELSE 0 END AS priced
+        FROM liqb l JOIN header h ON l.tx_hash = h.tx_hash
+        LEFT JOIN swb s ON l.tx_hash = s.tx_hash
+        LEFT JOIN unpriced u ON l.tx_hash = u.tx_hash)"""
+
   /** Q7 (bundle form): one row per liquidation tx with the reference's
     * header semantics — has_dex_price + the ±15M profit clamp
     * (liquidations.rs:100-124) — alongside the q7_liquidations per-block
@@ -914,22 +939,7 @@ object InspectorOps extends QueryModule {
     "q7_liq_bundles",
     (s, dir) => liquidationBundlesOf(actionsTable(s, dir), bundleHeaders(s, dir))
       .orderBy("tx_hash"),
-    withCtes(s"""liqb AS (
-        SELECT tx_hash, COUNT(*) AS n_liq FROM actions
-        WHERE action_type = 'liquidation' GROUP BY 1),
-      swb AS (SELECT tx_hash, COUNT(*) AS n_liq_swaps FROM swaps GROUP BY 1),
-      unpriced AS (
-        SELECT DISTINCT tx_hash FROM actions
-        WHERE (token_in_id IS NOT NULL AND dec_in IS NULL)
-           OR (token_out_id IS NOT NULL AND dec_out IS NULL)),
-      liqbase AS (
-        SELECT l.tx_hash, h.block_number, h.eoa, l.n_liq,
-          CAST(COALESCE(s.n_liq_swaps, 0) AS BIGINT) AS n_liq_swaps,
-          h.revenue_usd, h.gas_usd,
-          CASE WHEN u.tx_hash IS NULL THEN 1 ELSE 0 END AS priced
-        FROM liqb l JOIN header h ON l.tx_hash = h.tx_hash
-        LEFT JOIN swb s ON l.tx_hash = s.tx_hash
-        LEFT JOIN unpriced u ON l.tx_hash = u.tx_hash)
+    withCtes(s"""$liqBundleCtes
       SELECT tx_hash, block_number, eoa, n_liq, n_liq_swaps,
         revenue_usd, gas_usd,
         ${sqlGateProfit("revenue_usd - gas_usd", "priced")} AS profit_usd,
@@ -964,10 +974,7 @@ object InspectorOps extends QueryModule {
     withCtes(s"""xfers AS (
         SELECT tx_hash, COUNT(*) AS n_transfers FROM actions
         WHERE action_type = 'transfer' GROUP BY 1),
-      unpriced AS (
-        SELECT DISTINCT tx_hash FROM actions
-        WHERE (token_in_id IS NOT NULL AND dec_in IS NULL)
-           OR (token_out_id IS NOT NULL AND dec_out IS NULL)),
+      $unpricedCte,
       searchers3 AS $searchersCteBody,
       stxbase AS (
         SELECT x.tx_hash, h.block_number, h.eoa, x.n_transfers,
@@ -2168,10 +2175,7 @@ object InspectorOps extends QueryModule {
       filterCountBundlesOf(sand.unionByName(arb).unionByName(jit).unionByName(liq))
     },
     withCtes(s"""$sandwichCtes, $arbCte, $jitpCte,
-      fc_unp AS (
-        SELECT DISTINCT tx_hash FROM actions
-        WHERE (token_in_id IS NOT NULL AND dec_in IS NULL)
-           OR (token_out_id IS NOT NULL AND dec_out IS NULL)),
+      $unpricedCte,
       fc_bundles AS (
         SELECT 'sandwich' AS mev_type,
           hf.profit_usd + hb.profit_usd AS profit_usd,
@@ -2180,8 +2184,8 @@ object InspectorOps extends QueryModule {
         FROM sand s2
         JOIN header hf ON s2.front_tx = hf.tx_hash
         JOIN header hb ON s2.back_tx = hb.tx_hash
-        LEFT JOIN fc_unp uf ON s2.front_tx = uf.tx_hash
-        LEFT JOIN fc_unp ub ON s2.back_tx = ub.tx_hash
+        LEFT JOIN unpriced uf ON s2.front_tx = uf.tx_hash
+        LEFT JOIN unpriced ub ON s2.back_tx = ub.tx_hash
         UNION ALL
         SELECT t.mev_type, h.profit_usd,
           CASE WHEN u.tx_hash IS NOT NULL THEN 1 ELSE 0 END
@@ -2190,7 +2194,7 @@ object InspectorOps extends QueryModule {
               UNION ALL SELECT DISTINCT tx_hash, 'liquidation' FROM actions
                 WHERE action_type = 'liquidation') t
         JOIN header h ON t.tx_hash = h.tx_hash
-        LEFT JOIN fc_unp u ON t.tx_hash = u.tx_hash)
+        LEFT JOIN unpriced u ON t.tx_hash = u.tx_hash)
       SELECT mev_type, COUNT(*) AS n_raw,
         CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_final,
         ${sqlSumR("CASE WHEN kept THEN profit_usd ELSE 0.0e0 END")}

@@ -318,22 +318,7 @@ object TipInspect extends QueryModule {
     withCtes(s"""${InspectorOps.sandwichOracleCtes},
       ${InspectorOps.arbOracleCtes},
       tipsearchers AS ${ChainFixture.searchersCteBody},
-      tipliqb AS (
-        SELECT tx_hash, COUNT(*) AS n_liq FROM actions
-        WHERE action_type = 'liquidation' GROUP BY 1),
-      tipswb AS (SELECT tx_hash, COUNT(*) AS n_liq_swaps FROM swaps GROUP BY 1),
-      tipunp AS (
-        SELECT DISTINCT tx_hash FROM actions
-        WHERE (token_in_id IS NOT NULL AND dec_in IS NULL)
-           OR (token_out_id IS NOT NULL AND dec_out IS NULL)),
-      tipliq AS (
-        SELECT l.tx_hash, h.block_number, h.eoa, l.n_liq,
-          CAST(COALESCE(s.n_liq_swaps, 0) AS BIGINT) AS n_liq_swaps,
-          h.revenue_usd, h.gas_usd,
-          CASE WHEN u.tx_hash IS NULL THEN 1 ELSE 0 END AS priced
-        FROM tipliqb l JOIN header h ON l.tx_hash = h.tx_hash
-        LEFT JOIN tipswb s ON l.tx_hash = s.tx_hash
-        LEFT JOIN tipunp u ON l.tx_hash = u.tx_hash)
+      ${InspectorOps.liqBundleCtes}
       SELECT 'sandwich' AS btype, s.back_block AS block_number,
         s.front_tx AS tx1, s.back_tx AS tx2, s.pool, s.eoa,
         CAST(NULL AS VARCHAR) AS tag,
@@ -363,7 +348,7 @@ object TipInspect extends QueryModule {
         ${sqlGateProfit("revenue_usd - gas_usd", "priced")},
         revenue_usd, n_liq, n_liq_swaps,
         ${sqlGateFlag("revenue_usd - gas_usd", "priced")}
-      FROM tipliq
+      FROM liqbase
       ORDER BY 1, 2, 3, 4, 5"""))
 
   /** The full-composer tip entry: streamed classify → price → ALL seven

@@ -273,6 +273,60 @@ class GoldenScenarioSpec extends SparkTestBase {
       (1000L, 9.0, 25.0)), out)
   }
 
+  // route pricer frames: swaps (tx, ts, pair_a, pair_b, amount_in) in
+  // block 1, trades (ts, pair_a, pair_b, px, amt) on ex0
+  private def routeSwapsOf(rows: (String, Long, Long, Long, Double)*): DataFrame =
+    rows.map { case (tx, ts, a, b, amt) => (1L, tx, 0L, ts, a, b, amt) }
+      .toDF("block_number", "tx_hash", "trace_idx", "ts_us", "pair_a", "pair_b", "amount_in")
+  private def routeTradesOf(rows: (Long, Long, Long, Double, Double)*): DataFrame =
+    rows.map { case (ts, a, b, px, amt) => ("ex0", ts, a, b, px, amt) }
+      .toDF("exchange", "ts_us", "pair_a", "pair_b", "px", "amt")
+
+  test("route pricer, one hop: fallback set, phase escalation, scaled leg-2 requirement") {
+    // Pair (0, 9), bridge 5. S1 (t = 100 s, amount_in 10) sees 4 units of
+    // direct (0, 9) volume within ±30 s → falls back to the route; S2
+    // (t = 400 s, amount_in 3) sees 4 ≥ 3 → covered, never routed, though
+    // its legs have ample volume.
+    //  leg 1 (0, 5): ±1 s holds 6 < 10 → phase 2 (±5 s, 12 units):
+    //    vwam1 = (2·6 + 3·6) / 12 = 2.5
+    //  leg 2 (5, 9): requirement 10 · 2.5 = 25. ±1 s holds 12 (px 4), which
+    //    would cover the unscaled 10 at 4.0; 25 needs phase 2 (32 units):
+    //    vwam2 = (4·12 + 1·20) / 32 = 2.125
+    // implied = 2.5 · 2.125 = 5.3125; liq = min(12, 32) = 12
+    val s = 1000000L
+    val swaps = routeSwapsOf(("S1", 100 * s, 0L, 9L, 10.0), ("S2", 400 * s, 0L, 9L, 3.0))
+    val trades = routeTradesOf(
+      (100 * s, 0L, 9L, 1.0, 4.0),
+      (100 * s + s / 2, 0L, 5L, 2.0, 6.0), (103 * s, 0L, 5L, 3.0, 6.0),
+      (100 * s + s / 5, 5L, 9L, 4.0, 12.0), (102 * s, 5L, 9L, 1.0, 20.0),
+      (400 * s, 0L, 9L, 1.0, 4.0),
+      (400 * s, 0L, 5L, 2.0, 10.0), (400 * s, 5L, 9L, 2.0, 10.0))
+    val out = graft.domain.CexOps.routeVwamOf(swaps, trades, 1)
+      .select("tx_hash", "x1", "implied", "liq").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+    assert(out == Seq(("S1", 5L, 5.3125, 12.0)), out)
+  }
+
+  test("route pricer, two hops: the larger bottleneck volume wins over the better price") {
+    // Pair (20, 29), one unit of direct volume → falls back. Two routes:
+    //  20→21→22→29: every leg 100 units at px 1 → implied 1, liq 100
+    //  20→23→24→29: every leg 50 units at px 2; requirements 10, 20, 40
+    //    all fit → implied 8, liq 50
+    val t = 200000000L
+    val swaps = routeSwapsOf(("T", t, 20L, 29L, 10.0))
+    val trades = routeTradesOf(
+      (t, 20L, 29L, 1.0, 1.0),
+      (t, 20L, 21L, 1.0, 100.0), (t, 21L, 22L, 1.0, 100.0), (t, 22L, 29L, 1.0, 100.0),
+      (t, 20L, 23L, 2.0, 50.0), (t, 23L, 24L, 2.0, 50.0), (t, 24L, 29L, 2.0, 50.0))
+    def rows(df: DataFrame) = df.select("x1", "x2", "implied", "liq")
+      .orderBy("x1").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+    val routes = graft.domain.CexOps.routeVwamOf(swaps, trades, 2)
+    assert(rows(routes) == Seq((21L, 22L, 1.0, 100.0), (23L, 24L, 8.0, 50.0)), rows(routes))
+    val best = rows(graft.domain.CexOps.mostLiquidRoute(routes))
+    assert(best == Seq((21L, 22L, 1.0, 100.0)), best)
+  }
+
   // edge-frame rows for the composer matrix:
   // (bid, mev_type, tx, n_txs, profit, arb_type, labeled)
   private def edgesOf(

@@ -112,11 +112,14 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("j4 multihop legs join trades equi-keyed; the route table is broadcast") {
-    val p = plan("j4_multihop")
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    // the 3-hop route table is token-space-sized and must reach the legs
-    // by broadcast, never by shuffling the trades fact on a tiny side
-    assert(p.contains("BroadcastExchange"), p)
+    for (q <- Seq("j4_intermediary", "j4_multihop")) {
+      val p = plan(q)
+      assert(!p.contains("BroadcastNestedLoopJoin"), p)
+      // the route table (one or two hops) is token-space-sized and must
+      // reach the legs by broadcast, never by shuffling the trades fact
+      // on a tiny side
+      assert(p.contains("BroadcastExchange"), p)
+    }
   }
 
   test("s3 SQL-text decode plans the same codegen'd expressions as the Column API") {
