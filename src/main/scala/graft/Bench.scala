@@ -60,6 +60,8 @@ object Bench {
     def codegen(): (Long, Long) =
       (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val (compiles0, compileNs0) = codegen()
+    // every Spark job the timed pass starts (a query's, or a store read's)
+    val jobCounter = JobCounter(spark.sparkContext)
 
     // A query that throws must never record its (fast) exception path as a
     // timing — keep failures out of `queries`/total and list them apart.
@@ -72,6 +74,8 @@ object Bench {
       (name, dt, ok)
     }
     val (compiles1, compileNs1) = codegen()
+    val jobs = jobCounter.jobs
+    jobCounter.close()
     val (compiles, codegenS) = (compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9)
     val results = timed.collect { case (n, dt, true) => n -> dt }.toMap
     val failed = timed.collect { case (n, _, false) => n }.toSeq.sorted
@@ -85,7 +89,7 @@ object Bench {
       .fold("null")("\"" + _ + "\"")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line =
-      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"tip_run":$tipRun,"codegen_compiles":$compiles,"codegen_s":$codegenS,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"tip_run":$tipRun,"codegen_compiles":$compiles,"jobs":$jobs,"codegen_s":$codegenS,"sf":"$sfDir"}"""
     println(line)
     // Compact summary printed LAST: the driver keeps only a ~2000-char
     // stdout TAIL, which the ~10 KB full line above has overflowed four
@@ -96,7 +100,7 @@ object Bench {
     // the driver's own reruns collided with committed artifacts).
     // It is the only line whose metric is "total"; the full line above is
     // "total_full".
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"tip_run":$tipRun,"codegen_compiles":$compiles,"codegen_s":$codegenS,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"tip_run":$tipRun,"codegen_compiles":$compiles,"jobs":$jobs,"codegen_s":$codegenS,"sf":"$sfDir"}""")
     try {
       val repo = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
       // a filtered profiling run — or a smoke run at any other scale

@@ -1,18 +1,64 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Readers for the driver-provided parquet tables (TESTDATA.md).
+import java.util.concurrent.ConcurrentHashMap
+
+/** Readers for the driver-provided parquet tables (TESTDATA.md), and the
+  * relation registry every write-once parquet table is read through.
   *
   * Mirrors the reference's table registry
-  * (brontes-database/brontes-db/src/libmdbx/tables/mod.rs:526-541) in spirit:
-  * one named, schema-stable table per source. Here every table is a parquet
-  * directory/file — at cluster scale these would be partitioned datasets and
-  * the same `spark.read.parquet` call prunes partitions on filter.
+  * (brontes-database/brontes-db/src/libmdbx/tables/mod.rs:526-541): each
+  * table is opened once per process and every reader shares that handle.
+  * A path is resolved once per JVM (file listing, footer schema, partition
+  * columns); every caller then gets a fresh frame over the resolved
+  * relation, with fresh attribute ids. Each table is a parquet
+  * directory/file — at cluster scale these would be partitioned datasets
+  * and the same scan prunes partitions on filter.
   */
 object Tables {
+
+  /** Resolved relations by path — the registry. Only WRITE-ONCE paths
+    * belong here: the input tables and the [[graft.domain.ChainFixture]]
+    * stores. A relation keeps the file list it was resolved with, so a
+    * path that is overwritten in place (the tip stream's tail and output
+    * surfaces, written by batch id, the stream oracle's outputs, the
+    * s4_partitioned_sink export, the scale rehearsal's tables) must keep
+    * `read.parquet`: a cached list would serve the files the overwrite
+    * deleted. For the same reason a store deleted and rewritten inside a
+    * live JVM is not listed again; delete stores only between JVMs. A
+    * relation keeps the session that resolved it (its file index belongs
+    * to it): one session per path, whichever read the path first. */
+  private val relations = new ConcurrentHashMap[String, HadoopFsRelation]()
+
+  /** A fresh frame over the write-once parquet table at `path`, bound to
+    * `s`. The first read resolves the path; every later read reuses the
+    * resolution, starts no Spark job, and still gets its own
+    * `LogicalRelation` (fresh attribute ids, so two reads self-join like
+    * two `read.parquet` calls and cache matching is unchanged). Two
+    * threads racing the first read may both resolve; one result is kept. */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val rel = Option(relations.get(path)).getOrElse {
+      relations.putIfAbsent(path, resolve(s, path))
+      relations.get(path)
+    }
+    s.baseRelationToDataFrame(rel.copy()(s))
+  }
+
+  /** Whether `path` was resolved in this JVM, i.e. is known to exist. */
+  private[graft] def resolved(path: String): Boolean = relations.containsKey(path)
+
+  private def resolve(s: SparkSession, path: String): HadoopFsRelation =
+    s.read.parquet(path).queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Some(r: HadoopFsRelation) => r
+      case other => sys.error(s"$path: expected a parquet file relation, got $other")
+    }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "orders")

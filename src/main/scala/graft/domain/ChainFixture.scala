@@ -480,8 +480,6 @@ object ChainFixture {
 
   // ── materialized intermediates ────────────────────────────────────────────
 
-  private val materialized = scala.collection.mutable.Set[String]()
-
   /** Materialization root for pipeline intermediates. At cluster scale set
     * `spark.graft.matRoot` to a shared store (S3/HDFS path) so every
     * executor and downstream stage reads the same tables; the default is a
@@ -495,13 +493,16 @@ object ChainFixture {
     * written to a writer-unique in-progress path and renamed into place,
     * so two JVMs sharing a `spark.graft.matRoot` can never read each
     * other's half-written output — the loser of the rename race deletes
-    * its attempt and reads the winner's table (ADVICE r6). The in-memory
-    * set only short-circuits re-checks within one JVM; cross-JVM reuse
-    * goes through the filesystem existence check. */
+    * its attempt and reads the winner's table (ADVICE r6). The store is
+    * read through the [[Tables.parquet]] registry: its path is
+    * resolved once per JVM and every caller gets a fresh frame (fresh
+    * attribute ids) bound to its own session. A path the registry holds is
+    * known to exist and is not checked again; cross-JVM reuse goes through
+    * the filesystem existence check. */
   private[graft] def materializeWith(s: SparkSession, path: String)(
       write: String => Unit): DataFrame =
     synchronized {
-      if (!materialized.contains(path)) {
+      if (!Tables.resolved(path)) {
         val target = new org.apache.hadoop.fs.Path(path)
         val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (!fs.exists(target)) {
@@ -511,9 +512,8 @@ object ChainFixture {
           write(tmp.toString)
           publish(s.sparkContext.hadoopConfiguration, tmp, target)
         }
-        materialized += path
       }
-      s.read.parquet(path)
+      Tables.parquet(s, path)
     }
 
   /** Atomic not-exists publish of `tmp` as `target`. `FileSystem.rename`

@@ -277,7 +277,10 @@ object TipInspect extends QueryModule {
     * write runs beside the composer chain (bundles → edges → composer
     * write), which is what remains on the critical path. The batch's cache
     * is filled first because every branch reads it: branches that race a
-    * lazy cache each derive it again. */
+    * lazy cache each derive it again. The tail and both output surfaces
+    * are overwritten by batch id, so they are read with `read.parquet` and
+    * never through the [[graft.Tables.parquet]] registry, whose cached file
+    * list would serve the files an overwrite deleted. */
   private[graft] def tipBatch(b: DataFrame, batchId: Long, out: String,
       tail: String): Unit = Pins.scope {
     val ss = b.sparkSession

@@ -8,7 +8,9 @@ import java.nio.file.{Files, Paths}
   * when two writers race one `matRoot`, the loser must never corrupt the
   * winner's published table — in particular RawLocalFileSystem's
   * move-INTO rename semantics must not nest a half-written attempt
-  * inside the existing target. */
+  * inside the existing target. And the relation registry every store and
+  * input is read through: a path resolves once per JVM, each read is a
+  * fresh frame of the caller's session. */
 class MaterializeSpec extends SparkTestBase {
 
   private def conf = spark.sparkContext.hadoopConfiguration
@@ -85,5 +87,40 @@ class MaterializeSpec extends SparkTestBase {
     val after = dirF.listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(after == mtimes, "second run rewrote the registry instead of reusing it")
     assert(second.map(_.toString).sorted.sameElements(first.map(_.toString).sorted))
+  }
+
+  test("registry: a store or input read again starts no Spark job") {
+    ChainFixture.tracesTable(spark, SfDir)
+    Tables.lineitem(spark, SfDir)
+    val counter = JobCounter(spark.sparkContext)
+    try {
+      ChainFixture.tracesTable(spark, SfDir)
+      Tables.lineitem(spark, SfDir)
+      assert(counter.jobs == 0, "a second read listed the files or inferred the schema again")
+    } finally counter.close()
+  }
+
+  test("registry: two reads of one store self-join without ambiguity") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val a = ChainFixture.tracesTable(spark, SfDir)
+    val b = ChainFixture.tracesTable(spark, SfDir)
+    // a non-equality term: Dataset.join rewrites only a trivially true
+    // `x === x`, so shared attribute ids would make this one ambiguous
+    val pairs = a.join(b, a("tx_hash") === b("tx_hash") && a("trace_idx") < b("trace_idx"))
+      .count()
+    val perTx = a.groupBy("tx_hash").count()
+      .agg(sum(col("count") * (col("count") - 1) / 2)).head().getDouble(0).toLong
+    assert(pairs == perTx)
+  }
+
+  test("registry: a frame read from another session belongs to that session") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    ChainFixture.tracesTable(spark, SfDir)
+    val other = spark.newSession()
+    val df = ChainFixture.tracesTable(other, SfDir)
+    assert(df.sparkSession eq other)
+    val rel = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }
+    assert(rel.exists(_.sparkSession eq other), s"relation bound to another session: $rel")
   }
 }
